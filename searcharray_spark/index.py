@@ -17,12 +17,18 @@ Query execution model (no shuffle at query time):
   a per-task side-input read of the co-partitioned doclens file
   (``DoclensReader``) — never a cogroup/shuffle,
 - block pruning and WAND bounds are driver math over per-term sketches
-  fetched once from term_stats (``TermSketch``),
+  (``TermSketch``) read once per term from term_stats with pyarrow:
+  only the row groups whose term range holds a queried term are read,
+  and no Spark job runs,
 - only (doc_id, score) survivors leave the kernel; global top-k is
-  Spark's TakeOrdered (per-partition top-k, then driver merge).
+  Spark's TakeOrdered (per-partition top-k, then driver merge). Batch
+  (``top_k_many``) and pruned (``top_k_pruned``) top-k keep each
+  partition's top-k in the kernel and merge on the driver, so every
+  distributed query runs exactly one Spark job: the scoring scan.
 """
 from __future__ import annotations
 
+import bisect
 import json
 import os
 from typing import Iterable, List, Optional, Sequence, Union
@@ -178,6 +184,33 @@ def _local_df(spark: SparkSession, pdf: pd.DataFrame,
            for f in schema.fields):
         return _LazyLocalFrame(spark, pdf, schema)
     return _materialize_local_df(spark, pdf, schema)
+
+
+def _rank_by_token(cols: dict, k: int) -> dict:
+    """Rank the rows of ``cols`` (parallel numpy arrays, among them
+    token_idx, doc_id and score) within each token_idx under (score
+    desc, doc_id asc), the total order of the reference's SetOfResults
+    (utils/sort.py:21-45), and keep ranks <= k. Returns the kept rows'
+    arrays plus an int32 ``rank`` array (1-based). float32 -> float64
+    is exact, so the order matches Spark's on the same float column."""
+    ti = cols["token_idx"]
+    order = np.lexsort((cols["doc_id"], -cols["score"].astype(np.float64),
+                        ti))
+    ti = ti[order]
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(ti)) + 1))
+    widths = np.diff(np.concatenate((starts, [len(ti)])))
+    rank = np.arange(len(ti), dtype=np.int64) - np.repeat(starts, widths) + 1
+    keep = rank <= k
+    out = {c: a[order[keep]] for c, a in cols.items()}
+    out["rank"] = rank[keep].astype(np.int32)
+    return out
+
+
+def _utf8(v) -> bytes:
+    """A parquet string statistic as UTF-8 bytes (pyarrow returns str,
+    or bytes for a truncated value that is not valid UTF-8). Byte order
+    on UTF-8 is code point order, the order the writer sorted by."""
+    return v.encode("utf-8") if isinstance(v, str) else bytes(v)
 
 
 def _ub_of(entry, block_id: int) -> float:
@@ -382,6 +415,23 @@ def _parquet_row_count(root: str) -> int:
                for f, _ in fsutil.list_parquet_files(root))
 
 
+def _column_stats(md, column: str) -> list:
+    """(min, max) statistics of ``column`` per row group of a parquet
+    footer; None for a row group whose writer kept no statistics."""
+    out = []
+    for rg in range(md.num_row_groups):
+        row_grp = md.row_group(rg)
+        mm = None
+        for ci in range(row_grp.num_columns):
+            col = row_grp.column(ci)
+            st = col.statistics
+            if (col.path_in_schema == column and st is not None
+                    and st.has_min_max):
+                mm = (st.min, st.max)
+        out.append(mm)
+    return out
+
+
 def scan_doclens_ranges(sources) -> list:
     """[(seg, file, min_block, max_block)] for every parquet file under
     each (seg, root) source, from parquet footer stats — driver-side,
@@ -390,25 +440,18 @@ def scan_doclens_ranges(sources) -> list:
     out = []
     for seg, root in sources:
         for p, _sz in fsutil.list_parquet_files(root):
-                md = fsutil.parquet_file(p).metadata
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    row_grp = md.row_group(rg)
-                    for ci in range(row_grp.num_columns):
-                        col = row_grp.column(ci)
-                        if col.path_in_schema != "block_id":
-                            continue
-                        st = col.statistics
-                        if st is not None and st.has_min_max:
-                            lo = int(st.min) if lo is None else min(lo, int(st.min))
-                            hi = int(st.max) if hi is None else max(hi, int(st.max))
-                if lo is None:  # stats disabled: read the tiny column
-                    ids = fsutil.read_parquet(p, columns=["block_id"]) \
-                        .column(0).to_pylist()
-                    if not ids:
-                        continue
-                    lo, hi = int(min(ids)), int(max(ids))
-                out.append((seg, p, lo, hi))
+            stats = [mm for mm in _column_stats(
+                fsutil.parquet_file(p).metadata, "block_id") if mm is not None]
+            if stats:
+                lo = min(int(mm[0]) for mm in stats)
+                hi = max(int(mm[1]) for mm in stats)
+            else:  # stats disabled: read the tiny column
+                ids = fsutil.read_parquet(p, columns=["block_id"]) \
+                    .column(0).to_pylist()
+                if not ids:
+                    continue
+                lo, hi = int(min(ids)), int(max(ids))
+            out.append((seg, p, lo, hi))
     return out
 
 
@@ -512,8 +555,14 @@ class SearchIndex:
         self._sketch_cache: dict = {}
         self._bounds_cache: dict = {}
         self._dl_ranges: list | None = None
+        self._ts_index: list | None = None
+        self._has_sketches: bool | None = None
+        # cache() results; the plain reader frames are memoized apart so
+        # an uncached table is schema-inferred (one Spark job) once per
+        # handle, not once per query
         self._postings_df: DataFrame | None = None
         self._doclens_df: DataFrame | None = None
+        self._readers: dict = {}
         if self.as_of is not None and getattr(self, "_stats_need_asof", False):
             self._apply_asof_stats()
 
@@ -1088,13 +1137,15 @@ class SearchIndex:
         self._local_ok = None
         self._local_ok_ext = None
         self._local_posts = None
-        self._local_ts = None
         self._postings_df = None
         self._doclens_df = None
+        self._readers = {}
         self._df_cache = {}
         self._sketch_cache = {}
         self._bounds_cache = {}
         self._dl_ranges = None
+        self._ts_index = None
+        self._has_sketches = None
         self._aligned = None
         rc = getattr(self, "_result_cache", None)
         if rc is not None:  # stays enabled; memoized frames are stale
@@ -1147,31 +1198,34 @@ class SearchIndex:
         return self._aligned
 
     # --- tables -----------------------------------------------------------
+    def _segmented(self, table: str) -> DataFrame:
+        """The base ``table`` unioned with every update segment's, each
+        row tagged with its segment's ``seg`` (base rows are seg 0).
+        Memoized per handle: ``spark.read.parquet`` infers the schema
+        with a Spark job, which a query must not pay."""
+        df = self._readers.get(table)
+        if df is None:
+            df = self.spark.read.parquet(fsutil.join(self.path, table)) \
+                .withColumn("seg", F.lit(0).cast("long"))
+            for s in self._update_segs():
+                seg = self.spark.read.parquet(
+                    fsutil.join(self.path, "updates", f"seg={s}", table)) \
+                    .withColumn("seg", F.lit(s).cast("long"))
+                df = df.unionByName(seg)
+            self._readers[table] = df
+        return df
+
     @property
     def postings(self) -> DataFrame:
         if self._postings_df is not None:
             return self._postings_df
-        base = self.spark.read.parquet(fsutil.join(self.path, "postings")) \
-            .withColumn("seg", F.lit(0).cast("long"))
-        for s in self._update_segs():
-            seg = self.spark.read.parquet(
-                fsutil.join(self.path, "updates", f"seg={s}", "postings")) \
-                .withColumn("seg", F.lit(s).cast("long"))
-            base = base.unionByName(seg)
-        return base
+        return self._segmented("postings")
 
     @property
     def doclens(self) -> DataFrame:
         if self._doclens_df is not None:
             return self._doclens_df
-        base = self.spark.read.parquet(fsutil.join(self.path, "doclens")) \
-            .withColumn("seg", F.lit(0).cast("long"))
-        for s in self._update_segs():
-            seg = self.spark.read.parquet(
-                fsutil.join(self.path, "updates", f"seg={s}", "doclens")) \
-                .withColumn("seg", F.lit(s).cast("long"))
-            base = base.unionByName(seg)
-        return base
+        return self._segmented("doclens")
 
     @property
     def docstats(self) -> DataFrame:
@@ -1234,49 +1288,98 @@ class SearchIndex:
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(fsutil.join(self.path, "term_stats"))
+        df = self._readers.get("term_stats")
+        if df is None:
+            df = self.spark.read.parquet(fsutil.join(self.path, "term_stats"))
+            self._readers["term_stats"] = df
+        return df
+
+    def _term_stats_index(self) -> list:
+        """[(bounds granularity, [(file, footer, [(row group, lo, hi)])])]
+        for the base term_stats and each update segment's, base first;
+        lo/hi are the row group's term min/max as UTF-8 bytes (None
+        when the writer kept no statistics). The footers are walked once
+        per handle, as ``scan_doclens_ranges`` does for doclens."""
+        if self._ts_index is None:
+            sources = [(self.meta, fsutil.join(self.path, "term_stats"))]
+            sources += [(self._seg_meta(s), fsutil.join(
+                self.path, "updates", f"seg={s}", "term_stats"))
+                for s in self._update_segs()]
+            index = []
+            for meta, root in sources:
+                files = []
+                for path, _sz in fsutil.list_parquet_files(root):
+                    md = fsutil.parquet_file(path).metadata
+                    rgs = [(rg, None, None) if mm is None
+                           else (rg, _utf8(mm[0]), _utf8(mm[1]))
+                           for rg, mm in enumerate(_column_stats(md, "term"))]
+                    files.append((path, md, rgs))
+                index.append((int(meta.get("bounds_granularity", 1)), files))
+            self._ts_index = index
+        return self._ts_index
+
+    def _term_rows(self, terms: Sequence[str], cols: List[str],
+                   base_only: bool = False) -> List[dict]:
+        """The queried terms' term_stats rows (dicts over ``cols`` plus
+        ``g``, their source's bounds granularity), read on the driver
+        with pyarrow. Files are term-sorted, so a row group whose term
+        range holds no queried term is skipped from its footer; in the
+        rest only the term column is decoded unless a term matches. No
+        Spark job, and O(queried terms) rows leave the reader."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        want = sorted({t.encode("utf-8") for t in terms})
+        value_set = pa.array(sorted(set(terms)), type=pa.string())
+        sources = self._term_stats_index()
+        rows: List[dict] = []
+        for g, files in (sources[:1] if base_only else sources):
+            for path, md, rgs in files:
+                hit = []
+                for rg, lo, hi in rgs:
+                    if lo is not None:
+                        i = bisect.bisect_left(want, lo)
+                        if i == len(want) or want[i] > hi:
+                            continue  # no queried term in [lo, hi]
+                    hit.append(rg)
+                if not hit:
+                    continue
+                pf = fsutil.parquet_file(path, metadata=md)
+                for rg in hit:
+                    mask = pc.is_in(pf.read_row_group(rg, columns=["term"])
+                                    .column(0), value_set=value_set)
+                    if not pc.any(mask).as_py():
+                        continue
+                    for r in pf.read_row_group(rg, columns=cols) \
+                            .filter(mask).to_pylist():
+                        r["g"] = g
+                        rows.append(r)
+        return rows
 
     def _sketches_available(self) -> bool:
-        if getattr(self, "_has_sketches", None) is None:
-            self._has_sketches = "grp_ids" in self.term_stats.columns
+        """term_stats carries the block sketch columns (format >= 4),
+        read from one footer."""
+        if self._has_sketches is None:
+            files = [f for _g, fs in self._term_stats_index()[:1]
+                     for f in fs]
+            self._has_sketches = bool(files) and \
+                "grp_ids" in files[0][1].schema.names
         return self._has_sketches
 
     def _term_sketches(self, terms: Sequence[str]) -> dict:
         """Per-term block sketches (presence intervals + block-max bound
-        arrays), fetched once per never-seen term and memoized: ONE tiny
-        job over the term-pruned term_stats scan returns O(terms) rows
-        of O(groups) bytes each — the scale-safe replacement for
-        collecting (term, block) metadata rows per query. Update-segment
-        term_stats union in for presence/bounds; the base df is the one
-        scoring uses (stats stay as-built until compact, documented)."""
+        arrays), read once per never-seen term and memoized: the
+        driver-side ``_term_rows`` read returns O(terms) rows of
+        O(groups) bytes each, with no Spark job — the scale-safe
+        replacement for collecting (term, block) metadata rows per
+        query. Update-segment term_stats add their presence/bounds, and
+        df sums over every source (made exact by _df_corrections)."""
         missing = [t for t in dict.fromkeys(terms)
                    if t not in self._sketch_cache]
         if missing:
-            cols = ["term", "df", "grp_ids", "grp_tf_max", "grp_dl_min"]
-            if self._local_query_ok(extended=True):  # metadata-sized read
-                # small index: the whole term_stats table was pyarrow-read
-                # once (no Spark job); serve the missing terms from it
-                collected = [r for t in missing
-                             for r in self._local_term_stats().get(t, ())]
-            else:
-                sources = [(int(self.meta.get("bounds_granularity", 1)),
-                            True, self.term_stats)]
-                for s in self._update_segs():
-                    ts = self.spark.read.parquet(fsutil.join(
-                        self.path, "updates", f"seg={s}", "term_stats"))
-                    sources.append(
-                        (int(self._seg_meta(s).get("bounds_granularity", 1)),
-                         False, ts))
-                union = None
-                for g, is_base, ts in sources:
-                    part = ts.filter(F.col("term").isin(missing)) \
-                        .select(*cols) \
-                        .withColumn("g", F.lit(g)) \
-                        .withColumn("is_base", F.lit(is_base))
-                    union = part if union is None else union.unionByName(part)
-                collected = union.collect()
             by_term: dict = {}
-            for r in collected:
+            for r in self._term_rows(
+                    missing, ["term", "df", "grp_ids", "grp_tf_max",
+                              "grp_dl_min"]):
                 g = int(r["g"])
                 grp = np.frombuffer(r["grp_ids"], dtype="<i4").astype(np.int64)
                 part = (grp * g, grp * g + g,
@@ -1321,18 +1424,18 @@ class SearchIndex:
         return int(self.docfreqs([term])[term])
 
     def docfreqs(self, terms: Iterable[str]) -> dict:
-        """Doc freq per term (missing -> 0); driver-side lookup, cached.
-        Shares the sketch fetch so a query's df lookup and its block
-        pruning/bounds metadata cost ONE job, not several."""
+        """Doc freq per term (missing -> 0); driver-side pyarrow lookup,
+        cached, no Spark job. Shares the sketch read, so a query's df
+        lookup and its block pruning/bounds metadata read term_stats
+        once."""
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
             if self._sketches_available():
                 self._term_sketches(missing)
             else:  # pre-v4 term_stats without sketch columns
-                rows = self.term_stats.filter(F.col("term").isin(missing)) \
-                    .select("term", "df").collect()
-                found = {r["term"]: int(r["df"]) for r in rows}
+                found = {r["term"]: int(r["df"]) for r in self._term_rows(
+                    missing, ["term", "df"], base_only=True)}
                 for t in missing:
                     self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
@@ -1470,31 +1573,6 @@ class SearchIndex:
             self._local_posts = store
         return self._local_posts
 
-    def _local_term_stats(self) -> dict:
-        """term -> [row dicts shaped like the Spark sketch-fetch union]
-        (keys: term, df, grp_ids, grp_tf_max, grp_dl_min, g, is_base),
-        pyarrow-read once. Only built under _local_query_ok()."""
-        if getattr(self, "_local_ts", None) is None:
-            import pyarrow.parquet as pq
-            sources = [(int(self.meta.get("bounds_granularity", 1)), True,
-                        fsutil.join(self.path, "term_stats"))]
-            sources += [
-                (int(self._seg_meta(s).get("bounds_granularity", 1)), False,
-                 fsutil.join(self.path, "updates", f"seg={s}", "term_stats"))
-                for s in self._update_segs()]
-            cols = ["term", "df", "grp_ids", "grp_tf_max", "grp_dl_min"]
-            out: dict = {}
-            for g, is_base, root in sources:
-                t = pq.read_table(root, columns=cols)
-                data = [t.column(c).to_pylist() for c in cols]
-                for term, df_, gi, gt, gd in zip(*data):
-                    out.setdefault(term, []).append(
-                        {"term": term, "df": df_, "grp_ids": gi,
-                         "grp_tf_max": gt, "grp_dl_min": gd,
-                         "g": g, "is_base": is_base})
-            self._local_ts = out
-        return self._local_ts
-
     # prune doc blocks via the term sketches when the rarest query term
     # is at least this much rarer than the corpus (the sketch lookup is
     # cached driver math; for all-hot queries pruning can't help)
@@ -1562,6 +1640,17 @@ class SearchIndex:
                           block_ids=block_ids, or_combine=True,
                           or_maxscore=or_maxscore), True
 
+    def _zero_shuffle(self, tokens: List[List[str]],
+                      has_cand: bool = False) -> bool:
+        """Whether the distributed ``_hits`` plan scores straight off the
+        postings scan (mapInPandas) instead of the grouped applyInPandas
+        fallback. Single terms always can; phrases/slop need every query
+        term of a doc block co-located, which is free when scan
+        partitions hold whole files (= whole blocks); candidates use the
+        grouped path (their join may re-shuffle)."""
+        return all(len(t) == 1 for t in tokens) or (
+            not has_cand and self._files_aligned())
+
     def _hits(self, tokens: List[List[str]], similarity=None,
               min_posn: Optional[int] = None, max_posn: Optional[int] = None,
               slop: int = 0, block_ids: Optional[Sequence[int]] = None,
@@ -1587,8 +1676,10 @@ class SearchIndex:
         matching-token count in token_idx) — callers drop their
         groupBy(doc_id); only valid when every token of a block is
         scored in one call (see _hits_or). ``per_token_topk`` keeps each
-        (token, block)'s local top-k under (score desc, doc_id asc) —
-        exact for global top-k consumers (the winner set is a subset).
+        (token, block)'s local top-k under (score desc, doc_id asc), and
+        on the zero-shuffle plan each token's top-k over the whole scan
+        partition — exact for global top-k consumers (the winner set is
+        a subset).
 
         ``candidates`` (a DataFrame with a doc_id column) restricts
         scoring to those docs INSIDE the kernel (posting-array semi-join,
@@ -1861,11 +1952,7 @@ class SearchIndex:
                 pack_ids, "block_id long, cand binary")
             posts = posts.join(cand_packed, "block_id", "inner")
         single_terms_only = all(len(t) == 1 for t in tokens_b)
-        # phrases/slop need every query term of a doc block co-located:
-        # free when scan partitions hold whole files (= whole blocks);
-        # candidates use the grouped path (their join may re-shuffle)
-        zero_shuffle = single_terms_only or (
-            not has_cand and self._files_aligned())
+        zero_shuffle = self._zero_shuffle(tokens_b, has_cand)
 
         def _cand_of(pdf: pd.DataFrame):
             return pdf["cand"].iloc[0] if has_cand else None
@@ -1895,7 +1982,7 @@ class SearchIndex:
             # frame (bounded: only the query terms' rows are in the scan).
             stream = single_terms_only and not or_combine
 
-            def map_kernel(it):
+            def block_frames(it):
                 dl_get = make_dl_get()
                 if not stream:
                     batches = [pdf for pdf in it if len(pdf)]
@@ -1912,6 +1999,23 @@ class SearchIndex:
                         yield score_block(int(block_id),
                                           merge_packed(grp, block_id),
                                           dl_raw, _cand_of(grp))
+
+            def map_kernel(it):
+                if per_token_topk is None:
+                    yield from block_frames(it)
+                    return
+                # batch top-k: each token's top-k over the WHOLE scan
+                # partition leaves the task, so the driver merges at most
+                # k x tokens x partitions rows (the bound TakeOrdered
+                # gives top_k) with no rank-window exchange
+                frames = [f for f in block_frames(it) if len(f)]
+                if frames:
+                    pdf = pd.concat(frames, ignore_index=True)
+                    top = _rank_by_token(
+                        {c: pdf[c].to_numpy() for c in pdf.columns},
+                        per_token_topk)
+                    del top["rank"]
+                    yield pd.DataFrame(top)
 
             cols = ["term", "block_id", "postings", "seg"] \
                 + (["cand"] if has_cand else [])
@@ -2154,7 +2258,9 @@ class SearchIndex:
         highest-bound blocks first in cluster-sized chunks; once k docs
         are held, theta = kth score and every remaining block with
         bound < theta is skipped. Each chunk is one Spark job over a
-        partition-pruned postings scan; only top-k rows return.
+        partition-pruned postings scan; only top-k rows return, and the
+        merged result is a driver-held frame (no further job). An index
+        with at most one chunk of candidate blocks runs one job.
 
         Pruning is sound only for similarities monotone increasing in tf
         and decreasing in dl; a custom callable without the
@@ -2230,8 +2336,8 @@ class SearchIndex:
             out._wand_blocks_scanned = -1  # exhaustive: no pruning ran
             out._wand_blocks_total = -1
             return out
-        if not bounds:
-            return self.spark.createDataFrame([], "doc_id long, score float")
+        # no bounds (no token occurs in any block): no chunk runs and
+        # the empty driver-held result below is returned
         blocks = sorted(((b, ub) for b, ub in bounds.items()),
                         key=lambda x: (-x[1], x[0]))
         # two-phase adaptive plan: one seed chunk of the highest-bound
@@ -2279,9 +2385,10 @@ class SearchIndex:
                 theta = best[-1][0]
             elif i >= len(blocks):
                 break
-        out = self.spark.createDataFrame(
-            [(int(d), float(s)) for s, d in best], "doc_id long, score double") \
-            .select("doc_id", F.col("score").cast("float"))
+        out = _local_df(self.spark, pd.DataFrame(
+            {"doc_id": np.asarray([d for _, d in best], dtype=np.int64),
+             "score": np.asarray([sc for sc, _ in best], dtype=np.float32)}),
+            TOPK_SCHEMA)
         out._wand_blocks_scanned = scanned  # introspection for tests
         out._wand_blocks_total = len(blocks)
         return out
@@ -2289,41 +2396,33 @@ class SearchIndex:
     def top_k_many(self, tokens: Sequence[TokenArg], k: int = 10,
                    similarity=None) -> DataFrame:
         """Top-k per query token in ONE kernel pass (batch scoring):
-        (token_idx, doc_id, score, rank). Rank assignment mirrors the
-        reference's SetOfResults (utils/sort.py:21-45) as a window
-        row_number per token. The kernel pre-truncates each (token,
-        block) to its local top-k under the same total order, so the
-        rank window's exchange carries O(k x blocks x tokens) rows, not
-        every matching doc — exact, and the scale-relevant shape."""
-        from pyspark.sql import Window
+        (token_idx, doc_id, score, rank). Ranks follow the reference's
+        SetOfResults (utils/sort.py:21-45): (score desc, doc_id asc) per
+        token. On the zero-shuffle plan the kernel keeps each token's
+        top-k over its whole scan partition and the driver ranks the
+        collected rows (at most k x tokens x partitions) — one Spark
+        job, the partition-local top-k plus driver merge of REPOSE
+        (ICDE 2021). The grouped fallback (phrases on unaligned files)
+        cannot see a whole partition: it keeps each (token, block)'s
+        top-k and ranks them with a window row_number."""
         toks = [_normalize_token(t) for t in tokens]
         pdf = self._local_hits_pdf(toks, similarity=similarity,
                                    per_token_topk=k)
-        if pdf is not None:
-            # driver-side rank per token under the same total order
-            ti = pdf["token_idx"].to_numpy(dtype=np.int32)
-            doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-            sc = pdf["score"].to_numpy(dtype=np.float32)
-            order = np.lexsort((doc, -sc.astype(np.float64), ti))
-            ti, doc, sc = ti[order], doc[order], sc[order]
-            starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(ti)) + 1))
-            widths = np.diff(np.concatenate((starts, [len(ti)])))
-            rank = (np.arange(len(ti), dtype=np.int64)
-                    - np.repeat(starts, widths) + 1)
-            keep = rank <= k
-            out = pd.DataFrame({
-                "token_idx": ti[keep],
-                "doc_id": doc[keep],
-                "score": sc[keep],
-                "rank": rank[keep].astype(np.int32)})
-            return _local_df(self.spark, out, TOPK_MANY_SCHEMA)
-        hits = self._hits(toks, similarity=similarity, per_token_topk=k)
-        w = Window.partitionBy("token_idx").orderBy(
-            F.desc("score"), F.asc("doc_id"))
-        return hits.withColumn("rank", F.row_number().over(w)) \
-            .filter(F.col("rank") <= k) \
-            .select("token_idx", "doc_id", "score", "rank")
+        if pdf is None:
+            hits = self._hits(toks, similarity=similarity, per_token_topk=k)
+            if not self._zero_shuffle(toks):
+                from pyspark.sql import Window
+                w = Window.partitionBy("token_idx").orderBy(
+                    F.desc("score"), F.asc("doc_id"))
+                return hits.withColumn("rank", F.row_number().over(w)) \
+                    .filter(F.col("rank") <= k) \
+                    .select("token_idx", "doc_id", "score", "rank")
+            pdf = hits.toPandas()
+        out = _rank_by_token({
+            "token_idx": pdf["token_idx"].to_numpy(dtype=np.int32),
+            "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
+            "score": pdf["score"].to_numpy(dtype=np.float32)}, k)
+        return _local_df(self.spark, pd.DataFrame(out), TOPK_MANY_SCHEMA)
 
     def positions(self, term: str,
                   doc_ids: Optional[Sequence[int]] = None) -> DataFrame:

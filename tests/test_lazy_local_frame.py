@@ -109,3 +109,13 @@ def test_array_schema_not_lazy(spark):
     df = _local_df(spark, pdf, schema)
     assert not isinstance(df, _LazyLocalFrame)
     assert df.collect()[0]["posns"] == [0, 2]
+
+
+def test_instance_attributes_cover_pyspark_dataframe(spark):
+    """_LazyLocalFrame bypasses DataFrame.__init__ and sets its instance
+    attributes by hand. A PySpark version whose DataFrame gains an
+    instance attribute fails here, instead of raising deep inside some
+    DataFrame method called on a lazy query result."""
+    real = set(vars(spark.range(1))) - {"_jdf"}
+    lazy = set(vars(_local_df(spark, _hits_pdf(), HITS_SCHEMA)))
+    assert real <= lazy, sorted(real - lazy)
