@@ -16,6 +16,10 @@ def main() -> int:
     from searcharray_spark.index import SearchIndex
     from searcharray_spark.session import get_spark
 
+    # the plans shown are the distributed route's: no driver-local
+    # shortcut, whatever the index size
+    SearchIndex.LOCAL_QUERY_MAX_BYTES = 0
+    SearchIndex.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     docs = [("common w1 x", ), ("common w2 common", ), ("w3 common q", ),
@@ -57,11 +61,12 @@ def main() -> int:
                      "the scan, NO exchange",
                      plan(or_hits.orderBy(F.desc("score"),
                                           F.asc("doc_id")).limit(5))))
-    sections.append(("PLAN 7: batch top-k (top_k_many) — kernel "
-                     "pre-truncates each (token, block) to its local "
-                     "top-k, so the rank window exchanges O(k x blocks "
-                     "x tokens) rows",
-                     plan(idx.top_k_many(["common", "w3", "rare"], k=5))))
+    sections.append(("PLAN 7: batch top-k (top_k_many) scan — the kernel "
+                     "keeps each token's top-k over its scan partition, "
+                     "NO exchange; the driver collects at most k x "
+                     "tokens x partitions rows and ranks them",
+                     plan(idx._hits([["common"], ["w3"], ["rare"]],
+                                    per_token_topk=5))))
 
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "docs", "plans_raw.txt")

@@ -89,13 +89,11 @@ def read_parquet(path: str, columns=None, filters=None):
     return pq.read_table(p, columns=columns, filters=filters, filesystem=f)
 
 
-def parquet_file(path: str, metadata=None):
-    """pyarrow.parquet.ParquetFile for a path or URI (footer access).
-    ``metadata`` is a footer read earlier; passing it skips re-reading
-    the footer."""
+def parquet_file(path: str):
+    """pyarrow.parquet.ParquetFile for a path or URI (footer access)."""
     import pyarrow.parquet as pq
     f, p = resolve(path)
-    return pq.ParquetFile(p, filesystem=f, metadata=metadata)
+    return pq.ParquetFile(p, filesystem=f)
 
 
 def write_json(path: str, obj) -> None:

@@ -28,7 +28,6 @@ Query execution model (no shuffle at query time):
 """
 from __future__ import annotations
 
-import bisect
 import json
 import os
 from typing import Iterable, List, Optional, Sequence, Union
@@ -206,11 +205,18 @@ def _rank_by_token(cols: dict, k: int) -> dict:
     return out
 
 
-def _utf8(v) -> bytes:
-    """A parquet string statistic as UTF-8 bytes (pyarrow returns str,
-    or bytes for a truncated value that is not valid UTF-8). Byte order
-    on UTF-8 is code point order, the order the writer sorted by."""
-    return v.encode("utf-8") if isinstance(v, str) else bytes(v)
+def _read_term_rows(root: str, terms: Sequence[str],
+                    cols: List[str]) -> List[dict]:
+    """The rows of ``terms`` (non-empty) in the term_stats table at
+    ``root``, as dicts over ``cols``, read on the driver with pyarrow:
+    no Spark job. One equality per term, not an ``in`` filter: pyarrow
+    skips a row group by its footer term min/max only for equalities,
+    and the writers keep term_stats row groups small and term-sorted
+    (indexing.TERM_STATS_ROW_GROUP_ROWS), so a lookup decodes
+    O(queried terms) row groups, not the whole table."""
+    return fsutil.read_parquet(
+        root, columns=cols,
+        filters=[[("term", "=", t)] for t in terms]).to_pylist()
 
 
 def _ub_of(entry, block_id: int) -> float:
@@ -415,23 +421,6 @@ def _parquet_row_count(root: str) -> int:
                for f, _ in fsutil.list_parquet_files(root))
 
 
-def _column_stats(md, column: str) -> list:
-    """(min, max) statistics of ``column`` per row group of a parquet
-    footer; None for a row group whose writer kept no statistics."""
-    out = []
-    for rg in range(md.num_row_groups):
-        row_grp = md.row_group(rg)
-        mm = None
-        for ci in range(row_grp.num_columns):
-            col = row_grp.column(ci)
-            st = col.statistics
-            if (col.path_in_schema == column and st is not None
-                    and st.has_min_max):
-                mm = (st.min, st.max)
-        out.append(mm)
-    return out
-
-
 def scan_doclens_ranges(sources) -> list:
     """[(seg, file, min_block, max_block)] for every parquet file under
     each (seg, root) source, from parquet footer stats — driver-side,
@@ -440,18 +429,25 @@ def scan_doclens_ranges(sources) -> list:
     out = []
     for seg, root in sources:
         for p, _sz in fsutil.list_parquet_files(root):
-            stats = [mm for mm in _column_stats(
-                fsutil.parquet_file(p).metadata, "block_id") if mm is not None]
-            if stats:
-                lo = min(int(mm[0]) for mm in stats)
-                hi = max(int(mm[1]) for mm in stats)
-            else:  # stats disabled: read the tiny column
-                ids = fsutil.read_parquet(p, columns=["block_id"]) \
-                    .column(0).to_pylist()
-                if not ids:
-                    continue
-                lo, hi = int(min(ids)), int(max(ids))
-            out.append((seg, p, lo, hi))
+                md = fsutil.parquet_file(p).metadata
+                lo = hi = None
+                for rg in range(md.num_row_groups):
+                    row_grp = md.row_group(rg)
+                    for ci in range(row_grp.num_columns):
+                        col = row_grp.column(ci)
+                        if col.path_in_schema != "block_id":
+                            continue
+                        st = col.statistics
+                        if st is not None and st.has_min_max:
+                            lo = int(st.min) if lo is None else min(lo, int(st.min))
+                            hi = int(st.max) if hi is None else max(hi, int(st.max))
+                if lo is None:  # stats disabled: read the tiny column
+                    ids = fsutil.read_parquet(p, columns=["block_id"]) \
+                        .column(0).to_pylist()
+                    if not ids:
+                        continue
+                    lo, hi = int(min(ids)), int(max(ids))
+                out.append((seg, p, lo, hi))
     return out
 
 
@@ -555,7 +551,6 @@ class SearchIndex:
         self._sketch_cache: dict = {}
         self._bounds_cache: dict = {}
         self._dl_ranges: list | None = None
-        self._ts_index: list | None = None
         self._has_sketches: bool | None = None
         # cache() results; the plain reader frames are memoized apart so
         # an uncached table is schema-inferred (one Spark job) once per
@@ -1144,7 +1139,6 @@ class SearchIndex:
         self._sketch_cache = {}
         self._bounds_cache = {}
         self._dl_ranges = None
-        self._ts_index = None
         self._has_sketches = None
         self._aligned = None
         rc = getattr(self, "_result_cache", None)
@@ -1294,106 +1288,51 @@ class SearchIndex:
             self._readers["term_stats"] = df
         return df
 
-    def _term_stats_index(self) -> list:
-        """[(bounds granularity, [(file, footer, [(row group, lo, hi)])])]
-        for the base term_stats and each update segment's, base first;
-        lo/hi are the row group's term min/max as UTF-8 bytes (None
-        when the writer kept no statistics). The footers are walked once
-        per handle, as ``scan_doclens_ranges`` does for doclens."""
-        if self._ts_index is None:
-            sources = [(self.meta, fsutil.join(self.path, "term_stats"))]
-            sources += [(self._seg_meta(s), fsutil.join(
-                self.path, "updates", f"seg={s}", "term_stats"))
-                for s in self._update_segs()]
-            index = []
-            for meta, root in sources:
-                files = []
-                for path, _sz in fsutil.list_parquet_files(root):
-                    md = fsutil.parquet_file(path).metadata
-                    rgs = [(rg, None, None) if mm is None
-                           else (rg, _utf8(mm[0]), _utf8(mm[1]))
-                           for rg, mm in enumerate(_column_stats(md, "term"))]
-                    files.append((path, md, rgs))
-                index.append((int(meta.get("bounds_granularity", 1)), files))
-            self._ts_index = index
-        return self._ts_index
-
-    def _term_rows(self, terms: Sequence[str], cols: List[str],
-                   base_only: bool = False) -> List[dict]:
-        """The queried terms' term_stats rows (dicts over ``cols`` plus
-        ``g``, their source's bounds granularity), read on the driver
-        with pyarrow. Files are term-sorted, so a row group whose term
-        range holds no queried term is skipped from its footer; in the
-        rest only the term column is decoded unless a term matches. No
-        Spark job, and O(queried terms) rows leave the reader."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        want = sorted({t.encode("utf-8") for t in terms})
-        value_set = pa.array(sorted(set(terms)), type=pa.string())
-        sources = self._term_stats_index()
-        rows: List[dict] = []
-        for g, files in (sources[:1] if base_only else sources):
-            for path, md, rgs in files:
-                hit = []
-                for rg, lo, hi in rgs:
-                    if lo is not None:
-                        i = bisect.bisect_left(want, lo)
-                        if i == len(want) or want[i] > hi:
-                            continue  # no queried term in [lo, hi]
-                    hit.append(rg)
-                if not hit:
-                    continue
-                pf = fsutil.parquet_file(path, metadata=md)
-                for rg in hit:
-                    mask = pc.is_in(pf.read_row_group(rg, columns=["term"])
-                                    .column(0), value_set=value_set)
-                    if not pc.any(mask).as_py():
-                        continue
-                    for r in pf.read_row_group(rg, columns=cols) \
-                            .filter(mask).to_pylist():
-                        r["g"] = g
-                        rows.append(r)
-        return rows
-
     def _sketches_available(self) -> bool:
         """term_stats carries the block sketch columns (format >= 4),
         read from one footer."""
         if self._has_sketches is None:
-            files = [f for _g, fs in self._term_stats_index()[:1]
-                     for f in fs]
-            self._has_sketches = bool(files) and \
-                "grp_ids" in files[0][1].schema.names
+            files = fsutil.list_parquet_files(
+                fsutil.join(self.path, "term_stats"))
+            self._has_sketches = bool(files) and "grp_ids" in \
+                fsutil.parquet_file(files[0][0]).schema_arrow.names
         return self._has_sketches
 
     def _term_sketches(self, terms: Sequence[str]) -> dict:
         """Per-term block sketches (presence intervals + block-max bound
         arrays), read once per never-seen term and memoized: the
-        driver-side ``_term_rows`` read returns O(terms) rows of
-        O(groups) bytes each, with no Spark job — the scale-safe
-        replacement for collecting (term, block) metadata rows per
-        query. Update-segment term_stats add their presence/bounds, and
-        df sums over every source (made exact by _df_corrections)."""
+        driver-side ``_read_term_rows`` read returns O(terms) rows of
+        O(groups) bytes each, with no Spark job, instead of collecting
+        (term, block) metadata rows per query. Update-segment
+        term_stats add their presence/bounds, and df sums over every
+        source (made exact by _df_corrections)."""
         missing = [t for t in dict.fromkeys(terms)
                    if t not in self._sketch_cache]
         if missing:
+            sources = [(self.meta, fsutil.join(self.path, "term_stats"))]
+            sources += [(self._seg_meta(s), fsutil.join(
+                self.path, "updates", f"seg={s}", "term_stats"))
+                for s in self._update_segs()]
             by_term: dict = {}
-            for r in self._term_rows(
-                    missing, ["term", "df", "grp_ids", "grp_tf_max",
-                              "grp_dl_min"]):
-                g = int(r["g"])
-                grp = np.frombuffer(r["grp_ids"], dtype="<i4").astype(np.int64)
-                part = (grp * g, grp * g + g,
-                        np.frombuffer(r["grp_tf_max"], dtype="<i4")
-                          .astype(np.int64),
-                        np.frombuffer(r["grp_dl_min"], dtype="<i4")
-                          .astype(np.int64))
-                # df sums over ALL sources (base + update segments);
-                # docs double-counted across sources or tombstoned are
-                # subtracted exactly by _df_corrections below
-                df_sum, parts = by_term.get(r["term"], (0, []))
-                df_sum += int(r["df"])
-                parts.append(part)
-                by_term[r["term"]] = (df_sum, parts)
+            for meta, root in sources:
+                g = int(meta.get("bounds_granularity", 1))
+                for r in _read_term_rows(
+                        root, missing, ["term", "df", "grp_ids",
+                                        "grp_tf_max", "grp_dl_min"]):
+                    grp = np.frombuffer(r["grp_ids"], dtype="<i4") \
+                        .astype(np.int64)
+                    part = (grp * g, grp * g + g,
+                            np.frombuffer(r["grp_tf_max"], dtype="<i4")
+                              .astype(np.int64),
+                            np.frombuffer(r["grp_dl_min"], dtype="<i4")
+                              .astype(np.int64))
+                    # df sums over ALL sources (base + update segments);
+                    # docs double-counted across sources or tombstoned
+                    # are subtracted exactly by _df_corrections below
+                    df_sum, parts = by_term.get(r["term"], (0, []))
+                    df_sum += int(r["df"])
+                    parts.append(part)
+                    by_term[r["term"]] = (df_sum, parts)
             corr = self._df_corrections(
                 [t for t in missing if t in by_term])
             for t in missing:
@@ -1434,8 +1373,9 @@ class SearchIndex:
             if self._sketches_available():
                 self._term_sketches(missing)
             else:  # pre-v4 term_stats without sketch columns
-                found = {r["term"]: int(r["df"]) for r in self._term_rows(
-                    missing, ["term", "df"], base_only=True)}
+                found = {r["term"]: int(r["df"]) for r in _read_term_rows(
+                    fsutil.join(self.path, "term_stats"), missing,
+                    ["term", "df"])}
                 for t in missing:
                     self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms}
@@ -1832,9 +1772,10 @@ class SearchIndex:
                         and len(ids) > per_token_topk):
                     # keep only this BLOCK's top-n under the global total
                     # order (score desc, doc_id asc): the global top-k is
-                    # a subset of the per-block top-k, so the downstream
-                    # rank window shuffles O(k x blocks) rows instead of
-                    # every matching doc
+                    # a subset of the per-block top-k, so the grouped
+                    # fallback's rank window shuffles O(k x blocks) rows
+                    # instead of every matching doc (the zero-shuffle
+                    # plan trims further, per scan partition)
                     order = np.lexsort((ids, -scores))[:per_token_topk]
                     ids, tfs, scores = ids[order], tfs[order], scores[order]
                 out_tok.append(np.full(len(ids), idx, dtype=np.int32))
@@ -2400,11 +2341,13 @@ class SearchIndex:
         SetOfResults (utils/sort.py:21-45): (score desc, doc_id asc) per
         token. On the zero-shuffle plan the kernel keeps each token's
         top-k over its whole scan partition and the driver ranks the
-        collected rows (at most k x tokens x partitions) — one Spark
-        job, the partition-local top-k plus driver merge of REPOSE
-        (ICDE 2021). The grouped fallback (phrases on unaligned files)
-        cannot see a whole partition: it keeps each (token, block)'s
-        top-k and ranks them with a window row_number."""
+        collected rows — one Spark job, the partition-local top-k plus
+        driver merge of REPOSE (ICDE 2021). That plan is eager: the
+        scan runs inside this call (errors and cost show here, not at
+        the caller's action), and the driver holds up to k x tokens x
+        scan partitions rows. The grouped fallback (phrases on unaligned
+        files) cannot see a whole partition: it keeps each (token,
+        block)'s top-k and returns a lazy window row_number plan."""
         toks = [_normalize_token(t) for t in tokens]
         pdf = self._local_hits_pdf(toks, similarity=similarity,
                                    per_token_topk=k)

@@ -46,7 +46,9 @@ Index layout on disk (parquet):
               + block-max bound sketch. Query-time block pruning and
               WAND bounds are driver lookups of the query terms' rows
               (O(terms) rows, O(terms * groups) bytes), never an
-              O(terms x blocks) row collect.
+              O(terms x blocks) row collect. Files are term-sorted in
+              row groups of TERM_STATS_ROW_GROUP_ROWS terms, so a
+              lookup reads only the row groups that can hold its terms.
   meta.json   tokenizer, docs_per_block, num_docs, avg_doc_len, ...
 (per-doc docstats are derived lazily from doclens — see SearchIndex)
 """
@@ -76,6 +78,12 @@ from .partitioning import PROBE_MAX_PARTITIONS, repartition_exact
 # compression ratio of a 64 MB file). Single-row-group files are the
 # soundness basis of the zero-shuffle phrase path — see module docstring.
 PARQUET_ROW_GROUP_BYTES = 2 << 30
+
+# term_stats row groups hold at most this many terms. Both writers keep
+# files term-sorted, so a driver-side term lookup skips every row group
+# whose footer term min/max excludes the queried terms and decodes
+# O(queried terms) row groups, not the whole sketch table.
+TERM_STATS_ROW_GROUP_ROWS = 4096
 
 # per-term bound sketches aggregate blocks into groups of this many
 # blocks when the corpus has more than MAX_BOUND_GROUPS blocks, keeping
@@ -205,7 +213,10 @@ def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
     agg.repartition(max(1, n_partitions), "term") \
         .sortWithinPartitions("term", "grp") \
         .mapInPandas(gather, TERM_STATS_SCHEMA) \
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite") \
+        .option("parquet.block.row.count.limit",
+                str(TERM_STATS_ROW_GROUP_ROWS)) \
+        .parquet(path)
 
 
 STAGE_SCHEMA = StructType([
@@ -429,7 +440,8 @@ TS_LOCAL_MAX_POSTINGS_BYTES = 256 << 20
 def _write_term_stats_pdf(posts: pd.DataFrame, ts_dir: str,
                           granularity: int) -> None:
     """Aggregate per-(term, block) posting metadata rows into the
-    per-term sketch table and write ONE single-row-group file. Shared by
+    per-term sketch table and write ONE term-sorted file in row groups
+    of TERM_STATS_ROW_GROUP_ROWS terms. Shared by
     the driver-local build and the fused build's driver-side finalize
     (gated on postings bytes).
 
@@ -518,8 +530,11 @@ def _write_term_stats_pdf(posts: pd.DataFrame, ts_dir: str,
         ts_pdf = pd.DataFrame(columns=[
             "term", "df", "tf_total", "n_blocks", "grp_ids", "grp_tf_max",
             "grp_dl_min"])
-    _write_pq_single_rg(os.path.join(ts_dir, "part-00000.parquet"),
-                        ts_pdf, ts_schema)
+    import pyarrow.parquet as pq
+    pq.write_table(
+        pa.Table.from_pandas(ts_pdf, schema=ts_schema, preserve_index=False),
+        os.path.join(ts_dir, "part-00000.parquet"),
+        row_group_size=TERM_STATS_ROW_GROUP_ROWS, compression="snappy")
 
 
 def _write_pq_single_rg(path: str, pdf: pd.DataFrame, schema) -> None:
