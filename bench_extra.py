@@ -50,7 +50,7 @@ def main():
     df = docs.select(F.col("doc_id").cast("long"), F.col("text")) \
         .withColumn("block_id", F.floor(F.col("doc_id") / F.lit(docs_per_block)))
     fid = F.floor(F.col("block_id") * F.lit(T) / F.lit(max(n_blocks, 1)))
-    dfp = repartition_exact(df, fid, T, range_fallback_cols=["block_id"])
+    dfp = repartition_exact(df, fid, T)
     builder = indexing._make_block_builder(
         tokenizers.resolve("ws"), docs_per_block, False)
     dl_dir = "/tmp/bench_extra_dl"

@@ -5,9 +5,14 @@ Cluster usage (the north-rule deployment shape):
     python scripts/make_pyfiles_zip.py dist/searcharray_spark.zip
     spark-submit --py-files dist/searcharray_spark.zip \
         scripts/submit_build.py \
-        --corpus s3://bucket/webpages/ --index s3://bucket/index/ \
+        --corpus s3://bucket/webpages/ --index /shared/index/ \
         --text-col text --order-col url \
         --docs-per-block 65536 --checkpoint-groups 16 --resume
+
+The index directory must be a filesystem path that the driver and every
+executor see (the build pass side-writes doclens files from the
+executors and commits with renames); the corpus may be any table Spark
+reads.
 
 Sandbox smoke (local master comes from spark-submit/--master):
 
@@ -18,9 +23,12 @@ Sandbox smoke (local master comes from spark-submit/--master):
 
 The script only uses the SparkSession spark-submit hands it — no
 master/memory opinions of its own — so the same file runs on YARN, k8s,
-or standalone clusters. Resumability: with --checkpoint-groups N and
---resume, a killed build restarts from the last committed group
-(per-group markers + metrics.jsonl lineage, indexing.py).
+or standalone clusters. Resumability: --checkpoint-groups N runs the one
+build pass as N group jobs over contiguous ranges of output files, each
+committing a marker under ``_groups/`` and a ``build_group`` record in
+``metrics.jsonl``; with --resume a killed build skips the committed
+groups, and fails if the build plan (docs per block, file count, group
+count, tokenizer, truncate) changed since they were written.
 """
 import argparse
 import json

@@ -9,23 +9,30 @@ re-architected for a multi-executor cluster, not ported):
 2. doc blocks: ``block_id = doc_id // docs_per_block`` — the unit of build
    parallelism AND the query-time partitioning of the doc axis. Local doc
    ids fit the 28-bit key field of the packed posting words.
-3. per-block build (``applyInPandas`` over blocks): tokenize (Arrow batch,
-   vectorized), flatten to (term, local_doc, posn), one-pass multi-term
-   encode into packed uint64 posting arrays + per-term block stats
-   (df, tf_total, block-max tf for WAND-style pruning).
-4. shuffle-merge: per-(term, block) rows — pre-aggregated per block
-   (combiner shape) and CHUNKED to a bounded byte size
-   (``max_words_per_row``) — are range-partitioned by block_id:
-   DOCUMENT-partitioned storage. Every file holds a block range with
-   the full term mix (uniform bytes, no hot-term write skew), sorted by
-   (term, block_id) within the file so parquet row-group min/max stats
-   prune query-term scans. A hot term's rows therefore spread across
-   every file — single-term scans parallelize across the cluster
-   instead of hitting one term-range partition.
-5. checkpointed build: blocks are processed in groups; each completed
-   group commits its output + a marker, so a killed build resumes from
-   the last committed group (north_rule resumability). Per-group metrics
-   (docs/sec, postings, bytes) land in ``metrics.jsonl``.
+3. per-block build (inside a ``mapInPandas`` partition kernel):
+   tokenize (Arrow batch, vectorized), flatten to (term, local_doc,
+   posn), one-pass multi-term encode into packed uint64 posting arrays
+   + per-term block stats (df, tf_total, block-max tf for WAND-style
+   pruning). A hot term's row is CHUNKED to a bounded byte size
+   (``max_words_per_row``).
+4. one pass, DOCUMENT-partitioned: the text is exchanged once with
+   exact placement into final file ids ``fid = block_id * T // n_blocks``
+   (``T`` = term_partitions). The kernel of partition ``fid`` encodes
+   its blocks, side-writes the file's doclens, and emits its postings
+   rows, which the same job writes as the final file. Every file holds
+   a block range with the full term mix (uniform bytes, no hot-term
+   write skew), sorted by (term, block_id) within the file so parquet
+   min/max stats prune query-term scans. A hot term's rows therefore
+   spread across every file — single-term scans parallelize across
+   the cluster instead of hitting one term-range partition.
+5. checkpointed build: the pass runs as ``checkpoint_groups`` group
+   jobs over contiguous fid ranges. Each group lands its files under
+   names fixed by fid, then commits ``_groups/group_{g}_of_{G}.done``
+   holding the build plan, so a killed build resumes from the last
+   committed group (north_rule resumability). ``n_blocks`` and ``T``
+   are fixed before group 0, so every group count writes the same
+   files. term_stats, corpus stats and meta.json are finalized once,
+   after the last group. Per-group metrics land in ``metrics.jsonl``.
 
 Index layout on disk (parquet):
   postings/   term, block_id, postings(binary u64-LE), df, tf_total, tf_max
@@ -55,8 +62,9 @@ Index layout on disk (parquet):
 from __future__ import annotations
 
 import json
-
 import os
+import re
+import shutil
 import time
 from typing import Iterator, Optional
 
@@ -64,7 +72,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
-    BinaryType, FloatType, LongType, StringType, StructField, StructType,
+    BinaryType, LongType, StringType, StructField, StructType,
 )
 
 from . import kernels as K
@@ -150,9 +158,9 @@ def bounds_granularity(n_blocks_total: int) -> int:
     return max(1, -(-int(n_blocks_total) // MAX_BOUND_GROUPS))
 
 
-def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
+def write_term_stats(posts: DataFrame, path: str, n_partitions: int,
                      granularity: int) -> None:
-    """Aggregate per-(term, block) stage rows into per-term sketch rows.
+    """Aggregate per-(term, block) postings rows into per-term sketch rows.
 
     Two-phase: partial agg by (term, group) — map-side combinable, so a
     hot term's shuffled volume is capped at MAX_BOUND_GROUPS rows — then
@@ -167,7 +175,7 @@ def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
         # > 64Ki blocks: pre-aggregate blocks into groups — map-side
         # combinable, so the shuffled volume is capped at MAX_BOUND_GROUPS
         # rows per term no matter the corpus size
-        agg = stage_p.groupBy(
+        agg = posts.groupBy(
             "term", (F.floor(F.col("block_id") / F.lit(granularity))).alias("grp")
         ).agg(
             F.sum("df").alias("df"),
@@ -181,7 +189,7 @@ def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
         # groupBy would shuffle the whole stats stream once for ZERO
         # reduction and then repartition would shuffle it again. Feed the
         # rows straight to the term-partitioned gather — one shuffle.
-        agg = stage_p.select(
+        agg = posts.select(
             "term", F.col("block_id").alias("grp"), "df", "tf_total",
             "tf_max", "dl_min", F.lit(1).alias("n_blocks"))
 
@@ -219,18 +227,10 @@ def write_term_stats(stage_p: DataFrame, path: str, n_partitions: int,
         .parquet(path)
 
 
-STAGE_SCHEMA = StructType([
-    StructField("block_id", LongType()),
-    StructField("kind", StringType()),       # 'p' postings / 'd' doclens
-    StructField("term", StringType()),
-    StructField("postings", BinaryType()),   # packed u64 words (kind='p')
-    StructField("df", LongType()),
-    StructField("tf_total", LongType()),
-    StructField("tf_max", LongType()),
-    StructField("dl_min", LongType()),       # min doc_len among matching docs
-    StructField("doc_ids", BinaryType()),    # kind='d': i64-LE local doc ids
-    StructField("doc_lens", BinaryType()),   # kind='d': f32-LE doc lens
-])
+# columns of the per-block builder's rows: kind 'p' = one (term, block)
+# postings row, kind 'd' = the block's packed doclens row
+BLOCK_ROW_COLS = ["block_id", "kind", "term", "postings", "df", "tf_total",
+                  "tf_max", "dl_min", "doc_ids", "doc_lens"]
 
 # final postings-table schema (order matches write_postings_table's select
 # and the driver-local writer, so fused-built files are bit-compatible)
@@ -265,28 +265,24 @@ def _ensure_parquet_dir(path: str, pa_schema) -> None:
                    compression="zstd")
 
 
-def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
+def _make_partition_kernel(builder, doclens_dir: str, fid_base: int = 0):
     """Partition-level build kernel for ``mapInPandas``.
 
     The input exchange places WHOLE doc blocks into each partition
     (exact-placement ``repartition_exact`` on a block-derived fid), so
-    the per-block builder can run here without the extra
+    the per-block builder runs here without the extra
     ``groupBy().applyInPandas`` hash exchange Spark would otherwise
-    insert (guide §2.4: the old path shuffled the full text twice —
-    once for balance, once for ENSURE_REQUIREMENTS — and the second
-    exchange re-introduced the balls-in-bins skew the first one fixed).
+    insert (guide §2.4: that shuffles the full text twice, and the
+    second exchange re-introduces the balls-in-bins skew the first one
+    fixed).
 
-    Two modes:
-      * ``doclens_dir=None`` — staged/resumable path: yield STAGE_SCHEMA
-        rows exactly as the old per-block ``applyInPandas`` did.
-      * ``doclens_dir=...`` — fused path: this task IS final postings
-        file ``partitionId``; it side-writes the partition's doclens
-        file (deterministic content + atomic rename, so task retries
-        are idempotent; per-partition corpus stats ride in the parquet
-        footer metadata) and yields the postings rows term-sorted, so
-        the enclosing job's parquet write lands them in the final
-        block-range layout with NO further shuffle (guide §8: heavy
-        bytes move exactly once).
+    The task of partition ``p`` IS final file ``fid_base + p``: it
+    side-writes that file's doclens (deterministic content + atomic
+    rename, so task retries are idempotent; per-file corpus stats ride
+    in the parquet footer metadata) and yields the postings rows
+    term-sorted, so the enclosing job's parquet write lands them in the
+    final block-range layout with NO further shuffle (guide §8: heavy
+    bytes move exactly once).
     """
 
     def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -309,14 +305,11 @@ def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
             pieces = buckets.pop(b)
             grp = (pd.concat(pieces, ignore_index=True)
                    if len(pieces) > 1 else pieces[0])
-            # doc_id order within the block, as the staged/local builds
-            # always presented it (deterministic builder output)
+            # doc_id order within the block, as the local build presents
+            # it (deterministic builder output)
             grp = grp.sort_values("doc_id", kind="stable")
             parts.append(builder(grp))
-        stage = pd.concat(parts, ignore_index=True)
-        if doclens_dir is None:
-            yield stage
-            return
+        rows = pd.concat(parts, ignore_index=True)
 
         import uuid
 
@@ -324,14 +317,13 @@ def _make_partition_kernel(builder, doclens_dir: Optional[str] = None):
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        posts = stage[stage["kind"] == "p"]
-        dls = stage[stage["kind"] == "d"]  # already in block_id order
+        posts = rows[rows["kind"] == "p"]
+        dls = rows[rows["kind"] == "d"]  # already in block_id order
 
         # --- side-write this partition's doclens file (tiny: ~12B/doc) ---
-        fid = TaskContext.get().partitionId()
+        fid = fid_base + TaskContext.get().partitionId()
         n_docs = int(sum(len(b) // 8 for b in dls["doc_ids"]))
-        # mirror the staged path's accumulation: f32 sum per block,
-        # accumulated in float64
+        # f32 sum per block, accumulated in float64 (as the local build)
         total_tokens = float(sum(
             float(np.frombuffer(b, dtype="<f4").sum())
             for b in dls["doc_lens"]))
@@ -562,12 +554,12 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
     from .index import SearchIndex
 
     pdf = pdf.sort_values(["block_id", "doc_id"], kind="stable")
-    stage_parts = [builder(grp) for _, grp in pdf.groupby("block_id", sort=True)]
-    stage = pd.concat(stage_parts, ignore_index=True) if stage_parts else \
-        pd.DataFrame(columns=[f.name for f in STAGE_SCHEMA.fields])
+    parts = [builder(grp) for _, grp in pdf.groupby("block_id", sort=True)]
+    rows = pd.concat(parts, ignore_index=True) if parts else \
+        pd.DataFrame(columns=BLOCK_ROW_COLS)
 
-    posts = stage[stage["kind"] == "p"]
-    dls = stage[stage["kind"] == "d"]
+    posts = rows[rows["kind"] == "p"]
+    dls = rows[rows["kind"] == "d"]
 
     # block-range partitioning: contiguous block ranges per file so every
     # block's rows (all terms) share a file — the zero-shuffle invariant
@@ -743,11 +735,7 @@ def _make_block_builder(tokenizer_fn, docs_per_block: int, truncate: bool,
             sorted_ids.astype("<i8").tobytes(),
             sorted_lens.astype("<f4").tobytes(),
         ))
-        return pd.DataFrame(
-            terms_out,
-            columns=["block_id", "kind", "term", "postings", "df", "tf_total",
-                     "tf_max", "dl_min", "doc_ids", "doc_lens"],
-        )
+        return pd.DataFrame(terms_out, columns=BLOCK_ROW_COLS)
 
     return build_block
 
@@ -849,35 +837,96 @@ def _plan_size_estimate(df: DataFrame) -> int:
         return 0
 
 
+def _committed_groups(marker_dir: str, plan: dict) -> set:
+    """Group ids whose ``.done`` marker is committed under ``marker_dir``.
+
+    Raises ValueError naming the first plan field in which a marker
+    differs from ``plan``: resuming under another plan would mix files
+    of two layouts into one (wrong) index."""
+    done = set()
+    names = os.listdir(marker_dir) if os.path.isdir(marker_dir) else []
+    for name in sorted(names):
+        if not name.endswith(".done"):
+            continue
+        with open(os.path.join(marker_dir, name)) as fh:
+            marker = json.load(fh)
+        for key, want in plan.items():
+            if marker.get(key) != want:
+                raise ValueError(
+                    f"cannot resume: {key}={want!r}, but committed group "
+                    f"marker {name} has {key}={marker.get(key)!r}; "
+                    "rebuild with resume=False")
+        done.add(int(marker["group"]))
+    return done
+
+
+def _build_group(df: DataFrame, fid, lo: int, hi: int, n_files: int,
+                 builder, postings_dir: str, doclens_dir: str) -> None:
+    """One group job: build final files ``[lo, hi)`` of ``n_files``.
+
+    The kernel names its doclens files by fid; the postings files Spark
+    writes (named by partition) move to names fixed by fid. A re-run
+    rewrites the same names, so a group killed mid-way is just run
+    again."""
+    import pyarrow.parquet as pq
+    if hi - lo < n_files:
+        df = df.filter((fid >= lo) & (fid < hi))
+    tmp = os.path.join(postings_dir, f"_group_{lo}")  # hidden from readers
+    repartition_exact(df, fid - lo, hi - lo) \
+        .mapInPandas(_make_partition_kernel(builder, doclens_dir, lo),
+                     POSTINGS_SCHEMA) \
+        .write.mode("overwrite") \
+        .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
+        .parquet(tmp)
+    for name in os.listdir(tmp):
+        m = re.match(r"part-(\d+)-.*-(c\d+\..*parquet)$", name)
+        if m is None:
+            continue  # _SUCCESS, .crc
+        src = os.path.join(tmp, name)
+        # Spark writes partition 0's file even when it is empty; dropping
+        # it keeps the file set independent of the group count
+        if int(m[1]) == 0 and pq.ParquetFile(src).metadata.num_rows == 0:
+            continue
+        os.replace(src, os.path.join(
+            postings_dir, f"part-{lo + int(m[1]):05d}-{m[2]}"))
+    shutil.rmtree(tmp)
+
+
 def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
                        docs_per_block: int, term_partitions: Optional[int],
                        tokenizer_name: str, truncate: bool, t_start: float,
                        tokenizer_fn, phases: dict,
-                       known_max_doc: Optional[int] = None):
-    """Single-pass distributed build (checkpoint_groups <= 1).
+                       known_max_doc: Optional[int] = None,
+                       checkpoint_groups: int = 1, resume: bool = False):
+    """Single-pass distributed build, run as one or more group jobs.
 
     First-principles shape (guide §1.1/§8): the text must cross the
     network once (to group whole doc blocks per output file) and the
     index bytes must be written once. This path does exactly that:
 
-      1. ONE cheap column-pruned agg learns max(doc_id) => n_blocks.
-      2. ONE exchange places contiguous block ranges into
-         ``term_partitions`` partitions (exact placement — no sampling
-         pass, no skew), where the partition kernel tokenizes + encodes
-         its blocks, side-writes the partition's doclens file (tiny;
-         corpus stats ride in its parquet footer), and emits the
-         partition's postings rows term-sorted — which the SAME job's
-         parquet write lands as the final single-row-group
-         block-range files. No stage table, no second shuffle of index
+      1. ONE cheap column-pruned agg learns max(doc_id) => n_blocks,
+         and the file count ``T`` (``term_partitions``) is fixed.
+      2. The pass: ONE exchange places contiguous block ranges into
+         final file ids ``fid = block_id * T // n_blocks`` (exact
+         placement — no sampling pass, no skew), where the partition
+         kernel tokenizes + encodes its blocks, side-writes the file's
+         doclens (tiny; corpus stats ride in its parquet footer), and
+         emits the file's postings rows term-sorted — which the SAME
+         job's parquet write lands as the final single-row-group
+         block-range file. No stage table, no second shuffle of index
          bytes, no re-read of the corpus.
       3. term_stats derive from the postings table's METADATA columns
          (columnar scan skips the packed binary; same trick merge.py
-         uses) — a vocabulary-sized job.
+         uses); then one footer walk yields the corpus stats and
+         meta.json commits the index.
 
-    The old staged path wrote the full index bytes to a stage table and
-    re-shuffled them into layout (plus a second accidental exchange of
-    the text, see _make_partition_kernel); it remains only for
-    checkpointed/resumable builds (checkpoint_groups > 1).
+    The pass runs as ``G`` group jobs, each over a contiguous fid range
+    (``checkpoint_groups``, raised so that no job places more than
+    PROBE_MAX_PARTITIONS files). Each group commits
+    ``_groups/group_{g}_of_{G}.done`` holding the build plan; with
+    ``resume`` a group whose marker exists is skipped, and a marker of
+    another plan raises ValueError. ``G = 1`` is one build-pass job.
+    Step 3 runs once, after the last group.
     """
     from .index import SearchIndex
 
@@ -894,27 +943,26 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     n_blocks = int(max_doc // docs_per_block) + 1 if max_doc is not None else 1
 
     if term_partitions is None:
-        # target ~64 MB postings files (same goal as the staged path,
-        # which sized from actual staged bytes). Here the layout must be
-        # fixed BEFORE the one pass, so size from the input estimate:
-        # compressed corpus bytes ~ compressed postings bytes (measured
-        # 0.8-1.3x on the bench corpora). Still data-sized, never
-        # core-count-sized.
+        # target ~64 MB postings files. The layout must be fixed BEFORE
+        # the pass, so size from the input estimate: compressed corpus
+        # bytes ~ compressed postings bytes (measured 0.8-1.3x on the
+        # bench corpora). Still data-sized, never core-count-sized.
         est = _plan_size_estimate(df)
         term_partitions = max(4, spark.sparkContext.defaultParallelism,
                               -(-est // (64 << 20)) if est > 0 else 0)
-        # beyond the exact-placement cap (>= ~4 TB of index in one
-        # un-checkpointed build) clamp: files grow past the 64 MB target
-        # rather than widening the layout past the probe table; such
-        # builds should use checkpoint_groups > 1 anyway
-        term_partitions = min(term_partitions, PROBE_MAX_PARTITIONS)
-    assert term_partitions <= PROBE_MAX_PARTITIONS  # caller-routed (build_index)
+    groups = max(1, checkpoint_groups,
+                 -(-term_partitions // PROBE_MAX_PARTITIONS))
+    plan = {"docs_per_block": docs_per_block, "n_blocks": n_blocks,
+            "term_partitions": term_partitions, "groups": groups,
+            "tokenizer": tokenizer_name, "truncate": truncate}
 
     granularity = bounds_granularity(n_blocks)
     postings_dir = os.path.join(index_path, "postings")
     doclens_dir = os.path.join(index_path, "doclens")
     ts_dir = os.path.join(index_path, "term_stats")
-    import shutil as _sh
+    marker_dir = os.path.join(index_path, "_groups")
+    metrics_path = os.path.join(index_path, "metrics.jsonl")
+    done = _committed_groups(marker_dir, plan) if resume else set()
     # meta.json is the index's commit marker (loaders require it):
     # dropping it FIRST means a build killed mid-pass leaves an
     # unreadable index, never a stale meta over fresh partial tables
@@ -922,16 +970,15 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
         os.remove(os.path.join(index_path, "meta.json"))
     except OSError:
         pass
-    _sh.rmtree(doclens_dir, ignore_errors=True)
-    os.makedirs(doclens_dir, exist_ok=True)
+    for d in (postings_dir, doclens_dir, marker_dir):
+        if not done:  # no file of an earlier build survives a fresh one
+            shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d, exist_ok=True)
 
     # --- THE pass: text exchanged once into final-file partitions ---
     t_p = time.time()
     fid = F.floor(F.col("block_id") * F.lit(int(term_partitions))
                   / F.lit(int(max(n_blocks, 1))))
-    dfp = repartition_exact(df, fid, term_partitions,
-                            range_fallback_cols=["block_id"])
-    kernel = _make_partition_kernel(builder, doclens_dir=doclens_dir)
     # AQE has nothing to optimize here (fixed REPARTITION_BY_NUM width,
     # no joins, partition coalescing already disabled) but its stage
     # materialization adds a scheduling round — measured ~0.1-0.2 s per
@@ -939,10 +986,25 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        dfp.mapInPandas(kernel, POSTINGS_SCHEMA) \
-            .write.mode("overwrite") \
-            .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
-            .parquet(postings_dir)
+        for g in range(groups):
+            if g in done:
+                continue
+            g_start = time.time()
+            lo = g * term_partitions // groups
+            hi = (g + 1) * term_partitions // groups
+            if hi > lo:
+                _build_group(df, fid, lo, hi, term_partitions, builder,
+                             postings_dir, doclens_dir)
+            secs = round(time.time() - g_start, 3)
+            # atomic commit: a crash mid-write never leaves a partial marker
+            marker = os.path.join(marker_dir, f"group_{g}_of_{groups}.done")
+            with open(marker + ".tmp", "w") as fh:
+                json.dump({"group": g, **plan, "secs": secs}, fh)
+            os.replace(marker + ".tmp", marker)
+            with open(metrics_path, "a") as fh:
+                fh.write(json.dumps({
+                    "stage": "build_group", "group": g, "groups": groups,
+                    "fids": [lo, hi], "secs": secs}) + "\n")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
     # drop stray tmp files from failed/retried task attempts
@@ -988,7 +1050,7 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
             postings_dir, columns=["term", "block_id", "df", "tf_total",
                                    "tf_max", "dl_min"],
             read_dictionary=["term"])
-        _sh.rmtree(ts_dir, ignore_errors=True)
+        shutil.rmtree(ts_dir, ignore_errors=True)
         os.makedirs(ts_dir, exist_ok=True)
         _write_term_stats_pdf(meta_tbl, ts_dir, granularity)
     else:
@@ -1033,7 +1095,7 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     with open(os.path.join(index_path, "meta.json"), "w") as fh:
         json.dump(meta, fh, indent=2)
 
-    with open(os.path.join(index_path, "metrics.jsonl"), "a") as fh:
+    with open(metrics_path, "a") as fh:
         fh.write(json.dumps({
             "stage": "finalize", "num_docs": num_docs,
             "total_tokens": total_tokens,
@@ -1065,26 +1127,20 @@ def build_index(
     checkpoint_groups: int = 1,
     resume: bool = False,
     max_words_per_row: int = 131072,
-    stage_partitions: Optional[int] = None,
 ):
     """Build the inverted index; returns a loaded ``SearchIndex``.
 
-    ``checkpoint_groups`` > 1 splits the corpus into doc-block groups that
-    commit independently (resumable via ``resume=True``).
+    Small corpora build driver-locally (``_build_index_local``); every
+    other build is the one distributed pass of ``_build_index_fused``.
+    ``checkpoint_groups`` > 1 runs that pass as group jobs over
+    contiguous ranges of output files that commit independently;
+    ``resume=True`` skips the committed groups of a killed build (same
+    output files as a one-group build).
 
     ``tokens_col`` builds from a pre-tokenized ``array<string>`` column
     (reference S3, indexing.py:298-342) — no tokenizer runs at build
     time; ``tokenizer`` still names the query-side tokenizer.
-
-    ``stage_partitions`` sets the width of the one build shuffle (text →
-    per-block builder). Defaults to ``spark.sql.shuffle.partitions`` so
-    the job's layout — and therefore its total work — is a function of
-    the DATA sizing the user configured, not of how many cores happen to
-    be attached; resizing the cluster then changes only wall-clock, which
-    is what a scaling-efficiency comparison must measure.
     """
-    from .index import SearchIndex
-
     tokenizer_fn = tokenizers.resolve(tokenizer)
     try:
         tokenizer_name = tokenizers.name_of(tokenizer)
@@ -1115,9 +1171,7 @@ def build_index(
 
     phases: dict = {}
 
-    if checkpoint_groups <= 1 and not resume and (
-            term_partitions is None
-            or term_partitions <= PROBE_MAX_PARTITIONS):
+    if checkpoint_groups <= 1 and not resume:
         # --- small-build gate, cheapest evidence first ---
         # 1. plan-size estimate (no I/O): compressed input > 64 MB
         #    already proves raw text > SMALL_BUILD_MAX_BYTES — big
@@ -1206,8 +1260,7 @@ def build_index(
             except OSError:
                 pass
             for sub in ("postings", "doclens", "term_stats"):
-                import shutil as _sh
-                _sh.rmtree(os.path.join(index_path, sub), ignore_errors=True)
+                shutil.rmtree(os.path.join(index_path, sub), ignore_errors=True)
             tp = term_partitions or max(
                 1, min(4, spark.sparkContext.defaultParallelism))
             if pool is not None:
@@ -1218,216 +1271,8 @@ def build_index(
         if max_fut is not None:
             known_max_doc = max_fut.result()
             pool.shutdown(wait=False)
-        return _build_index_fused(
-            spark, df, index_path, builder, docs_per_block,
-            term_partitions, tokenizer_name, truncate, t_start,
-            tokenizer_fn, phases, known_max_doc=known_max_doc)
-
-    # staged (resumable) path: blocks are processed in checkpoint groups
-    # that commit independently. The per-group exchange uses exact
-    # round-robin block -> task placement (a raw hash exchange on
-    # block_id puts ~128 blocks into 32 partitions with balls-in-bins
-    # skew, heaviest task ~1.6x mean); the partition kernel then builds
-    # its complete blocks via mapInPandas — the old
-    # groupBy().applyInPandas here added a SECOND full text exchange
-    # (ENSURE_REQUIREMENTS hashpartitioning on block_id) that both
-    # doubled the shuffled bytes and re-introduced the skew the exact
-    # placement had just removed (guide §2.4; plans/r06/build_stage_*).
-    # The width is sized from the session's shuffle width (a
-    # DATA/cluster-sized config), NOT from core count: the same job on
-    # the same input must produce the same layout and do the same work
-    # at N and 4N executors (round-5 finding). A corpus with fewer
-    # blocks just leaves some partitions empty (cheap no-op tasks).
-    if stage_partitions is None:
-        # 2x the shuffle width: the stage is the CPU-heaviest phase, and
-        # finer tasks let dynamic scheduling absorb per-task variance
-        # (measured: 32 partitions beat 16 by ~9% wall at 8 cores on the
-        # 4M corpus, identical CPU)
-        stage_partitions = max(
-            2 * int(spark.conf.get("spark.sql.shuffle.partitions")), 16)
-
-    stage_path = os.path.join(index_path, "stage")
-    marker_dir = os.path.join(index_path, "_groups")
-    os.makedirs(marker_dir, exist_ok=True)
-
-    groups = max(1, checkpoint_groups)
-    metrics_path = os.path.join(index_path, "metrics.jsonl")
-    stage_kernel = _make_partition_kernel(builder)
-    t_stage = time.time()
-    for g in range(groups):
-        marker = os.path.join(marker_dir, f"group_{g}_of_{groups}.done")
-        if resume and os.path.exists(marker):
-            continue
-        g_start = time.time()
-        part = df if groups == 1 else df.filter(F.pmod(F.col("block_id"), F.lit(groups)) == g)
-        # exchange AFTER the group filter, so each group job shuffles
-        # only its own blocks' text (the old pre-loop exchange re-ran
-        # for every group job over the full corpus)
-        part = repartition_exact(
-            part, F.pmod(F.col("block_id"), F.lit(int(stage_partitions))),
-            stage_partitions, range_fallback_cols=["block_id"])
-        staged = part.mapInPandas(stage_kernel, STAGE_SCHEMA)
-        # idempotent retry: each group owns a subdirectory and overwrites
-        # it, so a group that crashed after a partial/complete write is
-        # safely re-run on resume (no duplicate appends)
-        g_path = stage_path if groups == 1 else os.path.join(stage_path, f"group={g}")
-        staged.write.mode("overwrite").parquet(g_path)
-        g_secs = time.time() - g_start
-        # atomic commit: a crash mid-write must not leave a partial marker
-        with open(marker + ".tmp", "w") as fh:
-            json.dump({"group": g, "secs": g_secs}, fh)
-        os.replace(marker + ".tmp", marker)
-        with open(metrics_path, "a") as fh:
-            fh.write(json.dumps({
-                "stage": "build_group", "group": g,
-                "secs": round(g_secs, 3),
-            }) + "\n")
-
-    phases["stage"] = round(time.time() - t_stage, 3)
-
-    stage = spark.read.parquet(stage_path)
-    # block count from the staged data (column-pruned agg over the stage
-    # files — replaces the pre-stage full-corpus metadata scan)
-    t_p = time.time()
-    max_block = stage.agg(F.max("block_id")).collect()[0][0]
-    phases["max_block_agg"] = round(time.time() - t_p, 3)
-    n_blocks = int(max_block) + 1 if max_block is not None else 1
-    if term_partitions is None:
-        # target ~64 MB postings files: files smaller than Spark's
-        # maxPartitionBytes are never split across scan partitions, so
-        # every scan partition holds WHOLE doc blocks — the query side
-        # can then run phrase/slop kernels with zero shuffle (see
-        # SearchIndex._files_aligned)
-        stage_bytes = 0
-        for root, _, files in os.walk(stage_path):
-            stage_bytes += sum(os.path.getsize(os.path.join(root, f))
-                               for f in files if f.endswith(".parquet"))
-        term_partitions = max(4, spark.sparkContext.defaultParallelism,
-                              -(-stage_bytes // (64 << 20)))
-
-    # --- finalize: four independent jobs over the staged data, submitted
-    # concurrently (Spark schedules them together) so the serial tail of
-    # the build is one round, not four ---
-    granularity = bounds_granularity(n_blocks)
-    srg_flag = {}
-
-    def _write_postings():
-        # DOCUMENT-partitioned layout (block ranges), term-sorted within
-        # each file: a hot term's rows spread across EVERY file, so a
-        # single-term scan parallelizes across the cluster (term-range
-        # partitioning would put "the" in one file = one task), while
-        # the within-file term sort keeps parquet row-group min/max
-        # stats tight so pushed term filters still skip almost all data.
-        # Bytes are uniform per partition by construction (every block
-        # range holds the same term mix) — no hot-term write skew.
-        # ONE row group per file (verified) => a file's rows always land
-        # whole in one scan partition: the zero-shuffle phrase invariant.
-        srg_flag["postings"] = write_postings_table(
-            stage.filter(F.col("kind") == "p")
-                 .select("term", "block_id", "postings", "df", "tf_total",
-                         "tf_max", "dl_min"),
-            os.path.join(index_path, "postings"), term_partitions,
-            n_blocks=n_blocks)
-
-    def _write_doclens():
-        # same block-range partitioning as postings: the query kernel
-        # locates a block's doclens by file block-range (footer stats)
-        # and side-input-reads just that file — no broadcast above the
-        # small-corpus cap, no per-query doclens shuffle, ever
-        d = stage.filter(F.col("kind") == "d") \
-            .select("block_id", "doc_ids", "doc_lens")
-        if term_partitions <= PROBE_MAX_PARTITIONS:
-            # exact contiguous ranges, no range-sampling pass/job
-            fid = F.floor(F.col("block_id") * F.lit(int(term_partitions))
-                          / F.lit(int(max(n_blocks, 1))))
-            d = repartition_exact(d, fid, term_partitions)
-        else:
-            d = d.repartitionByRange(term_partitions, "block_id")
-        d.sortWithinPartitions("block_id") \
-            .write.mode("overwrite") \
-            .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
-            .parquet(os.path.join(index_path, "doclens"))
-
-    def _write_term_stats():
-        # full term_partitions width: the gather stage is the sketch
-        # table's parallelism ceiling, and a narrow width (an old
-        # term_partitions // 4) capped it at 2 tasks in the 2-vs-8-core
-        # scaling protocol (measured 1.8x speedup on 4x cores). Width is
-        # still data-sized (same layout at any core count); the sketch
-        # files just get smaller.
-        write_term_stats(stage.filter(F.col("kind") == "p"),
-                         os.path.join(index_path, "term_stats"),
-                         term_partitions, granularity)
-
-    stats_schema = StructType([
-        StructField("n", LongType()), StructField("s", FloatType()),
-    ])
-
-    def _block_stats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for lens_raw in pdf["doc_lens"]:
-                lens = np.frombuffer(lens_raw, dtype="<f4")
-                yield pd.DataFrame({"n": [len(lens)], "s": [float(lens.sum())]})
-
-    def _corpus_stats():
-        return stage.filter(F.col("kind") == "d") \
-            .select("doc_lens").mapInPandas(_block_stats, stats_schema) \
-            .agg(F.sum("n").alias("num_docs"), F.sum("s").alias("total_tokens")) \
-            .withColumn("avg_doc_len",
-                        F.when(F.col("num_docs") > 0,
-                               F.col("total_tokens") / F.col("num_docs"))
-                        .otherwise(F.lit(0.0))) \
-            .collect()[0]
-
-    from concurrent.futures import ThreadPoolExecutor
-    t_p = time.time()
-    with ThreadPoolExecutor(4) as pool:
-        futs = [pool.submit(f) for f in
-                (_write_postings, _write_doclens, _write_term_stats)]
-        stats_fut = pool.submit(_corpus_stats)
-        for f in futs:
-            f.result()
-        stats = stats_fut.result()
-    phases["finalize4"] = round(time.time() - t_p, 3)
-
-    meta = {
-        # 3 = block-range-partitioned postings (zero-shuffle phrase path)
-        # 4 = + verified single-row-group postings files (sound alignment
-        #     predicate), per-term bound sketches, side-input doclens
-        "format_version": 4,
-        "tokenizer": tokenizer_name,
-        "docs_per_block": docs_per_block,
-        "truncate": truncate,
-        "num_docs": stats["num_docs"],
-        "avg_doc_len": stats["avg_doc_len"] or 0.0,
-        "total_tokens": stats["total_tokens"] or 0.0,
-        "bounds_granularity": granularity,
-        "postings_single_row_group": bool(srg_flag.get("postings", False)),
-        "build_secs": round(time.time() - t_start, 3),
-    }
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-
-    def _table_bytes(name: str) -> int:
-        total = 0
-        for root, _, files in os.walk(os.path.join(index_path, name)):
-            total += sum(os.path.getsize(os.path.join(root, f))
-                         for f in files if f.endswith(".parquet"))
-        return total
-
-    with open(metrics_path, "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": meta["num_docs"],
-            "total_tokens": meta["total_tokens"],
-            "secs": meta["build_secs"],
-            "phases": phases,
-            "docs_per_sec": round(meta["num_docs"] / max(meta["build_secs"], 1e-9), 1),
-            "tokens_per_sec": round(
-                (meta["total_tokens"] or 0) / max(meta["build_secs"], 1e-9), 1),
-            # bytes shuffled ~= staged posting bytes (the one big exchange)
-            "stage_bytes": _table_bytes("stage"),
-            "postings_bytes": _table_bytes("postings"),
-            "doclens_bytes": _table_bytes("doclens"),
-            "term_stats_bytes": _table_bytes("term_stats"),
-        }) + "\n")
-    return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
+    return _build_index_fused(
+        spark, df, index_path, builder, docs_per_block, term_partitions,
+        tokenizer_name, truncate, t_start, tokenizer_fn, phases,
+        known_max_doc=known_max_doc, checkpoint_groups=checkpoint_groups,
+        resume=resume)

@@ -14,7 +14,7 @@ non-negative int64 whose Spark murmur3 hash lands in partition ``i``,
 then repartition on ``element_at(probes, fid + 1)`` where ``fid`` is
 the desired partition id. Each fid maps to exactly one reducer, so
 
-- ``fid = block_id % n``          -> exact round-robin (stage balance)
+- ``fid = block_id % n``          -> exact round-robin (balanced tasks)
 - ``fid = block_id * n // total`` -> exact contiguous ranges (the
   block-range postings/doclens layout), no sampling pass, no sampling
   job, and perfectly equal ranges instead of sample-approximate ones.
@@ -29,7 +29,7 @@ alignment check, never a silently wrong index).
 
 Probe tables are cheap: coupon-collector ~n ln n draws, so ~3 us per
 partition; capped at PROBE_MAX_PARTITIONS to keep the plan literal
-small (beyond that callers fall back to repartitionByRange).
+small (a wider build runs as more group jobs, each within the cap).
 """
 from __future__ import annotations
 
@@ -38,8 +38,8 @@ from typing import List
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# 64Ki probes = 512 KiB plan literal — beyond this fall back to sampled
-# range partitioning rather than bloat the physical plan
+# 64Ki probes = 512 KiB plan literal — one exchange places at most this
+# many partitions rather than bloat the physical plan
 PROBE_MAX_PARTITIONS = 1 << 16
 
 _MASK32 = 0xFFFFFFFF
@@ -101,19 +101,12 @@ def placement_col(fid: Column, n_partitions: int) -> Column:
         (fid.cast("int") + F.lit(1)))
 
 
-def repartition_exact(df: DataFrame, fid: Column, n_partitions: int,
-                      range_fallback_cols=None) -> DataFrame:
+def repartition_exact(df: DataFrame, fid: Column,
+                      n_partitions: int) -> DataFrame:
     """Shuffle ``df`` into ``n_partitions`` with row -> partition
-    ``fid`` (values must lie in ``[0, n_partitions)``).
-
-    Above PROBE_MAX_PARTITIONS, falls back to ``repartitionByRange`` on
-    ``range_fallback_cols`` (sampled bounds — approximate balance, one
-    extra pass) so gigantic layouts still work.
-    """
-    if n_partitions <= PROBE_MAX_PARTITIONS:
-        return df.repartition(n_partitions, placement_col(fid, n_partitions))
-    if range_fallback_cols is None:
+    ``fid`` (values must lie in ``[0, n_partitions)``). Wider layouts
+    are split by the caller (the build runs more groups)."""
+    if n_partitions > PROBE_MAX_PARTITIONS:
         raise ValueError(
-            f"{n_partitions} partitions exceeds PROBE_MAX_PARTITIONS and no "
-            "range fallback columns were given")
-    return df.repartitionByRange(n_partitions, *range_fallback_cols)
+            f"{n_partitions} partitions exceeds PROBE_MAX_PARTITIONS")
+    return df.repartition(n_partitions, placement_col(fid, n_partitions))
