@@ -10,6 +10,7 @@ from .indexing import assign_doc_ids, build_index
 from .index import SearchIndex
 from .merge import compact_index, merge_indexes
 from .rows import Terms
+from .session import _install_worker_zip_importer
 from .similarity import (
     bm25_impact,
     bm25_legacy_similarity,
@@ -43,3 +44,6 @@ __all__ = [
 ]
 
 __version__ = "0.1.0"
+
+# no-op outside a Spark Python worker task; see session._StampedZipImporter
+_install_worker_zip_importer()

@@ -1454,17 +1454,21 @@ class SearchIndex:
     # kernels driver-side — zero Spark jobs per query, results returned
     # as a LocalRelation. Bit-identical to the distributed path
     # (tests/test_local_query.py). A 1-block toy index stops paying the
-    # ~0.2-0.7 s Spark job floor per query; big indexes never reach the
-    # file walk (capacity gate first).
+    # distributed per-query floor — one Spark job, 0.10-0.18 s for a
+    # single client on local[4] (30-60 ms of driver DataFrame
+    # construction, 30-80 ms of job, the rest submit/collect); big
+    # indexes never reach the file walk (capacity gate first).
     #
     # The byte cap is per QUERY SHAPE: term/phrase/OR kernels stay ahead
-    # of the distributed job floor well past 64 MB (measured at a 107 MB
-    # / 500k-doc index on local[32]: term_hot 0.42 s distributed vs
-    # 0.09 s driver-local, or_query 0.92 vs 0.14), so they use the
-    # EXTENDED cap; the slop span kernel's serial cost on hot terms
-    # crosses over much earlier (same index: 0.39 s distributed vs
-    # 0.88 s driver-local), so slop queries keep the strict cap and go
-    # distributed beyond it.
+    # of the distributed route well past 64 MB, so they use the EXTENDED
+    # cap; the slop span kernel's serial cost on hot terms crosses over
+    # much earlier, so slop queries keep the strict cap and go
+    # distributed beyond it. The caps were set from a 107 MB / 500k-doc
+    # index on local[32] (term_hot 0.42 s distributed vs 0.09 s
+    # driver-local, or_query 0.92 vs 0.14, slop 0.39 vs 0.88) measured
+    # when a distributed query still ran 3-4 Spark jobs and every Python
+    # task re-read pyspark.zip (session._StampedZipImporter); the
+    # crossover has not been re-measured since.
     LOCAL_QUERY_MAX_DOCS = 1 << 21
     LOCAL_QUERY_MAX_BYTES = 64 << 20            # all shapes incl. slop
     LOCAL_QUERY_EXTENDED_MAX_BYTES = 256 << 20  # non-slop shapes

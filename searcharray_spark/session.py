@@ -2,7 +2,10 @@
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 
@@ -76,10 +79,16 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
     FIRST real python stage — an index build or a cold query — doesn't
     pay ~0.3-0.8 s per concurrent worker of fork+import latency (guide
     §4.5: heavyweight init once per task; this moves it to once per
-    worker POOL, amortized over the session's lifetime by
-    spark.python.worker.reuse). Also exercises Arrow serialization and
-    the noop write path, warming their JVM codegen. Opt out with
-    SPARK_GRAFT_PREWARM=0."""
+    worker POOL, reused across the session by
+    spark.python.worker.reuse). Worker reuse alone does not make a task
+    cheap: PySpark re-runs importlib.invalidate_caches() in every task,
+    which before CPython 3.13 re-reads every zip archive's directory
+    (~0.2 s CPU per task) unless the package import has installed
+    _StampedZipImporter — the kernel import here installs it in each
+    pooled worker before the first query. Also exercises Arrow
+    serialization and the noop write path, warming their JVM codegen.
+    Best-effort: a worker the prewarm misses installs it on its first
+    engine task. Opt out with SPARK_GRAFT_PREWARM=0."""
     if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "1":
         return
     key = id(spark.sparkContext)
@@ -121,3 +130,56 @@ def _prewarm_python_workers(spark: SparkSession) -> None:
         spark.sparkContext.setJobDescription(None)
     except Exception:
         pass  # prewarm is best-effort; never block session creation
+
+
+def _archive_stamp(path: str):
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+class _StampedZipImporter(zipimport.zipimporter):
+    """zipimporter whose invalidate_caches re-reads the archive's
+    directory only when the archive changed.
+
+    PySpark's worker calls importlib.invalidate_caches() at the start of
+    EVERY task (worker_util.setup_spark_files), and before CPython 3.13
+    that makes every cached zipimporter re-parse its whole archive
+    directory right away. A worker holds one importer per imported
+    package inside pyspark.zip, plus py4j and any --py-files zip: ~27k
+    directory entries, ~0.2 s of worker CPU per task, even for a task
+    that runs no engine code. Like FileFinder does for directories, this
+    keeps the archive's (st_mtime_ns, st_size) stamp from construction
+    or its last directory read, and re-reads only when os.stat shows a
+    different one, so a rewritten archive is still picked up."""
+
+    def __init__(self, path):
+        super().__init__(path)
+        self._stamp = _archive_stamp(self.archive)
+
+    def invalidate_caches(self):
+        stamp = _archive_stamp(self.archive)
+        if stamp != self._stamp:
+            super().invalidate_caches()
+            self._stamp = stamp
+
+
+def _install_worker_zip_importer() -> None:
+    """Inside a Spark Python worker task (called at package import),
+    route this process's zip imports through _StampedZipImporter:
+    importers already in sys.path_importer_cache switch class in place —
+    they keep their directory (no re-read) and stay the objects imported
+    modules hold as __loader__ — and the zipimporter path hook is
+    replaced for archives added later. A no-op on the driver (no task
+    context) and on CPython >= 3.13, whose zipimporter invalidates
+    lazily."""
+    if sys.version_info >= (3, 13) or TaskContext.get() is None:
+        return
+    sys.path_hooks[:] = [_StampedZipImporter if h is zipimport.zipimporter
+                         else h for h in sys.path_hooks]
+    for imp in list(sys.path_importer_cache.values()):
+        if type(imp) is zipimport.zipimporter:
+            imp.__class__ = _StampedZipImporter
+            imp._stamp = _archive_stamp(imp.archive)
