@@ -46,21 +46,21 @@ def main() -> int:
     sections.append(("PLAN 4: top-k (TakeOrderedAndProject)",
                      plan(idx.top_k("common", k=5))))
     cand = df.filter(F.col("doc_id") % 2 == 0).select("doc_id")
-    sections.append(("PLAN 5b: filtered-corpus scoring (candidates join; "
-                     "grouped fallback, one exchange of pruned rows)",
+    sections.append(("PLAN 5b: filtered-corpus scoring (candidates join, "
+                     "then repartition by block_id before the same "
+                     "mapInPandas kernel)",
                      plan(idx.score("common", candidates=cand))))
     side = SearchIndex(spark, path)
     side.DOCLENS_BROADCAST_MAX_DOCS = 0
     sections.append(("PLAN 5d: side-input doclens (big corpus) — phrase, "
                      "still zero shuffle, no doclens scan/exchange",
                      plan(side.score(["common", "w3"]))))
-    or_hits, combined = idx._hits_or([["common"], ["w3"], ["rare"]])
-    assert combined
     sections.append(("PLAN 6: multi-term OR with kernel-side combine — "
                      "per-doc sums inside the kernel, top-k straight off "
                      "the scan, NO exchange",
-                     plan(or_hits.orderBy(F.desc("score"),
-                                          F.asc("doc_id")).limit(5))))
+                     plan(idx.search_or(["common", "w3", "rare"])
+                          .orderBy(F.desc("score"), F.asc("doc_id"))
+                          .limit(5))))
     sections.append(("PLAN 7: batch top-k (top_k_many) scan — the kernel "
                      "keeps each token's top-k over its scan partition, "
                      "NO exchange; the driver collects at most k x "

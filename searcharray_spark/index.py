@@ -6,22 +6,29 @@ doclengths, positions, score) re-expressed as sparse DataFrames:
 results are (doc_id, tf|score) rows, never dense arrays, until a test
 helper densifies at small scale.
 
-Query execution model (no shuffle at query time):
-- postings scan is pruned to the query terms (pushed-down ``term IN
+Query execution model:
+- one block-scoring kernel (``query_kernel``) serves every route: the
+  driver-local route calls it on driver-loaded posting rows (small
+  indexes, zero Spark jobs), the distributed route runs it as the
+  ``mapInPandas`` body over the postings scan,
+- the postings scan is pruned to the query terms (pushed-down ``term IN
   (...)`` filter + row-group min/max pruning on the within-file term
   sort; storage is document-partitioned so hot terms scan in parallel),
-- hits are computed block-locally inside ``mapInPandas`` numpy kernels:
-  postings files are scan-aligned (one row group per file => whole doc
-  blocks per scan partition, see ``_files_aligned``), and each block's
-  packed doclens row comes from a session broadcast (small corpora) or
-  a per-task side-input read of the co-partitioned doclens file
-  (``DoclensReader``) — never a cogroup/shuffle,
+- each kernel call must see all of a block's query-term rows. Postings
+  files are scan-aligned (one row group per file => whole doc blocks per
+  scan partition, see ``_files_aligned``), so the plan has no exchange;
+  on an unaligned layout, or after a ``candidates`` join, phrases and
+  OR queries repartition the pruned rows by block_id first (one
+  exchange). Each block's packed doclens row comes from a session
+  broadcast (small corpora) or a per-task side-input read of the
+  co-partitioned doclens file (``DoclensReader``), never a cogroup,
 - block pruning and WAND bounds are driver math over per-term sketches
   (``TermSketch``) read once per term from term_stats with pyarrow:
   only the row groups whose term range holds a queried term are read,
   and no Spark job runs,
-- only (doc_id, score) survivors leave the kernel; global top-k is
-  Spark's TakeOrdered (per-partition top-k, then driver merge). Batch
+- OR queries sum each doc's token scores inside the kernel; only
+  (doc_id, score) survivors leave it, and global top-k is Spark's
+  TakeOrdered (per-partition top-k, then driver merge). Batch
   (``top_k_many``) and pruned (``top_k_pruned``) top-k keep each
   partition's top-k in the kernel and merge on the driver, so every
   distributed query runs exactly one Spark job: the scoring scan.
@@ -47,6 +54,7 @@ except ImportError:  # pragma: no cover - older/connect layouts
 
 from . import fsutil
 from . import kernels as K
+from . import query_kernel as QK
 from . import similarity as sim_mod
 from . import tokenizers
 
@@ -185,26 +193,6 @@ def _local_df(spark: SparkSession, pdf: pd.DataFrame,
     return _materialize_local_df(spark, pdf, schema)
 
 
-def _rank_by_token(cols: dict, k: int) -> dict:
-    """Rank the rows of ``cols`` (parallel numpy arrays, among them
-    token_idx, doc_id and score) within each token_idx under (score
-    desc, doc_id asc), the total order of the reference's SetOfResults
-    (utils/sort.py:21-45), and keep ranks <= k. Returns the kept rows'
-    arrays plus an int32 ``rank`` array (1-based). float32 -> float64
-    is exact, so the order matches Spark's on the same float column."""
-    ti = cols["token_idx"]
-    order = np.lexsort((cols["doc_id"], -cols["score"].astype(np.float64),
-                        ti))
-    ti = ti[order]
-    starts = np.concatenate(([0], np.flatnonzero(np.diff(ti)) + 1))
-    widths = np.diff(np.concatenate((starts, [len(ti)])))
-    rank = np.arange(len(ti), dtype=np.int64) - np.repeat(starts, widths) + 1
-    keep = rank <= k
-    out = {c: a[order[keep]] for c, a in cols.items()}
-    out["rank"] = rank[keep].astype(np.int32)
-    return out
-
-
 def _read_term_rows(root: str, terms: Sequence[str],
                     cols: List[str]) -> List[dict]:
     """The rows of ``terms`` (non-empty) in the term_stats table at
@@ -219,26 +207,9 @@ def _read_term_rows(root: str, terms: Sequence[str],
         filters=[[("term", "=", t)] for t in terms]).to_pylist()
 
 
-def _ub_of(entry, block_id: int) -> float:
-    """Per-token upper bound for one block from the (blocks, ubs)
-    arrays _block_bounds builds; 0.0 when the sketch says the token is
-    absent from the block."""
-    bl, ub = entry
-    pos = int(np.searchsorted(bl, block_id))
-    return float(ub[pos]) if pos < len(bl) and bl[pos] == block_id else 0.0
-
-
 def _empty_positions_pdf() -> pd.DataFrame:
     return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
                          "posns": pd.Series([], dtype=object)})
-
-
-def _empty_hits_pdf() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"token_idx": pd.Series([], dtype="int32"),
-         "doc_id": pd.Series([], dtype="int64"),
-         "tf": pd.Series([], dtype="float32"),
-         "score": pd.Series([], dtype="float32")})
 
 
 POSITIONS_SCHEMA = StructType([
@@ -338,6 +309,25 @@ class TermSketch:
             dl[ok] = np.minimum(dl[ok], dmn[i])
         dl[dl == np.iinfo(np.int64).max] = 0
         return tf, dl
+
+
+def _token_blocks(sketches, cap: int) -> Optional[np.ndarray]:
+    """Blocks that may hold every term of one query token (a phrase
+    needs all of them): the rarest term's covered blocks, kept where the
+    other terms' presence intervals cover them too. Empty when a term is
+    absent from the corpus; None when the rarest term covers more than
+    ``cap`` blocks."""
+    if any(s is None for s in sketches):
+        return np.zeros(0, dtype=np.int64)
+    rare = min(sketches, key=lambda s: s.covered())
+    blocks = rare.expand(cap)
+    if blocks is None:
+        return None
+    mask = np.ones(len(blocks), dtype=bool)
+    for s in sketches:
+        if s is not rare:
+            mask &= s.contains(blocks)
+    return blocks[mask]
 
 
 # --- side-input doclens (co-partitioned with postings by block range) ----
@@ -479,6 +469,17 @@ class DoclensReader:
             return rows[0][1], rows[0][2]
         ids, lens = patch_doclens(rows)
         return ids.astype("<i8").tobytes(), lens.astype("<f4").tobytes()
+
+
+class _BroadcastDoclens:
+    """DoclensReader's ``.get`` over the session broadcast of the packed
+    doclens table (small corpora)."""
+
+    def __init__(self, bc):
+        self.bc = bc
+
+    def get(self, block_id: int):
+        return self.bc.value.get(block_id)
 
 
 def _normalize_token(token: TokenArg) -> List[str]:
@@ -1062,30 +1063,13 @@ class SearchIndex:
         if not tomb or not terms:
             return {}
         if self._local_query_ok(extended=True):
-            # small index: identical exclusion math over the
-            # driver-loaded postings rows (no job; bounded by the
-            # queried terms' rows in tombstoned blocks)
-            out: dict = {}
+            # small index: the same row function over the driver-loaded
+            # postings rows (no job)
             store = self._local_postings()
-            for t in terms:
-                killed_tot = 0
-                for b, raw, seg in store.get(t, ()):
-                    t_entry = tomb.get(int(b))
-                    if t_entry is None:
-                        continue
-                    excl = t_entry[0][t_entry[1] > int(seg)]
-                    if not len(excl):
-                        continue
-                    arr = K.from_bytes(raw)
-                    if not len(arr):
-                        continue
-                    ids, _ = K.termfreqs(arr)
-                    pos = np.minimum(np.searchsorted(excl, ids),
-                                     len(excl) - 1)
-                    killed_tot += int((excl[pos] == ids).sum())
-                if killed_tot:
-                    out[t] = -killed_tot
-            return out
+            out = {t: -sum(QK.killed_docs(tomb, b, seg, raw)
+                           for b, raw, seg in store.get(t, ()))
+                   for t in terms}
+            return {t: c for t, c in out.items() if c}
         tomb_bc = self.spark.sparkContext.broadcast(tomb)
         posts = self.postings.filter(F.col("term").isin(list(terms)))
         if isinstance(tomb, dict) and len(tomb) <= 8192:
@@ -1098,27 +1082,14 @@ class SearchIndex:
 
         def count_killed(it):
             for pdf in it:
-                out_t, out_c = [], []
-                for term, b, seg, raw in zip(pdf["term"], pdf["block_id"],
-                                             pdf["seg"], pdf["postings"]):
-                    t_entry = tomb_bc.value.get(int(b))
-                    if t_entry is None:
-                        continue
-                    excl = t_entry[0][t_entry[1] > int(seg)]
-                    if not len(excl):
-                        continue
-                    arr = K.from_bytes(raw)
-                    if not len(arr):
-                        continue
-                    ids, _ = K.termfreqs(arr)
-                    pos = np.minimum(np.searchsorted(excl, ids),
-                                     len(excl) - 1)
-                    killed = int((excl[pos] == ids).sum())
-                    if killed:
-                        out_t.append(term)
-                        out_c.append(killed)
-                yield pd.DataFrame({"term": pd.Series(out_t, dtype=object),
-                                    "killed": pd.Series(out_c, dtype="int64")})
+                killed = np.asarray(
+                    [QK.killed_docs(tomb_bc.value, b, seg, raw)
+                     for b, seg, raw in zip(pdf["block_id"], pdf["seg"],
+                                            pdf["postings"])],
+                    dtype=np.int64)
+                keep = killed > 0
+                yield pd.DataFrame({"term": pdf["term"].to_numpy()[keep],
+                                    "killed": killed[keep]})
 
         rows = posts.mapInPandas(count_killed, "term string, killed long") \
             .groupBy("term").agg(F.sum("killed").alias("k")).collect()
@@ -1141,9 +1112,6 @@ class SearchIndex:
         self._dl_ranges = None
         self._has_sketches = None
         self._aligned = None
-        rc = getattr(self, "_result_cache", None)
-        if rc is not None:  # stays enabled; memoized frames are stale
-            rc.clear()
 
     def _seg_meta(self, seg: int) -> dict:
         return fsutil.read_json(fsutil.join(
@@ -1157,11 +1125,13 @@ class SearchIndex:
         spark.sql.files.maxPartitionBytes, openCostInBytes, or cluster
         parallelism (those only govern how many EMPTY splits surround
         it; verified empirically and by tests/test_alignment.py, where a
-        multi-row-group file DOES split and the grouped fallback takes
-        over). Combined with the block-range-partitioned layout (a doc
-        block's rows live in exactly one file), every scan partition
-        then holds whole doc blocks, so phrase/slop kernels see all of a
-        block's query-term rows and run with ZERO shuffle.
+        multi-row-group file DOES split). Combined with the
+        block-range-partitioned layout (a doc block's rows live in
+        exactly one file), every scan partition then holds whole doc
+        blocks, so phrase/slop/OR kernels see all of a block's
+        query-term rows and run with ZERO shuffle. When False, those
+        plans repartition the pruned rows by block_id first
+        (``_needs_block_exchange``).
 
         Builds pin parquet.block.size at write, verify footers, and
         record ``postings_single_row_group`` in meta.json; older indexes
@@ -1256,13 +1226,11 @@ class SearchIndex:
                         pdf["seg"]):
                     ids = np.frombuffer(ids_raw, dtype="<i8")
                     lens = np.frombuffer(lens_raw, dtype="<f4")
-                    if tomb_bc is not None:
-                        t_entry = tomb_bc.value.get(int(block_id))
-                        if t_entry is not None:
-                            excl = t_entry[0][t_entry[1] > int(seg)]
-                            if len(excl):
-                                keep = ~np.isin(ids, excl, assume_unique=True)
-                                ids, lens = ids[keep], lens[keep]
+                    excl = (QK.tombstoned(tomb_bc.value, block_id, seg)
+                            if tomb_bc is not None else None)
+                    if excl is not None:
+                        keep = ~np.isin(ids, excl, assume_unique=True)
+                        ids, lens = ids[keep], lens[keep]
                     out = {
                         "doc_id": ids + int(block_id) * docs_per_block,
                         "block_id": int(block_id),
@@ -1450,8 +1418,8 @@ class SearchIndex:
     # --- driver-local small-query path ------------------------------------
     # symmetric to the small-BUILD path (indexing._build_index_local):
     # below these caps the whole postings table is loaded onto the driver
-    # once (pyarrow) and queries run the SAME merge_packed/score_block
-    # kernels driver-side — zero Spark jobs per query, results returned
+    # once (pyarrow) and queries run the SAME query_kernel functions
+    # driver-side — zero Spark jobs per query, results returned
     # as a LocalRelation. Bit-identical to the distributed path
     # (tests/test_local_query.py). A 1-block toy index stops paying the
     # distributed per-query floor — one Spark job, 0.10-0.18 s for a
@@ -1547,53 +1515,27 @@ class SearchIndex:
         needed: set = set()
         for tok in tokens_b:
             sks = [sketches[t] for t in tok]
-            if any(s is None for s in sks):
-                continue  # a term absent from the corpus: token matches nothing
-            rare = min(sks, key=lambda s: s.covered())
-            blocks = rare.expand(self.PRUNE_EXPAND_CAP)
+            blocks = _token_blocks(sks, self.PRUNE_EXPAND_CAP)
             if blocks is None:
                 return None
-            mask = np.ones(len(blocks), dtype=bool)
-            for s in sks:
-                if s is not rare:
-                    mask &= s.contains(blocks)
-            needed.update(int(b) for b in blocks[mask])
+            needed.update(int(b) for b in blocks)
         if block_ids is not None:
             needed &= {int(b) for b in block_ids}
         return sorted(needed)
 
-    def _hits_or(self, tokens: List[List[str]], similarity=None,
-                 block_ids: Optional[Sequence[int]] = None,
-                 or_maxscore=None):
-        """(hits_df, combined) for an OR query. When every token of a doc
-        is guaranteed computed in ONE kernel call (grouped path, or
-        zero-shuffle over scan-aligned whole-file partitions), the kernel
-        SUMS scores per doc locally and emits one row per doc — the
-        downstream groupBy(doc_id) exchange disappears and top-k compiles
-        to TakeOrdered with no shuffle at all. Combined rows reuse
-        HITS_SCHEMA: token_idx = number of matching tokens (for mm),
-        tf/score = sums (float32; score summed in float64 then cast).
-        Falls back to per-token rows + caller groupBy when alignment
-        can't guarantee co-location (combined=False)."""
-        single = all(len(t) == 1 for t in tokens)
-        combinable = self._files_aligned() or not single
-        if not combinable:
-            return self._hits(tokens, similarity=similarity,
-                              block_ids=block_ids), False
-        return self._hits(tokens, similarity=similarity,
-                          block_ids=block_ids, or_combine=True,
-                          or_maxscore=or_maxscore), True
-
-    def _zero_shuffle(self, tokens: List[List[str]],
-                      has_cand: bool = False) -> bool:
-        """Whether the distributed ``_hits`` plan scores straight off the
-        postings scan (mapInPandas) instead of the grouped applyInPandas
-        fallback. Single terms always can; phrases/slop need every query
-        term of a doc block co-located, which is free when scan
-        partitions hold whole files (= whole blocks); candidates use the
-        grouped path (their join may re-shuffle)."""
-        return all(len(t) == 1 for t in tokens) or (
-            not has_cand and self._files_aligned())
+    def _needs_block_exchange(self, spec: QK.QuerySpec,
+                              has_cand: bool) -> bool:
+        """Whether the distributed plan repartitions the pruned posting
+        rows by block_id before the kernel. Single-term rows score
+        independently (hot terms are chunked at doc boundaries), so they
+        never need it. Phrases, slop and OR-combine need every query
+        term of a block in one kernel call, which the scan gives for
+        free only on scan-aligned files (``_files_aligned``). A
+        candidates join may move rows off their scan partition, so it
+        always repartitions."""
+        independent = (not spec.or_combine
+                       and all(len(t) == 1 for t in spec.tokens))
+        return has_cand or not (independent or self._files_aligned())
 
     def _hits(self, tokens: List[List[str]], similarity=None,
               min_posn: Optional[int] = None, max_posn: Optional[int] = None,
@@ -1604,378 +1546,105 @@ class SearchIndex:
               or_maxscore=None,
               _as_pandas: bool = False):
         """(token_idx, doc_id, tf, score) for each query token (term or
-        phrase), computed block-locally.
+        phrase), scored block by block by ``query_kernel``.
 
-        Physical strategies (cheapest that fits):
-        1. single terms -> mapInPandas straight over the pruned postings
-           scan: ZERO shuffle before top-k.
-        2. phrases on scan-aligned files -> ALSO zero shuffle (whole doc
-           blocks per scan partition); otherwise one shuffle (groupBy
-           block) of the pruned posting rows only.
-        Doclens always arrive shuffle-free: session broadcast below the
-        small-corpus cap, per-task side-input file reads (DoclensReader)
-        above it.
+        Routes: driver-local (small indexes, zero Spark jobs), else one
+        ``mapInPandas`` over the pruned postings scan, which has no
+        exchange unless ``_needs_block_exchange`` asks for a
+        repartition by block_id. Doclens always arrive shuffle-free:
+        session broadcast below the small-corpus cap, per-task side-input
+        file reads (DoclensReader) above it.
 
-        ``or_combine`` sums scores per doc INSIDE the kernel (plus a
-        matching-token count in token_idx) — callers drop their
-        groupBy(doc_id); only valid when every token of a block is
-        scored in one call (see _hits_or). ``per_token_topk`` keeps each
-        (token, block)'s local top-k under (score desc, doc_id asc), and
-        on the zero-shuffle plan each token's top-k over the whole scan
-        partition — exact for global top-k consumers (the winner set is
-        a subset).
-
+        ``or_combine`` sums scores per doc INSIDE the kernel, with the
+        matching-token count in token_idx; ``or_maxscore`` adds the
+        kernel-side MaxScore split. ``per_token_topk`` keeps each token's
+        top-k over a whole partition (the driver-local route is one).
         ``candidates`` (a DataFrame with a doc_id column) restricts
-        scoring to those docs INSIDE the kernel (posting-array semi-join,
-        reference FilteredPosns semantics, postings.py:344-358): the
-        candidate ids are packed per doc block and joined onto the
-        pruned postings scan, which also drops whole blocks with no
-        candidates. idf/avgdl/N stay corpus-global (standard filter
-        semantics).
+        scoring to those docs inside the kernel: candidate ids are
+        packed per doc block and joined onto the pruned scan, which also
+        drops blocks with no candidates. idf/avgdl/N stay corpus-global.
         """
         if slop != 0:
             from .spans import span_freqs  # noqa: F401  (fail fast on driver)
-        sim_fn = sim_mod.resolve(similarity)
+
+        def held(pdf):  # a driver-held result
+            return pdf if _as_pandas else _local_df(self.spark, pdf,
+                                                    HITS_SCHEMA)
+
         all_terms = sorted({t for tok in tokens for t in tok})
         if not all_terms:
-            return (_empty_hits_pdf() if _as_pandas
-                    else _local_df(self.spark, _empty_hits_pdf(),
-                                   HITS_SCHEMA))
-        dfs = self.docfreqs(all_terms)
-        num_docs = self.num_docs
-        avgdl = self.avg_doc_len
-        docs_per_block = self.docs_per_block
-        tokens_b = [list(t) for t in tokens]
-        dfs_b = dict(dfs)
-
+            return held(QK.hits_frame([]))
+        spec = QK.QuerySpec(
+            tokens=[list(t) for t in tokens], dfs=self.docfreqs(all_terms),
+            num_docs=self.num_docs, avgdl=self.avg_doc_len,
+            docs_per_block=self.docs_per_block,
+            sim_fn=sim_mod.resolve(similarity), slop=slop,
+            min_posn=min_posn, max_posn=max_posn, or_combine=or_combine,
+            or_maxscore=or_maxscore, per_token_topk=per_token_topk)
         # metadata block pruning: worthwhile when a phrase has a rare term
-        has_phrase = any(len(t) > 1 for t in tokens_b)
-        min_df = min(dfs.values()) if dfs else 0
-        if has_phrase and min_df <= num_docs * self.BLOCK_PRUNE_DF_RATIO:
-            pruned = self._prune_blocks(tokens_b, block_ids)
+        if any(len(t) > 1 for t in spec.tokens) and min(
+                spec.dfs.values()) <= spec.num_docs * self.BLOCK_PRUNE_DF_RATIO:
+            pruned = self._prune_blocks(spec.tokens, block_ids)
             if pruned is not None:
                 block_ids = pruned
                 if not block_ids:
-                    return (_empty_hits_pdf() if _as_pandas
-                            else _local_df(self.spark, _empty_hits_pdf(),
-                                           HITS_SCHEMA))
-
-        def empty_out() -> pd.DataFrame:
-            return pd.DataFrame(
-                {"token_idx": pd.Series([], dtype="int32"),
-                 "doc_id": pd.Series([], dtype="int64"),
-                 "tf": pd.Series([], dtype="float32"),
-                 "score": pd.Series([], dtype="float32")})
-
-        def score_block(block_id: int, packed: dict, dl_raw,
-                        cand_raw=None) -> pd.DataFrame:
-            r = score_block_arrays(block_id, packed, dl_raw, cand_raw)
-            if r is None:
-                return empty_out()
-            return pd.DataFrame(
-                {"token_idx": r[0], "doc_id": r[1], "tf": r[2],
-                 "score": r[3]})
-
-        def score_block_arrays(block_id: int, packed: dict, dl_raw,
-                               cand_raw=None):
-            """(token_idx, doc_id, tf, score) numpy arrays, or None.
-            The array form lets the driver-local path skip per-block
-            pandas frame construction (measured ~1/3 of local query
-            latency); score_block wraps it for the mapInPandas paths."""
-            base = block_id * docs_per_block
-            dl_ids = np.frombuffer(dl_raw[0], dtype="<i8")
-            dl_lens = np.frombuffer(dl_raw[1], dtype="<f4")
-            cand_ids = (np.frombuffer(cand_raw, dtype="<i8")
-                        if cand_raw is not None else None)
-            out_tok, out_doc, out_tf, out_score = [], [], [], []
-            empty = np.zeros(0, dtype=np.uint64)
-
-            def token_hits(tok, restrict):
-                """(local ids, tfs) for one query token, or None.
-                ``restrict`` (sorted local ids) semi-joins the postings
-                before freq computation — the MaxScore skip."""
-                encoded = [packed.get(t, empty) for t in tok]
-                if cand_ids is not None:
-                    encoded = [K.slice_keys(e, cand_ids) for e in encoded]
-                if restrict is not None:
-                    encoded = [K.slice_keys(e, restrict) for e in encoded]
-                if min_posn is not None or max_posn is not None:
-                    encoded = [K.slice_posn_window(e, min_posn, max_posn)
-                               for e in encoded]
-                if len(tok) == 1:
-                    ids, tfs = K.termfreqs(encoded[0])
-                elif slop == 0:
-                    ids, tfs = K.phrase_freqs(encoded)
-                else:
-                    from .spans import span_freqs
-                    ids, tfs = span_freqs(encoded, slop)
-                if len(ids) == 0:
-                    return None
-                keep = tfs > 0
-                ids, tfs = ids[keep], tfs[keep]
-                if len(ids) == 0:
-                    return None
-                return ids, tfs
-
-            hit_list = []  # (token_idx, local ids, tfs)
-            if or_combine and or_maxscore is not None:
-                # term-level MaxScore inside the kernel (Turtle & Flood
-                # 1995): with theta = the kth score from the seed phase,
-                # tokens whose upper bounds can't SUM to theta are
-                # non-essential — a doc matching only those can't enter
-                # the top-k, so their (hot) postings are semi-joined to
-                # the essential tokens' doc set instead of fully decoded.
-                # Bounds carry the (1+eps) inflation from _block_bounds,
-                # so every drop is strict (rank-identity preserved,
-                # tests/test_wand.py).
-                per_tok_b, theta = or_maxscore
-                ubs = np.asarray([_ub_of(per_tok_b[j], block_id)
-                                  for j in range(len(tokens_b))])
-                if float(ubs.sum()) < theta:
-                    return None
-                order = np.argsort(-ubs, kind="stable")
-                n = len(order)
-                n_ess = n
-                for ce in range(1, n + 1):
-                    after = float(ubs[order[ce:]].sum()) if ce < n else 0.0
-                    if after < theta:
-                        n_ess = ce
-                        break
-                cand_parts = []
-                for j in order[:n_ess]:
-                    r = token_hits(tokens_b[j], None)
-                    if r is not None:
-                        hit_list.append((int(j), r[0], r[1]))
-                        cand_parts.append(r[0])
-                if not cand_parts:
-                    return None
-                restrict = np.unique(np.concatenate(cand_parts))
-                for j in order[n_ess:]:
-                    if ubs[j] <= 0.0:
-                        continue  # sketch says token absent from block
-                    r = token_hits(tokens_b[j], restrict)
-                    if r is not None:
-                        hit_list.append((int(j), r[0], r[1]))
-                hit_list.sort(key=lambda h: h[0])
-            else:
-                for idx, tok in enumerate(tokens_b):
-                    r = token_hits(tok, None)
-                    if r is not None:
-                        hit_list.append((idx, r[0], r[1]))
-
-            for idx, ids, tfs in hit_list:
-                tok = tokens_b[idx]
-                tfs = tfs.astype(np.float32)
-                dls = dl_lens[np.searchsorted(dl_ids, ids)]
-                tok_dfs = np.asarray([dfs_b[t] for t in tok], dtype=np.float32)
-                # copy: reference-style similarities (bm25.pyx) mutate
-                # term_freqs in place; the tf column must stay raw tfs
-                scores = sim_fn(tfs.copy(), tok_dfs, dls, avgdl, num_docs)
-                scores = np.asarray(scores, dtype=np.float32)
-                if (per_token_topk is not None
-                        and len(ids) > per_token_topk):
-                    # keep only this BLOCK's top-n under the global total
-                    # order (score desc, doc_id asc): the global top-k is
-                    # a subset of the per-block top-k, so the grouped
-                    # fallback's rank window shuffles O(k x blocks) rows
-                    # instead of every matching doc (the zero-shuffle
-                    # plan trims further, per scan partition)
-                    order = np.lexsort((ids, -scores))[:per_token_topk]
-                    ids, tfs, scores = ids[order], tfs[order], scores[order]
-                out_tok.append(np.full(len(ids), idx, dtype=np.int32))
-                out_doc.append(ids + base)
-                out_tf.append(tfs)
-                out_score.append(scores)
-            if not out_tok:
-                return None
-            if or_combine:
-                # OR-combine inside the kernel: every token of this block
-                # was scored in this call, so the per-doc sum is final —
-                # no downstream groupBy(doc_id) exchange. token_idx
-                # carries the per-doc matching-token count (for mm).
-                doc = np.concatenate(out_doc)
-                uids, inv = np.unique(doc, return_inverse=True)
-                ssum = np.zeros(len(uids), dtype=np.float64)
-                np.add.at(ssum, inv, np.concatenate(out_score)
-                          .astype(np.float64))
-                tsum = np.zeros(len(uids), dtype=np.float64)
-                np.add.at(tsum, inv, np.concatenate(out_tf)
-                          .astype(np.float64))
-                nmatch = np.zeros(len(uids), dtype=np.int64)
-                np.add.at(nmatch, inv, 1)
-                return (nmatch.astype(np.int32), uids,
-                        tsum.astype(np.float32), ssum.astype(np.float32))
-            return (np.concatenate(out_tok), np.concatenate(out_doc),
-                    np.concatenate(out_tf), np.concatenate(out_score))
-
+                    return held(QK.hits_frame([]))
         tomb = self._tombstones()  # {} when no deletes/updates (common)
-
-        def merge_rows(rows, block_id: int) -> dict:
-            """rows: iterable of (term, postings_bytes, seg). Plain-list
-            form shared by the driver-local path (no pandas frame built
-            at all) and merge_packed below."""
-            t_entry = tomb.get(int(block_id))
-            parts: dict = {}
-            for term, data, seg in rows:
-                arr = K.from_bytes(data)
-                if t_entry is not None:
-                    # drop docs tombstoned by a LATER epoch than this row
-                    excl = t_entry[0][t_entry[1] > seg]
-                    if len(excl):
-                        arr = K.exclude_keys(arr, excl)
-                parts.setdefault(term, []).append(arr)
-            # ONE merge per term (hot terms arrive as many chunked rows:
-            # an iterative pairwise or_merge would re-walk the growing
-            # array per chunk — O(chunks x size)); update-segment rows
-            # may share headers, which or_merge unions
-            return {term: (arrs[0] if len(arrs) == 1
-                           else K.or_merge(np.concatenate(arrs)))
-                    for term, arrs in parts.items()}
-
-        def merge_packed(left: pd.DataFrame, block_id: int) -> dict:
-            segs = (left["seg"].tolist() if "seg" in left.columns
-                    else [0] * len(left))
-            return merge_rows(
-                zip(left["term"].tolist(), left["postings"].tolist(), segs),
-                block_id)
-
         if candidates is None and self._local_query_ok(extended=slop == 0):
-            # driver-local fast path (gate: whole postings table tiny;
-            # slop keeps the strict cap — see _local_query_ok):
-            # run the SAME merge_packed/score_block kernels on
-            # driver-loaded rows — zero Spark jobs, bit-identical
-            # results (tests/test_local_query.py) as a LocalRelation.
-            block_set = (set(int(b) for b in block_ids)
-                         if block_ids is not None else None)
+            # driver-local route (slop keeps the strict cap, see
+            # _local_query_ok): the same kernel on driver-loaded rows
+            keep = None if block_ids is None else {int(b) for b in block_ids}
             by_block: dict = {}
             for t in all_terms:
                 for b, data, seg in self._local_postings().get(t, ()):
-                    if block_set is not None and b not in block_set:
-                        continue
-                    by_block.setdefault(b, []).append((t, data, seg))
-            dl_table = self._doclens_table()
-            outs = []
-            for b in sorted(by_block):
-                dl_raw = dl_table.get(b)
-                if dl_raw is None:
-                    continue
-                res = score_block_arrays(b, merge_rows(by_block[b], b),
-                                         dl_raw, None)
-                if res is not None:
-                    outs.append(res)
-            if outs:
-                pdf = pd.DataFrame({
-                    "token_idx": np.concatenate([o[0] for o in outs]),
-                    "doc_id": np.concatenate([o[1] for o in outs]),
-                    "tf": np.concatenate([o[2] for o in outs]),
-                    "score": np.concatenate([o[3] for o in outs])})
-            else:
-                pdf = _empty_hits_pdf()
-            if _as_pandas:
-                return pdf
-            return _local_df(self.spark, pdf, HITS_SCHEMA)
-
+                    if keep is None or b in keep:
+                        by_block.setdefault(b, []).append((t, data, seg))
+            outs = QK.score_blocks(
+                spec, tomb, self._doclens_table().get,
+                ((b, by_block[b], None) for b in sorted(by_block)))
+            return held(QK.hits_frame(outs, per_token_topk))
         posts = self.postings.filter(F.col("term").isin(all_terms))
         if block_ids is not None:
-            posts = posts.filter(F.col("block_id").isin([int(b) for b in block_ids]))
-        has_cand = candidates is not None
-        if has_cand:
-            # pack candidate doc ids per block (sorted unique local ids)
-            # and join onto the pruned scan: inner join also drops whole
-            # blocks holding no candidates (partition-level pruning)
-            dpb = docs_per_block
+            posts = posts.filter(
+                F.col("block_id").isin([int(b) for b in block_ids]))
+        posts = posts.select("term", "block_id", "postings", "seg")
+        if candidates is not None:
+            posts = posts.join(self._candidate_blocks(candidates),
+                               "block_id", "inner")
+        if self._needs_block_exchange(spec, candidates is not None):
+            posts = posts.repartition("block_id")
+        dl = self._doclens_lookup()
 
-            def pack_ids(pdf: pd.DataFrame) -> pd.DataFrame:
-                lids = np.unique(pdf["lid"].to_numpy(dtype=np.int64))
-                return pd.DataFrame({"block_id": [int(pdf["block_id"].iloc[0])],
-                                     "cand": [lids.astype("<i8").tobytes()]})
+        def kernel(batches):
+            return QK.partition_hits(spec, tomb, dl.get, batches)
 
-            cand_packed = candidates.select(
-                F.floor(F.col("doc_id") / F.lit(dpb)).cast("long").alias("block_id"),
-                F.pmod(F.col("doc_id"), F.lit(dpb)).cast("long").alias("lid"),
-            ).groupBy("block_id").applyInPandas(
-                pack_ids, "block_id long, cand binary")
-            posts = posts.join(cand_packed, "block_id", "inner")
-        single_terms_only = all(len(t) == 1 for t in tokens_b)
-        zero_shuffle = self._zero_shuffle(tokens_b, has_cand)
+        return posts.mapInPandas(kernel, HITS_SCHEMA)
 
-        def _cand_of(pdf: pd.DataFrame):
-            return pdf["cand"].iloc[0] if has_cand else None
+    def _candidate_blocks(self, candidates: DataFrame) -> DataFrame:
+        """(block_id, cand) rows: each block's sorted unique candidate
+        local doc ids, packed little-endian int64."""
+        dpb = self.docs_per_block
 
-        # doclens access: broadcast the packed table for small corpora
-        # (fastest for repeated queries); beyond the cap, kernels
-        # side-input-read the co-partitioned doclens file(s) covering
-        # their blocks (DoclensReader) — no broadcast, no doclens
-        # shuffle, at ANY corpus size. Either way the plan has no
-        # doclens-side exchange.
+        def pack_ids(pdf: pd.DataFrame) -> pd.DataFrame:
+            lids = np.unique(pdf["lid"].to_numpy(dtype=np.int64))
+            return pd.DataFrame({"block_id": [int(pdf["block_id"].iloc[0])],
+                                 "cand": [lids.astype("<i8").tobytes()]})
+
+        return candidates.select(
+            F.floor(F.col("doc_id") / F.lit(dpb)).cast("long").alias("block_id"),
+            F.pmod(F.col("doc_id"), F.lit(dpb)).cast("long").alias("lid"),
+        ).groupBy("block_id").applyInPandas(
+            pack_ids, "block_id long, cand binary")
+
+    def _doclens_lookup(self):
+        """Executor-side block -> packed doclens lookup (``.get``): the
+        session broadcast for small corpora (fastest for repeated
+        queries), else side-input reads of the co-partitioned doclens
+        file(s) covering each block (DoclensReader), at ANY corpus size.
+        Either way the plan has no doclens-side exchange."""
         if self._doclens_capacity() <= self.DOCLENS_BROADCAST_MAX_DOCS:
-            dl_bc = self._doclens_broadcast()
-
-            def make_dl_get():
-                return dl_bc.value.get
-        else:
-            reader = DoclensReader(self._doclens_file_ranges())
-
-            def make_dl_get():
-                return reader.get
-
-        if zero_shuffle:
-            # single terms: every posting row is independent — stream
-            # batch by batch. Phrases (and kernel-side OR-combine, which
-            # must see every token of a block at once): concatenate the
-            # partition's batches first so each block's terms sit in one
-            # frame (bounded: only the query terms' rows are in the scan).
-            stream = single_terms_only and not or_combine
-
-            def block_frames(it):
-                dl_get = make_dl_get()
-                if not stream:
-                    batches = [pdf for pdf in it if len(pdf)]
-                    if not batches:
-                        return
-                    it = [pd.concat(batches)] if len(batches) > 1 else batches
-                for pdf in it:
-                    if len(pdf) == 0:
-                        continue
-                    for block_id, grp in pdf.groupby("block_id"):
-                        dl_raw = dl_get(int(block_id))
-                        if dl_raw is None:
-                            continue
-                        yield score_block(int(block_id),
-                                          merge_packed(grp, block_id),
-                                          dl_raw, _cand_of(grp))
-
-            def map_kernel(it):
-                if per_token_topk is None:
-                    yield from block_frames(it)
-                    return
-                # batch top-k: each token's top-k over the WHOLE scan
-                # partition leaves the task, so the driver merges at most
-                # k x tokens x partitions rows (the bound TakeOrdered
-                # gives top_k) with no rank-window exchange
-                frames = [f for f in block_frames(it) if len(f)]
-                if frames:
-                    pdf = pd.concat(frames, ignore_index=True)
-                    top = _rank_by_token(
-                        {c: pdf[c].to_numpy() for c in pdf.columns},
-                        per_token_topk)
-                    del top["rank"]
-                    yield pd.DataFrame(top)
-
-            cols = ["term", "block_id", "postings", "seg"] \
-                + (["cand"] if has_cand else [])
-            return posts.select(*cols) \
-                .mapInPandas(map_kernel, HITS_SCHEMA)
-
-        def grouped_kernel(key, left: pd.DataFrame) -> pd.DataFrame:
-            dl_raw = make_dl_get()(int(key[0]))
-            if dl_raw is None or len(left) == 0:
-                return empty_out()
-            return score_block(int(key[0]), merge_packed(left, key[0]),
-                               dl_raw, _cand_of(left))
-
-        return posts.groupBy("block_id").applyInPandas(
-            grouped_kernel, HITS_SCHEMA)
+            return _BroadcastDoclens(self._doclens_broadcast())
+        return DoclensReader(self._doclens_file_ranges())
 
     # --- public API -------------------------------------------------------
     def termfreqs(self, token: TokenArg, min_posn: Optional[int] = None,
@@ -2036,84 +1705,19 @@ class SearchIndex:
                             "score": sc[order]})
         return _local_df(self.spark, out, TOPK_SCHEMA)
 
-    # --- opt-in result memoization (ROADMAP §2: repeated-query floor) ----
-    def enable_result_cache(self, max_entries: int = 256) -> "SearchIndex":
-        """Memoize finished top-k result frames per (index state, query).
-
-        Opt-in because it changes laziness: a miss executes the query and
-        holds its k-bounded rows driver-side; a hit answers from a
-        LocalRelation with ZERO Spark jobs. Soundness: any mutation
-        (delete/update/append) runs _invalidate_caches, which clears this
-        cache, and unhashable keys (custom similarity objects without
-        __hash__, candidate frames) bypass it. Benchmarks never enable
-        it — every recorded latency is uncached."""
-        from collections import OrderedDict
-        self._result_cache = OrderedDict()
-        self._result_cache_max = int(max_entries)
-        return self
-
-    def disable_result_cache(self) -> None:
-        self._result_cache = None
-
-    def _result_key(self, kind: str, parts: tuple):
-        if getattr(self, "_result_cache", None) is None:
-            return None
-        key = (kind,) + parts
-        try:
-            hash(key)
-        except TypeError:  # e.g. unhashable custom similarity
-            return None
-        return key
-
-    def _result_get(self, key) -> Optional[DataFrame]:
-        cache = getattr(self, "_result_cache", None)
-        if cache is None or key is None:
-            return None
-        pdf = cache.get(key)
-        if pdf is None:
-            return None
-        cache.move_to_end(key)
-        out = _local_df(self.spark, pdf.copy(), TOPK_SCHEMA)
-        out._result_cache_hit = True
-        return out
-
-    def _result_put(self, key, df: DataFrame) -> DataFrame:
-        cache = getattr(self, "_result_cache", None)
-        if cache is None or key is None:
-            return df
-        rows = df.collect()
-        pdf = pd.DataFrame(
-            {"doc_id": np.asarray([r["doc_id"] for r in rows], dtype=np.int64),
-             "score": np.asarray([r["score"] for r in rows], dtype=np.float32)})
-        cache[key] = pdf
-        while len(cache) > self._result_cache_max:
-            cache.popitem(last=False)
-        out = _local_df(self.spark, pdf.copy(), TOPK_SCHEMA)
-        out._result_cache_hit = False
-        return out
-
     def top_k(self, token: TokenArg, k: int = 10, similarity=None,
               slop: int = 0, candidates: Optional[DataFrame] = None) -> DataFrame:
         """Global top-k by score (ties broken by doc_id): distributed
         per-partition top-k then driver merge (TakeOrderedAndProject);
         driver-local sort on small indexes (zero Spark jobs)."""
-        toks = _normalize_token(token)
-        key = None
-        if candidates is None:
-            key = self._result_key(
-                "top_k", (tuple(toks), int(k), int(slop), similarity))
-            hit = self._result_get(key)
-            if hit is not None:
-                return hit
-        pdf = self._local_hits_pdf([toks], similarity=similarity,
-                                   slop=slop, candidates=candidates)
+        pdf = self._local_hits_pdf([_normalize_token(token)],
+                                   similarity=similarity, slop=slop,
+                                   candidates=candidates)
         if pdf is not None:
-            return self._result_put(key, self._local_topk_df(pdf, k))
-        return self._result_put(
-            key,
-            self.score(token, similarity=similarity, slop=slop,
-                       candidates=candidates)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+            return self._local_topk_df(pdf, k)
+        return self.score(token, similarity=similarity, slop=slop,
+                          candidates=candidates) \
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # relative safety margin on block upper bounds: the kernel computes
     # scores in float32; bounds are float64-of-float32-inputs, so pad by
@@ -2158,26 +1762,19 @@ class SearchIndex:
         # the kernel-side term-level MaxScore split uses these
         for tok in tokens:
             sks = [sketches[t] for t in tok]
-            if any(s is None for s in sks):
-                per_tok.append(no_blocks)
-                continue
-            rare = min(sks, key=lambda s: s.covered())
-            blocks = rare.expand(self.WAND_EXPAND_CAP)
+            blocks = _token_blocks(sks, self.WAND_EXPAND_CAP)
             if blocks is None:
                 return None
-            mask = np.ones(len(blocks), dtype=bool)
-            tf_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
-            dl_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
-            for s in sks:  # a phrase needs every term in the block
-                if s is not rare:
-                    mask &= s.contains(blocks)
-                tf, dl = s.bounds_at(blocks)
-                tf_m = np.minimum(tf_m, tf)
-                dl_m = np.minimum(dl_m, dl)
-            blocks, tf_m, dl_m = blocks[mask], tf_m[mask], dl_m[mask]
             if not len(blocks):
                 per_tok.append(no_blocks)
                 continue
+            # a phrase's tf is at most every constituent's tf
+            tf_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
+            dl_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
+            for s in sks:
+                tf, dl = s.bounds_at(blocks)
+                tf_m = np.minimum(tf_m, tf)
+                dl_m = np.minimum(dl_m, dl)
             tok_dfs = np.asarray([dfs[t] for t in tok], dtype=np.float32)
             ubs = np.asarray(
                 sim_fn(tf_m.astype(np.float32), tok_dfs,
@@ -2212,26 +1809,6 @@ class SearchIndex:
         ``monotone_bounds`` flag (set it yourself if yours qualifies) is
         scored exhaustively instead — same ranks, no unsound skips.
         """
-        rk = None
-        if getattr(self, "_result_cache", None) is not None:
-            norm = (tokens if isinstance(tokens, str)
-                    else tuple(t if isinstance(t, str) else tuple(t)
-                               for t in tokens))
-            rk = self._result_key("top_k_pruned", (norm, int(k), similarity))
-            hit = self._result_get(rk)
-            if hit is not None:
-                hit._wand_blocks_scanned = -2  # answered from result cache
-                hit._wand_blocks_total = -2
-                return hit
-            out = self._top_k_pruned_impl(tokens, k=k, similarity=similarity)
-            cached = self._result_put(rk, out)
-            cached._wand_blocks_scanned = getattr(out, "_wand_blocks_scanned", -1)
-            cached._wand_blocks_total = getattr(out, "_wand_blocks_total", -1)
-            return cached
-        return self._top_k_pruned_impl(tokens, k=k, similarity=similarity)
-
-    def _top_k_pruned_impl(self, tokens, k: int = 10,
-                           similarity=None) -> DataFrame:
         if isinstance(tokens, str):
             tokens_list = [[tokens]]
         else:
@@ -2253,8 +1830,6 @@ class SearchIndex:
             cache_key = None
         # a driver-local index scores exhaustively in microseconds —
         # WAND's chunked-phase bookkeeping only adds overhead there.
-        # or_combine is always valid driver-side (every token of a block
-        # is scored in one call by construction).
         if self._local_query_ok(extended=True):
             pdf = self._hits(tokens_list, similarity=similarity,
                              or_combine=True, _as_pandas=True)
@@ -2268,16 +1843,11 @@ class SearchIndex:
                                     cache_key=cache_key)
             if bb is not None:
                 bounds, per_tok = bb
-        if bounds is None:
-            hits, combined = self._hits_or(tokens_list, similarity=similarity)
-            if combined:  # kernel-side per-doc sums: TakeOrdered, no shuffle
-                out = hits.orderBy(F.desc("score"), F.asc("doc_id")) \
-                    .limit(k).select("doc_id", F.col("score").cast("float"))
-            else:
-                out = hits.groupBy("doc_id") \
-                    .agg(F.sum("score").alias("score")) \
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k) \
-                    .select("doc_id", F.col("score").cast("float"))
+        if bounds is None:  # per-doc sums in the kernel: TakeOrdered
+            out = self._hits(tokens_list, similarity=similarity,
+                             or_combine=True) \
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k) \
+                .select("doc_id", F.col("score").cast("float"))
             out._wand_blocks_scanned = -1  # exhaustive: no pruning ran
             out._wand_blocks_total = -1
             return out
@@ -2310,18 +1880,10 @@ class SearchIndex:
             # after the seed phase, theta feeds the kernel-side
             # term-level MaxScore split (per-token bounds + threshold)
             ms = (per_tok, float(theta)) if theta is not None else None
-            hits, combined = self._hits_or(tokens_list,
-                                           similarity=similarity,
-                                           block_ids=chunk,
-                                           or_maxscore=ms)
-            if combined:  # per-doc sums already final: no exchange
-                rows = hits.orderBy(F.desc("score"), F.asc("doc_id")) \
-                    .limit(k).collect()
-            else:
-                rows = hits.groupBy("doc_id") \
-                    .agg(F.sum("score").alias("score")) \
-                    .orderBy(F.desc("score"), F.asc("doc_id")).limit(k) \
-                    .collect()
+            rows = self._hits(tokens_list, similarity=similarity,
+                              block_ids=chunk, or_combine=True,
+                              or_maxscore=ms) \
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
             scanned += len(chunk)
             best.extend((r["score"], r["doc_id"]) for r in rows)
             best.sort(key=lambda x: (-x[0], x[1]))
@@ -2343,29 +1905,20 @@ class SearchIndex:
         """Top-k per query token in ONE kernel pass (batch scoring):
         (token_idx, doc_id, score, rank). Ranks follow the reference's
         SetOfResults (utils/sort.py:21-45): (score desc, doc_id asc) per
-        token. On the zero-shuffle plan the kernel keeps each token's
-        top-k over its whole scan partition and the driver ranks the
-        collected rows — one Spark job, the partition-local top-k plus
-        driver merge of REPOSE (ICDE 2021). That plan is eager: the
-        scan runs inside this call (errors and cost show here, not at
-        the caller's action), and the driver holds up to k x tokens x
-        scan partitions rows. The grouped fallback (phrases on unaligned
-        files) cannot see a whole partition: it keeps each (token,
-        block)'s top-k and returns a lazy window row_number plan."""
+        token. The kernel keeps each token's top-k over its whole
+        partition and the driver ranks the collected rows: one Spark
+        job, the partition-local top-k plus driver merge of REPOSE (ICDE
+        2021), exact on every layout because each block's rows share one
+        partition. The call is eager: the scan runs inside it (errors
+        and cost show here, not at the caller's action), and the driver
+        holds up to k x tokens x partitions rows."""
         toks = [_normalize_token(t) for t in tokens]
         pdf = self._local_hits_pdf(toks, similarity=similarity,
                                    per_token_topk=k)
         if pdf is None:
-            hits = self._hits(toks, similarity=similarity, per_token_topk=k)
-            if not self._zero_shuffle(toks):
-                from pyspark.sql import Window
-                w = Window.partitionBy("token_idx").orderBy(
-                    F.desc("score"), F.asc("doc_id"))
-                return hits.withColumn("rank", F.row_number().over(w)) \
-                    .filter(F.col("rank") <= k) \
-                    .select("token_idx", "doc_id", "score", "rank")
-            pdf = hits.toPandas()
-        out = _rank_by_token({
+            pdf = self._hits(toks, similarity=similarity,
+                             per_token_topk=k).toPandas()
+        out = QK.rank_by_token({
             "token_idx": pdf["token_idx"].to_numpy(dtype=np.int32),
             "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
             "score": pdf["score"].to_numpy(dtype=np.float32)}, k)
@@ -2392,14 +1945,9 @@ class SearchIndex:
         def decode_rows(it):
             for pdf in it:
                 for row in pdf.itertuples():
-                    packed = K.from_bytes(row.postings)
-                    if tomb_bc is not None:
-                        t_entry = tomb_bc.value.get(int(row.block_id))
-                        if t_entry is not None:
-                            excl = t_entry[0][
-                                t_entry[1] > getattr(row, "seg", 0)]
-                            if len(excl):
-                                packed = K.exclude_keys(packed, excl)
+                    packed = QK.live_postings(
+                        tomb_bc.value if tomb_bc is not None else None,
+                        row.block_id, getattr(row, "seg", 0), row.postings)
                     if want is not None:
                         base = row.block_id * docs_per_block
                         local = want[(want >= base) & (want < base + docs_per_block)] - base
@@ -2451,21 +1999,15 @@ class SearchIndex:
         """OR query: sum of per-token scores over docs matching >= mm
         tokens. Returns (doc_id, score, n_matches).
 
-        On scan-aligned indexes every token of a doc is scored in ONE
-        kernel call, so the per-doc sum happens kernel-side and the plan
-        has NO exchange (mm filter + top-k run straight off the scan);
-        otherwise one groupBy(doc_id) of the surviving rows."""
+        Every token of a doc block is scored in ONE kernel call, so the
+        per-doc sum happens kernel-side: the mm filter and a top-k run
+        straight off the scoring scan (no exchange on scan-aligned
+        indexes, else one repartition by block_id before the kernel)."""
         toks = [_normalize_token(t) for t in tokens]
-        hits, combined = self._hits_or(toks, similarity=similarity)
-        if combined:
-            return hits.select(
-                "doc_id", F.col("score").cast("double").alias("score"),
-                F.col("token_idx").cast("long").alias("n_matches"),
-            ).filter(F.col("n_matches") >= mm)
-        return hits.groupBy("doc_id").agg(
-            F.sum("score").alias("score"),
-            F.countDistinct("token_idx").alias("n_matches"),
-        ).filter(F.col("n_matches") >= mm)
+        return self._hits(toks, similarity=similarity, or_combine=True) \
+            .select("doc_id", F.col("score").cast("double").alias("score"),
+                    F.col("token_idx").cast("long").alias("n_matches")) \
+            .filter(F.col("n_matches") >= mm)
 
     def search_and(self, tokens: Sequence[TokenArg], similarity=None) -> DataFrame:
         return self.search_or(tokens, mm=len(tokens), similarity=similarity)

@@ -1,0 +1,320 @@
+"""Block-scoring kernel shared by every query route.
+
+The reference scores every query shape with one set of postings kernels
+(reference postings.py:607-708). Here that job is split by doc block:
+one query's constants travel as a ``QuerySpec``, and each block's
+posting rows are merged under the tombstone rule (``merge_rows``),
+reduced to per-token freqs (``token_freqs``: term, phrase, slop,
+position window, candidate and MaxScore semi-joins), scored
+(``token_scores``) and optionally OR-combined per doc (``combine_or``)
+by ``score_block``. The driver-local route calls ``score_blocks`` on
+driver-loaded rows (numpy arrays end to end, one pandas frame per
+query); the distributed route runs ``partition_hits`` as its
+``mapInPandas`` body over the pruned postings scan. Both routes
+therefore return bit-identical rows for every query shape.
+"""
+from __future__ import annotations
+
+from typing import NamedTuple, Optional
+
+import numpy as np
+import pandas as pd
+
+from . import kernels as K
+
+HITS_COLUMNS = ("token_idx", "doc_id", "tf", "score")
+_HITS_DTYPES = (np.int32, np.int64, np.float32, np.float32)
+_EMPTY_U64 = np.zeros(0, dtype=np.uint64)
+
+
+class QuerySpec(NamedTuple):
+    """Per-query constants: every block of one query is scored with
+    these (shipped once per task inside the kernel closure)."""
+    tokens: list               # query tokens; a token of >1 terms is a phrase
+    dfs: dict                  # term -> doc freq (tombstone-corrected)
+    num_docs: int
+    avgdl: float
+    docs_per_block: int
+    sim_fn: object
+    slop: int = 0
+    min_posn: Optional[int] = None
+    max_posn: Optional[int] = None
+    or_combine: bool = False   # one row per doc: token count + summed tf/score
+    or_maxscore: Optional[tuple] = None  # (per-token (blocks, ubs), theta)
+    per_token_topk: Optional[int] = None
+
+
+# --- tombstones ------------------------------------------------------------
+
+def tombstoned(tomb, block_id: int, seg: int) -> Optional[np.ndarray]:
+    """Sorted local doc ids that a posting/doclens row of segment ``seg``
+    in ``block_id`` must drop: those whose newest tombstone is from a
+    LATER epoch than the row. So an update kills older content while its
+    own rows survive, and re-adding a deleted doc resurrects it.
+    ``tomb`` maps block -> (sorted local ids, max seg per id): a dict or
+    a TombstoneReader. None when the row loses nothing."""
+    t_entry = tomb.get(int(block_id)) if tomb else None
+    if t_entry is None:
+        return None
+    excl = t_entry[0][t_entry[1] > int(seg)]
+    return excl if len(excl) else None
+
+
+def live_postings(tomb, block_id: int, seg: int, raw) -> np.ndarray:
+    """One posting row's packed words minus its tombstoned docs."""
+    arr = K.from_bytes(raw)
+    excl = tombstoned(tomb, block_id, seg)
+    return arr if excl is None else K.exclude_keys(arr, excl)
+
+
+def killed_docs(tomb, block_id: int, seg: int, raw) -> int:
+    """Docs of one posting row that a later tombstone kills: the row's
+    share of its term's df correction."""
+    excl = tombstoned(tomb, block_id, seg)
+    if excl is None:
+        return 0
+    arr = K.from_bytes(raw)
+    return K.docfreq(arr) - K.docfreq(K.exclude_keys(arr, excl))
+
+
+def merge_rows(rows, tomb, block_id: int) -> dict:
+    """(term, postings bytes, seg) rows of ONE block -> {term: packed
+    words}. Each row drops its tombstoned docs, then ONE or_merge per
+    term: hot terms arrive as many chunked rows (a pairwise merge would
+    re-walk the growing array per chunk), and update-segment rows may
+    share headers, which or_merge unions."""
+    parts: dict = {}
+    for term, raw, seg in rows:
+        parts.setdefault(term, []).append(
+            live_postings(tomb, block_id, seg, raw))
+    return {term: (arrs[0] if len(arrs) == 1
+                   else K.or_merge(np.concatenate(arrs)))
+            for term, arrs in parts.items()}
+
+
+# --- per-block scoring -----------------------------------------------------
+
+def token_freqs(spec: QuerySpec, packed: dict, tok, cand_ids=None,
+                restrict=None):
+    """(sorted local doc ids, tfs > 0) of one query token in one block,
+    or None. ``cand_ids`` and ``restrict`` (sorted local ids) semi-join
+    the postings before freq computation: the candidates filter
+    (reference FilteredPosns, postings.py:344-358) and the MaxScore
+    skip."""
+    encoded = [packed.get(t, _EMPTY_U64) for t in tok]
+    for keep in (cand_ids, restrict):
+        if keep is not None:
+            encoded = [K.slice_keys(e, keep) for e in encoded]
+    if spec.min_posn is not None or spec.max_posn is not None:
+        encoded = [K.slice_posn_window(e, spec.min_posn, spec.max_posn)
+                   for e in encoded]
+    if len(tok) == 1:
+        ids, tfs = K.termfreqs(encoded[0])
+    elif spec.slop == 0:
+        ids, tfs = K.phrase_freqs(encoded)
+    else:
+        from .spans import span_freqs
+        ids, tfs = span_freqs(encoded, spec.slop)
+    keep = tfs > 0
+    if not keep.any():
+        return None
+    return ids[keep], tfs[keep]
+
+
+def _ub_of(entry, block_id: int) -> float:
+    """One token's score upper bound in a block from the (blocks, ubs)
+    arrays SearchIndex._block_bounds builds; 0.0 when the sketch says
+    the token is absent from the block."""
+    bl, ub = entry
+    pos = int(np.searchsorted(bl, block_id))
+    return float(ub[pos]) if pos < len(bl) and bl[pos] == block_id else 0.0
+
+
+def _maxscore_hits(spec: QuerySpec, block_id: int, packed: dict,
+                   cand_ids) -> list:
+    """Term-level MaxScore inside the kernel (Turtle & Flood 1995): with
+    theta = the kth score from the seed phase, tokens whose upper bounds
+    can't SUM to theta are non-essential. A doc matching only those
+    can't enter the top-k, so their (hot) postings are semi-joined to
+    the essential tokens' doc set instead of fully decoded. Bounds carry
+    the (1+eps) inflation from _block_bounds, so every drop is strict
+    (rank-identity preserved, tests/test_wand.py)."""
+    per_tok_b, theta = spec.or_maxscore
+    ubs = np.asarray([_ub_of(per_tok_b[j], block_id)
+                      for j in range(len(spec.tokens))])
+    if float(ubs.sum()) < theta:
+        return []
+    order = np.argsort(-ubs, kind="stable")
+    n = n_ess = len(order)
+    for ce in range(1, n + 1):
+        after = float(ubs[order[ce:]].sum()) if ce < n else 0.0
+        if after < theta:
+            n_ess = ce
+            break
+    hits = []
+    for j in order[:n_ess]:
+        r = token_freqs(spec, packed, spec.tokens[j], cand_ids)
+        if r is not None:
+            hits.append((int(j),) + r)
+    if not hits:
+        return []
+    restrict = np.unique(np.concatenate([h[1] for h in hits]))
+    for j in order[n_ess:]:
+        if ubs[j] <= 0.0:
+            continue  # sketch says token absent from block
+        r = token_freqs(spec, packed, spec.tokens[j], cand_ids, restrict)
+        if r is not None:
+            hits.append((int(j),) + r)
+    hits.sort(key=lambda h: h[0])
+    return hits
+
+
+def token_scores(spec: QuerySpec, j: int, ids, tfs, dl_ids,
+                 dl_lens) -> np.ndarray:
+    """float32 similarity of token ``j`` for its matching docs (local
+    ids) with float32 ``tfs``; a phrase's idf sums its terms' dfs
+    (reference postings.py:652-680)."""
+    dls = dl_lens[np.searchsorted(dl_ids, ids)]
+    tok_dfs = np.asarray([spec.dfs[t] for t in spec.tokens[j]],
+                         dtype=np.float32)
+    # copy: reference-style similarities (bm25.pyx) mutate term_freqs in
+    # place; the tf column must stay raw tfs
+    return np.asarray(spec.sim_fn(tfs.copy(), tok_dfs, dls, spec.avgdl,
+                                  spec.num_docs), dtype=np.float32)
+
+
+def combine_or(doc, tf, score) -> tuple:
+    """OR-combine one block's per-token rows: one row per doc with the
+    matching-token count (in token_idx, for mm) and tf/score sums
+    (float64 sums cast to float32). Exact because every token of a block
+    is scored in one kernel call on every route."""
+    uids, inv = np.unique(doc, return_inverse=True)
+    ssum = np.zeros(len(uids), dtype=np.float64)
+    np.add.at(ssum, inv, score.astype(np.float64))
+    tsum = np.zeros(len(uids), dtype=np.float64)
+    np.add.at(tsum, inv, tf.astype(np.float64))
+    nmatch = np.bincount(inv, minlength=len(uids)).astype(np.int32)
+    return nmatch, uids, tsum.astype(np.float32), ssum.astype(np.float32)
+
+
+def score_block(spec: QuerySpec, block_id: int, packed: dict, dl_raw,
+                cand_raw=None):
+    """(token_idx, doc_id, tf, score) arrays for one block, or None.
+    ``packed`` is merge_rows' output, ``dl_raw`` the block's packed
+    doclens (ids bytes, lens bytes), ``cand_raw`` its packed candidate
+    local ids."""
+    dl_ids = np.frombuffer(dl_raw[0], dtype="<i8")
+    dl_lens = np.frombuffer(dl_raw[1], dtype="<f4")
+    cand_ids = (np.frombuffer(cand_raw, dtype="<i8")
+                if cand_raw is not None else None)
+    if spec.or_combine and spec.or_maxscore is not None:
+        hits = _maxscore_hits(spec, block_id, packed, cand_ids)
+    else:
+        hits = []
+        for j, tok in enumerate(spec.tokens):
+            r = token_freqs(spec, packed, tok, cand_ids)
+            if r is not None:
+                hits.append((j,) + r)
+    if not hits:
+        return None
+    base = block_id * spec.docs_per_block
+    tfs = [h[2].astype(np.float32) for h in hits]
+    tok = np.concatenate([np.full(len(ids), j, dtype=np.int32)
+                          for j, ids, _ in hits])
+    doc = np.concatenate([ids + base for _, ids, _ in hits])
+    tf = np.concatenate(tfs)
+    score = np.concatenate([
+        token_scores(spec, j, ids, t, dl_ids, dl_lens)
+        for (j, ids, _), t in zip(hits, tfs)])
+    if spec.or_combine:
+        return combine_or(doc, tf, score)
+    return tok, doc, tf, score
+
+
+def score_blocks(spec: QuerySpec, tomb, dl_get, blocks) -> list:
+    """score_block over (block_id, rows, cand_raw) triples, each block's
+    (term, postings, seg) rows merged first; a block without doclens
+    (``dl_get`` returns None) holds no live docs and is skipped."""
+    outs = []
+    for block_id, rows, cand_raw in blocks:
+        dl_raw = dl_get(block_id)
+        if dl_raw is None:
+            continue
+        r = score_block(spec, block_id, merge_rows(rows, tomb, block_id),
+                        dl_raw, cand_raw)
+        if r is not None:
+            outs.append(r)
+    return outs
+
+
+# --- results ---------------------------------------------------------------
+
+def rank_by_token(cols: dict, k: int) -> dict:
+    """Rank the rows of ``cols`` (parallel numpy arrays, among them
+    token_idx, doc_id and score) within each token_idx under (score
+    desc, doc_id asc), the total order of the reference's SetOfResults
+    (utils/sort.py:21-45), and keep ranks <= k. Returns the kept rows'
+    arrays plus an int32 ``rank`` array (1-based). float32 -> float64
+    is exact, so the order matches Spark's on the same float column."""
+    ti = cols["token_idx"]
+    order = np.lexsort((cols["doc_id"], -cols["score"].astype(np.float64),
+                        ti))
+    ti = ti[order]
+    starts = np.concatenate(([0], np.flatnonzero(np.diff(ti)) + 1))
+    widths = np.diff(np.concatenate((starts, [len(ti)])))
+    rank = np.arange(len(ti), dtype=np.int64) - np.repeat(starts, widths) + 1
+    keep = rank <= k
+    out = {c: a[order[keep]] for c, a in cols.items()}
+    out["rank"] = rank[keep].astype(np.int32)
+    return out
+
+
+def hits_frame(outs: list, per_token_topk: Optional[int] = None
+               ) -> pd.DataFrame:
+    """One hits frame (HITS_COLUMNS) from score_block results. With
+    ``per_token_topk``, only each token's top-k under (score desc,
+    doc_id asc): exact for global top-k consumers, since the global
+    winners are a subset of any partition's."""
+    cols = {c: (np.concatenate([o[i] for o in outs]) if outs
+                else np.zeros(0, dtype=dt))
+            for i, (c, dt) in enumerate(zip(HITS_COLUMNS, _HITS_DTYPES))}
+    if per_token_topk is not None:
+        cols = rank_by_token(cols, per_token_topk)
+        del cols["rank"]
+    return pd.DataFrame(cols)
+
+
+def _frame_blocks(pdf: pd.DataFrame):
+    """(block_id, rows, cand_raw) per block of one scan frame."""
+    has_cand = "cand" in pdf.columns
+    for block_id, grp in pdf.groupby("block_id"):
+        yield (int(block_id),
+               zip(grp["term"].tolist(), grp["postings"].tolist(),
+                   grp["seg"].tolist()),
+               grp["cand"].iloc[0] if has_cand else None)
+
+
+def partition_hits(spec: QuerySpec, tomb, dl_get, batches):
+    """The distributed route's ``mapInPandas`` body over pruned posting
+    rows (term, block_id, postings, seg[, cand]); every block's rows
+    must sit in this one partition (scan-aligned files, else the plan
+    repartitions by block_id first).
+
+    Single-term rows score independently, so they stream batch by
+    batch. Phrases and OR-combine must see every query term of a block
+    at once: the partition's batches are concatenated first (bounded:
+    only the query terms' rows are in the scan). With per_token_topk,
+    each token's top-k over the whole partition leaves the task, so the
+    driver merges at most k x tokens x partitions rows."""
+    if spec.or_combine or any(len(t) > 1 for t in spec.tokens):
+        batches = [pdf for pdf in batches if len(pdf)]
+        if len(batches) > 1:
+            batches = [pd.concat(batches)]
+    outs: list = []
+    for pdf in batches:
+        outs += score_blocks(spec, tomb, dl_get, _frame_blocks(pdf))
+        if outs and spec.per_token_topk is None:
+            yield hits_frame(outs)
+            outs = []
+    if outs:
+        yield hits_frame(outs, spec.per_token_topk)

@@ -19,8 +19,8 @@ Reference parity (semantics only; fresh implementation):
 
 Spark-first shape: nothing doc-major is stored. The doc-major view is
 DERIVED on demand from the packed term-major postings (SURVEY A5
-"derive on demand"): one ``groupBy(block_id).applyInPandas`` pass runs
-the SAME merge-then-kernel sequence as the scoring path (tombstone
+"derive on demand"): one per-block ``mapInPandas`` pass runs the SAME
+merge-then-kernel sequence as the scoring path (tombstone
 exclusion, chunk or_merge, K.termfreqs), then an explicit
 ``groupBy(doc_id)`` canonicalizes each doc's bag as a SORTED
 array<struct<term,tf>> — map columns are not equality-comparable in
@@ -41,6 +41,7 @@ from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from . import kernels as K
+from . import query_kernel as QK
 
 DOC_TERMFREQS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -135,18 +136,15 @@ class Terms:
 _EMPTY_TERMS = Terms({})
 
 
-def _merge_rows(rows, tomb_entry, want_local: Optional[np.ndarray]) -> dict:
+def _merge_rows(rows, tomb, block_id: int,
+                want_local: Optional[np.ndarray]) -> dict:
     """(term, raw, seg) rows of ONE block -> {term: merged packed words},
-    the scoring path's exact merge sequence (index._hits merge_packed):
+    the scoring path's exact merge sequence (query_kernel.merge_rows):
     drop docs tombstoned by a LATER epoch than the row's segment, then
     one or_merge per term across chunk/update rows."""
     parts: dict = {}
     for term, raw, seg in rows:
-        arr = K.from_bytes(raw)
-        if tomb_entry is not None:
-            excl = tomb_entry[0][tomb_entry[1] > int(seg)]
-            if len(excl):
-                arr = K.exclude_keys(arr, excl)
+        arr = QK.live_postings(tomb, block_id, seg, raw)
         if want_local is not None:
             arr = K.slice_keys(arr, want_local)
         if len(arr):
@@ -204,7 +202,8 @@ def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
       property that makes a full doc-major derivation feasible at
       100 TB (shuffling the entire postings table is the thing to
       avoid);
-    - groupBy(block_id).applyInPandas fallback (one exchange) otherwise.
+    - the same mapInPandas after a repartition by block_id (one
+      exchange) otherwise.
     """
     dpb = idx.docs_per_block
     tomb = idx._tombstones()
@@ -219,8 +218,7 @@ def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
         blocks = ({int(d) // dpb for d in want} if want is not None else None)
         outs = []
         for b, rows in sorted(_local_block_rows(idx, blocks).items()):
-            merged = _merge_rows(rows, tomb.get(b) if tomb else None,
-                                 want_local(b))
+            merged = _merge_rows(rows, tomb, b, want_local(b))
             outs.extend(per_block(b, merged))
         pdf = pd.concat(outs, ignore_index=True) if outs else empty_pdf()
         from .index import _local_df
@@ -234,7 +232,7 @@ def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
             return
         rows = list(zip(pdf["term"], pdf["postings"], pdf["seg"]))
         merged = _merge_rows(
-            rows, tomb_bc.value.get(b) if tomb_bc is not None else None, wl)
+            rows, tomb_bc.value if tomb_bc is not None else None, b, wl)
         yield from per_block(b, merged)
 
     posts = idx.postings
@@ -243,22 +241,18 @@ def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
         posts = posts.filter(F.col("block_id").isin(blocks))
     posts = posts.select("term", "block_id", "postings", "seg")
 
-    if idx._files_aligned():
-        def map_kernel(it):
-            batches = [pdf for pdf in it if len(pdf)]
-            if not batches:
-                return
-            pdf = pd.concat(batches) if len(batches) > 1 else batches[0]
-            for b, grp in pdf.groupby("block_id"):
-                yield from run_one(int(b), grp)
+    if not idx._files_aligned():
+        posts = posts.repartition("block_id")
 
-        return posts.mapInPandas(map_kernel, schema)
+    def map_kernel(it):
+        batches = [pdf for pdf in it if len(pdf)]
+        if not batches:
+            return
+        pdf = pd.concat(batches) if len(batches) > 1 else batches[0]
+        for b, grp in pdf.groupby("block_id"):
+            yield from run_one(int(b), grp)
 
-    def grouped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = list(run_one(int(key[0]), pdf))
-        return pd.concat(outs, ignore_index=True) if outs else empty_pdf()
-
-    return posts.groupBy("block_id").applyInPandas(grouped, schema)
+    return posts.mapInPandas(map_kernel, schema)
 
 
 def _empty_tf_pdf() -> pd.DataFrame:

@@ -9,9 +9,10 @@ or parallelism. A multi-row-group file, by contrast, DOES split.
 
 These tests pin both halves of that claim empirically, and then the
 engine-level consequence: an index whose postings files carry multiple
-row groups must fail ``_files_aligned()`` and take the grouped fallback,
-producing results identical to an aligned index — while the zero-shuffle
-kernel, if forced onto the misaligned layout, demonstrably loses phrase
+row groups must fail ``_files_aligned()`` and repartition the pruned
+rows by block_id before the kernel, producing results bit-identical to
+an aligned index and to the driver-local route — while the zero-shuffle
+plan, if forced onto the misaligned layout, demonstrably loses phrase
 matches (the silent-wrong-results hazard this predicate exists to stop).
 """
 import os
@@ -120,6 +121,20 @@ def _rechunk_postings(path, rows_per_group=7):
                 pq.write_table(tbl, p, row_group_size=rows_per_group)
 
 
+def _misaligned(spark, path):
+    """An index whose postings files hold many row groups and whose
+    meta.json has no alignment flag (a pre-v4 index), so the footer walk
+    must catch it."""
+    import json
+    _build(spark, path)
+    _rechunk_postings(path)
+    with open(os.path.join(path, "meta.json")) as fh:
+        meta = json.load(fh)
+    meta.pop("postings_single_row_group")
+    with open(os.path.join(path, "meta.json"), "w") as fh:
+        json.dump(meta, fh)
+
+
 def _phrase_rows(idx, phrase):
     return sorted(
         (r["doc_id"], r["tf"])
@@ -137,22 +152,13 @@ def test_misaligned_index_falls_back_and_stays_correct(spark, tmp_path,
     assert truth  # phrase present
 
     bad_path = str(tmp_path / "bad")
-    _build(spark, bad_path)
-    _rechunk_postings(bad_path)
-    # simulate a pre-v4 index: no recorded flag -> footer verification
-    import json
-    with open(os.path.join(bad_path, "meta.json")) as fh:
-        meta = json.load(fh)
-    meta.pop("postings_single_row_group")
-    with open(os.path.join(bad_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh)
-
+    _misaligned(spark, bad_path)
     bad = SearchIndex(spark, bad_path)
     # the driver-local path reads whole files and is immune to row-group
     # misalignment; pin the distributed scan — IT is what's under test
     bad._local_ok = False
     assert bad._files_aligned() is False  # footer walk catches it
-    assert _phrase_rows(bad, ["aaa", "zzz"]) == truth  # grouped fallback
+    assert _phrase_rows(bad, ["aaa", "zzz"]) == truth  # repartitioned
 
     # negative control: force the zero-shuffle path onto the misaligned
     # layout — phrase matches silently vanish, proving the predicate is
@@ -177,33 +183,124 @@ def test_recorded_false_flag_disables_zero_shuffle(spark, tmp_path):
     assert idx._files_aligned() is False
 
 
+def _distributed(spark, path):
+    from searcharray_spark.index import SearchIndex
+    idx = SearchIndex(spark, path)
+    idx.LOCAL_QUERY_MAX_BYTES = 0
+    idx.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
+    assert not idx._local_query_ok(extended=True)
+    return idx
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _exchanges(plan: str) -> list:
+    return [ln for ln in plan.splitlines() if "Exchange" in ln]
+
+
+def _or_rows(idx):
+    return sorted(tuple(r) for r in idx.search_or(["aaa", "zzz"], mm=1)
+                  .collect())
+
+
 def test_search_or_fallback_on_misaligned_single_terms(spark, tmp_path,
                                                        tiny_splits):
-    """Kernel-side OR-combine requires whole-block scan partitions; a
-    misaligned index must take the per-token-rows + groupBy fallback
-    (_hits_or combined=False) and produce identical OR results."""
-    from searcharray_spark.index import SearchIndex
-
-    good = _build(spark, str(tmp_path / "og"))
-    _, combined = good._hits_or([["aaa"], ["zzz"]])
-    assert combined is True
-    truth = sorted(
-        (r["doc_id"], r["n_matches"], round(float(r["score"]), 4))
-        for r in good.search_or(["aaa", "zzz"], mm=1).collect())
+    """Kernel-side OR-combine needs every token of a block in one kernel
+    call. A misaligned index repartitions the pruned rows by block_id
+    first, so its OR results equal the aligned index's exactly: the same
+    kernel sums each doc in float64 and casts to float32 on both."""
+    _build(spark, str(tmp_path / "og"))
+    good = _distributed(spark, str(tmp_path / "og"))
+    assert good._files_aligned() is True
+    assert not _exchanges(_plan(good.search_or(["aaa", "zzz"])))
+    truth = _or_rows(good)
+    assert truth
 
     bad_path = str(tmp_path / "ob")
-    _build(spark, bad_path)
-    _rechunk_postings(bad_path)
-    import json
-    with open(os.path.join(bad_path, "meta.json")) as fh:
-        meta = json.load(fh)
-    meta.pop("postings_single_row_group")
-    with open(os.path.join(bad_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh)
-    bad = SearchIndex(spark, bad_path)
-    _, combined = bad._hits_or([["aaa"], ["zzz"]])
-    assert combined is False  # single terms + unaligned -> fallback
-    got = sorted(
-        (r["doc_id"], r["n_matches"], round(float(r["score"]), 4))
-        for r in bad.search_or(["aaa", "zzz"], mm=1).collect())
-    assert got == truth
+    _misaligned(spark, bad_path)
+    bad = _distributed(spark, bad_path)
+    assert bad._files_aligned() is False
+    ex = _exchanges(_plan(bad.search_or(["aaa", "zzz"])))
+    assert len(ex) == 1 and "hashpartitioning(block_id" in ex[0], ex
+    assert _or_rows(bad) == truth
+
+
+# --- route parity: driver-local vs distributed aligned vs unaligned -------
+
+def _sorted(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _ordered(df):
+    return [tuple(r) for r in df.collect()]
+
+
+def _even_docs(spark):
+    return spark.range(0, len(DOCS), 2).withColumnRenamed("id", "doc_id")
+
+
+OR3 = ["aaa", "zzz", "m7x3"]
+
+# shape -> query rows (ordered for top-k shapes)
+SHAPES = {
+    "term": lambda i, s: _sorted(i.score("aaa")),
+    "phrase": lambda i, s: _sorted(i.score(["aaa", "zzz"])),
+    "slop": lambda i, s: _sorted(i.score(["zzz", "aaa"], slop=2)),
+    "or": lambda i, s: _sorted(i.search_or(OR3, mm=1)),
+    "top_k_pruned": lambda i, s: _ordered(i.top_k_pruned(OR3, k=9)),
+    "top_k_many": lambda i, s: _ordered(
+        i.top_k_many([["aaa"], ["aaa", "zzz"], ["zzz"]], k=9)),
+    "candidates": lambda i, s: _sorted(
+        i.score(["aaa", "zzz"], candidates=_even_docs(s))),
+}
+
+# lazy frames whose plans are checked; the value says whether the
+# unaligned layout must repartition by block_id before the kernel
+PLANS = {
+    "term": (lambda i: i.score("aaa"), False),
+    "phrase": (lambda i: i.score(["aaa", "zzz"]), True),
+    "slop": (lambda i: i.score(["zzz", "aaa"], slop=2), True),
+    "or": (lambda i: i.search_or(OR3, mm=1), True),
+}
+
+
+@pytest.fixture(scope="module")
+def layouts(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("parity")
+    _build(spark, str(root / "aligned"))
+    _misaligned(spark, str(root / "unaligned"))
+    return str(root / "aligned"), str(root / "unaligned")
+
+
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_routes_and_layouts_bit_identical(spark, layouts, tiny_splits,
+                                          shape):
+    from searcharray_spark.index import SearchIndex
+    aligned_path, unaligned_path = layouts
+    local = SearchIndex(spark, aligned_path)
+    assert local._local_query_ok(extended=True)
+    aligned = _distributed(spark, aligned_path)
+    unaligned = _distributed(spark, unaligned_path)
+    assert aligned._files_aligned() and not unaligned._files_aligned()
+
+    want = SHAPES[shape](local, spark)
+    assert want
+    if shape == "candidates":  # always distributed: check the filter too
+        assert want == [r for r in _sorted(local.score(["aaa", "zzz"]))
+                        if r[0] % 2 == 0]
+    assert SHAPES[shape](aligned, spark) == want
+    assert SHAPES[shape](unaligned, spark) == want
+
+    if shape in PLANS:
+        frame, repartitions = PLANS[shape]
+        assert not _exchanges(_plan(frame(aligned)))
+        plan = _plan(frame(unaligned))
+        ex = _exchanges(plan)
+        if repartitions:
+            assert len(ex) == 1 and "hashpartitioning(block_id" in ex[0], ex
+        else:
+            assert not ex, ex
+        for marker in ("FlatMapGroupsInPandas", "Window"):
+            assert marker not in plan

@@ -1,8 +1,8 @@
 """Driver-local small-query fast path (SearchIndex._hits local branch).
 
 Small indexes (<= LOCAL_QUERY_MAX_DOCS docs and <= LOCAL_QUERY_MAX_BYTES
-of postings) score driver-side with the SAME merge_packed/score_block
-kernels — zero Spark jobs per query — but must return bit-identical
+of postings) score driver-side with the SAME query_kernel functions
+— zero Spark jobs per query — but must return bit-identical
 results to the distributed scan path through every public entry point,
 including after deletes/updates (tombstones, update segments, lazy df
 corrections all have driver-local mirrors).

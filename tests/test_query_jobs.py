@@ -102,12 +102,12 @@ def test_pruned_no_match_is_driver_held(spark, idx_path):
 
 
 @pytest.mark.parametrize("aligned", [True, False],
-                         ids=["driver_merge", "window_fallback"])
+                         ids=["driver_merge", "repartitioned"])
 def test_top_k_many_ranks_exact_across_partitions(spark, idx_path, aligned):
     """Per-partition top-k merged on the driver: exact ranks when a
     token's ties span more blocks than there are scan partitions. A
-    layout not known to be scan-aligned sends the phrase batch to the
-    grouped fallback and its rank window instead: same ranks."""
+    layout not known to be scan-aligned repartitions the phrase batch's
+    rows by block_id before the same kernel: same ranks."""
     idx = _distributed(spark, idx_path, cached=False)
     idx._aligned = aligned
     n_blocks = -(-len(DOCS) // idx.docs_per_block)

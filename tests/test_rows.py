@@ -124,6 +124,22 @@ def test_doc_major_zero_shuffle_when_aligned(rows_index, monkeypatch):
     assert "Exchange" not in plan
 
 
+def test_doc_major_unaligned_repartitions_by_block(rows_index, monkeypatch):
+    """A layout not known to be scan-aligned repartitions the postings
+    by block_id before the same per-block kernel: one exchange, no
+    grouped applyInPandas, the same rows."""
+    monkeypatch.setattr(SearchIndex, "LOCAL_QUERY_MAX_DOCS", -1)
+    monkeypatch.setattr(rows_index, "_local_ok", None, raising=False)
+    want = sorted(tuple(r) for r in rows_index.doc_termfreqs().collect())
+    monkeypatch.setattr(rows_index, "_aligned", False, raising=False)
+    frame = rows_index.doc_termfreqs()
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    ex = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(ex) == 1 and "hashpartitioning(block_id" in ex[0], ex
+    assert "FlatMapGroupsInPandas" not in plan
+    assert sorted(tuple(r) for r in frame.collect()) == want
+
+
 # --- P1 row view ----------------------------------------------------------
 
 def test_doc_row_view(surface_index):
