@@ -1,15 +1,15 @@
-"""Filesystem abstraction for index tables: local paths and URIs.
+"""Read side of the index store: local paths and URIs.
 
-A 100 TB index lives in object storage; every driver/executor-side
-metadata or side-input read (meta.json, doclens/tombstone side tables,
-parquet footer walks) is routed through ``pyarrow.fs`` so any scheme
-``pyarrow.fs.FileSystem.from_uri`` supports (file://, s3://, hdfs://,
-gcs://...) works without code changes. Spark's own table scans take the
-original URI (Hadoop FS layer). Plain local paths skip URI parsing.
+Every driver/executor-side metadata or side-input read (meta.json,
+doclens/tombstone side tables, parquet footer walks) is routed through
+``pyarrow.fs``, so any scheme ``pyarrow.fs.FileSystem.from_uri``
+resolves (file://, hdfs://, s3://, gcs://...) reads without code
+changes. Spark's own table scans take the original URI (Hadoop FS
+layer). Plain local paths skip URI parsing. Writes live in ``commit``,
+which accepts only stores with an atomic rename.
 
-The sandbox can only exercise LocalFileSystem (via bare paths and
-file://), which is exactly what tests/test_remote_fs.py proves
-end-to-end; unsupported schemes fail fast with a clear message.
+tests/test_remote_fs.py drives LocalFileSystem through file:// URIs end
+to end; schemes pyarrow cannot resolve fail fast with a clear message.
 """
 from __future__ import annotations
 
@@ -82,11 +82,12 @@ def list_parquet_files(root: str) -> List[Tuple[str, int]]:
     return out
 
 
-def read_parquet(path: str, columns=None, filters=None):
+def read_parquet(path: str, columns=None, filters=None, **kw):
     """pyarrow table read that works for paths and URIs (file or dir)."""
     import pyarrow.parquet as pq
     f, p = resolve(path)
-    return pq.read_table(p, columns=columns, filters=filters, filesystem=f)
+    return pq.read_table(p, columns=columns, filters=filters, filesystem=f,
+                         **kw)
 
 
 def parquet_file(path: str):
@@ -94,54 +95,3 @@ def parquet_file(path: str):
     import pyarrow.parquet as pq
     f, p = resolve(path)
     return pq.ParquetFile(p, filesystem=f)
-
-
-def write_json(path: str, obj) -> None:
-    f, p = resolve(path)
-    with f.open_output_stream(p) as fh:
-        fh.write(json.dumps(obj).encode("utf-8"))
-
-
-def write_json_atomic(path: str, obj) -> None:
-    """Write via a temp name + move (atomic rename on LocalFileSystem;
-    best-effort on object stores, where the read path tolerates a
-    missing/stale file by re-deriving)."""
-    f, p = resolve(path)
-    f.create_dir(posixpath.dirname(p), recursive=True)
-    tmp = p + ".tmp"
-    with f.open_output_stream(tmp) as fh:
-        fh.write(json.dumps(obj).encode("utf-8"))
-    f.move(tmp, p)
-
-
-def rmtree(path: str) -> None:
-    from pyarrow import fs as pafs
-    f, p = resolve(path)
-    if f.get_file_info(p).type == pafs.FileType.Directory:
-        f.delete_dir(p)
-
-
-def move(path_src: str, path_dst: str) -> None:
-    f, ps = resolve(path_src)
-    _, pd = resolve(path_dst)
-    f.move(ps, pd)
-
-
-def local_path(path: str) -> str:
-    """POSIX path for a local path or file:// URI. Index MUTATIONS that
-    shell out to the (local-filesystem) build pipeline use this; truly
-    remote indexes get a clear NotImplementedError instead of a broken
-    os.* call."""
-    if path.startswith("file://"):
-        return path[len("file://"):]
-    if "://" in path:
-        raise NotImplementedError(
-            f"this operation builds new segments with local-filesystem "
-            f"tooling; got remote location {path!r}")
-    return path
-
-
-def is_local(path: str) -> bool:
-    from pyarrow import fs as pafs
-    f, _ = resolve(path)
-    return isinstance(f, pafs.LocalFileSystem)

@@ -35,8 +35,6 @@ Query execution model:
 """
 from __future__ import annotations
 
-import json
-import os
 from typing import Iterable, List, Optional, Sequence, Union
 
 import numpy as np
@@ -52,7 +50,7 @@ try:  # classic (non-connect) DataFrame: the concrete implementation
 except ImportError:  # pragma: no cover - older/connect layouts
     _BaseDataFrame = DataFrame
 
-from . import fsutil
+from . import commit, fsutil
 from . import kernels as K
 from . import query_kernel as QK
 from . import similarity as sim_mod
@@ -506,40 +504,20 @@ class SearchIndex:
         self.as_of = int(as_of) if as_of is not None else None
         if self.as_of is not None and self.as_of < 0:
             raise ValueError(f"as_of must be >= 0, got {as_of}")
-        # Side-input kernels (DoclensReader) and driver metadata reads use
-        # POSIX paths; a remote object-store index would need these routed
-        # through pyarrow.fs.FileSystem.from_uri (ROADMAP). Fail fast with
-        # a clear message instead of an executor-side FileNotFoundError.
+        # every metadata and side-input read goes through fsutil
+        # (pyarrow.fs), so a file:// URI takes the route an object-store
+        # index would; unresolvable schemes fail fast here
         path = self.path = path.rstrip("/") or "/"
-        # resolve the scheme through pyarrow.fs up front: every metadata
-        # and side-input read below goes through fsutil, so a file://
-        # URI exercises the exact route an object-store index would
-        # (unsupported schemes fail fast with a clear message here)
         fsutil.resolve(path)
         self.meta = fsutil.read_json(fsutil.join(path, "meta.json"))
         self.docs_per_block = int(self.meta["docs_per_block"])
-        self.num_docs = int(self.meta["num_docs"])
-        self.avg_doc_len = float(self.meta["avg_doc_len"])
-        # legacy index without total_tokens: derive it so delete/update
-        # stats patches stay consistent instead of driving totals negative
-        _tt = self.meta.get("total_tokens")
-        self.total_tokens = (float(_tt) if _tt is not None
-                             else self.avg_doc_len * self.num_docs)
         # as-built doc-id space: dense (test-parity) outputs keep this
         # shape even after deletes shrink the LIVE num_docs below it
         self.capacity = int(self.meta["num_docs"])
-        patch = fsutil.join(path, "stats_patch.json")
-        if self.as_of is not None:
-            self._stats_need_asof = fsutil.exists(patch)
-        elif fsutil.exists(patch):
-            # live corpus stats after delete/update ops (exact deltas
-            # applied by _patch_stats; compact resets by writing exact
-            # stats into meta and no patch file)
-            p = fsutil.read_json(patch)
-            self.num_docs = int(p["num_docs"])
-            self.total_tokens = float(p["total_tokens"])
-            self.avg_doc_len = (self.total_tokens / self.num_docs
-                                if self.num_docs else 0.0)
+        # the committed epochs this handle serves, oldest first
+        self._log = [r for r in self._stats_log()
+                     if self.as_of is None or int(r["epoch"]) <= self.as_of]
+        self._apply_stats()
         if tokenizer is not None:
             self.tokenizer = tokenizers.resolve(tokenizer)
         elif self.meta["tokenizer"] == "custom":
@@ -559,8 +537,6 @@ class SearchIndex:
         self._postings_df: DataFrame | None = None
         self._doclens_df: DataFrame | None = None
         self._readers: dict = {}
-        if self.as_of is not None and getattr(self, "_stats_need_asof", False):
-            self._apply_asof_stats()
 
     # Cache-gate for the POSTINGS table. Postings cache only when their
     # estimated in-memory size fits comfortably inside the cluster's
@@ -662,18 +638,21 @@ class SearchIndex:
     # base rows are seg 0) contributes a doc iff no tombstone for that
     # doc has seg > row.seg — so an update kills older content and its
     # own rows survive, and re-adding a deleted doc resurrects it.
-    # Corpus stats (df/avgdl/N) stay as-built until compact()
-    # (Lucene-style deleted-docs semantics).
+    # The epoch commits when its record stats_log/epoch_E.json lands,
+    # last (commit.py): tombstone rows and segments of an epoch without
+    # a record are invisible, and its number is never reused. Corpus
+    # stats (N, total tokens) are meta plus the committed records'
+    # exact deltas; per-term df is corrected at query time
+    # (_df_corrections).
 
     def _update_segs(self) -> List[int]:
-        root = fsutil.join(self.path, "updates")
-        segs = sorted(int(d.split("=", 1)[1]) for d in fsutil.listdir(root)
-                      if d.startswith("seg="))
-        if self.as_of is not None:
-            segs = [s for s in segs if s <= self.as_of]
-        return segs
+        return [int(r["epoch"]) for r in self._log if r["op"] == "update"]
+
+    def _epochs(self) -> List[int]:
+        return [int(r["epoch"]) for r in self._log]
 
     def _next_epoch(self) -> int:
+        """One past every epoch number in use, committed or not."""
         tomb = 0
         tpath = fsutil.join(self.path, "tombstones")
         if fsutil.isdir(tpath):
@@ -698,8 +677,10 @@ class SearchIndex:
                                 v = int(v or 0)
                             mx = v if mx is None else max(mx, v)
             tomb = int(mx or 0)
-        segs = self._update_segs()
-        return max([tomb] + segs + [0]) + 1
+        segs = [int(d.split("=", 1)[1]) for d in fsutil.listdir(
+            fsutil.join(self.path, "updates")) if d.startswith("seg=")]
+        logged = [int(r["epoch"]) for r in self._stats_log()]
+        return max([tomb] + segs + logged) + 1
 
     # above this many tombstone rows the driver dict + task-closure ship
     # is replaced by the parquet side table (TombstoneReader): bounded
@@ -721,11 +702,10 @@ class SearchIndex:
             if n_rows > self.TOMBSTONE_DRIVER_MAX_ROWS:
                 out = self._tombstone_reader(n_rows)
             else:
-                # bounded driver pyarrow read, no Spark job
+                # bounded driver pyarrow read, no Spark job; only rows
+                # of the epochs this handle serves
                 pdf = fsutil.read_parquet(tpath).to_pandas()
-                if self.as_of is not None and len(pdf):
-                    # snapshot read: only tombstones committed by epoch E
-                    pdf = pdf[pdf["seg"] <= self.as_of]
+                pdf = pdf[pdf["seg"].isin(self._epochs())]
                 if len(pdf):
                     ids = pdf["doc_id"].to_numpy(dtype=np.int64)
                     segs = pdf["seg"].to_numpy(dtype=np.int64)
@@ -748,33 +728,24 @@ class SearchIndex:
         return out
 
     def _tombstone_reader(self, n_rows: int) -> TombstoneReader:
-        """Side-table mode: (re)pack the raw tombstone log into a
+        """Side-table mode: (re)pack the committed tombstone rows into a
         block-range-partitioned parquet table when stale (one Spark job
         over O(deletes) rows), then hand out footer-resolved ranges.
-        Snapshot handles pack into an as_of-suffixed dir (the epoch-E
-        prefix of the log is immutable, so a present marker is fresh)."""
-        if self.as_of is not None:
-            packed = fsutil.join(self.path,
-                                 f"tombstones_packed_asof_{self.as_of}")
-            marker = fsutil.join(packed, "_rows.json")
-            if not fsutil.exists(marker):
-                self._pack_tombstones(packed, n_rows, max_seg=self.as_of)
-            ranges = [(p, lo, hi)
-                      for _, p, lo, hi in scan_doclens_ranges([(0, packed)])]
-            return TombstoneReader(ranges)
-        packed = fsutil.join(self.path, "tombstones_packed")
+        The table's marker ``_rows.json`` records the raw log's row
+        count and the newest epoch packed; snapshot handles pack into
+        an as_of-suffixed dir."""
+        name = ("tombstones_packed" if self.as_of is None
+                else f"tombstones_packed_asof_{self.as_of}")
+        packed = fsutil.join(self.path, name)
         marker = fsutil.join(packed, "_rows.json")
-        fresh = False
-        if fsutil.exists(marker):
-            fresh = fsutil.read_json(marker).get("rows") == n_rows
-        if not fresh:
-            self._pack_tombstones(packed, n_rows)
+        want = {"rows": n_rows, "epoch": max(self._epochs(), default=0)}
+        if not fsutil.exists(marker) or fsutil.read_json(marker) != want:
+            self._pack_tombstones(packed, want)
         ranges = [(p, lo, hi)
                   for _, p, lo, hi in scan_doclens_ranges([(0, packed)])]
         return TombstoneReader(ranges)
 
-    def _pack_tombstones(self, packed: str, n_rows: int,
-                         max_seg: Optional[int] = None) -> None:
+    def _pack_tombstones(self, packed: str, marker: dict) -> None:
         dpb = self.docs_per_block
 
         def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -793,33 +764,26 @@ class SearchIndex:
                 "segs": [mx.astype("<i8").tobytes()]})
 
         n_parts = max(4, self.spark.sparkContext.defaultParallelism)
-        tmp = packed + ".tmp"
-        fsutil.rmtree(tmp)
-        raw = self.spark.read.parquet(fsutil.join(self.path, "tombstones"))
-        if max_seg is not None:
-            raw = raw.filter(F.col("seg") <= max_seg)
-        raw \
+        commit.begin(packed, marker="_rows.json")
+        self.spark.read.parquet(fsutil.join(self.path, "tombstones")) \
+            .filter(F.col("seg").isin(self._epochs())) \
             .withColumn("block_id",
                         F.floor(F.col("doc_id") / F.lit(dpb)).cast("long")) \
             .groupBy("block_id") \
             .applyInPandas(pack, "block_id long, doc_ids binary, segs binary") \
             .repartitionByRange(n_parts, "block_id") \
             .sortWithinPartitions("block_id") \
-            .write.mode("overwrite").parquet(tmp)
-        fsutil.rmtree(packed)
-        fsutil.move(tmp, packed)
-        # marker LAST: a crash mid-swap leaves no/stale marker -> repack
-        fsutil.write_json(fsutil.join(packed, "_rows.json"),
-                          {"rows": n_rows})
+            .write.mode("overwrite").parquet(packed)
+        commit.write_json(fsutil.join(packed, "_rows.json"), marker)
         _TOMB_FILE_CACHE.clear()  # old side-table files are gone
 
     def delete_docs(self, doc_ids) -> None:
         """Tombstone docs: they stop matching every query immediately.
         Corpus stats (num_docs, total_tokens -> avg_doc_len) are patched
         EXACTLY: the currently-live lengths of the deleted docs are
-        subtracted (stats_patch.json, survives reopen). Per-term df
-        corrections happen lazily at query time (_df_corrections), so
-        idf stays exact between compactions."""
+        subtracted (the epoch's stats_log record, survives reopen).
+        Per-term df corrections happen lazily at query time
+        (_df_corrections), so idf stays exact between compactions."""
         self._check_writable()
         ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         if not len(ids):
@@ -830,9 +794,8 @@ class SearchIndex:
             [(int(d), epoch) for d in ids.tolist()], "doc_id long, seg long")
         df.coalesce(1).write.mode("append").parquet(
             fsutil.join(self.path, "tombstones"))
-        self._invalidate_caches()
-        self._patch_stats(-int(live.sum()), -float(lens[live].sum()),
-                          epoch=epoch, op="delete")
+        self._commit_epoch(epoch, "delete", -int(live.sum()),
+                           -float(lens[live].sum()))
 
     def update_docs(self, docs: DataFrame, text_col: str = "text") -> None:
         """Replace docs in place (same doc ids): tombstone the old
@@ -847,8 +810,6 @@ class SearchIndex:
         stats come from one distributed agg over the TOUCHED blocks'
         doclens (block-pruned broadcast join), and the tombstone rows
         are written directly from the frame."""
-        from .indexing import build_index
-
         self._check_writable()
         # the batch frame is evaluated several times below (live stats,
         # segment build, tombstone write): persist it so an expensive or
@@ -877,10 +838,7 @@ class SearchIndex:
         if n_ids == 0:
             return
         epoch = self._next_epoch()
-        # the segment build shells out to the local build pipeline; a
-        # file:// index maps to its POSIX path, truly remote fails fast
-        seg_path = fsutil.local_path(
-            fsutil.join(self.path, "updates", f"seg={epoch}"))
+        seg_path = fsutil.join(self.path, "updates", f"seg={epoch}")
         build_index(self.spark, docs, seg_path, text_col=text_col,
                     doc_id_col="doc_id",
                     tokenizer=self.tokenizer if self.meta["tokenizer"] == "custom"
@@ -892,12 +850,10 @@ class SearchIndex:
             .dropDuplicates(["doc_id"]) \
             .coalesce(1).write.mode("append").parquet(
                 fsutil.join(self.path, "tombstones"))
-        self._invalidate_caches()
         seg_meta = self._seg_meta(epoch)
-        self._patch_stats(
-            int(seg_meta["num_docs"]) - live_n,
-            float(seg_meta.get("total_tokens") or 0.0) - live_len_sum,
-            epoch=epoch, op="update")
+        self._commit_epoch(
+            epoch, "update", int(seg_meta["num_docs"]) - live_n,
+            float(seg_meta.get("total_tokens") or 0.0) - live_len_sum)
 
     def _live_stats_for(self, docs: DataFrame) -> tuple:
         """(n_ids, live_count, live_len_sum) for the frame's doc ids
@@ -921,35 +877,26 @@ class SearchIndex:
                  F.sum("doc_len").alias("s")).collect()[0]
         return int(row["n_ids"]), int(row["n"]), float(row["s"] or 0.0)
 
-    def _patch_stats(self, delta_docs: int, delta_tokens: float,
-                     epoch: Optional[int] = None,
-                     op: Optional[str] = None) -> None:
-        """Apply an exact corpus-stats delta and persist it atomically so
-        reopened handles see the live num_docs / avg_doc_len.
-        compact_index writes exact stats into meta.json and the fresh
-        index has no patch file. Each mutation also appends an
-        epoch-stamped record to stats_log/ — the snapshot log that makes
-        as_of (time-travel) stats exact without a recount."""
-        self.num_docs = int(self.num_docs + delta_docs)
-        self.total_tokens = float(self.total_tokens + delta_tokens)
-        self.avg_doc_len = (self.total_tokens / self.num_docs
-                            if self.num_docs else 0.0)
-        fsutil.write_json_atomic(
-            fsutil.join(self.path, "stats_patch.json"),
-            {"num_docs": self.num_docs,
-             "total_tokens": self.total_tokens})
-        if epoch is not None:
-            fsutil.write_json_atomic(
-                fsutil.join(self.path, "stats_log", f"epoch_{epoch}.json"),
-                {"epoch": int(epoch), "op": op,
-                 "delta_docs": int(delta_docs),
-                 "delta_tokens": float(delta_tokens)})
+    def _commit_epoch(self, epoch: int, op: str, delta_docs: int,
+                      delta_tokens: float) -> None:
+        """Commit a mutation epoch: its stats_log record, holding the
+        exact corpus-stats delta, is the marker, written last. Until it
+        lands the epoch's tombstone rows and segment are invisible."""
+        rec = {"epoch": int(epoch), "op": op,
+               "delta_docs": int(delta_docs),
+               "delta_tokens": float(delta_tokens)}
+        commit.write_json(
+            fsutil.join(self.path, "stats_log", f"epoch_{epoch}.json"), rec)
+        self._log.append(rec)
+        self._invalidate_caches()
+        self._apply_stats()
 
     def _check_writable(self) -> None:
         if self.as_of is not None:
             raise ValueError(
                 f"read-only snapshot handle (as_of={self.as_of}); open the "
                 "index without as_of to mutate it")
+        commit.store(self.path)  # an unwritable store fails before writing
 
     def _stats_log(self) -> List[dict]:
         root = fsutil.join(self.path, "stats_log")
@@ -967,37 +914,22 @@ class SearchIndex:
         history, like Iceberg snapshot expiry."""
         return self._stats_log()
 
-    def _apply_asof_stats(self) -> None:
-        """Exact corpus stats for a snapshot handle: base stats plus the
-        stats_log deltas of epochs <= as_of. If any epoch in range
-        predates the log (legacy index mutated before stats_log existed),
-        fall back to ONE bounded recount over this snapshot's own
-        doclens view — correct by construction."""
-        recs = self._stats_log()
-        known = {int(r["epoch"]) for r in recs}
-        # epochs are contiguous from 1 (each mutation takes max+1), so the
-        # newest epoch bounds the range the log must cover
-        newest = self._next_epoch() - 1
-        needed = range(1, min(self.as_of, newest) + 1)
-        if all(e in known for e in needed):
-            dd = sum(int(r["delta_docs"]) for r in recs
-                     if int(r["epoch"]) <= self.as_of)
-            dt = sum(float(r["delta_tokens"]) for r in recs
-                     if int(r["epoch"]) <= self.as_of)
-            self.num_docs = int(self.meta["num_docs"]) + dd
-            base_tt = self.meta.get("total_tokens")
-            base_tt = (float(base_tt) if base_tt is not None
-                       else float(self.meta["avg_doc_len"])
-                       * int(self.meta["num_docs"]))
-            self.total_tokens = base_tt + dt
-        else:
-            row = self.docstats.agg(
-                F.count("*").alias("n"),
-                F.sum(F.col("doc_len").cast("double")).alias("t")).collect()[0]
-            self.num_docs = int(row["n"])
-            self.total_tokens = float(row["t"] or 0.0)
-        self.avg_doc_len = (self.total_tokens / self.num_docs
-                            if self.num_docs else 0.0)
+    def _apply_stats(self) -> None:
+        """Corpus stats of the served snapshot: meta's as-built stats
+        plus each committed epoch's exact delta, in epoch order."""
+        self.num_docs = int(self.meta["num_docs"])
+        self.avg_doc_len = float(self.meta["avg_doc_len"])
+        # legacy meta without total_tokens: derive it so the deltas
+        # stay consistent instead of driving totals negative
+        tt = self.meta.get("total_tokens")
+        self.total_tokens = (float(tt) if tt is not None
+                             else self.avg_doc_len * self.num_docs)
+        for r in self._log:
+            self.num_docs += int(r["delta_docs"])
+            self.total_tokens += float(r["delta_tokens"])
+        if self._log:
+            self.avg_doc_len = (self.total_tokens / self.num_docs
+                                if self.num_docs else 0.0)
 
     def _live_lens(self, ids: np.ndarray):
         """(live_mask, doc_len) per unique GLOBAL doc id against the

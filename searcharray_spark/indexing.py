@@ -33,6 +33,10 @@ re-architected for a multi-executor cluster, not ported):
    are fixed before group 0, so every group count writes the same
    files. term_stats, corpus stats and meta.json are finalized once,
    after the last group. Per-group metrics land in ``metrics.jsonl``.
+6. every write goes through ``commit`` (pyarrow.fs, any path or URI
+   whose store renames atomically): ``commit.begin`` drops the old
+   ``meta.json`` and sweeps the old index before the first table
+   write, and ``commit.publish`` lands ``meta.json`` last.
 
 Index layout on disk (parquet):
   postings/   term, block_id, postings(binary u64-LE), df, tf_total, tf_max
@@ -56,15 +60,13 @@ Index layout on disk (parquet):
               O(terms x blocks) row collect. Files are term-sorted in
               row groups of TERM_STATS_ROW_GROUP_ROWS terms, so a
               lookup reads only the row groups that can hold its terms.
-  meta.json   tokenizer, docs_per_block, num_docs, avg_doc_len, ...
+  meta.json   tokenizer, docs_per_block, num_docs, avg_doc_len, ... —
+              the index's commit marker, written last
 (per-doc docstats are derived lazily from doclens — see SearchIndex)
 """
 from __future__ import annotations
 
-import json
-import os
 import re
-import shutil
 import time
 from typing import Iterator, Optional
 
@@ -75,6 +77,7 @@ from pyspark.sql.types import (
     BinaryType, LongType, StringType, StructField, StructType,
 )
 
+from . import commit, fsutil
 from . import kernels as K
 from . import tokenizers
 from .constants import DEFAULT_DOCS_PER_BLOCK, MAX_POSN
@@ -117,7 +120,6 @@ def verify_single_row_group(path: str) -> bool:
     result in meta.json so serving never re-walks; at cluster scale this
     runs once per build on the driver.
     """
-    from . import fsutil
     for f, _sz in fsutil.list_parquet_files(path):
         if fsutil.parquet_file(f).metadata.num_row_groups > 1:
             return False
@@ -256,13 +258,11 @@ def _ensure_parquet_dir(path: str, pa_schema) -> None:
     partition was empty produces no files, and ``spark.read.parquet``
     then fails schema inference. Writes one empty single-row-group file."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    os.makedirs(path, exist_ok=True)
-    if any(True for _ in os.listdir(path) if _.endswith(".parquet")):
+    if fsutil.list_parquet_files(path):
         return
-    pq.write_table(pa.Table.from_pylist([], schema=pa_schema),
-                   os.path.join(path, "part-empty.parquet"),
-                   compression="zstd")
+    commit.write_parquet(fsutil.join(path, "part-empty.parquet"),
+                         pa.Table.from_pylist([], schema=pa_schema),
+                         compression="zstd")
 
 
 def _make_partition_kernel(builder, doclens_dir: str, fid_base: int = 0):
@@ -278,7 +278,8 @@ def _make_partition_kernel(builder, doclens_dir: str, fid_base: int = 0):
 
     The task of partition ``p`` IS final file ``fid_base + p``: it
     side-writes that file's doclens (deterministic content + atomic
-    rename, so task retries are idempotent; per-file corpus stats ride
+    ``commit.write_parquet``, so task retries are idempotent on any
+    store the driver and executors share; per-file corpus stats ride
     in the parquet footer metadata) and yields the postings rows
     term-sorted, so the enclosing job's parquet write lands them in the
     final block-range layout with NO further shuffle (guide §8: heavy
@@ -311,10 +312,7 @@ def _make_partition_kernel(builder, doclens_dir: str, fid_base: int = 0):
             parts.append(builder(grp))
         rows = pd.concat(parts, ignore_index=True)
 
-        import uuid
-
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         posts = rows[rows["kind"] == "p"]
@@ -336,12 +334,9 @@ def _make_partition_kernel(builder, doclens_dir: str, fid_base: int = 0):
             dls[["block_id", "doc_ids", "doc_lens"]]
             .astype({"block_id": "int64"}),
             schema=dl_schema, preserve_index=False)
-        final = os.path.join(doclens_dir, f"part-{fid:05d}.parquet")
-        tmp = os.path.join(doclens_dir,
-                           f".part-{fid:05d}-{uuid.uuid4().hex}.tmp")
-        pq.write_table(dl_table, tmp, row_group_size=max(1, len(dls)),
-                       compression="zstd")
-        os.replace(tmp, final)
+        commit.write_parquet(
+            fsutil.join(doclens_dir, f"part-{fid:05d}.parquet"), dl_table,
+            row_group_size=max(1, len(dls)), compression="zstd")
 
         # --- emit final postings rows: term-sorted (page min/max stats
         # prune pushed term filters inside the single row group), sliced
@@ -522,20 +517,18 @@ def _write_term_stats_pdf(posts: pd.DataFrame, ts_dir: str,
         ts_pdf = pd.DataFrame(columns=[
             "term", "df", "tf_total", "n_blocks", "grp_ids", "grp_tf_max",
             "grp_dl_min"])
-    import pyarrow.parquet as pq
-    pq.write_table(
+    commit.write_parquet(
+        fsutil.join(ts_dir, "part-00000.parquet"),
         pa.Table.from_pandas(ts_pdf, schema=ts_schema, preserve_index=False),
-        os.path.join(ts_dir, "part-00000.parquet"),
         row_group_size=TERM_STATS_ROW_GROUP_ROWS, compression="snappy")
 
 
 def _write_pq_single_rg(path: str, pdf: pd.DataFrame, schema) -> None:
     """One parquet file, ONE row group, pyarrow writer (driver-local)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
-    pq.write_table(table, path, row_group_size=max(1, len(pdf)),
-                   compression="snappy")
+    commit.write_parquet(path, table, row_group_size=max(1, len(pdf)),
+                         compression="snappy")
 
 
 def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
@@ -577,8 +570,7 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
         ("postings", pa.binary()), ("df", pa.int64()),
         ("tf_total", pa.int64()), ("tf_max", pa.int64()),
         ("dl_min", pa.int64())])
-    p_dir = os.path.join(index_path, "postings")
-    os.makedirs(p_dir, exist_ok=True)
+    p_dir = fsutil.join(index_path, "postings")
     p_cols = ["term", "block_id", "postings", "df", "tf_total", "tf_max",
               "dl_min"]
     p_file = file_of(posts["block_id"].to_numpy(dtype=np.int64)) \
@@ -590,53 +582,47 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
                             "tf_total": "int64", "tf_max": "int64",
                             "dl_min": "int64"}, errors="ignore")
         _write_pq_single_rg(
-            os.path.join(p_dir, f"part-{i:05d}.parquet"), part, posts_schema)
+            fsutil.join(p_dir, f"part-{i:05d}.parquet"), part, posts_schema)
 
     dl_schema = pa.schema([
         ("block_id", pa.int64()), ("doc_ids", pa.binary()),
         ("doc_lens", pa.binary())])
-    d_dir = os.path.join(index_path, "doclens")
-    os.makedirs(d_dir, exist_ok=True)
+    d_dir = fsutil.join(index_path, "doclens")
     d_file = file_of(dls["block_id"].to_numpy(dtype=np.int64)) \
         if len(dls) else np.zeros(0, dtype=np.int64)
     for i in range(n_files):
         part = dls[d_file == i].sort_values("block_id", kind="stable")[
             ["block_id", "doc_ids", "doc_lens"]].astype({"block_id": "int64"})
         _write_pq_single_rg(
-            os.path.join(d_dir, f"part-{i:05d}.parquet"), part, dl_schema)
+            fsutil.join(d_dir, f"part-{i:05d}.parquet"), part, dl_schema)
 
     # per-term sketches: same two-phase agg as write_term_stats, in pandas
     granularity = bounds_granularity(n_blocks)
-    ts_dir = os.path.join(index_path, "term_stats")
-    os.makedirs(ts_dir, exist_ok=True)
-    _write_term_stats_pdf(posts, ts_dir, granularity)
+    _write_term_stats_pdf(posts, fsutil.join(index_path, "term_stats"),
+                          granularity)
 
     num_docs = int(sum(len(b) // 8 for b in dls["doc_ids"]))
     total_tokens = float(sum(
         np.frombuffer(b, dtype="<f4").sum() for b in dls["doc_lens"]))
-    meta = {
-        "format_version": 4,
+    assert verify_single_row_group(p_dir)
+    secs = round(time.time() - t_start, 3)
+    commit.publish(index_path, {
         "tokenizer": tokenizer_name,
         "docs_per_block": docs_per_block,
         "truncate": truncate,
         "num_docs": num_docs,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
         "total_tokens": total_tokens,
         "bounds_granularity": granularity,
         "postings_single_row_group": True,  # by construction (verified)
-        "build_secs": round(time.time() - t_start, 3),
+        "build_secs": secs,
         "built_local": True,
-    }
-    assert verify_single_row_group(p_dir)
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-    with open(os.path.join(index_path, "metrics.jsonl"), "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": num_docs,
-            "total_tokens": total_tokens, "secs": meta["build_secs"],
-            "docs_per_sec": round(num_docs / max(meta["build_secs"], 1e-9), 1),
-            "local_build": True,
-        }) + "\n")
+    })
+    commit.append_line(fsutil.join(index_path, "metrics.jsonl"), {
+        "stage": "finalize", "num_docs": num_docs,
+        "total_tokens": total_tokens, "secs": secs,
+        "docs_per_sec": round(num_docs / max(secs, 1e-9), 1),
+        "local_build": True,
+    })
     return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
 
 
@@ -844,12 +830,10 @@ def _committed_groups(marker_dir: str, plan: dict) -> set:
     differs from ``plan``: resuming under another plan would mix files
     of two layouts into one (wrong) index."""
     done = set()
-    names = os.listdir(marker_dir) if os.path.isdir(marker_dir) else []
-    for name in sorted(names):
+    for name in sorted(fsutil.listdir(marker_dir)):
         if not name.endswith(".done"):
             continue
-        with open(os.path.join(marker_dir, name)) as fh:
-            marker = json.load(fh)
+        marker = fsutil.read_json(fsutil.join(marker_dir, name))
         for key, want in plan.items():
             if marker.get(key) != want:
                 raise ValueError(
@@ -868,28 +852,27 @@ def _build_group(df: DataFrame, fid, lo: int, hi: int, n_files: int,
     writes (named by partition) move to names fixed by fid. A re-run
     rewrites the same names, so a group killed mid-way is just run
     again."""
-    import pyarrow.parquet as pq
     if hi - lo < n_files:
         df = df.filter((fid >= lo) & (fid < hi))
-    tmp = os.path.join(postings_dir, f"_group_{lo}")  # hidden from readers
+    tmp = fsutil.join(postings_dir, f"_group_{lo}")  # hidden from readers
     repartition_exact(df, fid - lo, hi - lo) \
         .mapInPandas(_make_partition_kernel(builder, doclens_dir, lo),
                      POSTINGS_SCHEMA) \
         .write.mode("overwrite") \
         .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
         .parquet(tmp)
-    for name in os.listdir(tmp):
+    for name in fsutil.listdir(tmp):
         m = re.match(r"part-(\d+)-.*-(c\d+\..*parquet)$", name)
         if m is None:
             continue  # _SUCCESS, .crc
-        src = os.path.join(tmp, name)
+        src = fsutil.join(tmp, name)
         # Spark writes partition 0's file even when it is empty; dropping
         # it keeps the file set independent of the group count
-        if int(m[1]) == 0 and pq.ParquetFile(src).metadata.num_rows == 0:
+        if int(m[1]) == 0 and fsutil.parquet_file(src).metadata.num_rows == 0:
             continue
-        os.replace(src, os.path.join(
+        commit.move(src, fsutil.join(
             postings_dir, f"part-{lo + int(m[1]):05d}-{m[2]}"))
-    shutil.rmtree(tmp)
+    commit.delete(tmp)
 
 
 def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
@@ -957,23 +940,15 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
             "tokenizer": tokenizer_name, "truncate": truncate}
 
     granularity = bounds_granularity(n_blocks)
-    postings_dir = os.path.join(index_path, "postings")
-    doclens_dir = os.path.join(index_path, "doclens")
-    ts_dir = os.path.join(index_path, "term_stats")
-    marker_dir = os.path.join(index_path, "_groups")
-    metrics_path = os.path.join(index_path, "metrics.jsonl")
+    postings_dir = fsutil.join(index_path, "postings")
+    doclens_dir = fsutil.join(index_path, "doclens")
+    ts_dir = fsutil.join(index_path, "term_stats")
+    marker_dir = fsutil.join(index_path, "_groups")
+    metrics_path = fsutil.join(index_path, "metrics.jsonl")
     done = _committed_groups(marker_dir, plan) if resume else set()
-    # meta.json is the index's commit marker (loaders require it):
-    # dropping it FIRST means a build killed mid-pass leaves an
-    # unreadable index, never a stale meta over fresh partial tables
-    try:
-        os.remove(os.path.join(index_path, "meta.json"))
-    except OSError:
-        pass
-    for d in (postings_dir, doclens_dir, marker_dir):
-        if not done:  # no file of an earlier build survives a fresh one
-            shutil.rmtree(d, ignore_errors=True)
-        os.makedirs(d, exist_ok=True)
+    # no file of an earlier build survives, except the committed groups
+    # a resume continues from
+    commit.begin(index_path, resume=bool(done))
 
     # --- THE pass: text exchanged once into final-file partitions ---
     t_p = time.time()
@@ -996,24 +971,28 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
                 _build_group(df, fid, lo, hi, term_partitions, builder,
                              postings_dir, doclens_dir)
             secs = round(time.time() - g_start, 3)
-            # atomic commit: a crash mid-write never leaves a partial marker
-            marker = os.path.join(marker_dir, f"group_{g}_of_{groups}.done")
-            with open(marker + ".tmp", "w") as fh:
-                json.dump({"group": g, **plan, "secs": secs}, fh)
-            os.replace(marker + ".tmp", marker)
-            with open(metrics_path, "a") as fh:
-                fh.write(json.dumps({
-                    "stage": "build_group", "group": g, "groups": groups,
-                    "fids": [lo, hi], "secs": secs}) + "\n")
+            commit.write_json(
+                fsutil.join(marker_dir, f"group_{g}_of_{groups}.done"),
+                {"group": g, **plan, "secs": secs})
+            commit.append_line(metrics_path, {
+                "stage": "build_group", "group": g, "groups": groups,
+                "fids": [lo, hi], "secs": secs})
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
     # drop stray tmp files from failed/retried task attempts
-    for f in os.listdir(doclens_dir):
-        if f.endswith(".tmp"):
-            try:
-                os.remove(os.path.join(doclens_dir, f))
-            except OSError:
-                pass
+    for name in fsutil.listdir(doclens_dir):
+        if name.endswith(".tmp"):
+            commit.delete(fsutil.join(doclens_dir, name))
+    # every postings file needs its doclens file: a side-write the
+    # driver cannot see (a store the executors do not share) must fail
+    # the build, never commit an index with missing docs
+    dl_names = set(fsutil.listdir(doclens_dir))
+    for name in fsutil.listdir(postings_dir):
+        m = re.match(r"part-(\d+)-", name)
+        if m and f"part-{m[1]}.parquet" not in dl_names:
+            raise RuntimeError(
+                f"build of {index_path!r}: postings file {name} has no "
+                f"doclens file part-{m[1]}.parquet")
     phases["build_pass"] = round(time.time() - t_p, 3)
 
     # empty-corpus guard: a write with zero rows leaves no readable files
@@ -1036,22 +1015,18 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     # table. Large indexes run the distributed two-phase agg at a
     # DATA-sized width. ---
     t_p = time.time()
-    from . import fsutil
 
     def _pq_bytes(root: str) -> int:
         return sum(sz for _p, sz in fsutil.list_parquet_files(root))
 
     postings_bytes = _pq_bytes(postings_dir)
     if postings_bytes <= TS_LOCAL_MAX_POSTINGS_BYTES:
-        import pyarrow.parquet as pq
         # read_dictionary: the term column comes back as the parquet
         # dictionary pages directly — no per-row string materialization
-        meta_tbl = pq.read_table(
+        meta_tbl = fsutil.read_parquet(
             postings_dir, columns=["term", "block_id", "df", "tf_total",
                                    "tf_max", "dl_min"],
             read_dictionary=["term"])
-        shutil.rmtree(ts_dir, ignore_errors=True)
-        os.makedirs(ts_dir, exist_ok=True)
         _write_term_stats_pdf(meta_tbl, ts_dir, granularity)
     else:
         posts_meta = spark.read.parquet(postings_dir).select(
@@ -1080,35 +1055,29 @@ def _build_index_fused(spark, df: DataFrame, index_path: str, builder,
     srg = verify_single_row_group(postings_dir)
     phases["stats_verify"] = round(time.time() - t_p, 3)
 
-    meta = {
-        "format_version": 4,
+    secs = round(time.time() - t_start, 3)
+    commit.publish(index_path, {
         "tokenizer": tokenizer_name,
         "docs_per_block": docs_per_block,
         "truncate": truncate,
         "num_docs": num_docs,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
         "total_tokens": total_tokens,
         "bounds_granularity": granularity,
         "postings_single_row_group": bool(srg),
-        "build_secs": round(time.time() - t_start, 3),
-    }
-    with open(os.path.join(index_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
-
-    with open(metrics_path, "a") as fh:
-        fh.write(json.dumps({
-            "stage": "finalize", "num_docs": num_docs,
-            "total_tokens": total_tokens,
-            "secs": meta["build_secs"],
-            "phases": phases,
-            "docs_per_sec": round(num_docs / max(meta["build_secs"], 1e-9), 1),
-            "tokens_per_sec": round(
-                total_tokens / max(meta["build_secs"], 1e-9), 1),
-            "fused_build": True,
-            "postings_bytes": postings_bytes,
-            "doclens_bytes": _pq_bytes(doclens_dir),
-            "term_stats_bytes": _pq_bytes(ts_dir),
-        }) + "\n")
+        "build_secs": secs,
+    })
+    commit.append_line(metrics_path, {
+        "stage": "finalize", "num_docs": num_docs,
+        "total_tokens": total_tokens,
+        "secs": secs,
+        "phases": phases,
+        "docs_per_sec": round(num_docs / max(secs, 1e-9), 1),
+        "tokens_per_sec": round(total_tokens / max(secs, 1e-9), 1),
+        "fused_build": True,
+        "postings_bytes": postings_bytes,
+        "doclens_bytes": _pq_bytes(doclens_dir),
+        "term_stats_bytes": _pq_bytes(ts_dir),
+    })
     return SearchIndex(spark, index_path, tokenizer=tokenizer_fn)
 
 
@@ -1141,6 +1110,7 @@ def build_index(
     (reference S3, indexing.py:298-342) — no tokenizer runs at build
     time; ``tokenizer`` still names the query-side tokenizer.
     """
+    commit.store(index_path)  # an unwritable store fails before any job
     tokenizer_fn = tokenizers.resolve(tokenizer)
     try:
         tokenizer_name = tokenizers.name_of(tokenizer)
@@ -1250,17 +1220,7 @@ def build_index(
                            else None)
             n_blocks = (int(max_doc // docs_per_block) + 1
                         if max_doc is not None else 1)
-            os.makedirs(index_path, exist_ok=True)
-            # meta.json is the commit marker: drop it BEFORE touching
-            # any table dir, so a rebuild killed mid-write leaves an
-            # unreadable index instead of stale meta over partial
-            # tables (same invariant as the fused path)
-            try:
-                os.remove(os.path.join(index_path, "meta.json"))
-            except OSError:
-                pass
-            for sub in ("postings", "doclens", "term_stats"):
-                shutil.rmtree(os.path.join(index_path, sub), ignore_errors=True)
+            commit.begin(index_path)
             tp = term_partitions or max(
                 1, min(4, spark.sparkContext.defaultParallelism))
             if pool is not None:

@@ -11,12 +11,11 @@ streaming ingestion builds on.
 """
 from __future__ import annotations
 
-import json
-import os
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import SparkSession, functions as F
 
+from . import commit, fsutil
 from .index import SearchIndex
 
 
@@ -43,7 +42,8 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
     Deleted docs disappear; updated docs keep their ids with the new
     content; df / tf / block-max metadata and corpus stats (num_docs,
     avg_doc_len) are recomputed exactly. The epoch resets (no
-    tombstones/updates in the output).
+    tombstones/updates in the output). ``out_path`` is swept before the
+    first write (``commit.begin``) and committed by its ``meta.json``.
 
     ``as_of=E`` exports a historical snapshot instead of the live state
     (Iceberg-style snapshot export): the rewrite sees only tombstones
@@ -65,7 +65,9 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
     from . import kernels as K
     from .index import DoclensReader, scan_doclens_ranges
 
+    _check_out(out_path, [index_path])
     idx = SearchIndex(spark, index_path, as_of=as_of)
+    commit.begin(out_path)
     tomb = idx._tombstones()
     tomb_bc = spark.sparkContext.broadcast(tomb)
 
@@ -118,7 +120,7 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
             "doc_ids": [ids.astype("<i8").tobytes()],
             "doc_lens": [lens.astype("<f4").tobytes()]})
 
-    dl_path = os.path.join(out_path, "doclens")
+    dl_path = fsutil.join(out_path, "doclens")
     idx.doclens.groupBy("block_id").applyInPandas(
         compact_doclens, "block_id long, doc_ids binary, doc_lens binary") \
         .repartitionByRange(n_parts, "block_id") \
@@ -172,7 +174,7 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
 
     new_posts = idx.postings.groupBy("term", "block_id").applyInPandas(
         rewrite, out_schema)
-    srg = write_postings_table(new_posts, os.path.join(out_path, "postings"),
+    srg = write_postings_table(new_posts, fsutil.join(out_path, "postings"),
                                n_parts)
 
     # --- 3. corpus stats + granularity: one distributed pass over the
@@ -197,22 +199,24 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
 
     n_blocks = (max_block + 1) if max_block >= 0 else 1
     granularity = bounds_granularity(n_blocks)
-    write_term_stats(spark.read.parquet(os.path.join(out_path, "postings")),
-                     os.path.join(out_path, "term_stats"),
+    write_term_stats(spark.read.parquet(fsutil.join(out_path, "postings")),
+                     fsutil.join(out_path, "term_stats"),
                      max(1, n_parts // 4), granularity)
-    meta = dict(idx.meta)
-    meta.update({
-        "format_version": 4,
+    commit.publish(out_path, {
+        **idx.meta,
         "num_docs": num_docs,
         "total_tokens": total_tokens,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
         "bounds_granularity": granularity,
         "postings_single_row_group": bool(srg),
         "compacted_from": index_path,
     })
-    with open(os.path.join(out_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
     return SearchIndex(spark, out_path)
+
+
+def _check_out(out_path: str, inputs: Sequence[str]) -> None:
+    """``commit.begin`` sweeps ``out_path``, so it must not be an input."""
+    if out_path.rstrip("/") in {p.rstrip("/") for p in inputs}:
+        raise ValueError(f"output {out_path!r} is also an input index")
 
 
 def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
@@ -231,14 +235,14 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
     the query kernel applies — in one distributed pass, with doc
     lengths side-input-read from the merged doclens.
     """
+    _check_out(out_path, index_paths)
     metas = []
     for p in index_paths:
-        with open(os.path.join(p, "meta.json")) as fh:
-            metas.append(json.load(fh))
+        idx = SearchIndex(spark, p)
+        metas.append(idx.meta)
         # merge unions BASE tables only; silently dropping an input's
-        # pending deletes/updates would resurrect dead docs — fail fast
-        if (os.path.isdir(os.path.join(p, "tombstones"))
-                or os.path.isdir(os.path.join(p, "updates"))):
+        # committed deletes/updates would resurrect dead docs — fail fast
+        if idx.history():
             raise ValueError(
                 f"index {p} has pending tombstones/update segments; "
                 f"compact_index it before merging")
@@ -250,18 +254,18 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
     from .indexing import (PARQUET_ROW_GROUP_BYTES, bounds_granularity,
                            write_postings_table, write_term_stats)
 
-    os.makedirs(out_path, exist_ok=True)
+    commit.begin(out_path)
     n_parts = max(4, spark.sparkContext.defaultParallelism)
 
     def union_of(table: str):
         df = None
         for p in index_paths:
-            part = spark.read.parquet(os.path.join(p, table))
+            part = spark.read.parquet(fsutil.join(p, table))
             df = part if df is None else df.unionByName(part)
         return df
 
     srg = write_postings_table(union_of("postings"),
-                               os.path.join(out_path, "postings"), n_parts)
+                               fsutil.join(out_path, "postings"), n_parts)
     # doc ranges need not be block-aligned: a boundary block may appear in
     # two segments — coalesce its doclens rows (and verify the doc ids are
     # actually disjoint). (Posting rows for a shared (term, block) are
@@ -297,12 +301,12 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
         .sortWithinPartitions("block_id") \
         .write.mode("overwrite") \
         .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
-        .parquet(os.path.join(out_path, "doclens"))
+        .parquet(fsutil.join(out_path, "doclens"))
     # recompute the per-term sketches from the merged postings metadata
     # (input sketches can't just union: granularities and group bounds
     # differ per input; one pass over the small per-(term, block)
     # columns rebuilds them exactly)
-    merged_posts = spark.read.parquet(os.path.join(out_path, "postings"))
+    merged_posts = spark.read.parquet(fsutil.join(out_path, "postings"))
     max_block = merged_posts.agg(F.max("block_id")).collect()[0][0]
     granularity = bounds_granularity(int(max_block or 0) + 1)
     if allow_overlap:
@@ -314,7 +318,7 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
         from . import kernels as K
         from .index import DoclensReader, scan_doclens_ranges
         reader = DoclensReader(
-            scan_doclens_ranges([(0, os.path.join(out_path, "doclens"))]))
+            scan_doclens_ranges([(0, fsutil.join(out_path, "doclens"))]))
 
         def recount(key, pdf: pd.DataFrame) -> pd.DataFrame:
             term, block_id = key[0], int(key[1])
@@ -343,7 +347,7 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
             .groupBy("term", "block_id").applyInPandas(
                 recount, "term string, block_id long, df long, "
                          "tf_total long, tf_max long, dl_min long")
-        write_term_stats(exact, os.path.join(out_path, "term_stats"),
+        write_term_stats(exact, fsutil.join(out_path, "term_stats"),
                          max(1, n_parts // 4), granularity)
 
         # corpus stats: one distributed pass over the packed doclens
@@ -358,26 +362,22 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
                     tot += float(ln.sum())
             yield pd.DataFrame({"n": [n], "tot": [tot]})
 
-        parts = spark.read.parquet(os.path.join(out_path, "doclens")) \
+        parts = spark.read.parquet(fsutil.join(out_path, "doclens")) \
             .select("doc_lens").mapInPandas(
                 _dl_stats, "n long, tot double").collect()
         num_docs = int(sum(r["n"] for r in parts))
         total_tokens = float(sum(r["tot"] for r in parts))
     else:
-        write_term_stats(merged_posts, os.path.join(out_path, "term_stats"),
+        write_term_stats(merged_posts, fsutil.join(out_path, "term_stats"),
                          max(1, n_parts // 4), granularity)
         num_docs = sum(m["num_docs"] for m in metas)
         total_tokens = sum(m["total_tokens"] for m in metas)
-    meta = dict(metas[0])
-    meta.update({
-        "format_version": 4,
+    commit.publish(out_path, {
+        **metas[0],
         "num_docs": num_docs,
         "total_tokens": total_tokens,
-        "avg_doc_len": (total_tokens / num_docs) if num_docs else 0.0,
         "bounds_granularity": granularity,
         "postings_single_row_group": bool(srg),
         "merged_from": list(index_paths),
     })
-    with open(os.path.join(out_path, "meta.json"), "w") as fh:
-        json.dump(meta, fh, indent=2)
     return SearchIndex(spark, out_path)

@@ -14,11 +14,11 @@ blocks and merging is pure table union.
 """
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import fsutil
 from .indexing import build_index
 from .merge import merge_indexes
 
@@ -41,14 +41,13 @@ def index_stream(
     continuously.
     """
     spark = stream_df.sparkSession
-    seg_root = os.path.join(index_root, "segments")
-    os.makedirs(seg_root, exist_ok=True)
-    checkpoint_dir = checkpoint_dir or os.path.join(index_root, "_checkpoint")
+    seg_root = fsutil.join(index_root, "segments")
+    checkpoint_dir = checkpoint_dir or fsutil.join(index_root, "_checkpoint")
 
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.rdd.isEmpty():
             return
-        seg_path = os.path.join(seg_root, f"seg_{batch_id:06d}")
+        seg_path = fsutil.join(seg_root, f"seg_{batch_id:06d}")
         build_index(batch_df.sparkSession, batch_df, seg_path,
                     text_col=text_col, doc_id_col=doc_id_col,
                     tokenizer=tokenizer, docs_per_block=docs_per_block)
@@ -63,10 +62,10 @@ def index_stream(
 def compact_segments(spark: SparkSession, index_root: str):
     """Merge all segments into ``index_root/current`` and return the
     merged SearchIndex."""
-    seg_root = os.path.join(index_root, "segments")
+    seg_root = fsutil.join(index_root, "segments")
     segs = sorted(
-        os.path.join(seg_root, d) for d in os.listdir(seg_root)
-        if os.path.exists(os.path.join(seg_root, d, "meta.json")))
+        fsutil.join(seg_root, d) for d in fsutil.listdir(seg_root)
+        if fsutil.exists(fsutil.join(seg_root, d, "meta.json")))
     if not segs:
         raise ValueError(f"no complete segments under {seg_root}")
-    return merge_indexes(spark, segs, os.path.join(index_root, "current"))
+    return merge_indexes(spark, segs, fsutil.join(index_root, "current"))

@@ -11,11 +11,12 @@
 """
 import json
 import os
+import re
 
 import pyarrow.parquet as pq
 import pytest
 
-from searcharray_spark import build_index, indexing, partitioning
+from searcharray_spark import build_index, commit, indexing, partitioning
 
 DOCS = [(i, f"w{i % 7} common w{i % 13} tail{i % 97} " + "the " * (i % 5))
         for i in range(3000)]
@@ -28,23 +29,27 @@ class Boom(Exception):
 
 def _crash_at_marker(monkeypatch, group):
     """Make the marker write of ``group`` raise, as a kill would."""
-    real_dump = json.dump
+    real_write = commit.write_json
 
-    def dump(obj, fh, **kw):
+    def write_json(path, obj):
         if isinstance(obj, dict) and obj.get("group") == group:
             raise Boom(f"killed before group {group} committed")
-        return real_dump(obj, fh, **kw)
+        return real_write(path, obj)
 
-    monkeypatch.setattr(indexing.json, "dump", dump)
-    return lambda: monkeypatch.setattr(indexing.json, "dump", real_dump)
+    monkeypatch.setattr(commit, "write_json", write_json)
+    return lambda: monkeypatch.setattr(commit, "write_json", real_write)
 
 
 def _tables(path):
+    """{table: [(file name, pyarrow table)]}; the job uuid Spark puts in
+    the names of files it writes is dropped from the name."""
     out = {}
     for sub in ("postings", "doclens", "term_stats"):
         d = os.path.join(path, sub)
         names = sorted(n for n in os.listdir(d) if n.endswith(".parquet"))
-        out[sub] = [(n, pq.read_table(os.path.join(d, n))) for n in names]
+        out[sub] = [(re.sub(r"-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}",
+                            "", n), pq.read_table(os.path.join(d, n)))
+                    for n in names]
     return out
 
 

@@ -5,7 +5,6 @@
 - plan checks: the query-term filter must be pushed down to the parquet
   scan of the postings table.
 """
-import json
 import os
 
 import numpy as np
@@ -29,28 +28,24 @@ def test_resume_equals_clean_build(spark, tmp_path):
     class Boom(Exception):
         pass
 
-    orig_open = open
-    calls = {"n": 0}
+    # run with checkpoint_groups=4, making the commit helper's marker
+    # write raise on group 2 (a kill before that group commits)
+    from searcharray_spark import commit
 
-    # build groups manually: run build_index but raise after 2 group markers
-    # simplest: run with checkpoint_groups=4 but patch marker writing to
-    # raise on group 2
-    import searcharray_spark.indexing as I
+    real_write = commit.write_json
 
-    real_json_dump = json.dump
-
-    def exploding_dump(obj, fh, **kw):
+    def exploding_write(path, obj):
         if isinstance(obj, dict) and obj.get("group") == 2:
             raise Boom("simulated crash mid-build")
-        return real_json_dump(obj, fh, **kw)
+        return real_write(path, obj)
 
-    I.json.dump = exploding_dump
+    commit.write_json = exploding_write
     try:
         with pytest.raises(Boom):
             build_index(spark, df, broken_path, doc_id_col="doc_id",
                         docs_per_block=128, checkpoint_groups=4)
     finally:
-        I.json.dump = real_json_dump
+        commit.write_json = real_write
 
     # groups 0,1 committed; 2,3 missing (a .tmp from the crash may remain)
     markers = [m for m in os.listdir(os.path.join(broken_path, "_groups"))

@@ -85,8 +85,66 @@ def test_unsupported_scheme_fails_fast(spark):
         SearchIndex(spark, "bogus-scheme://bucket/index")
 
 
-def test_local_path_helper():
-    assert fsutil.local_path("/a/b") == "/a/b"
-    assert fsutil.local_path("file:///a/b") == "/a/b"
-    with pytest.raises(NotImplementedError):
-        fsutil.local_path("s3://bucket/x")
+
+def test_file_uri_writes_match_posix(spark, tmp_path, monkeypatch):
+    """build_index, update_docs and compact_index on a file:// URI write
+    the same files as on the POSIX path, append metrics.jsonl through
+    the resolved filesystem, and create nothing in the working dir."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from test_build_groups import _assert_same_files
+
+    from searcharray_spark import indexing
+    from searcharray_spark.merge import compact_index
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    corpus = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(DOCS)], "doc_id long, text string")
+    upd = spark.createDataFrame([(1, "zot zot"), (40, "foo zot")],
+                                "doc_id long, text string")
+
+    def meta(path):
+        with open(os.path.join(path, "meta.json")) as fh:
+            m = json.load(fh)
+        m.pop("build_secs", None)
+        m.pop("compacted_from", None)
+        return m
+
+    def stages(path):
+        with open(os.path.join(path, "metrics.jsonl")) as fh:
+            return [json.loads(ln)["stage"] for ln in fh]
+
+    def write(root):
+        """root is a POSIX path or a file:// URI over tmp_path."""
+        for name, small in (("local", 16384), ("fused", 0)):
+            monkeypatch.setattr(indexing, "SMALL_BUILD_MAX_DOCS", small)
+            path = f"{root}/{name}"
+            idx = build_index(spark, corpus, path, doc_id_col="doc_id",
+                              docs_per_block=16, term_partitions=3)
+            monkeypatch.setattr(indexing, "SMALL_BUILD_MAX_DOCS", 16384)
+            idx.update_docs(upd)
+            compact_index(spark, path, f"{root}/{name}_compact")
+
+    posix, uri = tmp_path / "posix", tmp_path / "uri"
+    write(str(posix))
+    write("file://" + str(uri))
+    for sub in ("local", "fused", "local_compact", "fused_compact",
+                "local/updates/seg=1", "fused/updates/seg=1"):
+        a, b = str(posix / sub), str(uri / sub)
+        _assert_same_files(a, b)
+        assert meta(a) == meta(b), sub
+        if not sub.endswith("compact"):
+            assert stages(a) == stages(b) and stages(a)[-1] == "finalize"
+    for name in ("local", "fused"):
+        a, b = posix / name, uri / name
+        tomb = [pq.read_table(str(p / "tombstones")).sort_by("doc_id")
+                for p in (a, b)]
+        assert tomb[0].equals(tomb[1])
+        assert os.listdir(a / "stats_log") == os.listdir(b / "stats_log")
+        assert (SearchIndex(spark, "file://" + str(b)).history()
+                == SearchIndex(spark, str(a)).history())
+    assert os.listdir(cwd) == []

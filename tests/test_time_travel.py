@@ -138,15 +138,3 @@ def test_compact_asof_exports_snapshot(mutated, tmp_path):
     assert out.num_docs == snap.num_docs
     assert out.history() == []  # epoch reset: exported snapshot is clean
 
-
-def test_asof_stats_fallback_without_log(mutated):
-    """Legacy index (mutations predating stats_log): snapshot stats come
-    from the exact recount fallback instead of the log."""
-    import shutil
-
-    spark, path, idx = mutated
-    shutil.rmtree(f"{path}/stats_log")
-    snap = SearchIndex(spark, path, as_of=1)
-    assert snap.num_docs == len(BASE) - 2
-    lens = [r["doc_len"] for r in snap.doclengths().collect()]
-    assert snap.total_tokens == float(sum(lens))

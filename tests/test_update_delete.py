@@ -4,8 +4,8 @@ Semantics mirror the reference's __setitem__ / delete behavior
 (/root/reference/searcharray/postings.py:360-425, test_update_rows.py):
 updated docs keep their ids and immediately reflect the new content;
 deleted docs stop matching. Corpus stats (num_docs, avg_doc_len) and
-per-term df are patched EXACTLY after each op (stats_patch.json + lazy
-df corrections), so live scores equal a compacted index's.
+per-term df are patched EXACTLY after each op (the epoch's stats_log
+record + lazy df corrections), so live scores equal a compacted index's.
 """
 import numpy as np
 import pytest
@@ -98,7 +98,7 @@ def test_compact_matches_fresh_build(idx, spark, tmp_path):
 
 def test_incremental_stats_exact_after_update(idx, spark, tmp_path):
     """df / avgdl / num_docs are patched EXACTLY after delete/update
-    (lazy per-term df corrections + stats_patch.json), so BM25 scores on
+    (lazy per-term df corrections + stats_log records), so BM25 scores on
     the live index equal a compacted index's — no idf staleness window
     (ROADMAP #3 closed)."""
     idx.delete_docs([1])
@@ -119,7 +119,7 @@ def test_incremental_stats_exact_after_update(idx, spark, tmp_path):
         cmp_ = {r["doc_id"]: r["score"]
                 for r in compacted.score(tok).collect()}
         assert live == cmp_, tok
-    # a REOPENED handle sees the patched stats (stats_patch.json)
+    # a REOPENED handle sees the patched stats (meta + stats_log)
     from searcharray_spark.index import SearchIndex
     re_idx = SearchIndex(spark, idx.path)
     assert re_idx.num_docs == idx.num_docs
