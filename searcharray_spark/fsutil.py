@@ -65,21 +65,25 @@ def listdir(path: str) -> List[str]:
     return [posixpath.basename(i.path) for i in f.get_file_info(sel)]
 
 
-def list_parquet_files(root: str) -> List[Tuple[str, int]]:
-    """[(full path-or-URI, size)] of every .parquet under root,
-    recursive, sorted by path (empty if root missing)."""
+def parquet_file_infos(root: str) -> list:
+    """[(full path-or-URI, pyarrow FileInfo)] of every .parquet under
+    root, recursive, sorted by path (empty if root missing)."""
     from pyarrow import fs as pafs
     f, p = resolve(root)
     if f.get_file_info(p).type != pafs.FileType.Directory:
         return []
     sel = pafs.FileSelector(p, recursive=True, allow_not_found=True)
     prefix = root[: len(root) - len(p)]  # scheme prefix ('' for local)
-    out = []
-    for info in f.get_file_info(sel):
-        if info.is_file and info.path.endswith(".parquet"):
-            out.append((prefix + info.path, int(info.size)))
-    out.sort()
-    return out
+    return sorted(((prefix + info.path, info)
+                   for info in f.get_file_info(sel)
+                   if info.is_file and info.path.endswith(".parquet")),
+                  key=lambda e: e[0])
+
+
+def list_parquet_files(root: str) -> List[Tuple[str, int]]:
+    """[(full path-or-URI, size)] of every .parquet under root,
+    recursive, sorted by path (empty if root missing)."""
+    return [(p, int(info.size)) for p, info in parquet_file_infos(root)]
 
 
 def read_parquet(path: str, columns=None, filters=None, **kw):

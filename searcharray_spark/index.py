@@ -330,15 +330,20 @@ def _token_blocks(sketches, cap: int) -> Optional[np.ndarray]:
 
 # --- side-input doclens (co-partitioned with postings by block range) ----
 
-_DL_FILE_CACHE: "dict[str, dict]" = {}
+# Process-wide side-table file caches, keyed by (path, stamp): stamp is
+# the file's (size, mtime) from the driver's listing (scan_doclens_ranges).
+# Builds reuse file names (part-00000.parquet), so a file rewritten at the
+# same path must be a new key, not the old file's decoded content.
+_DL_FILE_CACHE: "dict[tuple, dict]" = {}
 _DL_FILE_CACHE_MAX = 64
 
 
-def _load_doclens_file(path: str) -> dict:
+def _load_doclens_file(path: str, stamp: tuple) -> dict:
     """Read one doclens parquet file -> {block_id: (ids_bytes, lens_bytes)}.
     Process-wide cache: python workers are reused across tasks/queries, so
     each executor decodes a doclens file once, not per task."""
-    hit = _DL_FILE_CACHE.get(path)
+    key = (path, stamp)
+    hit = _DL_FILE_CACHE.get(key)
     if hit is not None:
         return hit
     tbl = fsutil.read_parquet(path,
@@ -350,7 +355,7 @@ def _load_doclens_file(path: str) -> dict:
         out[int(b)] = (i, ln)
     if len(_DL_FILE_CACHE) >= _DL_FILE_CACHE_MAX:
         _DL_FILE_CACHE.pop(next(iter(_DL_FILE_CACHE)))
-    _DL_FILE_CACHE[path] = out
+    _DL_FILE_CACHE[key] = out
     return out
 
 
@@ -358,11 +363,12 @@ _TOMB_FILE_CACHE: dict = {}
 _TOMB_FILE_CACHE_MAX = 64
 
 
-def _load_tomb_file(path: str) -> dict:
+def _load_tomb_file(path: str, stamp: tuple) -> dict:
     """Read one packed-tombstone parquet file ->
     {block_id: (local doc_ids int64, segs int64)}; process-wide cache
     (same executor-reuse rationale as _load_doclens_file)."""
-    hit = _TOMB_FILE_CACHE.get(path)
+    key = (path, stamp)
+    hit = _TOMB_FILE_CACHE.get(key)
     if hit is not None:
         return hit
     tbl = fsutil.read_parquet(path, columns=["block_id", "doc_ids", "segs"])
@@ -374,7 +380,7 @@ def _load_tomb_file(path: str) -> dict:
                        np.frombuffer(s, dtype="<i8"))
     if len(_TOMB_FILE_CACHE) >= _TOMB_FILE_CACHE_MAX:
         _TOMB_FILE_CACHE.pop(next(iter(_TOMB_FILE_CACHE)))
-    _TOMB_FILE_CACHE[path] = out
+    _TOMB_FILE_CACHE[key] = out
     return out
 
 
@@ -388,15 +394,15 @@ class TombstoneReader:
     contract as the dict."""
 
     def __init__(self, ranges):
-        self.ranges = ranges  # [(path, lo_block, hi_block)]
+        self.ranges = ranges  # [(path, lo_block, hi_block, stamp)]
 
     def __bool__(self) -> bool:
         return bool(self.ranges)
 
     def get(self, block_id: int):
-        for path, lo, hi in self.ranges:
+        for path, lo, hi, stamp in self.ranges:
             if lo <= block_id <= hi:
-                row = _load_tomb_file(path).get(int(block_id))
+                row = _load_tomb_file(path, stamp).get(int(block_id))
                 if row is not None:
                     return row
         return None
@@ -410,13 +416,14 @@ def _parquet_row_count(root: str) -> int:
 
 
 def scan_doclens_ranges(sources) -> list:
-    """[(seg, file, min_block, max_block)] for every parquet file under
-    each (seg, root) source, from parquet footer stats — driver-side,
-    O(files) footer reads, no data read. The block->file map DoclensReader
-    side-input lookups use (query path and compaction both)."""
+    """[(seg, file, min_block, max_block, stamp)] for every parquet file
+    under each (seg, root) source, from parquet footer stats —
+    driver-side, O(files) footer reads, no data read. The block->file
+    map DoclensReader side-input lookups use (query path and compaction
+    both); stamp is the listing's (size, mtime), the file caches' key."""
     out = []
     for seg, root in sources:
-        for p, _sz in fsutil.list_parquet_files(root):
+        for p, info in fsutil.parquet_file_infos(root):
                 md = fsutil.parquet_file(p).metadata
                 lo = hi = None
                 for rg in range(md.num_row_groups):
@@ -435,7 +442,7 @@ def scan_doclens_ranges(sources) -> list:
                     if not ids:
                         continue
                     lo, hi = int(min(ids)), int(max(ids))
-                out.append((seg, p, lo, hi))
+                out.append((seg, p, lo, hi, (info.size, info.mtime_ns)))
     return out
 
 
@@ -451,14 +458,14 @@ class DoclensReader:
     """
 
     def __init__(self, ranges):
-        # [(seg, path, lo_block, hi_block)], base seg first
+        # [(seg, path, lo_block, hi_block, stamp)], base seg first
         self.ranges = ranges
 
     def get(self, block_id: int):
         rows = []
-        for seg, path, lo, hi in self.ranges:
+        for seg, path, lo, hi, stamp in self.ranges:
             if lo <= block_id <= hi:
-                row = _load_doclens_file(path).get(block_id)
+                row = _load_doclens_file(path, stamp).get(block_id)
                 if row is not None:
                     rows.append((seg, row[0], row[1]))
         if not rows:
@@ -510,6 +517,12 @@ class SearchIndex:
         path = self.path = path.rstrip("/") or "/"
         fsutil.resolve(path)
         self.meta = fsutil.read_json(fsutil.join(path, "meta.json"))
+        found = self.meta.get("format_version")
+        if found != commit.FORMAT_VERSION:
+            raise ValueError(
+                f"index at {path!r} has format_version {found}; this "
+                f"engine reads format_version {commit.FORMAT_VERSION}. "
+                "Rebuild it with build_index")
         self.docs_per_block = int(self.meta["docs_per_block"])
         # as-built doc-id space: dense (test-parity) outputs keep this
         # shape even after deletes shrink the LIVE num_docs below it
@@ -530,7 +543,6 @@ class SearchIndex:
         self._sketch_cache: dict = {}
         self._bounds_cache: dict = {}
         self._dl_ranges: list | None = None
-        self._has_sketches: bool | None = None
         # cache() results; the plain reader frames are memoized apart so
         # an uncached table is schema-inferred (one Spark job) once per
         # handle, not once per query
@@ -550,7 +562,7 @@ class SearchIndex:
     # force-cached postings are 2.5x FASTER on hot single-term scans
     # (term_hot 5.7 -> 2.3 s) and within noise everywhere else. Doclens
     # / term stats always cache (small, metadata-sized).
-    POSTINGS_CACHE_MAX_BYTES = 1 << 31  # fallback when capacity unknown
+    POSTINGS_CACHE_MAX_BYTES = 2048 << 20  # fallback when capacity unknown
     CACHE_EXPANSION = 3  # deserialized columnar vs zstd parquet (~2x + margin)
     CACHE_STORAGE_FRACTION = 0.5  # leave half the unified region to execution
 
@@ -741,8 +753,8 @@ class SearchIndex:
         want = {"rows": n_rows, "epoch": max(self._epochs(), default=0)}
         if not fsutil.exists(marker) or fsutil.read_json(marker) != want:
             self._pack_tombstones(packed, want)
-        ranges = [(p, lo, hi)
-                  for _, p, lo, hi in scan_doclens_ranges([(0, packed)])]
+        ranges = [(p, lo, hi, stamp) for _, p, lo, hi, stamp
+                  in scan_doclens_ranges([(0, packed)])]
         return TombstoneReader(ranges)
 
     def _pack_tombstones(self, packed: str, marker: dict) -> None:
@@ -775,7 +787,6 @@ class SearchIndex:
             .sortWithinPartitions("block_id") \
             .write.mode("overwrite").parquet(packed)
         commit.write_json(fsutil.join(packed, "_rows.json"), marker)
-        _TOMB_FILE_CACHE.clear()  # old side-table files are gone
 
     def delete_docs(self, doc_ids) -> None:
         """Tombstone docs: they stop matching every query immediately.
@@ -919,11 +930,7 @@ class SearchIndex:
         plus each committed epoch's exact delta, in epoch order."""
         self.num_docs = int(self.meta["num_docs"])
         self.avg_doc_len = float(self.meta["avg_doc_len"])
-        # legacy meta without total_tokens: derive it so the deltas
-        # stay consistent instead of driving totals negative
-        tt = self.meta.get("total_tokens")
-        self.total_tokens = (float(tt) if tt is not None
-                             else self.avg_doc_len * self.num_docs)
+        self.total_tokens = float(self.meta["total_tokens"])
         for r in self._log:
             self.num_docs += int(r["delta_docs"])
             self.total_tokens += float(r["delta_tokens"])
@@ -949,9 +956,9 @@ class SearchIndex:
             m = blocks == b
             tgt = local[m]
             rows = []
-            for seg, path, lo, hi in ranges:
+            for seg, path, lo, hi, stamp in ranges:
                 if lo <= b <= hi:
-                    row = _load_doclens_file(path).get(int(b))
+                    row = _load_doclens_file(path, stamp).get(int(b))
                     if row is not None:
                         rows.append((seg, row[0], row[1]))
             if not rows:
@@ -1042,7 +1049,6 @@ class SearchIndex:
         self._sketch_cache = {}
         self._bounds_cache = {}
         self._dl_ranges = None
-        self._has_sketches = None
         self._aligned = None
 
     def _seg_meta(self, seg: int) -> dict:
@@ -1065,32 +1071,15 @@ class SearchIndex:
         plans repartition the pruned rows by block_id first
         (``_needs_block_exchange``).
 
-        Builds pin parquet.block.size at write, verify footers, and
-        record ``postings_single_row_group`` in meta.json; older indexes
-        without the flag are verified here once (footer walk, cached).
+        Every writer pins parquet.block.size, verifies the footers and
+        records the result as ``postings_single_row_group`` in meta.json;
+        this reads the base's and each update segment's flag.
         """
-        if getattr(self, "_aligned", None) is not None:
-            return self._aligned
-        if int(self.meta.get("format_version", 0)) < 3:
-            # older term-range layouts split a block's terms across
-            # files — per-partition phrase kernels would be wrong
-            self._aligned = False
-            return False
-        from .indexing import verify_single_row_group
-        sources = [(self.meta, fsutil.join(self.path, "postings"))]
-        sources += [(self._seg_meta(s),
-                     fsutil.join(self.path, "updates", f"seg={s}", "postings"))
-                    for s in self._update_segs()]
-        aligned = True
-        for meta, root in sources:
-            flag = meta.get("postings_single_row_group")
-            if flag is False:
-                aligned = False
-                break
-            if flag is None and not verify_single_row_group(root):
-                aligned = False
-                break
-        self._aligned = aligned
+        if getattr(self, "_aligned", None) is None:
+            metas = [self.meta] + [self._seg_meta(s)
+                                   for s in self._update_segs()]
+            self._aligned = all(m["postings_single_row_group"]
+                                for m in metas)
         return self._aligned
 
     # --- tables -----------------------------------------------------------
@@ -1188,16 +1177,6 @@ class SearchIndex:
             self._readers["term_stats"] = df
         return df
 
-    def _sketches_available(self) -> bool:
-        """term_stats carries the block sketch columns (format >= 4),
-        read from one footer."""
-        if self._has_sketches is None:
-            files = fsutil.list_parquet_files(
-                fsutil.join(self.path, "term_stats"))
-            self._has_sketches = bool(files) and "grp_ids" in \
-                fsutil.parquet_file(files[0][0]).schema_arrow.names
-        return self._has_sketches
-
     def _term_sketches(self, terms: Sequence[str]) -> dict:
         """Per-term block sketches (presence intervals + block-max bound
         arrays), read once per never-seen term and memoized: the
@@ -1215,7 +1194,7 @@ class SearchIndex:
                 for s in self._update_segs()]
             by_term: dict = {}
             for meta, root in sources:
-                g = int(meta.get("bounds_granularity", 1))
+                g = int(meta["bounds_granularity"])
                 for r in _read_term_rows(
                         root, missing, ["term", "df", "grp_ids",
                                         "grp_tf_max", "grp_dl_min"]):
@@ -1247,7 +1226,7 @@ class SearchIndex:
         return {t: self._sketch_cache[t] for t in terms}
 
     def _doclens_file_ranges(self) -> list:
-        """[(seg, file, min_block, max_block)] from parquet footer stats,
+        """[(seg, file, min_block, max_block, stamp)] from footer stats,
         resolved once per index instance (driver-side, O(files) footer
         reads) — the block->file map DoclensReader side-input reads use."""
         if self._dl_ranges is not None:
@@ -1270,14 +1249,7 @@ class SearchIndex:
         terms = list(dict.fromkeys(terms))
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
-            if self._sketches_available():
-                self._term_sketches(missing)
-            else:  # pre-v4 term_stats without sketch columns
-                found = {r["term"]: int(r["df"]) for r in _read_term_rows(
-                    fsutil.join(self.path, "term_stats"), missing,
-                    ["term", "df"])}
-                for t in missing:
-                    self._df_cache[t] = found.get(t, 0)
+            self._term_sketches(missing)
         return {t: self._df_cache[t] for t in terms}
 
     def doclengths(self) -> DataFrame:
@@ -1438,10 +1410,8 @@ class SearchIndex:
         term's covered blocks expand and membership-test against the
         other terms' presence intervals) — no postings scan, no
         O(terms x blocks) collect. Returns None when pruning can't help
-        (sketches unavailable, or a token's rarest term covers more
-        than PRUNE_EXPAND_CAP blocks)."""
-        if not self._sketches_available():
-            return None
+        (a token's rarest term covers more than PRUNE_EXPAND_CAP
+        blocks)."""
         all_terms = sorted({t for tok in tokens_b for t in tok})
         sketches = self._term_sketches(all_terms)
         needed: set = set()
@@ -1677,12 +1647,10 @@ class SearchIndex:
         summed-df idf the scorer uses (reference postings.py:652-680).
         Group-granular sketches only loosen bounds, never unsound.
 
-        Returns None when bounds are unavailable (no sketches) or when a
-        token's candidate block set exceeds WAND_EXPAND_CAP — callers
-        fall back to exhaustive scoring, which stays rank-identical.
+        Returns None when a token's candidate block set exceeds
+        WAND_EXPAND_CAP — callers fall back to exhaustive scoring, which
+        stays rank-identical.
         """
-        if not self._sketches_available():
-            return None
         if cache_key is not None and cache_key in self._bounds_cache:
             return self._bounds_cache[cache_key]
         all_terms = sorted({t for tok in tokens for t in tok})

@@ -413,7 +413,7 @@ def _assign_doc_ids_counted(df: DataFrame, order_col: str,
 # on-disk layout (single-row-group files, block-range partitioning,
 # term-sorted postings, sketches), but via pyarrow writes instead of
 # ~10 Spark jobs whose fixed scheduling overhead dominates at toy scale.
-# This is the update-segment / streaming-micro-batch / small-bench path;
+# This is the update-segment / small-bench path;
 # large builds are untouched.
 SMALL_BUILD_MAX_DOCS = 16384
 SMALL_BUILD_MAX_BYTES = 64 << 20
@@ -537,10 +537,10 @@ def _build_index_local(spark, pdf: pd.DataFrame, index_path: str, builder,
                        truncate: bool, t_start: float, tokenizer_fn):
     """Driver-local build for small corpora — bit-compatible layout.
 
-    Used for update segments, streaming micro-batches, and small
-    benchmarks; produces exactly the tables the distributed path writes
-    (postings/doclens block-range partitioned, one row group per file,
-    term-sorted postings, per-term sketches) without Spark jobs.
+    Used for update segments and small benchmarks; produces exactly the
+    tables the distributed path writes (postings/doclens block-range
+    partitioned, one row group per file, term-sorted postings, per-term
+    sketches) without Spark jobs.
     """
     import pyarrow as pa
 
@@ -1211,9 +1211,9 @@ def build_index(
         phases["probe"] = round(time.time() - t_p, 3)
         if is_small:
             # driver-local fast path: identical layout, zero Spark jobs
-            # past this toPandas — update segments, streaming
-            # micro-batches, and toy benches skip the fixed scheduling
-            # overhead of distributed build jobs
+            # past this toPandas — update segments and toy benches
+            # skip the fixed scheduling overhead of distributed build
+            # jobs
             pdf = df.select("doc_id", "text", "block_id").toPandas()
             if max_doc is None:
                 max_doc = (int(pdf["doc_id"].max()) if len(pdf)

@@ -6,8 +6,7 @@ batches with disjoint doc ranges, or merge overlapping ones. In the
 Spark engine, indexes over DISJOINT doc-id ranges merge as pure
 metadata/table unions — no posting bytes are rewritten (each posting
 row stays keyed by its (term, block); doc blocks don't collide when doc
-ranges don't). This is the segment-merge primitive incremental /
-streaming ingestion builds on.
+ranges don't). This is the segment-append primitive.
 """
 from __future__ import annotations
 

@@ -1,5 +1,6 @@
-"""Round-5 ADVICE fixes: broadcast-gate capacity, legacy total_tokens,
-pretokenized small-build byte cap, checked doclens lookup in merges."""
+"""Round-5 ADVICE fixes: broadcast-gate capacity, pretokenized
+small-build byte cap, checked doclens lookup in merges; readers refuse
+index formats other than the one every writer produces."""
 import json
 import os
 
@@ -9,7 +10,8 @@ import pytest
 from searcharray_spark import build_index
 from searcharray_spark import indexing
 from searcharray_spark.index import SearchIndex
-from searcharray_spark.merge import _lens_for_ids
+from searcharray_spark.merge import (_lens_for_ids, compact_index,
+                                     merge_indexes)
 
 DOCS = ["foo bar bar baz", "data2", "data3 bar", "bunny funny wunny"] * 10
 
@@ -35,21 +37,28 @@ def test_doclens_capacity_gates_on_as_built_not_live(spark, corpus, tmp_path):
     assert idx._doclens_capacity() == cap0 + 1  # seg adds its doc count
 
 
-def test_legacy_meta_without_total_tokens(spark, corpus, tmp_path):
+@pytest.mark.parametrize("version", [3, None])
+def test_other_format_version_refuses_to_open(spark, corpus, tmp_path,
+                                              version):
+    """Only format_version 4 (commit.FORMAT_VERSION) opens: an older or
+    unversioned meta.json raises ValueError naming the found version,
+    in SearchIndex and in the merge/compaction readers built on it."""
     path = str(tmp_path / "i")
     idx = build_index(spark, corpus, path, doc_id_col="doc_id",
                       docs_per_block=16)
-    want = idx.total_tokens
     meta = dict(idx.meta)
-    meta.pop("total_tokens")
+    if version is None:
+        meta.pop("format_version")
+    else:
+        meta["format_version"] = version
     with open(os.path.join(path, "meta.json"), "w") as fh:
         json.dump(meta, fh)
-    re = SearchIndex(spark, path)
-    assert re.total_tokens == pytest.approx(want)
-    # a delete on the legacy index must not drive stats negative
-    re.delete_docs([0])
-    assert re.total_tokens > 0
-    assert re.avg_doc_len > 0
+    with pytest.raises(ValueError, match=f"format_version {version}.*Rebuild"):
+        SearchIndex(spark, path)
+    with pytest.raises(ValueError, match="format_version"):
+        compact_index(spark, path, str(tmp_path / "c"))
+    with pytest.raises(ValueError, match="format_version"):
+        merge_indexes(spark, [path], str(tmp_path / "m"))
 
 
 def test_pretokenized_small_build_respects_byte_cap(spark, tmp_path,

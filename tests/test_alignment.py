@@ -122,15 +122,15 @@ def _rechunk_postings(path, rows_per_group=7):
 
 
 def _misaligned(spark, path):
-    """An index whose postings files hold many row groups and whose
-    meta.json has no alignment flag (a pre-v4 index), so the footer walk
-    must catch it."""
+    """An index whose postings files hold many row groups, recorded the
+    way a writer records a failed footer check
+    (``postings_single_row_group: false``)."""
     import json
     _build(spark, path)
     _rechunk_postings(path)
     with open(os.path.join(path, "meta.json")) as fh:
         meta = json.load(fh)
-    meta.pop("postings_single_row_group")
+    meta["postings_single_row_group"] = False
     with open(os.path.join(path, "meta.json"), "w") as fh:
         json.dump(meta, fh)
 
@@ -157,7 +157,7 @@ def test_misaligned_index_falls_back_and_stays_correct(spark, tmp_path,
     # the driver-local path reads whole files and is immune to row-group
     # misalignment; pin the distributed scan — IT is what's under test
     bad._local_ok = False
-    assert bad._files_aligned() is False  # footer walk catches it
+    assert bad._files_aligned() is False  # recorded flag
     assert _phrase_rows(bad, ["aaa", "zzz"]) == truth  # repartitioned
 
     # negative control: force the zero-shuffle path onto the misaligned

@@ -1,12 +1,10 @@
-"""Index merge + streaming-segment ingestion tests."""
-import os
-
+"""Index merge tests (disjoint and overlapping doc ranges, pending
+maintenance) and the index memory report."""
 import numpy as np
 import pytest
 
 from searcharray_spark import SearchIndex, build_index
 from searcharray_spark.merge import merge_indexes
-from searcharray_spark.streaming import compact_segments, index_stream
 
 DOCS = [(i, f"w{i % 7} common w{i % 13} tail{i % 29}") for i in range(600)]
 
@@ -38,33 +36,6 @@ def test_merge_rejects_overlap(spark, tmp_path):
     with pytest.raises(Exception, match="overlapping"):
         merge_indexes(spark, [str(tmp_path / "x"), str(tmp_path / "y")],
                       str(tmp_path / "z"))
-
-
-def test_streaming_segments_equal_batch_build(spark, tmp_path):
-    src = tmp_path / "stream_src"
-    os.makedirs(src)
-    df_all = spark.createDataFrame(DOCS, "doc_id long, text string")
-    # three source files -> three micro-batches (maxFilesPerTrigger=1)
-    for i, cond in enumerate(("doc_id < 200",
-                              "doc_id >= 200 and doc_id < 400",
-                              "doc_id >= 400")):
-        df_all.filter(cond).coalesce(1).write.mode("overwrite") \
-            .parquet(str(src / f"chunk{i}"))
-    stream = spark.readStream.schema("doc_id long, text string") \
-        .option("maxFilesPerTrigger", 1) \
-        .parquet(str(src / "chunk*"))
-    q = index_stream(stream, str(tmp_path / "sidx"), doc_id_col="doc_id",
-                     docs_per_block=64, available_now=True)
-    q.awaitTermination(300)
-    segs = os.listdir(str(tmp_path / "sidx" / "segments"))
-    assert len(segs) >= 2, segs
-
-    merged = compact_segments(spark, str(tmp_path / "sidx"))
-    clean = build_index(spark, df_all, str(tmp_path / "clean"),
-                        doc_id_col="doc_id", docs_per_block=64)
-    assert merged.num_docs == clean.num_docs
-    for tok in ("common", ["w1", "common"]):
-        assert np.array_equal(merged.score_dense(tok), clean.score_dense(tok))
 
 
 def test_memory_report(spark, tmp_path):

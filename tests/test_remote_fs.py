@@ -50,7 +50,7 @@ def test_file_uri_end_to_end(spark, idx_path, monkeypatch):
     # through _doclens_file_ranges / scan_doclens_ranges
     dist = SearchIndex(spark, "file://" + idx_path)
     dist._local_ok = False
-    assert dist._files_aligned() is True  # footer walk over the URI
+    assert dist._files_aligned() is True  # recorded flag, read over the URI
     assert _snap(dist) == want
 
 
@@ -75,7 +75,7 @@ def test_file_uri_tombstone_sidetable(spark, idx_path, monkeypatch):
     from searcharray_spark.index import TombstoneReader
     tomb = uri._tombstones()
     assert isinstance(tomb, TombstoneReader)
-    assert all(p.startswith("file://") for p, _, _ in tomb.ranges)
+    assert all(p.startswith("file://") for p, *_ in tomb.ranges)
     alive = {r["doc_id"] for r in uri.score("bar").collect()}
     assert alive & set(range(0, 40)) == set()
 

@@ -4,12 +4,8 @@ Doc freqs and block sketches are read with pyarrow from only the
 row groups whose footer term min/max can hold a queried term. Both
 writers (driver-local pyarrow and distributed Spark) keep term_stats
 files term-sorted in row groups of TERM_STATS_ROW_GROUP_ROWS terms, so
-a lookup decodes O(queried terms) row groups. An index whose term_stats
-lacks the sketch columns (format < 4) still answers doc freqs and
-top-k, unpruned.
+a lookup decodes O(queried terms) row groups.
 """
-import shutil
-
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 import pytest
@@ -70,39 +66,3 @@ def test_term_lookup_skips_row_groups(spark, tmp_path, monkeypatch, writer):
         # sorted files: at most one row group per file can hold the term
         assert max(kept) <= 1 and sum(kept) < n_groups, (term, kept)
     assert idx.docfreqs(TERMS) == _dfs()
-
-
-def _drop_sketch_columns(src: str, dst: str) -> None:
-    shutil.copytree(src, dst)
-    root = fsutil.join(dst, "term_stats")
-    for f, _ in fsutil.list_parquet_files(root):
-        t = pq.read_table(f)
-        pq.write_table(t.drop(["grp_ids", "grp_tf_max", "grp_dl_min"]), f)
-
-
-@pytest.mark.parametrize("route", ["local", "distributed"])
-def test_index_without_sketch_columns(spark, tmp_path, route):
-    path = str(tmp_path / "idx")
-    build_index(spark, _corpus(spark), path, doc_id_col="doc_id",
-                docs_per_block=16)
-    old = str(tmp_path / "old")
-    _drop_sketch_columns(path, old)
-    new_idx, old_idx = SearchIndex(spark, path), SearchIndex(spark, old)
-    if route == "distributed":
-        for i in (new_idx, old_idx):
-            i.LOCAL_QUERY_MAX_BYTES = i.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
-    assert new_idx._sketches_available()
-    assert not old_idx._sketches_available()
-    terms = TERMS + ["nope"]
-    assert old_idx.docfreqs(terms) == new_idx.docfreqs(terms) \
-        == {**_dfs(), "nope": 0}
-
-    def rows(df):
-        return [tuple(r) for r in df.collect()]
-
-    for tok in ("bar", ["foo", "baz"], ["alpha", "beta"]):
-        want = rows(new_idx.top_k(tok, k=7))
-        assert want and rows(old_idx.top_k(tok, k=7)) == want
-    or3 = ["foo", "qux", "theta"]
-    want = rows(new_idx.top_k_pruned(or3, k=7))
-    assert want and rows(old_idx.top_k_pruned(or3, k=7)) == want

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from searcharray_spark import textops
 from searcharray_spark.ann import cosine_neardup_pairs, cosine_topk, lsh_topk
-from searcharray_spark.multimodal import image_features, sample_frames
 
 
 @pytest.fixture(scope="module")
@@ -100,74 +99,6 @@ def test_cosine_neardup(spark, vectors):
              cosine_neardup_pairs(vectors, threshold=0.95, n_planes=0).collect()}
     assert (0, 4) in pairs
     assert (0, 2) not in pairs
-
-
-def test_multimodal_image_pipeline(spark):
-    """Real decode: PPM/BMP/PNG blobs produce true dimensions + features;
-    unsupported formats land in the error column (pipeline keeps going)."""
-    import numpy as np
-    from searcharray_spark import multimodal as M
-    rng = np.random.default_rng(9)
-    img = rng.integers(0, 256, (12, 20, 3), dtype=np.uint8)
-    ppm = M.encode_ppm(img)
-    rows = [(0, "image", ppm, "image/x-portable-pixmap"),
-            (1, "image", b"\xff\xd8notreallyjpeg", "image/jpeg")]
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary, mime string")
-    feats = {r["media_id"]: r for r in image_features(media).collect()}
-    assert feats[0]["width"] == 20 and feats[0]["height"] == 12
-    assert feats[0]["format"] == "ppm" and feats[0]["error"] is None
-    assert len(feats[0]["features"]) == 22
-    assert feats[1]["error"] is not None and feats[1]["features"] is None
-    # thumbnails: right shape, deterministic
-    thumb = {r["media_id"]: r for r in
-             M.resize_images(media, 8, 8).collect()}
-    assert len(thumb[0]["pixels"]) == 8 * 8 * 3
-    assert thumb[1]["error"] is not None
-
-
-def test_multimodal_frame_sampling(spark):
-    import numpy as np
-    from searcharray_spark import multimodal as M
-    rng = np.random.default_rng(11)
-    frames = [rng.integers(0, 256, (6, 6, 3), dtype=np.uint8) for _ in range(7)]
-    stream = b"".join(M.encode_ppm(f) for f in frames)
-    media = spark.createDataFrame(
-        [(0, "video", stream, "video/x-ppm-stream")],
-        "media_id long, kind string, payload binary, mime string")
-    got = sorted(r["frame_idx"] for r in sample_frames(media, every_n=3).collect())
-    assert got == [0, 3, 6]
-    r0 = [r for r in sample_frames(media, every_n=3).collect() if r["frame_idx"] == 0][0]
-    assert r0["width"] == 6 and abs(r0["mean_luma"] - float(
-        (0.299 * frames[0][:, :, 0] + 0.587 * frames[0][:, :, 1]
-         + 0.114 * frames[0][:, :, 2]).mean())) < 1e-3
-
-
-def test_multimodal_audio(spark):
-    import io
-    import wave
-    import numpy as np
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(8000)
-        t = np.arange(8000)
-        wf.writeframes((np.sin(2 * np.pi * 440 * t / 8000) * 20000)
-                       .astype("<i2").tobytes())
-    from searcharray_spark.multimodal import audio_features
-    media = spark.createDataFrame(
-        [(0, "audio", buf.getvalue(), "audio/wav"),
-         (1, "audio", b"not a wav", "audio/wav")],
-        "media_id long, kind string, payload binary, mime string")
-    rows = {r["media_id"]: r for r in audio_features(media).collect()}
-    assert rows[0]["sample_rate"] == 8000
-    assert abs(rows[0]["duration_sec"] - 1.0) < 1e-6
-    assert abs(rows[0]["rms"] - 20000 / 32768 / np.sqrt(2)) < 0.01
-    assert abs(sum(rows[0]["spectral"]) - 1.0) < 1e-6
-    # 440 Hz with 8k rate -> energy concentrated in the lowest band
-    assert rows[0]["spectral"][0] > 0.9
-    assert rows[1]["error"] is not None
 
 
 QUERY_CENTER_SEED = 5
