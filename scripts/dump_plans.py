@@ -43,8 +43,6 @@ def main() -> int:
                      plan(idx.score("common"))))
     sections.append(("PLAN 3: phrase scoring, scan-aligned (zero shuffle)",
                      plan(idx.score(["common", "w3"]))))
-    sections.append(("PLAN 4: top-k (TakeOrderedAndProject)",
-                     plan(idx.top_k("common", k=5))))
     cand = df.filter(F.col("doc_id") % 2 == 0).select("doc_id")
     sections.append(("PLAN 5b: filtered-corpus scoring (candidates join, "
                      "then repartition by block_id before the same "
@@ -61,10 +59,11 @@ def main() -> int:
                      plan(idx.search_or(["common", "w3", "rare"])
                           .orderBy(F.desc("score"), F.asc("doc_id"))
                           .limit(5))))
-    sections.append(("PLAN 7: batch top-k (top_k_many) scan — the kernel "
-                     "keeps each token's top-k over its scan partition, "
-                     "NO exchange; the driver collects at most k x "
-                     "tokens x partitions rows and ranks them",
+    sections.append(("PLAN 7: the one top-k scan (top_k, top_k_many, "
+                     "top_k_pruned) — the kernel keeps each token's "
+                     "running top-k over each scan batch, NO exchange; "
+                     "the driver collects at most k x tokens x batches "
+                     "rows and ranks them",
                      plan(idx._hits([["common"], ["w3"], ["rare"]],
                                     per_token_topk=5))))
 

@@ -27,11 +27,13 @@ Query execution model:
   only the row groups whose term range holds a queried term are read,
   and no Spark job runs,
 - OR queries sum each doc's token scores inside the kernel; only
-  (doc_id, score) survivors leave it, and global top-k is Spark's
-  TakeOrdered (per-partition top-k, then driver merge). Batch
-  (``top_k_many``) and pruned (``top_k_pruned``) top-k keep each
-  partition's top-k in the kernel and merge on the driver, so every
-  distributed query runs exactly one Spark job: the scoring scan.
+  (doc_id, score) survivors leave it,
+- every top-k call (``top_k``, ``top_k_many``, ``top_k_pruned``) is one
+  plan (``_top_k``): the kernel keeps a running top-k as it scores,
+  the driver merges the collected rows. ``top_k_pruned`` adds the
+  kernel's block-max pruning (blocks in bound order, stop below the
+  running kth score). Every distributed query runs exactly one Spark
+  job, the scoring scan.
 """
 from __future__ import annotations
 
@@ -219,8 +221,9 @@ POSITIONS_SCHEMA = StructType([
 def patch_doclens(rows) -> tuple:
     """Merge per-block packed doclens rows by segment priority: later
     segments override a doc's length and may add docs. ``rows`` is an
-    iterable of (seg, doc_ids_bytes, doc_lens_bytes); returns sorted
-    (ids int64 array, lens float32 array)."""
+    iterable of (seg, doc ids, doc lens), each packed as bytes or as a
+    little-endian int64/float32 array; returns sorted (ids int64 array,
+    lens float32 array)."""
     ids = None
     lens = None
     for _, ir, lr in sorted(rows, key=lambda r: r[0]):
@@ -1039,8 +1042,7 @@ class SearchIndex:
         self._dl_bc = None
         self._dl_capacity = None
         self._dl_table = None
-        self._local_ok = None
-        self._local_ok_ext = None
+        self._postings_size = None
         self._local_posts = None
         self._postings_df = None
         self._doclens_df = None
@@ -1346,27 +1348,17 @@ class SearchIndex:
     LOCAL_QUERY_EXTENDED_MAX_BYTES = 256 << 20  # non-slop shapes
 
     def _local_query_ok(self, extended: bool = False) -> bool:
-        if getattr(self, "_local_ok", None) is None:
-            sz = None
-            if self._doclens_capacity() <= self.LOCAL_QUERY_MAX_DOCS:
-                sz = 0
-                roots = [fsutil.join(self.path, "postings")]
-                roots += [fsutil.join(self.path, "updates",
-                                       f"seg={s}", "postings")
-                          for s in self._update_segs()]
-                for root in roots:
-                    sz += sum(b for _, b in fsutil.list_parquet_files(root))
-                    if sz > self.LOCAL_QUERY_EXTENDED_MAX_BYTES:
-                        break
-            self._local_ok = (sz is not None
-                              and sz <= self.LOCAL_QUERY_MAX_BYTES)
-            self._local_ok_ext = (sz is not None
-                                  and sz <= self.LOCAL_QUERY_EXTENDED_MAX_BYTES)
-        if extended:
-            # tests/tools may force _local_ok directly; honor that as
-            # the answer for both shapes when _local_ok_ext is absent
-            return getattr(self, "_local_ok_ext", self._local_ok)
-        return self._local_ok
+        """Whether a query takes the driver-local route: the doc
+        capacity and the postings bytes (listed once per handle) are
+        compared with the caps at call time, so a handle's caps may be
+        changed (the distributed route forced) after it was opened."""
+        if self._doclens_capacity() > self.LOCAL_QUERY_MAX_DOCS:
+            return False
+        if getattr(self, "_postings_size", None) is None:
+            self._postings_size = self._postings_bytes()
+        return self._postings_size <= (
+            self.LOCAL_QUERY_EXTENDED_MAX_BYTES if extended
+            else self.LOCAL_QUERY_MAX_BYTES)
 
     def _local_postings(self) -> dict:
         """term -> [(block_id, packed_bytes, seg)], loaded once
@@ -1445,7 +1437,7 @@ class SearchIndex:
               candidates: Optional[DataFrame] = None,
               or_combine: bool = False,
               per_token_topk: Optional[int] = None,
-              or_maxscore=None,
+              bounds: Optional[list] = None,
               _as_pandas: bool = False):
         """(token_idx, doc_id, tf, score) for each query token (term or
         phrase), scored block by block by ``query_kernel``.
@@ -1458,9 +1450,13 @@ class SearchIndex:
         file reads (DoclensReader) above it.
 
         ``or_combine`` sums scores per doc INSIDE the kernel, with the
-        matching-token count in token_idx; ``or_maxscore`` adds the
-        kernel-side MaxScore split. ``per_token_topk`` keeps each token's
-        top-k over a whole partition (the driver-local route is one).
+        matching-token count in token_idx. ``per_token_topk`` keeps each
+        token's top-k of every scored batch (a phrase or OR query's
+        partition is one batch; so is the driver-local route); ``bounds`` (per-token block bounds of an OR top-k) adds
+        the kernel's block-max pruning and MaxScore split. An empty
+        ``block_ids`` is an empty driver-held result. ``_as_pandas``
+        returns pandas: the driver-held frame, or the distributed
+        plan's rows (one Spark job, run here).
         ``candidates`` (a DataFrame with a doc_id column) restricts
         scoring to those docs inside the kernel: candidate ids are
         packed per doc block and joined onto the pruned scan, which also
@@ -1482,15 +1478,15 @@ class SearchIndex:
             docs_per_block=self.docs_per_block,
             sim_fn=sim_mod.resolve(similarity), slop=slop,
             min_posn=min_posn, max_posn=max_posn, or_combine=or_combine,
-            or_maxscore=or_maxscore, per_token_topk=per_token_topk)
+            per_token_topk=per_token_topk, bounds=bounds)
         # metadata block pruning: worthwhile when a phrase has a rare term
         if any(len(t) > 1 for t in spec.tokens) and min(
                 spec.dfs.values()) <= spec.num_docs * self.BLOCK_PRUNE_DF_RATIO:
             pruned = self._prune_blocks(spec.tokens, block_ids)
             if pruned is not None:
                 block_ids = pruned
-                if not block_ids:
-                    return held(QK.hits_frame([]))
+        if block_ids is not None and not len(block_ids):
+            return held(QK.hits_frame([]))
         tomb = self._tombstones()  # {} when no deletes/updates (common)
         if candidates is None and self._local_query_ok(extended=slop == 0):
             # driver-local route (slop keeps the strict cap, see
@@ -1504,7 +1500,7 @@ class SearchIndex:
             outs = QK.score_blocks(
                 spec, tomb, self._doclens_table().get,
                 ((b, by_block[b], None) for b in sorted(by_block)))
-            return held(QK.hits_frame(outs, per_token_topk))
+            return held(QK.hits_frame(outs))
         posts = self.postings.filter(F.col("term").isin(all_terms))
         if block_ids is not None:
             posts = posts.filter(
@@ -1520,7 +1516,8 @@ class SearchIndex:
         def kernel(batches):
             return QK.partition_hits(spec, tomb, dl.get, batches)
 
-        return posts.mapInPandas(kernel, HITS_SCHEMA)
+        out = posts.mapInPandas(kernel, HITS_SCHEMA)
+        return out.toPandas() if _as_pandas else out
 
     def _candidate_blocks(self, candidates: DataFrame) -> DataFrame:
         """(block_id, cand) rows: each block's sorted unique candidate
@@ -1583,43 +1580,39 @@ class SearchIndex:
         return self._hits(toks, similarity=similarity, slop=slop,
                           candidates=candidates)
 
-    def _local_hits_pdf(self, tokens: List[List[str]],
-                        **kw) -> Optional[pd.DataFrame]:
-        """Pandas hits when the driver-local small-index path applies,
-        else None (caller falls back to the distributed plan). Lets
-        top-k/rank finishing run driver-side too — zero Spark jobs for
-        the whole query instead of a TakeOrdered job over the
-        LocalRelation."""
-        if kw.pop("candidates", None) is not None \
-                or not self._local_query_ok(
-                    extended=kw.get("slop", 0) == 0):
-            return None
-        return self._hits(tokens, _as_pandas=True, **kw)
-
-    def _local_topk_df(self, pdf: pd.DataFrame, k: int) -> DataFrame:
-        """(doc_id, score) top-k under (score desc, doc_id asc) — the
-        exact total order TakeOrderedAndProject uses (float32->float64
-        upcast is exact, so comparisons match Spark's)."""
-        doc = pdf["doc_id"].to_numpy(dtype=np.int64)
-        sc = pdf["score"].to_numpy(dtype=np.float32)
-        order = np.lexsort((doc, -sc.astype(np.float64)))[:k]
-        out = pd.DataFrame({"doc_id": doc[order],
-                            "score": sc[order]})
-        return _local_df(self.spark, out, TOPK_SCHEMA)
+    def _top_k(self, tokens: List[List[str]], k: int, schema: StructType,
+               **kw) -> DataFrame:
+        """The one top-k plan, shared by ``top_k``, ``top_k_pruned`` and
+        ``top_k_many``: one ``_hits`` call whose kernel keeps each
+        token's top-k of every batch it scores (``per_token_topk``; every row
+        together under ``or_combine``), then one driver merge under
+        (score desc, doc_id asc), the total order of the reference's
+        SetOfResults (utils/sort.py:21-45). This is the partition-local
+        top-k plus driver merge of REPOSE (ICDE 2021), exact on every
+        layout because each block's rows share one partition. The call
+        is eager on both routes: the distributed route's one Spark job
+        runs inside it (errors and cost show here, not at the caller's
+        action), and the driver holds up to k x tokens x batches
+        rows. The result is driver-held over ``schema``'s columns of
+        (token_idx, doc_id, score, rank)."""
+        pdf = self._hits(tokens, per_token_topk=k, _as_pandas=True, **kw)
+        out = QK.rank_hits({
+            "token_idx": pdf["token_idx"].to_numpy(dtype=np.int32),
+            "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
+            "score": pdf["score"].to_numpy(dtype=np.float32)}, k,
+            kw.get("or_combine", False), len(tokens))
+        return _local_df(self.spark, pd.DataFrame(
+            {c: out[c] for c in schema.fieldNames()}), schema)
 
     def top_k(self, token: TokenArg, k: int = 10, similarity=None,
               slop: int = 0, candidates: Optional[DataFrame] = None) -> DataFrame:
-        """Global top-k by score (ties broken by doc_id): distributed
-        per-partition top-k then driver merge (TakeOrderedAndProject);
-        driver-local sort on small indexes (zero Spark jobs)."""
-        pdf = self._local_hits_pdf([_normalize_token(token)],
-                                   similarity=similarity, slop=slop,
-                                   candidates=candidates)
-        if pdf is not None:
-            return self._local_topk_df(pdf, k)
-        return self.score(token, similarity=similarity, slop=slop,
-                          candidates=candidates) \
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        """Global top-k by score, ties broken by doc_id: (doc_id, score).
+        Eager on both routes (``_top_k``): the distributed route runs
+        its one Spark job inside this call and returns a driver-held
+        frame, as the driver-local route does with zero jobs."""
+        return self._top_k([_normalize_token(token)], k, TOPK_SCHEMA,
+                           similarity=similarity, slop=slop,
+                           candidates=candidates)
 
     # relative safety margin on block upper bounds: the kernel computes
     # scores in float32; bounds are float64-of-float32-inputs, so pad by
@@ -1632,20 +1625,21 @@ class SearchIndex:
     WAND_EXPAND_CAP = 1 << 16
 
     def _block_bounds(self, tokens: List[List[str]], sim_fn,
-                      cache_key=None) -> Optional[dict]:
-        """Per-block score upper bound for an OR query over ``tokens``,
+                      cache_key=None) -> Optional[list]:
+        """Per-token block score upper bounds for an OR query over
+        ``tokens``: one (block ids asc, inflated ubs) pair per token,
         computed from the cached per-term sketches (pure driver math —
-        no postings scan, no O(terms x blocks) collect).
+        no postings scan, no O(terms x blocks) collect). The kernel
+        sums them into block bounds (``query_kernel.score_blocks``).
 
         The similarity must be monotone increasing in tf and decreasing
         in dl (all built-ins are; callers gate on ``monotone_bounds``):
             ub(term, block) = sim(tf_max, dl_min)
-        bounds every doc's term contribution in the block; the block
-        bound is the sum over query tokens (MaxScore/block-max-WAND
-        bound). A phrase token's bound uses min(tf_max) over its
-        constituent terms (phrase freq <= every constituent tf) with the
-        summed-df idf the scorer uses (reference postings.py:652-680).
-        Group-granular sketches only loosen bounds, never unsound.
+        bounds every doc's term contribution in the block. A phrase
+        token's bound uses min(tf_max) over its constituent terms
+        (phrase freq <= every constituent tf) with the summed-df idf the
+        scorer uses (reference postings.py:652-680). Group-granular
+        sketches only loosen bounds, never unsound.
 
         Returns None when a token's candidate block set exceeds
         WAND_EXPAND_CAP — callers fall back to exhaustive scoring, which
@@ -1656,23 +1650,20 @@ class SearchIndex:
         all_terms = sorted({t for tok in tokens for t in tok})
         sketches = self._term_sketches(all_terms)
         dfs = self.docfreqs(all_terms)
-        bounds: dict = {}
-        no_blocks = (np.empty(0, dtype=np.int64), np.empty(0))
-        per_tok: list = []  # (block ids asc, inflated ubs) per token —
-        # the kernel-side term-level MaxScore split uses these
+        per_tok: list = []
         for tok in tokens:
             sks = [sketches[t] for t in tok]
             blocks = _token_blocks(sks, self.WAND_EXPAND_CAP)
             if blocks is None:
                 return None
             if not len(blocks):
-                per_tok.append(no_blocks)
+                per_tok.append((np.empty(0, dtype=np.int64), np.empty(0)))
                 continue
             # a phrase's tf is at most every constituent's tf
             tf_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
             dl_m = np.full(len(blocks), np.iinfo(np.int64).max, dtype=np.int64)
-            for s in sks:
-                tf, dl = s.bounds_at(blocks)
+            for sk in sks:
+                tf, dl = sk.bounds_at(blocks)
                 tf_m = np.minimum(tf_m, tf)
                 dl_m = np.minimum(dl_m, dl)
             tok_dfs = np.asarray([dfs[t] for t in tok], dtype=np.float32)
@@ -1682,27 +1673,24 @@ class SearchIndex:
                        self.num_docs),
                 dtype=np.float64) * (1.0 + self._WAND_EPS)
             per_tok.append((blocks.astype(np.int64), ubs))
-            for b, ub in zip(blocks.tolist(), ubs.tolist()):
-                bounds[b] = bounds.get(b, 0.0) + ub
-        result = (bounds, per_tok)
         if cache_key is not None:
-            self._bounds_cache[cache_key] = result
-        return result
+            self._bounds_cache[cache_key] = per_tok
+        return per_tok
 
     def top_k_pruned(self, tokens: Union[TokenArg, Sequence[TokenArg]],
                      k: int = 10, similarity=None) -> DataFrame:
-        """Block-max pruned top-k — rank-identical to exhaustive scoring
-        (``top_k`` for one token; ``search_or(...).orderBy`` for many)
-        but scans only the doc blocks whose bound can reach the top-k.
+        """Block-max pruned OR top-k: (doc_id, score), rank-identical to
+        exhaustive scoring (``top_k`` for one token;
+        ``search_or(...).orderBy`` for many), on the one top-k plan of
+        ``_top_k`` (eager, one Spark job on the distributed route).
 
-        Two-phase driver plan (the distributed analogue of block-max
-        WAND/MaxScore; the reference scores all docs): score the
-        highest-bound blocks first in cluster-sized chunks; once k docs
-        are held, theta = kth score and every remaining block with
-        bound < theta is skipped. Each chunk is one Spark job over a
-        partition-pruned postings scan; only top-k rows return, and the
-        merged result is a driver-held frame (no further job). An index
-        with at most one chunk of candidate blocks runs one job.
+        The kernel visits each partition's blocks in descending order of
+        their score upper bound, stops at the first block whose bound is
+        below the running kth score, and semi-joins non-essential tokens
+        (MaxScore) in the blocks it scores: the distributed analogue of
+        block-max WAND; the reference scores all docs. A query whose
+        tokens occur in no block returns an empty driver-held frame
+        without a Spark job.
 
         Pruning is sound only for similarities monotone increasing in tf
         and decreasing in dl; a custom callable without the
@@ -1719,110 +1707,35 @@ class SearchIndex:
             else:
                 tokens_list = [_normalize_token(t) for t in seq]
         sim_fn = sim_mod.resolve(similarity)
-        # cache on the callable OBJECT (a strong reference in the key),
-        # never id(): CPython reuses ids after GC, so two different
-        # bm25_similarity(k1=...) closures created per call could
-        # otherwise collide on a stale bounds entry (unsound pruning)
-        try:
-            cache_key = (tuple(tuple(t) for t in tokens_list), similarity)
-            hash(cache_key)
-        except TypeError:  # unhashable custom similarity: skip the cache
-            cache_key = None
-        # a driver-local index scores exhaustively in microseconds —
-        # WAND's chunked-phase bookkeeping only adds overhead there.
-        if self._local_query_ok(extended=True):
-            pdf = self._hits(tokens_list, similarity=similarity,
-                             or_combine=True, _as_pandas=True)
-            out = self._local_topk_df(pdf, k)
-            out._wand_blocks_scanned = -1
-            out._wand_blocks_total = -1
-            return out
-        bounds = per_tok = None
+        bounds = block_ids = None
         if getattr(sim_fn, "monotone_bounds", False):
-            bb = self._block_bounds(tokens_list, sim_fn,
-                                    cache_key=cache_key)
-            if bb is not None:
-                bounds, per_tok = bb
-        if bounds is None:  # per-doc sums in the kernel: TakeOrdered
-            out = self._hits(tokens_list, similarity=similarity,
-                             or_combine=True) \
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k) \
-                .select("doc_id", F.col("score").cast("float"))
-            out._wand_blocks_scanned = -1  # exhaustive: no pruning ran
-            out._wand_blocks_total = -1
-            return out
-        # no bounds (no token occurs in any block): no chunk runs and
-        # the empty driver-held result below is returned
-        blocks = sorted(((b, ub) for b, ub in bounds.items()),
-                        key=lambda x: (-x[1], x[0]))
-        # two-phase adaptive plan: one seed chunk of the highest-bound
-        # blocks establishes theta = kth score; every surviving block
-        # (bound >= theta) then runs in ONE job. On skewed corpora theta
-        # skips most blocks; on flat bound distributions the cost is
-        # bounded at seed job + one exhaustive-sized job — never a long
-        # chain of sequential chunk jobs.
-        chunk_size = max(16, self.spark.sparkContext.defaultParallelism)
-        best: List = []  # (score, doc_id), kept sorted desc, len<=k
-        theta = None
-        scanned = 0
-        i = 0
-        while i < len(blocks):
-            if theta is not None and blocks[i][1] < theta:
-                break  # every remaining block's bound is below the kth score
-            if theta is None:
-                chunk = [b for b, _ in blocks[i:i + chunk_size]]
-                i += len(chunk)
-            else:
-                chunk = []
-                while i < len(blocks) and blocks[i][1] >= theta:
-                    chunk.append(blocks[i][0])
-                    i += 1
-            # after the seed phase, theta feeds the kernel-side
-            # term-level MaxScore split (per-token bounds + threshold)
-            ms = (per_tok, float(theta)) if theta is not None else None
-            rows = self._hits(tokens_list, similarity=similarity,
-                              block_ids=chunk, or_combine=True,
-                              or_maxscore=ms) \
-                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-            scanned += len(chunk)
-            best.extend((r["score"], r["doc_id"]) for r in rows)
-            best.sort(key=lambda x: (-x[0], x[1]))
-            best = best[:k]
-            if len(best) >= k:
-                theta = best[-1][0]
-            elif i >= len(blocks):
-                break
-        out = _local_df(self.spark, pd.DataFrame(
-            {"doc_id": np.asarray([d for _, d in best], dtype=np.int64),
-             "score": np.asarray([sc for sc, _ in best], dtype=np.float32)}),
-            TOPK_SCHEMA)
-        out._wand_blocks_scanned = scanned  # introspection for tests
-        out._wand_blocks_total = len(blocks)
-        return out
+            # cache on the callable OBJECT (a strong reference in the
+            # key), never id(): CPython reuses ids after GC, so two
+            # different bm25_similarity(k1=...) closures created per call
+            # could otherwise collide on a stale bounds entry (unsound
+            # pruning)
+            try:
+                cache_key = (tuple(tuple(t) for t in tokens_list),
+                             similarity)
+                hash(cache_key)
+            except TypeError:  # unhashable custom similarity: no cache
+                cache_key = None
+            bounds = self._block_bounds(tokens_list, sim_fn,
+                                        cache_key=cache_key)
+            if bounds is not None:
+                block_ids = sorted({b for bl, _ in bounds
+                                    for b in bl.tolist()})
+        return self._top_k(tokens_list, k, TOPK_SCHEMA,
+                           similarity=similarity, or_combine=True,
+                           block_ids=block_ids, bounds=bounds)
 
     def top_k_many(self, tokens: Sequence[TokenArg], k: int = 10,
                    similarity=None) -> DataFrame:
         """Top-k per query token in ONE kernel pass (batch scoring):
-        (token_idx, doc_id, score, rank). Ranks follow the reference's
-        SetOfResults (utils/sort.py:21-45): (score desc, doc_id asc) per
-        token. The kernel keeps each token's top-k over its whole
-        partition and the driver ranks the collected rows: one Spark
-        job, the partition-local top-k plus driver merge of REPOSE (ICDE
-        2021), exact on every layout because each block's rows share one
-        partition. The call is eager: the scan runs inside it (errors
-        and cost show here, not at the caller's action), and the driver
-        holds up to k x tokens x partitions rows."""
-        toks = [_normalize_token(t) for t in tokens]
-        pdf = self._local_hits_pdf(toks, similarity=similarity,
-                                   per_token_topk=k)
-        if pdf is None:
-            pdf = self._hits(toks, similarity=similarity,
-                             per_token_topk=k).toPandas()
-        out = QK.rank_by_token({
-            "token_idx": pdf["token_idx"].to_numpy(dtype=np.int32),
-            "doc_id": pdf["doc_id"].to_numpy(dtype=np.int64),
-            "score": pdf["score"].to_numpy(dtype=np.float32)}, k)
-        return _local_df(self.spark, pd.DataFrame(out), TOPK_MANY_SCHEMA)
+        (token_idx, doc_id, score, rank), on the one top-k plan of
+        ``_top_k`` (eager, one Spark job on the distributed route)."""
+        return self._top_k([_normalize_token(t) for t in tokens], k,
+                           TOPK_MANY_SCHEMA, similarity=similarity)
 
     def positions(self, term: str,
                   doc_ids: Optional[Sequence[int]] = None) -> DataFrame:

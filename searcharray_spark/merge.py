@@ -10,12 +10,24 @@ ranges don't). This is the segment-append primitive.
 """
 from __future__ import annotations
 
+from itertools import repeat
 from typing import Sequence
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from . import commit, fsutil
-from .index import SearchIndex
+from . import kernels as K
+from . import query_kernel as QK
+from .index import (DoclensReader, SearchIndex, patch_doclens,
+                    scan_doclens_ranges)
+
+# _restat's columns: (Spark type, pandas dtype of an empty frame)
+_RESTAT_COLS = {"term": ("string", object), "block_id": ("long", "int64"),
+                "postings": ("binary", object), "df": ("long", "int64"),
+                "tf_total": ("long", "int64"), "tf_max": ("long", "int64"),
+                "dl_min": ("long", "int64")}
 
 
 def _lens_for_ids(dl_ids, dl_lens, ids):
@@ -23,15 +35,69 @@ def _lens_for_ids(dl_ids, dl_lens, ids):
     is missing from the doclens table (an unclamped searchsorted would
     either IndexError or silently return a neighbour's length, feeding
     wrong dl_min/WAND bounds)."""
-    import numpy as _np
-    pos = _np.searchsorted(dl_ids, ids)
+    pos = np.searchsorted(dl_ids, ids)
     if len(ids) and (int(pos.max()) >= len(dl_ids)
-                     or not _np.array_equal(dl_ids[pos], ids)):
+                     or not np.array_equal(dl_ids[pos], ids)):
         missing = set(map(int, ids)) - set(map(int, dl_ids))
         raise ValueError(
             f"inconsistent index: posting doc ids missing from doclens "
             f"(sample: {sorted(missing)[:5]})")
     return dl_lens[pos]
+
+
+def _restat(dl_path: str, tomb_bc=None, keep_postings: bool = False):
+    """``applyInPandas`` body over one (term, block)'s posting rows
+    (term, block_id, postings[, seg]): the rows merged under the
+    kernel's tombstone rule (``QK.merge_rows``), then the block's exact
+    df, tf_total, tf_max and dl_min, with doc lengths side-read from the
+    packed doclens at ``dl_path`` (DoclensReader); the merged postings
+    too with ``keep_postings``. No row when every doc is gone. Returns
+    (function, output schema)."""
+    reader = DoclensReader(scan_doclens_ranges([(0, dl_path)]))
+    cols = (["term", "block_id"] + (["postings"] if keep_postings else [])
+            + ["df", "tf_total", "tf_max", "dl_min"])
+
+    def restat(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        term, block_id = key[0], int(key[1])
+        segs = pdf["seg"] if "seg" in pdf.columns else repeat(0)
+        arr = QK.merge_rows(zip(repeat(term), pdf["postings"], segs),
+                            tomb_bc.value if tomb_bc is not None else None,
+                            block_id)[term]
+        if not len(arr):
+            return pd.DataFrame({c: pd.Series([], dtype=_RESTAT_COLS[c][1])
+                                 for c in cols})
+        ids, tfs = K.termfreqs(arr)
+        dl_raw = reader.get(block_id)
+        dls = _lens_for_ids(np.frombuffer(dl_raw[0], dtype="<i8"),
+                            np.frombuffer(dl_raw[1], dtype="<f4"), ids)
+        row = {"term": term, "block_id": block_id,
+               "postings": K.to_bytes(arr), "df": int(len(ids)),
+               "tf_total": int(tfs.sum()), "tf_max": int(tfs.max()),
+               "dl_min": int(dls.min())}
+        return pd.DataFrame({c: [row[c]] for c in cols})
+
+    return restat, ", ".join(f"{c} {_RESTAT_COLS[c][0]}" for c in cols)
+
+
+def _corpus_stats(spark: SparkSession, dl_path: str) -> tuple:
+    """(num_docs, total_tokens, max block_id or -1) of the packed
+    doclens table at ``dl_path``: one distributed pass, O(partitions)
+    rows to the driver, not O(num_docs)."""
+    def stats(it):
+        n, tot, mb = 0, 0.0, -1
+        for pdf in it:
+            for b, lr in zip(pdf["block_id"], pdf["doc_lens"]):
+                ln = np.frombuffer(lr, dtype="<f4")
+                n += len(ln)
+                tot += float(ln.sum())
+                mb = max(mb, int(b))
+        yield pd.DataFrame({"n": [n], "tot": [tot], "mb": [mb]})
+
+    parts = spark.read.parquet(dl_path).select("block_id", "doc_lens") \
+        .mapInPandas(stats, "n long, tot double, mb long").collect()
+    return (int(sum(r["n"] for r in parts)),
+            float(sum(r["tot"] for r in parts)),
+            max((r["mb"] for r in parts), default=-1))
 
 
 def compact_index(spark: SparkSession, index_path: str, out_path: str,
@@ -57,13 +123,6 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
     pass over the written doclens. Only the tombstone set is broadcast
     (O(deletes between compactions), not O(corpus)).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from . import kernels as K
-    from .index import DoclensReader, scan_doclens_ranges
-
     _check_out(out_path, [index_path])
     idx = SearchIndex(spark, index_path, as_of=as_of)
     commit.begin(out_path)
@@ -75,45 +134,28 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
 
     n_parts = max(4, spark.sparkContext.defaultParallelism)
 
-    # --- 1. compacted doclens (distributed, per block): later segs
-    # override; a doc survives unless its newest row predates its newest
-    # tombstone
+    # --- 1. compacted doclens (distributed, per block): each row drops
+    # the docs a later tombstone kills (QK.tombstoned), then later segs
+    # override. A tombstone kills a doc iff its seg is above the newest
+    # row holding the doc, so this keeps exactly the live docs.
     def compact_doclens(key, pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[0])
-        ids = None
-        rows = sorted(zip(pdf["seg"], pdf["doc_ids"], pdf["doc_lens"]),
-                      key=lambda r: int(r[0]))
-        for seg, ir, lr in rows:
-            seg = int(seg)
-            i = np.frombuffer(ir, dtype="<i8")
-            ln = np.frombuffer(lr, dtype="<f4")
-            if ids is None:
-                ids, lens = i, ln
-                segs = np.full(len(i), seg, dtype=np.int64)
-                continue
-            all_ids = np.union1d(ids, i)
-            new_lens = np.empty(len(all_ids), dtype=np.float32)
-            new_segs = np.full(len(all_ids), -1, dtype=np.int64)
-            for src_ids, src_lens, src_seg in ((ids, lens, None), (i, ln, seg)):
-                pos = np.searchsorted(src_ids, all_ids)
-                pos_c = np.minimum(pos, len(src_ids) - 1)
-                m = src_ids[pos_c] == all_ids
-                new_lens[m] = src_lens[pos_c[m]]
-                new_segs[m] = segs[pos_c[m]] if src_seg is None else src_seg
-            ids, lens, segs = all_ids, new_lens, new_segs
-        t_entry = tomb_bc.value.get(b)
-        if t_entry is not None:
-            t_ids, t_segs = t_entry
-            pos = np.searchsorted(t_ids, ids)
-            pos_c = np.minimum(pos, len(t_ids) - 1)
-            hit = t_ids[pos_c] == ids
-            dead = hit & (t_segs[pos_c] > segs)
-            ids, lens = ids[~dead], lens[~dead]
-        if not len(ids):
+        rows = []
+        for seg, ir, lr in zip(pdf["seg"], pdf["doc_ids"], pdf["doc_lens"]):
+            ids = np.frombuffer(ir, dtype="<i8")
+            lens = np.frombuffer(lr, dtype="<f4")
+            excl = QK.tombstoned(tomb_bc.value, b, int(seg))
+            if excl is not None:
+                live = ~np.isin(ids, excl)
+                ids, lens = ids[live], lens[live]
+            if len(ids):
+                rows.append((int(seg), ids, lens))
+        if not rows:
             return pd.DataFrame({
                 "block_id": pd.Series([], dtype="int64"),
                 "doc_ids": pd.Series([], dtype=object),
                 "doc_lens": pd.Series([], dtype=object)})
+        ids, lens = patch_doclens(rows)
         return pd.DataFrame({
             "block_id": [b],
             "doc_ids": [ids.astype("<i8").tobytes()],
@@ -128,74 +170,17 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
         .option("parquet.block.size", str(PARQUET_ROW_GROUP_BYTES)) \
         .parquet(dl_path)
 
-    # block->file map over the COMPACTED doclens (O(files) footer reads);
-    # each rewrite task reads only the file(s) covering its block
-    reader = DoclensReader(scan_doclens_ranges([(0, dl_path)]))
-
     # --- 2. postings rewrite: per (term, block) merge rows, drop
-    # tombstoned docs, recompute df/tf_total/tf_max/dl_min
-    out_schema = ("term string, block_id long, postings binary, df long, "
-                  "tf_total long, tf_max long, dl_min long")
-
-    def rewrite(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        term, block_id = key[0], int(key[1])
-        t_entry = tomb_bc.value.get(block_id)
-        parts = []
-        for row in pdf.itertuples():
-            arr = K.from_bytes(row.postings)
-            if t_entry is not None:
-                excl = t_entry[0][t_entry[1] > row.seg]
-                if len(excl):
-                    arr = K.exclude_keys(arr, excl)
-            parts.append(arr)
-        arr = K.or_merge(np.concatenate(parts)) if len(parts) > 1 else parts[0]
-        if len(arr) == 0:
-            return pd.DataFrame({
-                "term": pd.Series([], dtype=object),
-                "block_id": pd.Series([], dtype="int64"),
-                "postings": pd.Series([], dtype=object),
-                "df": pd.Series([], dtype="int64"),
-                "tf_total": pd.Series([], dtype="int64"),
-                "tf_max": pd.Series([], dtype="int64"),
-                "dl_min": pd.Series([], dtype="int64"),
-            })
-        ids, tfs = K.termfreqs(arr)
-        dl_raw = reader.get(block_id)
-        dl_ids = np.frombuffer(dl_raw[0], dtype="<i8")
-        dl_lens = np.frombuffer(dl_raw[1], dtype="<f4")
-        dls = _lens_for_ids(dl_ids, dl_lens, ids)
-        return pd.DataFrame({
-            "term": [term], "block_id": [block_id],
-            "postings": [K.to_bytes(arr)], "df": [int(len(ids))],
-            "tf_total": [int(tfs.sum())], "tf_max": [int(tfs.max())],
-            "dl_min": [int(dls.min())],
-        })
-
+    # tombstoned docs, recompute df/tf_total/tf_max/dl_min; each task
+    # side-reads only the COMPACTED doclens file(s) covering its block
+    rewrite, out_schema = _restat(dl_path, tomb_bc, keep_postings=True)
     new_posts = idx.postings.groupBy("term", "block_id").applyInPandas(
         rewrite, out_schema)
     srg = write_postings_table(new_posts, fsutil.join(out_path, "postings"),
                                n_parts)
 
-    # --- 3. corpus stats + granularity: one distributed pass over the
-    # small packed doclens table (O(partitions) rows to the driver)
-    def _dl_stats(it):
-        n = 0
-        tot = 0.0
-        mb = -1
-        for pdf in it:
-            for b, lr in zip(pdf["block_id"], pdf["doc_lens"]):
-                ln = np.frombuffer(lr, dtype="<f4")
-                n += len(ln)
-                tot += float(ln.sum())
-                mb = max(mb, int(b))
-        yield pd.DataFrame({"n": [n], "tot": [tot], "mb": [mb]})
-
-    parts = spark.read.parquet(dl_path).mapInPandas(
-        _dl_stats, "n long, tot double, mb long").collect()
-    num_docs = int(sum(r["n"] for r in parts))
-    total_tokens = float(sum(r["tot"] for r in parts))
-    max_block = max((r["mb"] for r in parts), default=-1)
-
+    # --- 3. corpus stats + granularity
+    num_docs, total_tokens, max_block = _corpus_stats(spark, dl_path)
     n_blocks = (max_block + 1) if max_block >= 0 else 1
     granularity = bounds_granularity(n_blocks)
     write_term_stats(spark.read.parquet(fsutil.join(out_path, "postings")),
@@ -269,9 +254,6 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
     # two segments — coalesce its doclens rows (and verify the doc ids are
     # actually disjoint). (Posting rows for a shared (term, block) are
     # merged lazily by the query kernel.)
-    import numpy as np
-    import pandas as pd
-
     def _coalesce(key, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 1:
             return pdf
@@ -314,58 +296,13 @@ def merge_indexes(spark: SparkSession, index_paths: Sequence[str],
         # the same or_merge the query kernel applies — with doc lens
         # side-input-read from the merged doclens (no driver
         # materialization). One distributed pass; overlap merges only.
-        from . import kernels as K
-        from .index import DoclensReader, scan_doclens_ranges
-        reader = DoclensReader(
-            scan_doclens_ranges([(0, fsutil.join(out_path, "doclens"))]))
-
-        def recount(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            term, block_id = key[0], int(key[1])
-            parts = [K.from_bytes(b) for b in pdf["postings"]]
-            arr = (K.or_merge(np.concatenate(parts))
-                   if len(parts) > 1 else parts[0])
-            if not len(arr):
-                return pd.DataFrame({
-                    "term": pd.Series([], dtype=object),
-                    "block_id": pd.Series([], dtype="int64"),
-                    "df": pd.Series([], dtype="int64"),
-                    "tf_total": pd.Series([], dtype="int64"),
-                    "tf_max": pd.Series([], dtype="int64"),
-                    "dl_min": pd.Series([], dtype="int64")})
-            ids, tfs = K.termfreqs(arr)
-            dl_raw = reader.get(block_id)
-            dl_ids = np.frombuffer(dl_raw[0], dtype="<i8")
-            dl_lens = np.frombuffer(dl_raw[1], dtype="<f4")
-            dls = _lens_for_ids(dl_ids, dl_lens, ids)
-            return pd.DataFrame({
-                "term": [term], "block_id": [block_id],
-                "df": [int(len(ids))], "tf_total": [int(tfs.sum())],
-                "tf_max": [int(tfs.max())], "dl_min": [int(dls.min())]})
-
+        recount, schema = _restat(fsutil.join(out_path, "doclens"))
         exact = merged_posts.select("term", "block_id", "postings") \
-            .groupBy("term", "block_id").applyInPandas(
-                recount, "term string, block_id long, df long, "
-                         "tf_total long, tf_max long, dl_min long")
+            .groupBy("term", "block_id").applyInPandas(recount, schema)
         write_term_stats(exact, fsutil.join(out_path, "term_stats"),
                          max(1, n_parts // 4), granularity)
-
-        # corpus stats: one distributed pass over the packed doclens
-        # (O(partitions) rows to the driver, not O(num_docs))
-        def _dl_stats(it):
-            n = 0
-            tot = 0.0
-            for pdf in it:
-                for lr in pdf["doc_lens"]:
-                    ln = np.frombuffer(lr, dtype="<f4")
-                    n += len(ln)
-                    tot += float(ln.sum())
-            yield pd.DataFrame({"n": [n], "tot": [tot]})
-
-        parts = spark.read.parquet(fsutil.join(out_path, "doclens")) \
-            .select("doc_lens").mapInPandas(
-                _dl_stats, "n long, tot double").collect()
-        num_docs = int(sum(r["n"] for r in parts))
-        total_tokens = float(sum(r["tot"] for r in parts))
+        num_docs, total_tokens, _ = _corpus_stats(
+            spark, fsutil.join(out_path, "doclens"))
     else:
         write_term_stats(merged_posts, fsutil.join(out_path, "term_stats"),
                          max(1, n_parts // 4), granularity)

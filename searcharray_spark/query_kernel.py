@@ -12,6 +12,10 @@ driver-loaded rows (numpy arrays end to end, one pandas frame per
 query); the distributed route runs ``partition_hits`` as its
 ``mapInPandas`` body over the pruned postings scan. Both routes
 therefore return bit-identical rows for every query shape.
+
+Top-k queries (``per_token_topk``) keep a running top-k while scoring,
+and an OR top-k with block bounds (``bounds``) also skips blocks that
+cannot reach it; see ``score_blocks``.
 """
 from __future__ import annotations
 
@@ -40,8 +44,10 @@ class QuerySpec(NamedTuple):
     min_posn: Optional[int] = None
     max_posn: Optional[int] = None
     or_combine: bool = False   # one row per doc: token count + summed tf/score
-    or_maxscore: Optional[tuple] = None  # (per-token (blocks, ubs), theta)
     per_token_topk: Optional[int] = None
+    # per-token (block ids asc, score upper bounds) of an or_combine
+    # top-k (SearchIndex._block_bounds): block-max pruning + MaxScore
+    bounds: Optional[list] = None
 
 
 # --- tombstones ------------------------------------------------------------
@@ -121,29 +127,30 @@ def token_freqs(spec: QuerySpec, packed: dict, tok, cand_ids=None,
     return ids[keep], tfs[keep]
 
 
-def _ub_of(entry, block_id: int) -> float:
-    """One token's score upper bound in a block from the (blocks, ubs)
-    arrays SearchIndex._block_bounds builds; 0.0 when the sketch says
-    the token is absent from the block."""
-    bl, ub = entry
-    pos = int(np.searchsorted(bl, block_id))
-    return float(ub[pos]) if pos < len(bl) and bl[pos] == block_id else 0.0
+def _block_ubs(spec: QuerySpec, block_ids) -> np.ndarray:
+    """Every query token's score upper bound (column) in each block
+    (row), from the per-token (blocks, ubs) arrays
+    SearchIndex._block_bounds builds; 0.0 where the sketch says the
+    token is absent from the block."""
+    ids = np.asarray(block_ids, dtype=np.int64)
+    out = np.zeros((len(ids), len(spec.bounds)))
+    for j, (bl, ub) in enumerate(spec.bounds):
+        if len(bl):
+            pos = np.minimum(np.searchsorted(bl, ids), len(bl) - 1)
+            out[:, j] = np.where(bl[pos] == ids, ub[pos], 0.0)
+    return out
 
 
-def _maxscore_hits(spec: QuerySpec, block_id: int, packed: dict,
-                   cand_ids) -> list:
+def _maxscore_hits(spec: QuerySpec, ubs: np.ndarray, packed: dict,
+                   cand_ids, theta: float) -> list:
     """Term-level MaxScore inside the kernel (Turtle & Flood 1995): with
-    theta = the kth score from the seed phase, tokens whose upper bounds
-    can't SUM to theta are non-essential. A doc matching only those
-    can't enter the top-k, so their (hot) postings are semi-joined to
-    the essential tokens' doc set instead of fully decoded. Bounds carry
-    the (1+eps) inflation from _block_bounds, so every drop is strict
-    (rank-identity preserved, tests/test_wand.py)."""
-    per_tok_b, theta = spec.or_maxscore
-    ubs = np.asarray([_ub_of(per_tok_b[j], block_id)
-                      for j in range(len(spec.tokens))])
-    if float(ubs.sum()) < theta:
-        return []
+    theta = the running kth score, tokens whose upper bounds can't SUM
+    to theta are non-essential. A doc matching only those can't enter
+    the top-k, so their (hot) postings are semi-joined to the essential
+    tokens' doc set instead of fully decoded. Bounds carry the (1+eps)
+    inflation from _block_bounds, so every drop is strict (rank-identity
+    preserved, tests/test_wand.py). ``ubs``: the block's row of
+    _block_ubs."""
     order = np.argsort(-ubs, kind="stable")
     n = n_ess = len(order)
     for ce in range(1, n + 1):
@@ -198,17 +205,19 @@ def combine_or(doc, tf, score) -> tuple:
 
 
 def score_block(spec: QuerySpec, block_id: int, packed: dict, dl_raw,
-                cand_raw=None):
+                cand_raw=None, ubs=None, theta: Optional[float] = None):
     """(token_idx, doc_id, tf, score) arrays for one block, or None.
     ``packed`` is merge_rows' output, ``dl_raw`` the block's packed
     doclens (ids bytes, lens bytes), ``cand_raw`` its packed candidate
-    local ids."""
+    local ids; ``ubs`` (the tokens' bounds in the block) and ``theta``
+    (the running kth score) of a bounded OR top-k set the MaxScore
+    split."""
     dl_ids = np.frombuffer(dl_raw[0], dtype="<i8")
     dl_lens = np.frombuffer(dl_raw[1], dtype="<f4")
     cand_ids = (np.frombuffer(cand_raw, dtype="<i8")
                 if cand_raw is not None else None)
-    if spec.or_combine and spec.or_maxscore is not None:
-        hits = _maxscore_hits(spec, block_id, packed, cand_ids)
+    if theta is not None:
+        hits = _maxscore_hits(spec, ubs, packed, cand_ids, theta)
     else:
         hits = []
         for j, tok in enumerate(spec.tokens):
@@ -231,57 +240,131 @@ def score_block(spec: QuerySpec, block_id: int, packed: dict, dl_raw,
     return tok, doc, tf, score
 
 
+# a running top-k cuts once this many rows are held uncut (and at the
+# end): each cut ranks >= this many rows, so a scan of many small blocks
+# does not pay one concatenate + rank per block
+_CUT_ROWS = 1 << 16
+
+
 def score_blocks(spec: QuerySpec, tomb, dl_get, blocks) -> list:
     """score_block over (block_id, rows, cand_raw) triples, each block's
     (term, postings, seg) rows merged first; a block without doclens
-    (``dl_get`` returns None) holds no live docs and is skipped."""
-    outs = []
-    for block_id, rows, cand_raw in blocks:
+    (``dl_get`` returns None) holds no live docs and is skipped.
+
+    With ``per_token_topk`` the results are cut to each token's top-k
+    under (score desc, doc_id asc), ranked over ALL rows under
+    ``or_combine`` (token_idx holds the match count there), whenever
+    more than _CUT_ROWS rows are held uncut and once at the end: a
+    call holds at most k rows per token plus _CUT_ROWS and one block's
+    rows, whatever it scans.
+
+    With ``bounds`` (an OR top-k), blocks are visited in descending
+    order of their bound, the sum of the tokens' upper bounds. Once k
+    docs are scored, theta = the kth best score: the visit stops at the
+    first block whose bound is strictly below theta, and theta feeds
+    the MaxScore split of every later block. Exact, because:
+    - every block's rows sit in one partition (scan-aligned files, else
+      the plan repartitions by block_id), so a doc's score is complete;
+    - a global top-k doc is in its own partition's top-k;
+    - a partition's theta is never above the global kth score;
+    - bounds carry _block_bounds' (1+eps) inflation, so a skipped block
+      holds no doc scoring theta or more (no tie is lost either).
+    Blocks below theta were already read by the scan; they are only
+    not decoded or scored."""
+    k = spec.per_token_topk
+    held: list = []
+    best = np.zeros(0, dtype=np.float32)  # the k best scores (bounds only)
+    theta = None
+    uncut = 0
+    if spec.bounds is not None:
+        blocks = list(blocks)
+        ubs = _block_ubs(spec, [blk[0] for blk in blocks])
+        bound = ubs.sum(axis=1)
+        blocks = [(bound[i], ubs[i], blocks[i])
+                  for i in np.argsort(-bound, kind="stable")]
+    else:
+        blocks = ((None, None, blk) for blk in blocks)
+    for bound, ub, (block_id, rows, cand_raw) in blocks:
+        if theta is not None and bound < theta:
+            break  # every later block's bound is lower still
         dl_raw = dl_get(block_id)
         if dl_raw is None:
             continue
         r = score_block(spec, block_id, merge_rows(rows, tomb, block_id),
-                        dl_raw, cand_raw)
-        if r is not None:
-            outs.append(r)
-    return outs
+                        dl_raw, cand_raw, ub, theta)
+        if r is None:
+            continue
+        held.append(r)
+        uncut += len(r[3])
+        if bound is not None and k:
+            # or_combine: one row per doc, so the kth best row score is
+            # the kth best doc score
+            best = np.concatenate((best, r[3]))
+            if len(best) >= k:
+                best = np.partition(best, len(best) - k)[-k:]
+                theta = float(best[0])
+        if k is not None and uncut > _CUT_ROWS:
+            held, uncut = [_top_rows(spec, held)], 0
+    if k is not None and uncut:
+        held = [_top_rows(spec, held)]
+    return held
+
+
+def _top_rows(spec: QuerySpec, outs: list) -> tuple:
+    """score_block results cut to each token's top-k (all rows' top-k
+    under or_combine), in rank order."""
+    cols = dict(zip(HITS_COLUMNS, (np.concatenate(c) for c in zip(*outs))))
+    cols = rank_hits(cols, spec.per_token_topk, spec.or_combine,
+                     len(spec.tokens))
+    return tuple(cols[c] for c in HITS_COLUMNS)
 
 
 # --- results ---------------------------------------------------------------
 
-def rank_by_token(cols: dict, k: int) -> dict:
+def rank_by_token(cols: dict, k: int, per_token: bool = True) -> dict:
     """Rank the rows of ``cols`` (parallel numpy arrays, among them
     token_idx, doc_id and score) within each token_idx under (score
     desc, doc_id asc), the total order of the reference's SetOfResults
-    (utils/sort.py:21-45), and keep ranks <= k. Returns the kept rows'
-    arrays plus an int32 ``rank`` array (1-based). float32 -> float64
-    is exact, so the order matches Spark's on the same float column."""
-    ti = cols["token_idx"]
-    order = np.lexsort((cols["doc_id"], -cols["score"].astype(np.float64),
-                        ti))
-    ti = ti[order]
-    starts = np.concatenate(([0], np.flatnonzero(np.diff(ti)) + 1))
-    widths = np.diff(np.concatenate((starts, [len(ti)])))
-    rank = np.arange(len(ti), dtype=np.int64) - np.repeat(starts, widths) + 1
-    keep = rank <= k
-    out = {c: a[order[keep]] for c, a in cols.items()}
-    out["rank"] = rank[keep].astype(np.int32)
+    (utils/sort.py:21-45), and keep ranks <= k. ``per_token=False``
+    ranks every row together (one query token, or OR-combined rows,
+    whose token_idx is a match count). Returns the kept rows' arrays
+    plus an int32 ``rank`` array (1-based). float32 -> float64 is exact,
+    so the order matches Spark's on the same float column."""
+    keys = (cols["doc_id"], -cols["score"].astype(np.float64))
+    if per_token:
+        ti = cols["token_idx"]
+        order = np.lexsort(keys + (ti,))
+        ti = ti[order]
+        starts = np.concatenate(([0], np.flatnonzero(np.diff(ti)) + 1))
+        widths = np.diff(np.concatenate((starts, [len(ti)])))
+        rank = np.arange(len(ti)) - np.repeat(starts, widths) + 1
+        keep = rank <= k
+        order, rank = order[keep], rank[keep]
+    else:
+        order = np.arange(len(keys[1]))
+        if len(order) > k:  # only rows tying or beating the kth score rank
+            order = np.flatnonzero(
+                keys[1] <= np.partition(keys[1], k - 1)[k - 1])
+        order = order[np.lexsort(tuple(a[order] for a in keys))][:k]
+        rank = np.arange(1, len(order) + 1)
+    out = {c: a[order] for c, a in cols.items()}
+    out["rank"] = rank.astype(np.int32)
     return out
 
 
-def hits_frame(outs: list, per_token_topk: Optional[int] = None
-               ) -> pd.DataFrame:
-    """One hits frame (HITS_COLUMNS) from score_block results. With
-    ``per_token_topk``, only each token's top-k under (score desc,
-    doc_id asc): exact for global top-k consumers, since the global
-    winners are a subset of any partition's."""
-    cols = {c: (np.concatenate([o[i] for o in outs]) if outs
-                else np.zeros(0, dtype=dt))
-            for i, (c, dt) in enumerate(zip(HITS_COLUMNS, _HITS_DTYPES))}
-    if per_token_topk is not None:
-        cols = rank_by_token(cols, per_token_topk)
-        del cols["rank"]
-    return pd.DataFrame(cols)
+def rank_hits(cols: dict, k: int, or_combine: bool, n_tokens: int) -> dict:
+    """The top-k rule of the kernel's running cut and of the driver
+    merge alike: rank_by_token per token, except that one token's rows
+    and OR-combined rows (token_idx = match count) rank together."""
+    return rank_by_token(cols, k, per_token=not or_combine and n_tokens > 1)
+
+
+def hits_frame(outs: list) -> pd.DataFrame:
+    """One hits frame (HITS_COLUMNS) from score_block results."""
+    return pd.DataFrame({
+        c: (np.concatenate([o[i] for o in outs]) if outs
+            else np.zeros(0, dtype=dt))
+        for i, (c, dt) in enumerate(zip(HITS_COLUMNS, _HITS_DTYPES))})
 
 
 def _frame_blocks(pdf: pd.DataFrame):
@@ -300,21 +383,18 @@ def partition_hits(spec: QuerySpec, tomb, dl_get, batches):
     must sit in this one partition (scan-aligned files, else the plan
     repartitions by block_id first).
 
-    Single-term rows score independently, so they stream batch by
-    batch. Phrases and OR-combine must see every query term of a block
-    at once: the partition's batches are concatenated first (bounded:
-    only the query terms' rows are in the scan). With per_token_topk,
-    each token's top-k over the whole partition leaves the task, so the
-    driver merges at most k x tokens x partitions rows."""
+    Single-term rows score independently, so they stream: each batch's
+    rows (with per_token_topk, each token's top-k of the batch) leave
+    the task as soon as the batch is scored, so the driver merges at
+    most k x tokens rows per batch. Phrases and OR-combine must see
+    every query term of a block at once: the partition's batches are
+    concatenated first (bounded: only the query terms' rows are in the
+    scan)."""
     if spec.or_combine or any(len(t) > 1 for t in spec.tokens):
         batches = [pdf for pdf in batches if len(pdf)]
         if len(batches) > 1:
             batches = [pd.concat(batches)]
-    outs: list = []
     for pdf in batches:
-        outs += score_blocks(spec, tomb, dl_get, _frame_blocks(pdf))
-        if outs and spec.per_token_topk is None:
-            yield hits_frame(outs)
-            outs = []
-    if outs:
-        yield hits_frame(outs, spec.per_token_topk)
+        held = score_blocks(spec, tomb, dl_get, _frame_blocks(pdf))
+        if held:
+            yield hits_frame(held)

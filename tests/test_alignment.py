@@ -156,7 +156,7 @@ def test_misaligned_index_falls_back_and_stays_correct(spark, tmp_path,
     bad = SearchIndex(spark, bad_path)
     # the driver-local path reads whole files and is immune to row-group
     # misalignment; pin the distributed scan — IT is what's under test
-    bad._local_ok = False
+    bad.LOCAL_QUERY_MAX_BYTES = bad.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     assert bad._files_aligned() is False  # recorded flag
     assert _phrase_rows(bad, ["aaa", "zzz"]) == truth  # repartitioned
 

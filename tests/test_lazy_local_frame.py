@@ -80,7 +80,8 @@ def test_query_results_identical_lazy_vs_distributed(spark, tmp_path):
                          doc_id_col="doc_id", docs_per_block=64)
     lazy_rows = idx.top_k("w3", k=7).collect()
     idx2 = sa.SearchIndex(spark, str(tmp_path / "idx"))
-    idx2._local_ok = False  # force the distributed plan
+    # force the distributed plan through the handle's local caps
+    idx2.LOCAL_QUERY_MAX_BYTES = idx2.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     dist_rows = idx2.top_k("w3", k=7).collect()
     assert lazy_rows == dist_rows
 

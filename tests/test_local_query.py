@@ -124,12 +124,24 @@ def test_shape_aware_local_gate(spark, tmp_path):
     idx.LOCAL_QUERY_EXTENDED_MAX_BYTES = 1 << 30
     assert idx._local_query_ok(extended=True)
     assert not idx._local_query_ok()
-    # non-slop: local (lazy frame, no jobs); slop: distributed
-    from searcharray_spark.index import _LazyLocalFrame
-    t = idx.top_k("alpha", k=5)
-    assert isinstance(t, _LazyLocalFrame)
-    s = idx.top_k(["alpha", "beta"], k=5, slop=1)
-    assert not isinstance(s, _LazyLocalFrame)
+    # non-slop: local (no jobs); slop: distributed. top_k is eager and
+    # driver-held on both routes, so the route shows in the job count
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    t, t_jobs = jobs("gate-term", lambda: idx.top_k("alpha", k=5))
+    assert t_jobs == 0
+    s, s_jobs = jobs("gate-slop",
+                     lambda: idx.top_k(["alpha", "beta"], k=5, slop=1))
+    assert s_jobs >= 1
     # results identical to an all-local handle
     idx2 = sa.SearchIndex(spark, str(tmp_path / "gate_idx"))
     assert sorted(map(tuple, s.collect())) == \

@@ -18,8 +18,7 @@ from searcharray_spark import build_index
 from searcharray_spark.index import SearchIndex
 
 # 40 copies of each text: a term's docs tie on score, so ranks past the
-# first few are decided by doc_id; 240 docs / 16 per block = 15 blocks,
-# at most one top_k_pruned chunk (one job)
+# first few are decided by doc_id; 240 docs / 16 per block = 15 blocks
 DOCS = (["foo bar bar baz", "data2 foo", "data3 bar baz qux",
          "bunny funny wunny", "foo baz foo bar baz", "qux qux bar"] * 40)
 WARM = "data2"  # first query of every handle; no checked query uses it
@@ -97,8 +96,27 @@ def test_pruned_no_match_is_driver_held(spark, idx_path):
     idx = _distributed(spark, idx_path, cached=False)
     out, jobs = _jobs(spark, lambda: idx.top_k_pruned(["nope", "nada"], k=5))
     assert out.collect() == []
-    assert (out._wand_blocks_scanned, out._wand_blocks_total) == (0, 0)
     assert jobs == 0
+
+
+def test_pruned_many_blocks_runs_one_job(spark, tmp_path_factory):
+    """A pruned OR top-k over 150 blocks whose bounds are all equal (every
+    block holds the same texts): one Spark job on the distributed route,
+    the same rows as the driver-local route. (A driver loop that scored a
+    seed chunk of blocks first ran two jobs here.)"""
+    corpus = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(DOCS * 10)], "doc_id long, text string")
+    path = str(tmp_path_factory.mktemp("query_jobs_many") / "idx")
+    build_index(spark, corpus, path, doc_id_col="doc_id", docs_per_block=16)
+    local = SearchIndex(spark, path)
+    assert -(-len(DOCS * 10) // local.docs_per_block) >= 150
+    query = QUERIES["pruned_or3"]
+    want, local_jobs = _jobs(spark, lambda: query(local))
+    assert local_jobs == 0
+    idx = _distributed(spark, path, cached=False)
+    got, jobs = _jobs(spark, lambda: query(idx))
+    assert jobs == 1
+    assert got == want and got
 
 
 @pytest.mark.parametrize("aligned", [True, False],
@@ -152,3 +170,21 @@ def test_concurrent_cold_term_reads_share_one_handle(spark, idx_path):
     sketches = idx._term_sketches(terms)
     assert {t: (s.df if s is not None else 0)
             for t, s in sketches.items()} == want
+
+
+def test_single_term_top_k_merges_every_batch(spark, idx_path):
+    """Single-term scans stream: each Arrow batch's per-token top-k
+    leaves the task and the driver merges them. With one posting row per
+    batch, the distributed ranks still equal the driver-local route's."""
+    local = SearchIndex(spark, idx_path)
+    queries = ("term", "many")
+    want = [QUERIES[q](local) for q in queries]
+    idx = _distributed(spark, idx_path, cached=False)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        got = [QUERIES[q](idx) for q in queries]
+    finally:
+        spark.conf.set(key, old)
+    assert got == want

@@ -49,7 +49,7 @@ def test_file_uri_end_to_end(spark, idx_path, monkeypatch):
     # distributed path: executor-side side-input loaders get file:// URIs
     # through _doclens_file_ranges / scan_doclens_ranges
     dist = SearchIndex(spark, "file://" + idx_path)
-    dist._local_ok = False
+    dist.LOCAL_QUERY_MAX_BYTES = dist.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     assert dist._files_aligned() is True  # recorded flag, read over the URI
     assert _snap(dist) == want
 

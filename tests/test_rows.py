@@ -38,10 +38,8 @@ def surface_index(request, rows_index, monkeypatch):
     """The same index through both execution paths."""
     if request.param == "spark":
         monkeypatch.setattr(SearchIndex, "LOCAL_QUERY_MAX_DOCS", -1)
-        monkeypatch.setattr(rows_index, "_local_ok", None, raising=False)
         assert rows_index._local_query_ok() is False
     else:
-        monkeypatch.setattr(rows_index, "_local_ok", None, raising=False)
         assert rows_index._local_query_ok() is True
     return rows_index
 
@@ -117,7 +115,6 @@ def test_doc_major_zero_shuffle_when_aligned(rows_index, monkeypatch):
     the postings table when files are scan-aligned (whole blocks per
     scan task); doc bags combine map-side."""
     monkeypatch.setattr(SearchIndex, "LOCAL_QUERY_MAX_DOCS", -1)
-    monkeypatch.setattr(rows_index, "_local_ok", None, raising=False)
     assert rows_index._files_aligned()
     plan = rows_index.doc_termfreqs() \
         ._jdf.queryExecution().executedPlan().toString()
@@ -129,7 +126,6 @@ def test_doc_major_unaligned_repartitions_by_block(rows_index, monkeypatch):
     by block_id before the same per-block kernel: one exchange, no
     grouped applyInPandas, the same rows."""
     monkeypatch.setattr(SearchIndex, "LOCAL_QUERY_MAX_DOCS", -1)
-    monkeypatch.setattr(rows_index, "_local_ok", None, raising=False)
     want = sorted(tuple(r) for r in rows_index.doc_termfreqs().collect())
     monkeypatch.setattr(rows_index, "_aligned", False, raising=False)
     frame = rows_index.doc_termfreqs()

@@ -204,7 +204,8 @@ def test_classic_similarity_golden(canonical_index):
     assert np.isclose(scores, [1.1902692, 0.0, 1.1902692, 0.0] * 25).all()
 
 
-def test_custom_similarity_pruned_topk_rank_identical(canonical_index):
+def test_custom_similarity_pruned_topk_rank_identical(canonical_index,
+                                                     monkeypatch):
     """A custom similarity WITHOUT the monotone_bounds flag must not be
     pruned with default-BM25 bounds (they'd be unsound for k1=10): the
     exhaustive fallback path must produce ranks identical to score()."""
@@ -214,16 +215,18 @@ def test_custom_similarity_pruned_topk_rank_identical(canonical_index):
                                             similarity=custom) \
         .groupBy("doc_id").agg(F.sum("score").alias("score")) \
         .orderBy(F.desc("score"), F.asc("doc_id")).limit(5).collect()
-    pruned = canonical_index.top_k_pruned(["bar", "foo"], k=5,
-                                          similarity=custom)
-    assert pruned._wand_blocks_scanned == -1  # pruning did NOT run
-    got = pruned.collect()
+    bounds_calls = []
+    monkeypatch.setattr(canonical_index, "_block_bounds",
+                        lambda *a, **kw: bounds_calls.append(a))
+    got = canonical_index.top_k_pruned(["bar", "foo"], k=5,
+                                       similarity=custom).collect()
+    assert bounds_calls == []  # pruning did NOT run
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exhaustive]
     assert np.allclose([r["score"] for r in got],
                        [r["score"] for r in exhaustive])
 
 
-def test_flagged_custom_similarity_is_pruned(canonical_index):
+def test_flagged_custom_similarity_is_pruned(canonical_index, monkeypatch):
     """A custom similarity CARRYING monotone_bounds=True gets real WAND
     pruning with bounds computed from ITSELF (not default BM25) and stays
     rank-identical."""
@@ -233,17 +236,18 @@ def test_flagged_custom_similarity_is_pruned(canonical_index):
                                             similarity=custom) \
         .groupBy("doc_id").agg(F.sum("score").alias("score")) \
         .orderBy(F.desc("score"), F.asc("doc_id")).limit(5).collect()
-    # the driver-local path skips WAND on tiny indexes; pin the
-    # distributed path — the pruning machinery is what's under test
-    prev = (canonical_index._local_ok,
-            getattr(canonical_index, "_local_ok_ext", None))
-    canonical_index._local_ok = False
-    canonical_index._local_ok_ext = False
-    try:
-        pruned = canonical_index.top_k_pruned(["bar", "foo"], k=5,
-                                              similarity=custom)
-        assert pruned._wand_blocks_scanned >= 0  # pruning ran
-        got = pruned.collect()
-    finally:
-        canonical_index._local_ok, canonical_index._local_ok_ext = prev
+    # pin the distributed route through the handle's local caps
+    monkeypatch.setattr(canonical_index, "LOCAL_QUERY_MAX_BYTES", 0)
+    monkeypatch.setattr(canonical_index, "LOCAL_QUERY_EXTENDED_MAX_BYTES", 0)
+    real = canonical_index._block_bounds
+    bounds_calls = []
+
+    def recording(tokens, sim_fn, **kw):
+        bounds_calls.append(sim_fn)
+        return real(tokens, sim_fn, **kw)
+
+    monkeypatch.setattr(canonical_index, "_block_bounds", recording)
+    got = canonical_index.top_k_pruned(["bar", "foo"], k=5,
+                                       similarity=custom).collect()
+    assert bounds_calls == [custom]  # pruning ran, with ITS bounds
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exhaustive]

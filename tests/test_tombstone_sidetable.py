@@ -56,7 +56,7 @@ def test_sidetable_matches_dict_mode(spark, idx_path, monkeypatch):
 
     # distributed path too (executor-side reader get)
     dist = SearchIndex(spark, idx_path)
-    dist._local_ok = False
+    dist.LOCAL_QUERY_MAX_BYTES = dist.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     assert isinstance(dist._tombstones(), TombstoneReader)
     assert _snapshot(dist) == want
 

@@ -4,6 +4,16 @@ import numpy as np
 import pytest
 
 from searcharray_spark import build_index
+from searcharray_spark import query_kernel as QK
+from searcharray_spark import similarity as sim_mod
+from searcharray_spark.index import SearchIndex
+
+
+def _distributed(idx):
+    """Force the distributed route through the handle's local caps."""
+    idx.LOCAL_QUERY_MAX_BYTES = 0
+    idx.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
+    return idx
 
 
 @pytest.fixture(scope="module")
@@ -22,16 +32,15 @@ def skewed_index(spark, tmp_path_factory):
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
     idx = build_index(spark, df, str(tmp_path_factory.mktemp("wand") / "idx"),
                       doc_id_col="doc_id", docs_per_block=100)
-    # this corpus is small enough for the driver-local query path, which
-    # skips WAND entirely; pin the distributed path — WAND's chunked
-    # pruning is exactly what this module tests
-    idx._local_ok = False
-    return idx
+    # this corpus is small enough for the driver-local route; the rank
+    # identity cases pin the distributed one (the pruning cases below
+    # count blocks on a driver-local handle: both routes share the kernel)
+    return _distributed(idx)
 
 
 @pytest.mark.parametrize("term,k", [("target", 5), ("target", 10),
                                     ("filler", 10), ("a", 3),
-                                    ("missing_term", 5)])
+                                    ("missing_term", 5), ("target", 0)])
 def test_pruned_topk_rank_identical(skewed_index, term, k):
     exact = [(r["doc_id"], r["score"])
              for r in skewed_index.top_k(term, k=k).collect()]
@@ -40,17 +49,61 @@ def test_pruned_topk_rank_identical(skewed_index, term, k):
     assert pruned == exact, (term, k)
 
 
-def test_pruning_actually_prunes(skewed_index):
-    out = skewed_index.top_k_pruned("target", k=5)
-    out.collect()
-    assert out._wand_blocks_scanned < out._wand_blocks_total, (
-        out._wand_blocks_scanned, out._wand_blocks_total)
+def _blocks_scored(monkeypatch, idx, terms, k):
+    """(blocks the kernel scored, blocks with a bound) for one pruned
+    top-k query on ``idx``."""
+    scored = []
+    real = QK.score_block
+
+    def counting(spec, block_id, *args, **kwargs):
+        scored.append(block_id)
+        return real(spec, block_id, *args, **kwargs)
+
+    monkeypatch.setattr(QK, "score_block", counting)
+    idx.top_k_pruned(terms, k=k).collect()
+    bounds = idx._block_bounds([[t] for t in terms], sim_mod.resolve(None))
+    return len(scored), len({b for bl, _ in bounds for b in bl.tolist()})
+
+
+def test_pruned_k0_is_empty_on_the_local_route(spark, skewed_index):
+    """k=0 leaves no held row to take a running kth score from."""
+    local = SearchIndex(spark, skewed_index.path)
+    assert local._local_query_ok(extended=True)
+    for terms in ("target", ["target", "a"]):
+        assert local.top_k_pruned(terms, k=0).collect() == []
+
+
+def test_running_cut_after_every_block_keeps_ranks(spark, skewed_index,
+                                                   monkeypatch):
+    """The running top-k cuts its held rows only past QK._CUT_ROWS;
+    cutting after every one of the 20 blocks gives the same rows, with
+    and without block bounds."""
+    local = SearchIndex(spark, skewed_index.path)
+    queries = (lambda i: i.top_k("filler", k=5),
+               lambda i: i.top_k_many([["target"], ["a"],
+                                       ["target", "filler"]], k=7),
+               lambda i: i.top_k_pruned(["a", "b"], k=6),
+               lambda i: i.top_k_pruned(["a", "b"], k=6, similarity=(
+                   lambda *a: sim_mod.resolve(None)(*a))))
+    want = [q(local).collect() for q in queries]
+    monkeypatch.setattr(QK, "_CUT_ROWS", 0)
+    assert [q(local).collect() for q in queries] == want
+
+
+def test_pruning_actually_prunes(spark, skewed_index, monkeypatch):
+    """On the driver-local route the kernel stops at the first block
+    whose bound is below the running kth score."""
+    local = SearchIndex(spark, skewed_index.path)
+    assert local._local_query_ok(extended=True)
+    scored, bounded = _blocks_scored(monkeypatch, local, ["target"], 5)
+    assert 0 < scored < bounded, (scored, bounded)
 
 
 @pytest.mark.parametrize("terms,k", [(["target", "a"], 5),
                                      (["target", "filler", "b"], 10),
                                      (["a", "b", "c"], 7),
-                                     (["missing", "target"], 5)])
+                                     (["missing", "target"], 5),
+                                     (["target", "a"], 0)])
 def test_pruned_topk_multiterm_rank_identical(skewed_index, terms, k):
     """Multi-term OR top-k (MaxScore-style block bounds) must be
     rank-identical to exhaustive search_or scoring."""
@@ -72,11 +125,11 @@ def test_pruned_topk_phrase_rank_identical(skewed_index):
     assert pruned == exact
 
 
-def test_multiterm_pruning_actually_prunes(skewed_index):
-    out = skewed_index.top_k_pruned(["target", "a"], k=5)
-    out.collect()
-    assert out._wand_blocks_scanned < out._wand_blocks_total, (
-        out._wand_blocks_scanned, out._wand_blocks_total)
+def test_multiterm_pruning_actually_prunes(spark, skewed_index, monkeypatch):
+    local = SearchIndex(spark, skewed_index.path)
+    assert local._local_query_ok(extended=True)
+    scored, bounded = _blocks_scored(monkeypatch, local, ["target", "a"], 5)
+    assert 0 < scored < bounded, (scored, bounded)
 
 
 def test_bounds_cache_not_keyed_by_id_reuse(skewed_index):
@@ -119,7 +172,7 @@ def test_unhashable_similarity_skips_cache(skewed_index):
 def test_maxscore_kernel_split_rank_identical(spark, tmp_path):
     """Force the term-level MaxScore split (hot non-essential terms vs a
     rare high-scoring one) and check rank identity + that the kernel
-    path actually engages (theta known after seed, hot terms
+    path actually engages (theta known once k docs are held, hot terms
     semi-joined)."""
     import numpy as np
     rng = np.random.default_rng(11)
@@ -134,7 +187,7 @@ def test_maxscore_kernel_split_rank_identical(spark, tmp_path):
                                "doc_id long, text string")
     idx = build_index(spark, df, str(tmp_path / "ms"),
                       doc_id_col="doc_id", docs_per_block=64)
-    idx._local_ok = False  # distributed path: MaxScore is kernel-side
+    _distributed(idx)
     from pyspark.sql import functions as F
     for terms in (["needle", "hot"], ["needle", "hot", "warm"],
                   ["hot", "warm"]):
