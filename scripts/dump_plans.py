@@ -48,11 +48,9 @@ def main() -> int:
                      "then repartition by block_id before the same "
                      "mapInPandas kernel)",
                      plan(idx.score("common", candidates=cand))))
-    side = SearchIndex(spark, path)
-    side.DOCLENS_BROADCAST_MAX_DOCS = 0
     sections.append(("PLAN 5d: side-input doclens (big corpus) — phrase, "
                      "still zero shuffle, no doclens scan/exchange",
-                     plan(side.score(["common", "w3"]))))
+                     plan(idx.score(["common", "w3"]))))
     sections.append(("PLAN 6: multi-term OR with kernel-side combine — "
                      "per-doc sums inside the kernel, top-k straight off "
                      "the scan, NO exchange",

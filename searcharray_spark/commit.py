@@ -6,7 +6,6 @@ written last:
   index tables (build, merge, compaction,      meta.json
   update segment)
   one group of a checkpointed build            _groups/group_{g}_of_{G}.done
-  the packed tombstone side table              _rows.json
   one mutation epoch (delete/update_docs)      stats_log/epoch_{E}.json
 
 ``begin`` opens a directory for a writer: it checks the store, drops
@@ -16,8 +15,9 @@ owner left there. Files then land under their final names — a parquet
 file via a hidden temp name plus rename, so retried executor tasks are
 idempotent — and ``publish`` / ``write_json`` land the marker. Readers
 trust only markers: a table directory without its ``meta.json`` does
-not open, and tombstone rows and update segments count only for epochs
-with a ``stats_log`` record (SearchIndex).
+not open, and tombstone files and update segments count only for
+epochs with a ``stats_log`` record (SearchIndex); the next mutation
+deletes those of an epoch without one before it writes.
 
 Every write goes through ``pyarrow.fs`` resolved from the path or URI
 (``fsutil.resolve``); the protocol needs an atomic rename, so a store
@@ -67,8 +67,7 @@ def begin(path: str, marker: str = "meta.json",
     for name in fsutil.listdir(path):
         if name in keep:
             continue
-        if (name in OWNED or name.startswith("tombstones_packed")
-                or name.endswith(".tmp")):
+        if name in OWNED or name.endswith(".tmp"):
             delete(fsutil.join(path, name))
 
 

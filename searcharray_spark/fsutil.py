@@ -86,6 +86,55 @@ def list_parquet_files(root: str) -> List[Tuple[str, int]]:
     return [(p, int(info.size)) for p, info in parquet_file_infos(root)]
 
 
+# footer_ranges results by (path, size, mtime_ns, columns): a rescan of a
+# growing directory (one tombstone file per mutation epoch) reads only the
+# footers of new or rewritten files. Emptied when full (single dict
+# operations, so concurrent driver threads need no lock).
+_FOOTER_CACHE: dict = {}
+_FOOTER_CACHE_MAX = 1 << 16
+
+
+def footer_ranges(root: str, columns: Tuple[str, ...]) -> list:
+    """[(path, (size, mtime_ns), {column: (min, max)})] for every parquet
+    file with rows under root, from footer statistics (a column a writer
+    left without them is read instead); no data pages are read. The
+    (size, mtime_ns) stamp is the listing's, the key side-table caches
+    use for the file's content."""
+    out = []
+    for p, info in parquet_file_infos(root):
+        stamp = (int(info.size), int(info.mtime_ns))
+        key = (p, stamp, columns)
+        rng = _FOOTER_CACHE.get(key)
+        if rng is None:
+            rng = _file_ranges(p, columns)
+            if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
+                _FOOTER_CACHE.clear()
+            _FOOTER_CACHE[key] = rng
+        if rng:
+            out.append((p, stamp, rng))
+    return out
+
+
+def _file_ranges(path: str, columns) -> dict:
+    md = parquet_file(path).metadata
+    if md.num_rows == 0:
+        return {}
+    names = [md.schema.column(i).path for i in range(md.num_columns)]
+    out = {}
+    for c in columns:
+        ci = names.index(c)
+        stats = [md.row_group(g).column(ci).statistics
+                 for g in range(md.num_row_groups)]
+        if all(s is not None and s.has_min_max for s in stats):
+            out[c] = (min(int(s.min) for s in stats),
+                      max(int(s.max) for s in stats))
+        else:
+            import pyarrow.compute as pc
+            mm = pc.min_max(read_parquet(path, columns=[c]).column(c))
+            out[c] = (int(mm["min"].as_py()), int(mm["max"].as_py()))
+    return out
+
+
 def read_parquet(path: str, columns=None, filters=None, **kw):
     """pyarrow table read that works for paths and URIs (file or dir)."""
     import pyarrow.parquet as pq

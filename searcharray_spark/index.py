@@ -19,9 +19,9 @@ Query execution model:
   scan partition, see ``_files_aligned``), so the plan has no exchange;
   on an unaligned layout, or after a ``candidates`` join, phrases and
   OR queries repartition the pruned rows by block_id first (one
-  exchange). Each block's packed doclens row comes from a session
-  broadcast (small corpora) or a per-task side-input read of the
-  co-partitioned doclens file (``DoclensReader``), never a cogroup,
+  exchange). Each block's packed doclens row and its tombstones are
+  side-input reads of the co-partitioned files covering the block
+  (``SideReader``) on every route, never a broadcast or a cogroup,
 - block pruning and WAND bounds are driver math over per-term sketches
   (``TermSketch``) read once per term from term_stats with pyarrow:
   only the row groups whose term range holds a queried term are read,
@@ -37,6 +37,7 @@ Query execution model:
 """
 from __future__ import annotations
 
+import threading
 from typing import Iterable, List, Optional, Sequence, Union
 
 import numpy as np
@@ -331,163 +332,152 @@ def _token_blocks(sketches, cap: int) -> Optional[np.ndarray]:
     return blocks[mask]
 
 
-# --- side-input doclens (co-partitioned with postings by block range) ----
+# --- side-input doclens and tombstones (block-range-partitioned files) ---
 
-# Process-wide side-table file caches, keyed by (path, stamp): stamp is
-# the file's (size, mtime) from the driver's listing (scan_doclens_ranges).
-# Builds reuse file names (part-00000.parquet), so a file rewritten at the
-# same path must be a new key, not the old file's decoded content.
-_DL_FILE_CACHE: "dict[tuple, dict]" = {}
-_DL_FILE_CACHE_MAX = 64
+# Tombstone rows per file: a larger epoch is written as several files
+# range-partitioned by doc_id, so a task resolving one block of a mass
+# delete decodes a bounded slice (SearchIndex._write_tombstones).
+TOMBSTONE_FILE_ROWS = 1 << 20
+
+# Process-wide cache of decoded side-table files, keyed by (path, stamp):
+# stamp is the file's (size, mtime_ns) from the driver's listing. Builds
+# reuse file names (part-00000.parquet), so a file rewritten at the same
+# path must be a new key, not the old file's decoded content. Python
+# workers are reused across tasks and queries, so each process decodes a
+# file once; past the byte budget the oldest entries are dropped.
+_SIDE_FILE_CACHE: "dict[tuple, tuple]" = {}
+_SIDE_FILE_CACHE_MAX_BYTES = 256 << 20
+_side_file_cache_bytes = 0
+_side_file_cache_lock = threading.Lock()  # driver queries may be threaded
 
 
-def _load_doclens_file(path: str, stamp: tuple) -> dict:
-    """Read one doclens parquet file -> {block_id: (ids_bytes, lens_bytes)}.
-    Process-wide cache: python workers are reused across tasks/queries, so
-    each executor decodes a doclens file once, not per task."""
-    key = (path, stamp)
-    hit = _DL_FILE_CACHE.get(key)
-    if hit is not None:
-        return hit
+def _decode_doclens(path: str, docs_per_block) -> tuple:
+    """({block_id: (ids_bytes, lens_bytes)}, bytes) of one doclens file."""
     tbl = fsutil.read_parquet(path,
                               columns=["block_id", "doc_ids", "doc_lens"])
-    out = {}
-    for b, i, ln in zip(tbl.column("block_id").to_pylist(),
-                        tbl.column("doc_ids").to_pylist(),
-                        tbl.column("doc_lens").to_pylist()):
-        out[int(b)] = (i, ln)
-    if len(_DL_FILE_CACHE) >= _DL_FILE_CACHE_MAX:
-        _DL_FILE_CACHE.pop(next(iter(_DL_FILE_CACHE)))
-    _DL_FILE_CACHE[key] = out
-    return out
+    return {int(b): (i, ln) for b, i, ln in zip(
+        tbl.column("block_id").to_pylist(),
+        tbl.column("doc_ids").to_pylist(),
+        tbl.column("doc_lens").to_pylist())}, tbl.nbytes
 
 
-_TOMB_FILE_CACHE: dict = {}
-_TOMB_FILE_CACHE_MAX = 64
+def _decode_tombstones(path: str, docs_per_block: int) -> tuple:
+    """({block_id: sorted unique local doc ids}, bytes) of one tombstone
+    file (every file holds one epoch's rows)."""
+    ids = np.unique(fsutil.read_parquet(path, columns=["doc_id"])
+                    .column("doc_id").to_numpy().astype(np.int64))
+    blocks = ids // docs_per_block
+    cuts = np.flatnonzero(np.diff(blocks)) + 1
+    return {int(b[0]): lid % docs_per_block for b, lid in zip(
+        np.split(blocks, cuts), np.split(ids, cuts))}, ids.nbytes
 
 
-def _load_tomb_file(path: str, stamp: tuple) -> dict:
-    """Read one packed-tombstone parquet file ->
-    {block_id: (local doc_ids int64, segs int64)}; process-wide cache
-    (same executor-reuse rationale as _load_doclens_file)."""
+def _load_side_file(kind: str, path: str, stamp: tuple,
+                    docs_per_block: Optional[int]) -> dict:
+    """One side-table file's decoded {block_id: row}, through the
+    process-wide cache."""
+    global _side_file_cache_bytes
     key = (path, stamp)
-    hit = _TOMB_FILE_CACHE.get(key)
+    hit = _SIDE_FILE_CACHE.get(key)
     if hit is not None:
-        return hit
-    tbl = fsutil.read_parquet(path, columns=["block_id", "doc_ids", "segs"])
-    out = {}
-    for b, i, s in zip(tbl.column("block_id").to_pylist(),
-                       tbl.column("doc_ids").to_pylist(),
-                       tbl.column("segs").to_pylist()):
-        out[int(b)] = (np.frombuffer(i, dtype="<i8"),
-                       np.frombuffer(s, dtype="<i8"))
-    if len(_TOMB_FILE_CACHE) >= _TOMB_FILE_CACHE_MAX:
-        _TOMB_FILE_CACHE.pop(next(iter(_TOMB_FILE_CACHE)))
-    _TOMB_FILE_CACHE[key] = out
+        return hit[1]
+    out, size = _DECODERS[kind](path, docs_per_block)
+    with _side_file_cache_lock:
+        while _SIDE_FILE_CACHE and (_side_file_cache_bytes + size
+                                    > _SIDE_FILE_CACHE_MAX_BYTES):
+            _side_file_cache_bytes -= _SIDE_FILE_CACHE.pop(
+                next(iter(_SIDE_FILE_CACHE)))[0]
+        if key not in _SIDE_FILE_CACHE:
+            _SIDE_FILE_CACHE[key] = (size, out)
+            _side_file_cache_bytes += size
     return out
 
 
-class TombstoneReader:
-    """Side-input tombstone lookup for mass deletes: above the driver
-    cap the tombstone set lives in a block-range-partitioned parquet
-    side table (tombstones_packed/) and kernels resolve a block's
-    tombstones by reading only the file covering it — the DoclensReader
-    pattern — instead of a driver dict + broadcast that grows
-    O(deletes) on the driver. Same .get(block) -> (local_ids, segs)
-    contract as the dict."""
+def _patch_tombstones(rows) -> tuple:
+    """(sorted unique local ids, max seg per id) over (seg, local ids)
+    rows: a doc's newest tombstone wins."""
+    if len(rows) == 1:
+        seg, ids = rows[0]
+        return ids, np.full(len(ids), seg, dtype=np.int64)
+    ids = np.concatenate([r[1] for r in rows])
+    segs = np.repeat(np.asarray([r[0] for r in rows], dtype=np.int64),
+                     [len(r[1]) for r in rows])
+    order = np.lexsort((segs, ids))
+    ids, segs = ids[order], segs[order]
+    last = np.append(np.flatnonzero(np.diff(ids)), len(ids) - 1)
+    return ids[last], segs[last]
 
-    def __init__(self, ranges):
-        self.ranges = ranges  # [(path, lo_block, hi_block, stamp)]
+
+def _patch_doclens_rows(rows) -> tuple:
+    if len(rows) == 1:
+        return rows[0][1]
+    ids, lens = patch_doclens((seg, i, ln) for seg, (i, ln) in rows)
+    return ids.astype("<i8").tobytes(), lens.astype("<f4").tobytes()
+
+
+_DECODERS = {"doclens": _decode_doclens, "tombstones": _decode_tombstones}
+_PATCHERS = {"doclens": _patch_doclens_rows, "tombstones": _patch_tombstones}
+
+
+class SideReader:
+    """Block -> side-table lookup, read per block from the files whose
+    footer block range covers it: no broadcast, no shuffle, and O(files)
+    bytes in a task closure at any corpus size.
+
+    Doclens and tombstone files are range-partitioned by block like the
+    postings, so a kernel reads only the file(s) covering its block
+    (ranges resolved once on the driver, decoded files cached per
+    process). ``ranges`` is [(seg, path, lo_block, hi_block, stamp)] in
+    seg order. ``get(block)`` returns, for ``doclens``, the block's
+    (ids bytes, lens bytes) with update segments patched by seg
+    priority (``patch_doclens``); for ``tombstones``, (sorted local
+    ids, max seg per id), the contract ``query_kernel.tombstoned``
+    reads. None for a block no file holds."""
+
+    def __init__(self, kind: str, ranges,
+                 docs_per_block: Optional[int] = None):
+        self.kind = kind
+        self.ranges = ranges
+        self.docs_per_block = docs_per_block
 
     def __bool__(self) -> bool:
         return bool(self.ranges)
 
-    def get(self, block_id: int):
-        for path, lo, hi, stamp in self.ranges:
-            if lo <= block_id <= hi:
-                row = _load_tomb_file(path, stamp).get(int(block_id))
-                if row is not None:
-                    return row
-        return None
-
-
-def _parquet_row_count(root: str) -> int:
-    """Total rows under a parquet dir from footers only (no data read);
-    path or URI (fsutil)."""
-    return sum(fsutil.parquet_file(f).metadata.num_rows
-               for f, _ in fsutil.list_parquet_files(root))
-
-
-def scan_doclens_ranges(sources) -> list:
-    """[(seg, file, min_block, max_block, stamp)] for every parquet file
-    under each (seg, root) source, from parquet footer stats —
-    driver-side, O(files) footer reads, no data read. The block->file
-    map DoclensReader side-input lookups use (query path and compaction
-    both); stamp is the listing's (size, mtime), the file caches' key."""
-    out = []
-    for seg, root in sources:
-        for p, info in fsutil.parquet_file_infos(root):
-                md = fsutil.parquet_file(p).metadata
-                lo = hi = None
-                for rg in range(md.num_row_groups):
-                    row_grp = md.row_group(rg)
-                    for ci in range(row_grp.num_columns):
-                        col = row_grp.column(ci)
-                        if col.path_in_schema != "block_id":
-                            continue
-                        st = col.statistics
-                        if st is not None and st.has_min_max:
-                            lo = int(st.min) if lo is None else min(lo, int(st.min))
-                            hi = int(st.max) if hi is None else max(hi, int(st.max))
-                if lo is None:  # stats disabled: read the tiny column
-                    ids = fsutil.read_parquet(p, columns=["block_id"]) \
-                        .column(0).to_pylist()
-                    if not ids:
-                        continue
-                    lo, hi = int(min(ids)), int(max(ids))
-                out.append((seg, p, lo, hi, (info.size, info.mtime_ns)))
-    return out
-
-
-class DoclensReader:
-    """Executor-side doclens lookup without broadcast or shuffle.
-
-    Doclens files are range-partitioned by block_id exactly like the
-    postings (indexing.py), so a kernel task resolves a block's packed
-    doclens by reading ONLY the file(s) whose footer block range covers
-    it (ranges resolved once on the driver). At 100 TB this reads a few
-    MB per task instead of broadcasting GBs of doclens to every worker.
-    Update segments patch by seg priority, same as the broadcast path.
-    """
-
-    def __init__(self, ranges):
-        # [(seg, path, lo_block, hi_block, stamp)], base seg first
-        self.ranges = ranges
-
-    def get(self, block_id: int):
-        rows = []
+    def rows(self, block_id: int) -> list:
+        """[(seg, row)] of every file holding ``block_id``, seg order:
+        (ids bytes, lens bytes) doclens rows, or tombstoned local ids."""
+        b = int(block_id)
+        out = []
         for seg, path, lo, hi, stamp in self.ranges:
-            if lo <= block_id <= hi:
-                row = _load_doclens_file(path, stamp).get(block_id)
+            if lo <= b <= hi:
+                row = _load_side_file(self.kind, path, stamp,
+                                      self.docs_per_block).get(b)
                 if row is not None:
-                    rows.append((seg, row[0], row[1]))
-        if not rows:
-            return None
-        if len(rows) == 1:
-            return rows[0][1], rows[0][2]
-        ids, lens = patch_doclens(rows)
-        return ids.astype("<i8").tobytes(), lens.astype("<f4").tobytes()
-
-
-class _BroadcastDoclens:
-    """DoclensReader's ``.get`` over the session broadcast of the packed
-    doclens table (small corpora)."""
-
-    def __init__(self, bc):
-        self.bc = bc
+                    out.append((seg, row))
+        return out
 
     def get(self, block_id: int):
-        return self.bc.value.get(block_id)
+        rows = self.rows(block_id)
+        return _PATCHERS[self.kind](rows) if rows else None
+
+    def blocks(self, cap: int) -> Optional[List[int]]:
+        """Every block some file's range covers (a superset of the
+        blocks holding rows), or None past ``cap`` blocks."""
+        out: set = set()
+        for _seg, _p, lo, hi, _stamp in self.ranges:
+            if hi - lo >= cap:
+                return None
+            out.update(range(lo, hi + 1))
+            if len(out) > cap:
+                return None
+        return sorted(out)
+
+
+def doclens_reader(sources) -> SideReader:
+    """SideReader over the doclens files of each (seg, root) source."""
+    return SideReader("doclens", [
+        (seg, p, *r["block_id"], stamp) for seg, root in sources
+        for p, stamp, r in fsutil.footer_ranges(root, ("block_id",))])
 
 
 def _normalize_token(token: TokenArg) -> List[str]:
@@ -545,7 +535,7 @@ class SearchIndex:
         self._df_cache: dict = {}
         self._sketch_cache: dict = {}
         self._bounds_cache: dict = {}
-        self._dl_ranges: list | None = None
+        self._dl_reader: SideReader | None = None
         # cache() results; the plain reader frames are memoized apart so
         # an uncached table is schema-inferred (one Spark job) once per
         # handle, not once per query
@@ -653,11 +643,14 @@ class SearchIndex:
     # base rows are seg 0) contributes a doc iff no tombstone for that
     # doc has seg > row.seg — so an update kills older content and its
     # own rows survive, and re-adding a deleted doc resurrects it.
-    # The epoch commits when its record stats_log/epoch_E.json lands,
-    # last (commit.py): tombstone rows and segments of an epoch without
-    # a record are invisible, and its number is never reused. Corpus
-    # stats (N, total tokens) are meta plus the committed records'
-    # exact deltas; per-term df is corrected at query time
+    # Every tombstone file holds one epoch's rows, so its footer names
+    # the epoch and its block range; readers resolve a block's
+    # tombstones from the files covering it (SideReader). The epoch
+    # commits when its record stats_log/epoch_E.json lands, last
+    # (commit.py): tombstone files and segments of an epoch without a
+    # record are invisible, and the next mutation deletes them before it
+    # writes. Corpus stats (N, total tokens) are meta plus the committed
+    # records' exact deltas; per-term df is corrected at query time
     # (_df_corrections).
 
     def _update_segs(self) -> List[int]:
@@ -666,130 +659,59 @@ class SearchIndex:
     def _epochs(self) -> List[int]:
         return [int(r["epoch"]) for r in self._log]
 
-    def _next_epoch(self) -> int:
-        """One past every epoch number in use, committed or not."""
-        tomb = 0
-        tpath = fsutil.join(self.path, "tombstones")
-        if fsutil.isdir(tpath):
-            # footer stats only (mass-delete logs can be huge); fall back
-            # to a column read for files without statistics
-            import pyarrow.compute as pc
-            mx = None
-            for fp, _sz in fsutil.list_parquet_files(tpath):
-                    md = fsutil.parquet_file(fp).metadata
-                    for rg in range(md.num_row_groups):
-                        row_grp = md.row_group(rg)
-                        for ci in range(row_grp.num_columns):
-                            col = row_grp.column(ci)
-                            if col.path_in_schema != "seg":
-                                continue
-                            st = col.statistics
-                            if st is not None and st.has_min_max:
-                                v = int(st.max)
-                            else:
-                                v = pc.max(fsutil.read_parquet(
-                                    fp, columns=["seg"]).column("seg")).as_py()
-                                v = int(v or 0)
-                            mx = v if mx is None else max(mx, v)
-            tomb = int(mx or 0)
-        segs = [int(d.split("=", 1)[1]) for d in fsutil.listdir(
-            fsutil.join(self.path, "updates")) if d.startswith("seg=")]
-        logged = [int(r["epoch"]) for r in self._stats_log()]
-        return max([tomb] + segs + logged) + 1
-
-    # above this many tombstone rows the driver dict + task-closure ship
-    # is replaced by the parquet side table (TombstoneReader): bounded
-    # driver memory no matter how much of the corpus is deleted
-    # incrementally (ROADMAP §8; ~32 MB of driver dict at the cap)
-    TOMBSTONE_DRIVER_MAX_ROWS = 2_000_000
-
-    def _tombstones(self):
-        """Tombstone lookup: {block_id: (sorted local doc_ids, parallel
-        max-seg array)} as a driver dict below TOMBSTONE_DRIVER_MAX_ROWS,
-        else a TombstoneReader over the block-partitioned side table
-        (same .get contract; kernels don't care which)."""
-        if getattr(self, "_tomb_cache", None) is not None:
-            return self._tomb_cache
-        tpath = fsutil.join(self.path, "tombstones")
-        out = {}
-        if fsutil.isdir(tpath):
-            n_rows = _parquet_row_count(tpath)
-            if n_rows > self.TOMBSTONE_DRIVER_MAX_ROWS:
-                out = self._tombstone_reader(n_rows)
-            else:
-                # bounded driver pyarrow read, no Spark job; only rows
-                # of the epochs this handle serves
-                pdf = fsutil.read_parquet(tpath).to_pandas()
-                pdf = pdf[pdf["seg"].isin(self._epochs())]
-                if len(pdf):
-                    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-                    segs = pdf["seg"].to_numpy(dtype=np.int64)
-                    blocks = ids // self.docs_per_block
-                    local = ids % self.docs_per_block
-                    order = np.lexsort((segs, local, blocks))
-                    blocks, local, segs = (blocks[order], local[order],
-                                           segs[order])
-                    # keep the max seg per doc (later ops win)
-                    for b in np.unique(blocks):
-                        m = blocks == b
-                        lid, sg = local[m], segs[m]
-                        starts = np.concatenate(
-                            ([0], np.flatnonzero(np.diff(lid)) + 1,
-                             [len(lid)]))
-                        u = lid[starts[:-1]]
-                        mx = np.maximum.reduceat(sg, starts[:-1])
-                        out[int(b)] = (u, mx)
-        self._tomb_cache = out
-        return out
-
-    def _tombstone_reader(self, n_rows: int) -> TombstoneReader:
-        """Side-table mode: (re)pack the committed tombstone rows into a
-        block-range-partitioned parquet table when stale (one Spark job
-        over O(deletes) rows), then hand out footer-resolved ranges.
-        The table's marker ``_rows.json`` records the raw log's row
-        count and the newest epoch packed; snapshot handles pack into
-        an as_of-suffixed dir."""
-        name = ("tombstones_packed" if self.as_of is None
-                else f"tombstones_packed_asof_{self.as_of}")
-        packed = fsutil.join(self.path, name)
-        marker = fsutil.join(packed, "_rows.json")
-        want = {"rows": n_rows, "epoch": max(self._epochs(), default=0)}
-        if not fsutil.exists(marker) or fsutil.read_json(marker) != want:
-            self._pack_tombstones(packed, want)
-        ranges = [(p, lo, hi, stamp) for _, p, lo, hi, stamp
-                  in scan_doclens_ranges([(0, packed)])]
-        return TombstoneReader(ranges)
-
-    def _pack_tombstones(self, packed: str, marker: dict) -> None:
+    def _tombstone_files(self) -> list:
+        """[(seg, path, lo_block, hi_block, stamp)] of every tombstone
+        file, committed or not, in seg order (footer stats only)."""
         dpb = self.docs_per_block
+        return sorted(
+            (r["seg"][1], p, r["doc_id"][0] // dpb, r["doc_id"][1] // dpb,
+             stamp)
+            for p, stamp, r in fsutil.footer_ranges(
+                fsutil.join(self.path, "tombstones"), ("doc_id", "seg")))
 
-        def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            b = int(key[0])
-            lid = pdf["doc_id"].to_numpy(dtype=np.int64) % dpb
-            seg = pdf["seg"].to_numpy(dtype=np.int64)
-            order = np.lexsort((seg, lid))
-            lid, seg = lid[order], seg[order]
-            starts = np.concatenate(
-                ([0], np.flatnonzero(np.diff(lid)) + 1, [len(lid)]))
-            u = lid[starts[:-1]]
-            mx = np.maximum.reduceat(seg, starts[:-1])
-            return pd.DataFrame({
-                "block_id": [b],
-                "doc_ids": [u.astype("<i8").tobytes()],
-                "segs": [mx.astype("<i8").tobytes()]})
+    def _begin_epoch(self) -> int:
+        """The next epoch number, one past every number in use (tombstone
+        files, update segment dirs, stats_log records), after deleting
+        the files of every epoch that has no stats_log record: a killed
+        mutation's leftovers. A number is reused only once no file of it
+        is left."""
+        files = self._tombstone_files()
+        seg_dirs = {int(d.split("=", 1)[1]): d for d in fsutil.listdir(
+            fsutil.join(self.path, "updates")) if d.startswith("seg=")}
+        logged = {int(r["epoch"]) for r in self._stats_log()}
+        epoch = max([f[0] for f in files] + list(seg_dirs)
+                    + list(logged) + [0]) + 1
+        for seg, p, *_ in files:
+            if seg not in logged:
+                commit.delete(p)
+        for seg, d in seg_dirs.items():
+            if seg not in logged:
+                commit.delete(fsutil.join(self.path, "updates", d))
+        return epoch
 
-        n_parts = max(4, self.spark.sparkContext.defaultParallelism)
-        commit.begin(packed, marker="_rows.json")
-        self.spark.read.parquet(fsutil.join(self.path, "tombstones")) \
-            .filter(F.col("seg").isin(self._epochs())) \
-            .withColumn("block_id",
-                        F.floor(F.col("doc_id") / F.lit(dpb)).cast("long")) \
-            .groupBy("block_id") \
-            .applyInPandas(pack, "block_id long, doc_ids binary, segs binary") \
-            .repartitionByRange(n_parts, "block_id") \
-            .sortWithinPartitions("block_id") \
-            .write.mode("overwrite").parquet(packed)
-        commit.write_json(fsutil.join(packed, "_rows.json"), marker)
+    def _tombstones(self) -> SideReader:
+        """The tombstone lookup (``query_kernel.tombstoned``): a
+        SideReader over the tombstone files of the epochs this handle
+        serves; falsy when there are none."""
+        if getattr(self, "_tomb_cache", None) is None:
+            served = set(self._epochs())
+            self._tomb_cache = SideReader(
+                "tombstones", [f for f in self._tombstone_files()
+                               if f[0] in served], self.docs_per_block)
+        return self._tomb_cache
+
+    def _write_tombstones(self, rows: DataFrame, n: int) -> None:
+        """Append one epoch's (doc_id, seg) ``rows`` (``n`` of them) to
+        the tombstone table: one file, or ceil(n / TOMBSTONE_FILE_ROWS)
+        files range-partitioned by doc_id, so each file covers a bounded
+        block range."""
+        if n > TOMBSTONE_FILE_ROWS:
+            rows = rows.repartitionByRange(
+                -(-n // TOMBSTONE_FILE_ROWS), "doc_id")
+        else:
+            rows = rows.coalesce(1)
+        rows.write.mode("append").parquet(
+            fsutil.join(self.path, "tombstones"))
 
     def delete_docs(self, doc_ids) -> None:
         """Tombstone docs: they stop matching every query immediately.
@@ -803,11 +725,10 @@ class SearchIndex:
         if not len(ids):
             return
         live, lens = self._live_lens(ids)
-        epoch = self._next_epoch()
-        df = self.spark.createDataFrame(
-            [(int(d), epoch) for d in ids.tolist()], "doc_id long, seg long")
-        df.coalesce(1).write.mode("append").parquet(
-            fsutil.join(self.path, "tombstones"))
+        epoch = self._begin_epoch()
+        self._write_tombstones(self.spark.createDataFrame(
+            [(int(d), epoch) for d in ids.tolist()], "doc_id long, seg long"),
+            len(ids))
         self._commit_epoch(epoch, "delete", -int(live.sum()),
                            -float(lens[live].sum()))
 
@@ -851,7 +772,7 @@ class SearchIndex:
         n_ids, live_n, live_len_sum = self._live_stats_for(docs)
         if n_ids == 0:
             return
-        epoch = self._next_epoch()
+        epoch = self._begin_epoch()
         seg_path = fsutil.join(self.path, "updates", f"seg={epoch}")
         build_index(self.spark, docs, seg_path, text_col=text_col,
                     doc_id_col="doc_id",
@@ -859,11 +780,10 @@ class SearchIndex:
                     else self.meta["tokenizer"],
                     docs_per_block=self.docs_per_block,
                     truncate=bool(self.meta.get("truncate", False)))
-        docs.select(F.col("doc_id").cast("long").alias("doc_id"),
-                    F.lit(epoch).cast("long").alias("seg")) \
-            .dropDuplicates(["doc_id"]) \
-            .coalesce(1).write.mode("append").parquet(
-                fsutil.join(self.path, "tombstones"))
+        self._write_tombstones(
+            docs.select(F.col("doc_id").cast("long").alias("doc_id"),
+                        F.lit(epoch).cast("long").alias("seg"))
+            .dropDuplicates(["doc_id"]), n_ids)
         seg_meta = self._seg_meta(epoch)
         self._commit_epoch(
             epoch, "update", int(seg_meta["num_docs"]) - live_n,
@@ -953,22 +873,17 @@ class SearchIndex:
         lens = np.zeros(len(ids), dtype=np.float32)
         blocks = ids // self.docs_per_block
         local = ids % self.docs_per_block
-        ranges = self._doclens_file_ranges()
+        doclens = self._doclens_lookup()
         tomb = self._tombstones()
         for b in np.unique(blocks):
             m = blocks == b
             tgt = local[m]
-            rows = []
-            for seg, path, lo, hi, stamp in ranges:
-                if lo <= b <= hi:
-                    row = _load_doclens_file(path, stamp).get(int(b))
-                    if row is not None:
-                        rows.append((seg, row[0], row[1]))
+            rows = doclens.rows(b)
             if not rows:
                 continue
             best_seg = np.full(len(tgt), -1, dtype=np.int64)
             best_len = np.zeros(len(tgt), dtype=np.float32)
-            for seg, ib, lb in sorted(rows, key=lambda r: r[0]):
+            for seg, (ib, lb) in rows:
                 di = np.frombuffer(ib, dtype="<i8")
                 if not len(di):
                     continue
@@ -1012,20 +927,20 @@ class SearchIndex:
                            for b, raw, seg in store.get(t, ()))
                    for t in terms}
             return {t: c for t, c in out.items() if c}
-        tomb_bc = self.spark.sparkContext.broadcast(tomb)
         posts = self.postings.filter(F.col("term").isin(list(terms)))
-        if isinstance(tomb, dict) and len(tomb) <= 8192:
-            # push the tombstoned-block set into the scan; a mass delete
-            # touching more blocks skips the in-list (planner cost) and
-            # lets the kernel's per-block tomb lookup do the filtering
-            posts = posts.filter(
-                F.col("block_id").isin([int(b) for b in tomb]))
+        blocks = tomb.blocks(8192)
+        if blocks is not None:
+            # push the tombstone files' block ranges into the scan; a
+            # mass delete covering more blocks skips the in-list (planner
+            # cost) and lets the kernel's per-block lookup do the
+            # filtering
+            posts = posts.filter(F.col("block_id").isin(blocks))
         posts = posts.select("term", "block_id", "seg", "postings")
 
         def count_killed(it):
             for pdf in it:
                 killed = np.asarray(
-                    [QK.killed_docs(tomb_bc.value, b, seg, raw)
+                    [QK.killed_docs(tomb, b, seg, raw)
                      for b, seg, raw in zip(pdf["block_id"], pdf["seg"],
                                             pdf["postings"])],
                     dtype=np.int64)
@@ -1039,9 +954,7 @@ class SearchIndex:
 
     def _invalidate_caches(self) -> None:
         self._tomb_cache = None
-        self._dl_bc = None
         self._dl_capacity = None
-        self._dl_table = None
         self._postings_size = None
         self._local_posts = None
         self._postings_df = None
@@ -1050,7 +963,7 @@ class SearchIndex:
         self._df_cache = {}
         self._sketch_cache = {}
         self._bounds_cache = {}
-        self._dl_ranges = None
+        self._dl_reader = None
         self._aligned = None
 
     def _seg_meta(self, seg: int) -> dict:
@@ -1139,8 +1052,6 @@ class SearchIndex:
         # from every view): apply the kernel exclusion rule per row —
         # a doc dies where a LATER tombstone outranks the row's segment
         tomb = self._tombstones()
-        tomb_bc = (self.spark.sparkContext.broadcast(tomb)
-                   if tomb else None)
 
         def _explode(it):
             for pdf in it:
@@ -1149,8 +1060,7 @@ class SearchIndex:
                         pdf["seg"]):
                     ids = np.frombuffer(ids_raw, dtype="<i8")
                     lens = np.frombuffer(lens_raw, dtype="<f4")
-                    excl = (QK.tombstoned(tomb_bc.value, block_id, seg)
-                            if tomb_bc is not None else None)
+                    excl = QK.tombstoned(tomb, block_id, seg)
                     if excl is not None:
                         keep = ~np.isin(ids, excl, assume_unique=True)
                         ids, lens = ids[keep], lens[keep]
@@ -1227,18 +1137,6 @@ class SearchIndex:
                     self._df_cache.setdefault(t, 0)
         return {t: self._sketch_cache[t] for t in terms}
 
-    def _doclens_file_ranges(self) -> list:
-        """[(seg, file, min_block, max_block, stamp)] from footer stats,
-        resolved once per index instance (driver-side, O(files) footer
-        reads) — the block->file map DoclensReader side-input reads use."""
-        if self._dl_ranges is not None:
-            return self._dl_ranges
-        sources = [(0, fsutil.join(self.path, "doclens"))]
-        sources += [(s, fsutil.join(self.path, "updates", f"seg={s}", "doclens"))
-                    for s in self._update_segs()]
-        self._dl_ranges = scan_doclens_ranges(sources)
-        return self._dl_ranges
-
     # --- scalar stats -----------------------------------------------------
     def docfreq(self, term: str) -> int:
         return int(self.docfreqs([term])[term])
@@ -1263,63 +1161,18 @@ class SearchIndex:
 
     # --- core query kernel ------------------------------------------------
 
-    # broadcast the packed doclens only for small corpora (~16 bytes/doc,
-    # so <=2M docs is a ~32 MB broadcast) where repeated-query latency
-    # benefits most; everything larger uses the co-partitioned
-    # DoclensReader side-input (proven bit-identical, no O(num_docs)
-    # driver collect). Round-3 kept a 512 MB collect+broadcast default up
-    # to 32M docs — pointless risk once the side-input path existed.
-    DOCLENS_BROADCAST_MAX_DOCS = 2_000_000
-
     def _doclens_capacity(self) -> int:
-        """Upper bound on doclens rows a broadcast would collect: the
-        AS-BUILT capacity plus every update segment's doc count. The
-        live (patched) num_docs shrinks under deletes, but tombstones
-        never shrink the doclens table — gating the broadcast on the
-        live count would let a mass-deleted huge index slip under the
-        cap and trigger an O(capacity) driver collect."""
+        """Upper bound on doclens rows: the AS-BUILT capacity plus every
+        update segment's doc count. The live (patched) num_docs shrinks
+        under deletes, but tombstones never shrink the doclens table —
+        gating the driver-local route on the live count would let a
+        mass-deleted huge index slip under the cap."""
         if getattr(self, "_dl_capacity", None) is None:
             cap = self.capacity
             for s in self._update_segs():
                 cap += int(self._seg_meta(s)["num_docs"])
             self._dl_capacity = cap
         return self._dl_capacity
-
-    def _doclens_table(self) -> dict:
-        """{block_id: (ids_bytes, lens_bytes)}, update segments patched
-        by seg priority. Built once per handle with driver pyarrow reads
-        of the packed doclens table(s) — NO Spark job (call sites gate
-        on _doclens_capacity / _local_query_ok, so the read is bounded)."""
-        if getattr(self, "_dl_table", None) is None:
-            import pyarrow.parquet as pq
-            sources = [(0, fsutil.join(self.path, "doclens"))]
-            sources += [(s, fsutil.join(self.path, "updates",
-                                         f"seg={s}", "doclens"))
-                        for s in self._update_segs()]
-            by_block: dict = {}
-            for seg, root in sources:
-                t = pq.read_table(
-                    root, columns=["block_id", "doc_ids", "doc_lens"])
-                for b, ir, lr in zip(t.column("block_id").to_pylist(),
-                                     t.column("doc_ids").to_pylist(),
-                                     t.column("doc_lens").to_pylist()):
-                    by_block.setdefault(int(b), []).append((seg, ir, lr))
-            table = {}
-            for b, segs in by_block.items():
-                if len(segs) == 1:
-                    table[b] = (segs[0][1], segs[0][2])
-                else:  # update segments: later seg overrides a doc's len
-                    ids, lens = patch_doclens(segs)
-                    table[b] = (ids.astype("<i8").tobytes(),
-                                lens.astype("<f4").tobytes())
-            self._dl_table = table
-        return self._dl_table
-
-    def _doclens_broadcast(self):
-        if getattr(self, "_dl_bc", None) is None:
-            self._dl_bc = self.spark.sparkContext.broadcast(
-                self._doclens_table())
-        return self._dl_bc
 
     # --- driver-local small-query path ------------------------------------
     # symmetric to the small-BUILD path (indexing._build_index_local):
@@ -1445,9 +1298,8 @@ class SearchIndex:
         Routes: driver-local (small indexes, zero Spark jobs), else one
         ``mapInPandas`` over the pruned postings scan, which has no
         exchange unless ``_needs_block_exchange`` asks for a
-        repartition by block_id. Doclens always arrive shuffle-free:
-        session broadcast below the small-corpus cap, per-task side-input
-        file reads (DoclensReader) above it.
+        repartition by block_id. Doclens always arrive shuffle-free, read
+        per block from the doclens files covering it (SideReader).
 
         ``or_combine`` sums scores per doc INSIDE the kernel, with the
         matching-token count in token_idx. ``per_token_topk`` keeps each
@@ -1487,7 +1339,7 @@ class SearchIndex:
                 block_ids = pruned
         if block_ids is not None and not len(block_ids):
             return held(QK.hits_frame([]))
-        tomb = self._tombstones()  # {} when no deletes/updates (common)
+        tomb = self._tombstones()  # falsy with no deletes/updates (common)
         if candidates is None and self._local_query_ok(extended=slop == 0):
             # driver-local route (slop keeps the strict cap, see
             # _local_query_ok): the same kernel on driver-loaded rows
@@ -1498,7 +1350,7 @@ class SearchIndex:
                     if keep is None or b in keep:
                         by_block.setdefault(b, []).append((t, data, seg))
             outs = QK.score_blocks(
-                spec, tomb, self._doclens_table().get,
+                spec, tomb, self._doclens_lookup().get,
                 ((b, by_block[b], None) for b in sorted(by_block)))
             return held(QK.hits_frame(outs))
         posts = self.postings.filter(F.col("term").isin(all_terms))
@@ -1535,15 +1387,18 @@ class SearchIndex:
         ).groupBy("block_id").applyInPandas(
             pack_ids, "block_id long, cand binary")
 
-    def _doclens_lookup(self):
-        """Executor-side block -> packed doclens lookup (``.get``): the
-        session broadcast for small corpora (fastest for repeated
-        queries), else side-input reads of the co-partitioned doclens
-        file(s) covering each block (DoclensReader), at ANY corpus size.
-        Either way the plan has no doclens-side exchange."""
-        if self._doclens_capacity() <= self.DOCLENS_BROADCAST_MAX_DOCS:
-            return _BroadcastDoclens(self._doclens_broadcast())
-        return DoclensReader(self._doclens_file_ranges())
+    def _doclens_lookup(self) -> SideReader:
+        """Block -> packed doclens lookup (``.get``) for every route: a
+        SideReader over the base and update-segment doclens files,
+        their block ranges read from footers once per handle. The plan
+        has no doclens-side exchange."""
+        if self._dl_reader is None:
+            sources = [(0, fsutil.join(self.path, "doclens"))]
+            sources += [(s, fsutil.join(self.path, "updates", f"seg={s}",
+                                        "doclens"))
+                        for s in self._update_segs()]
+            self._dl_reader = doclens_reader(sources)
+        return self._dl_reader
 
     # --- public API -------------------------------------------------------
     def termfreqs(self, token: TokenArg, min_posn: Optional[int] = None,
@@ -1752,15 +1607,13 @@ class SearchIndex:
         # deleted/replaced content must not decode (same exclusion rule
         # as scoring: a LATER tombstone kills this row's doc)
         tomb = self._tombstones()
-        tomb_bc = (self.spark.sparkContext.broadcast(tomb)
-                   if tomb else None)
 
         def decode_rows(it):
             for pdf in it:
                 for row in pdf.itertuples():
                     packed = QK.live_postings(
-                        tomb_bc.value if tomb_bc is not None else None,
-                        row.block_id, getattr(row, "seg", 0), row.postings)
+                        tomb, row.block_id, getattr(row, "seg", 0),
+                        row.postings)
                     if want is not None:
                         base = row.block_id * docs_per_block
                         local = want[(want >= base) & (want < base + docs_per_block)] - base

@@ -20,8 +20,7 @@ from pyspark.sql import SparkSession, functions as F
 from . import commit, fsutil
 from . import kernels as K
 from . import query_kernel as QK
-from .index import (DoclensReader, SearchIndex, patch_doclens,
-                    scan_doclens_ranges)
+from .index import SearchIndex, doclens_reader, patch_doclens
 
 # _restat's columns: (Spark type, pandas dtype of an empty frame)
 _RESTAT_COLS = {"term": ("string", object), "block_id": ("long", "int64"),
@@ -45,15 +44,16 @@ def _lens_for_ids(dl_ids, dl_lens, ids):
     return dl_lens[pos]
 
 
-def _restat(dl_path: str, tomb_bc=None, keep_postings: bool = False):
+def _restat(dl_path: str, tomb=None, keep_postings: bool = False):
     """``applyInPandas`` body over one (term, block)'s posting rows
     (term, block_id, postings[, seg]): the rows merged under the
-    kernel's tombstone rule (``QK.merge_rows``), then the block's exact
-    df, tf_total, tf_max and dl_min, with doc lengths side-read from the
-    packed doclens at ``dl_path`` (DoclensReader); the merged postings
-    too with ``keep_postings``. No row when every doc is gone. Returns
-    (function, output schema)."""
-    reader = DoclensReader(scan_doclens_ranges([(0, dl_path)]))
+    kernel's tombstone rule (``QK.merge_rows``, ``tomb`` a tombstone
+    SideReader), then the block's exact df, tf_total, tf_max and
+    dl_min, with doc lengths side-read from the packed doclens at
+    ``dl_path`` (SideReader); the merged postings too with
+    ``keep_postings``. No row when every doc is gone. Returns (function,
+    output schema)."""
+    reader = doclens_reader([(0, dl_path)])
     cols = (["term", "block_id"] + (["postings"] if keep_postings else [])
             + ["df", "tf_total", "tf_max", "dl_min"])
 
@@ -61,8 +61,7 @@ def _restat(dl_path: str, tomb_bc=None, keep_postings: bool = False):
         term, block_id = key[0], int(key[1])
         segs = pdf["seg"] if "seg" in pdf.columns else repeat(0)
         arr = QK.merge_rows(zip(repeat(term), pdf["postings"], segs),
-                            tomb_bc.value if tomb_bc is not None else None,
-                            block_id)[term]
+                            tomb, block_id)[term]
         if not len(arr):
             return pd.DataFrame({c: pd.Series([], dtype=_RESTAT_COLS[c][1])
                                  for c in cols})
@@ -118,16 +117,16 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
     Fully distributed — NO O(num_docs) driver materialization: doclens
     compact as a per-block applyInPandas and are written FIRST; the
     postings rewrite kernel then side-input-reads the compacted doclens
-    file covering its block (DoclensReader pattern, index.py) instead of
-    a whole-corpus broadcast; corpus stats come from one distributed
-    pass over the written doclens. Only the tombstone set is broadcast
-    (O(deletes between compactions), not O(corpus)).
+    file covering its block (SideReader, index.py) instead of a
+    whole-corpus broadcast; corpus stats come from one distributed pass
+    over the written doclens. Tombstones are read the same way, per
+    block from the tombstone files covering it: the task closures carry
+    O(files) bytes of file ranges, never the tombstone set.
     """
     _check_out(out_path, [index_path])
     idx = SearchIndex(spark, index_path, as_of=as_of)
     commit.begin(out_path)
     tomb = idx._tombstones()
-    tomb_bc = spark.sparkContext.broadcast(tomb)
 
     from .indexing import (PARQUET_ROW_GROUP_BYTES, bounds_granularity,
                            write_postings_table, write_term_stats)
@@ -144,7 +143,7 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
         for seg, ir, lr in zip(pdf["seg"], pdf["doc_ids"], pdf["doc_lens"]):
             ids = np.frombuffer(ir, dtype="<i8")
             lens = np.frombuffer(lr, dtype="<f4")
-            excl = QK.tombstoned(tomb_bc.value, b, int(seg))
+            excl = QK.tombstoned(tomb, b, int(seg))
             if excl is not None:
                 live = ~np.isin(ids, excl)
                 ids, lens = ids[live], lens[live]
@@ -173,7 +172,7 @@ def compact_index(spark: SparkSession, index_path: str, out_path: str,
     # --- 2. postings rewrite: per (term, block) merge rows, drop
     # tombstoned docs, recompute df/tf_total/tf_max/dl_min; each task
     # side-reads only the COMPACTED doclens file(s) covering its block
-    rewrite, out_schema = _restat(dl_path, tomb_bc, keep_postings=True)
+    rewrite, out_schema = _restat(dl_path, tomb, keep_postings=True)
     new_posts = idx.postings.groupBy("term", "block_id").applyInPandas(
         rewrite, out_schema)
     srg = write_postings_table(new_posts, fsutil.join(out_path, "postings"),

@@ -57,8 +57,9 @@ def tombstoned(tomb, block_id: int, seg: int) -> Optional[np.ndarray]:
     in ``block_id`` must drop: those whose newest tombstone is from a
     LATER epoch than the row. So an update kills older content while its
     own rows survive, and re-adding a deleted doc resurrects it.
-    ``tomb`` maps block -> (sorted local ids, max seg per id): a dict or
-    a TombstoneReader. None when the row loses nothing."""
+    ``tomb.get(block)`` gives (sorted local ids, max seg per id): the
+    tombstone SideReader (index.py), which reads the block from the
+    tombstone files covering it. None when the row loses nothing."""
     t_entry = tomb.get(int(block_id)) if tomb else None
     if t_entry is None:
         return None
@@ -368,13 +369,20 @@ def hits_frame(outs: list) -> pd.DataFrame:
 
 
 def _frame_blocks(pdf: pd.DataFrame):
-    """(block_id, rows, cand_raw) per block of one scan frame."""
-    has_cand = "cand" in pdf.columns
-    for block_id, grp in pdf.groupby("block_id"):
-        yield (int(block_id),
-               zip(grp["term"].tolist(), grp["postings"].tolist(),
-                   grp["seg"].tolist()),
-               grp["cand"].iloc[0] if has_cand else None)
+    """(block_id, rows, cand_raw) per block of one scan frame, blocks
+    ascending and each block's rows in scan order: a stable argsort of
+    block_id split where it changes (no pandas groupby)."""
+    blocks = pdf["block_id"].to_numpy(dtype=np.int64)
+    order = np.argsort(blocks, kind="stable")
+    blocks = blocks[order]
+    cols = [pdf[c].to_numpy()[order].tolist()
+            for c in ("term", "postings", "seg")]
+    cand = pdf["cand"].to_numpy()[order] if "cand" in pdf.columns else None
+    starts = np.flatnonzero(np.diff(blocks, prepend=-1))
+    for s, e in zip(starts.tolist(), np.append(starts[1:], len(blocks))
+                    .tolist()):
+        yield (int(blocks[s]), zip(*(c[s:e] for c in cols)),
+               cand[s] if cand is not None else None)
 
 
 def partition_hits(spec: QuerySpec, tomb, dl_get, batches):

@@ -224,15 +224,12 @@ def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
         from .index import _local_df
         return _local_df(idx.spark, pdf, schema)
 
-    tomb_bc = idx.spark.sparkContext.broadcast(tomb) if tomb else None
-
     def run_one(b: int, pdf: pd.DataFrame):
         wl = want_local(b)
         if wl is not None and not len(wl):
             return
         rows = list(zip(pdf["term"], pdf["postings"], pdf["seg"]))
-        merged = _merge_rows(
-            rows, tomb_bc.value if tomb_bc is not None else None, b, wl)
+        merged = _merge_rows(rows, tomb, b, wl)
         yield from per_block(b, merged)
 
     posts = idx.postings

@@ -5,10 +5,13 @@
   killed before its epoch record and an update_docs killed after its
   segment build leave the pre-mutation state;
 - fault injection: each writer (local build, two-group fused build,
-  compact_index, merge_indexes, delete_docs, update_docs, tombstone
-  repack) is killed before each of its commit steps in turn. Opening
-  then raises or serves the pre-write snapshot (the new state once the
-  marker has landed), and re-running the same write equals a clean run;
+  compact_index, merge_indexes, delete_docs with one and with several
+  tombstone files, update_docs) is killed before each of its commit
+  steps in turn. Opening then raises or serves the pre-write snapshot
+  (the new state once the marker has landed), and re-running the same
+  write equals a clean run. After a killed mutation, the next
+  delete_docs deletes every file of the uncommitted epoch and equals
+  the same delete on a clean copy;
 - a fused build whose executor doclens side-write is lost fails and
   writes no meta.json;
 - a store without an atomic rename fails before anything is written.
@@ -19,9 +22,11 @@ term and a phrase query).
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
 from searcharray_spark import build_index, commit, indexing
+from searcharray_spark import index as index_mod
 from searcharray_spark.index import SearchIndex
 from searcharray_spark.merge import compact_index, merge_indexes
 
@@ -216,32 +221,45 @@ def _delete(spark, tmp_path, monkeypatch):
         lambda p: SearchIndex(spark, p).delete_docs([0, 7, 8])
 
 
+def _delete_files(spark, tmp_path, monkeypatch):
+    # one row a tombstone file: the epoch spans several files
+    monkeypatch.setattr(index_mod, "TOMBSTONE_FILE_ROWS", 1)
+    return _delete(spark, tmp_path, monkeypatch)
+
+
 def _update(spark, tmp_path, monkeypatch):
     return _template(spark, tmp_path), \
         lambda p: SearchIndex(spark, p).update_docs(_frame(spark, UPDATE))
 
 
-def _repack(spark, tmp_path, monkeypatch):
-    # above the cap, tombstones are served from the packed side table;
-    # the template's table is stale once another epoch commits
-    monkeypatch.setattr(SearchIndex, "TOMBSTONE_DRIVER_MAX_ROWS", 1)
-    path = _template(spark, tmp_path)
-    SearchIndex(spark, path)._tombstones()
-    SearchIndex(spark, path).delete_docs([11])
-    return path, lambda p: SearchIndex(spark, p)._tombstones()
+MUTATIONS = (_delete, _delete_files, _update)
 
 
 def _committed(steps, path):
     """True once one of ``steps`` landed the write's marker."""
     return any(name == "write_json" and (
         target == os.path.join(path, "meta.json")
-        or f"{os.sep}stats_log{os.sep}" in target
-        or target.endswith(f"{os.sep}_rows.json"))
+        or f"{os.sep}stats_log{os.sep}" in target)
         for name, target in steps)
 
 
+def _tombstone_files(path):
+    return [os.path.join(d, f)
+            for d, _, fs in os.walk(os.path.join(path, "tombstones"))
+            for f in fs if f.endswith(".parquet")]
+
+
+def _epoch_files(path, epoch):
+    """The tombstone files and update segment dir of ``epoch``."""
+    out = [p for p in _tombstone_files(path)
+           if epoch in pq.read_table(p, columns=["seg"]).column(0)
+           .to_pylist()]
+    seg = os.path.join(path, "updates", f"seg={epoch}")
+    return out + ([seg] if os.path.exists(seg) else [])
+
+
 @pytest.mark.parametrize("writer", [
-    _local_build, _fused_build, _compact, _merge, _delete, _update, _repack,
+    _local_build, _fused_build, _compact, _merge, *MUTATIONS,
 ], ids=lambda f: f.__name__.strip("_"))
 def test_kill_at_every_commit_step(spark, tmp_path, monkeypatch, writer):
     template, write = writer(spark, tmp_path, monkeypatch)
@@ -257,16 +275,38 @@ def test_kill_at_every_commit_step(spark, tmp_path, monkeypatch, writer):
         write(clean_path)
     clean = _open_state(spark, clean_path)
     assert counted.steps
+    if writer is _delete_files:
+        assert len(_tombstone_files(clean_path)) \
+            - len(_tombstone_files(template)) > 1
+    if writer in MUTATIONS:
+        # the next delete after a killed mutation, on clean copies
+        epoch = max(r["epoch"] for r in SearchIndex(
+            spark, template).history()) + 1
+        nxt = fresh("next_pre")
+        SearchIndex(spark, nxt).delete_docs([11])
+        after_pre = _open_state(spark, nxt)
+        SearchIndex(spark, clean_path).delete_docs([11])
+        after_clean = _open_state(spark, clean_path)
 
     for k, (name, _target) in enumerate(counted.steps):
         path = fresh(f"kill{k}")
         with _Killer(at=k) as killed, pytest.raises(Kill):
             write(path)
         got = _open_state(spark, path)
-        if _committed(killed.steps, path):
+        committed = _committed(killed.steps, path)
+        if committed:
             assert got == clean, (k, name)
         else:
             assert got in (None, pre), (k, name)
+        if writer in MUTATIONS:
+            swept = str(tmp_path / f"swept{k}")
+            shutil.copytree(path, swept)
+            SearchIndex(spark, swept).delete_docs([11])
+            logged = {r["epoch"] for r in SearchIndex(spark, swept).history()}
+            if epoch not in logged:  # killed epoch: no file of it is left
+                assert _epoch_files(swept, epoch) == [], (k, name)
+            assert _open_state(spark, swept) == (
+                after_clean if committed else after_pre), (k, name)
         write(path)
         assert _open_state(spark, path) == clean, (k, name)
 

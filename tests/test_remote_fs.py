@@ -47,7 +47,7 @@ def test_file_uri_end_to_end(spark, idx_path, monkeypatch):
     assert _snap(uri) == want
 
     # distributed path: executor-side side-input loaders get file:// URIs
-    # through _doclens_file_ranges / scan_doclens_ranges
+    # through the doclens SideReader's file ranges
     dist = SearchIndex(spark, "file://" + idx_path)
     dist.LOCAL_QUERY_MAX_BYTES = dist.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     assert dist._files_aligned() is True  # recorded flag, read over the URI
@@ -68,14 +68,13 @@ def test_file_uri_mutations(spark, idx_path):
     assert zot == [1]
 
 
-def test_file_uri_tombstone_sidetable(spark, idx_path, monkeypatch):
-    monkeypatch.setattr(SearchIndex, "TOMBSTONE_DRIVER_MAX_ROWS", 5)
+def test_file_uri_tombstone_sidetable(spark, idx_path):
     uri = SearchIndex(spark, "file://" + idx_path)
     uri.delete_docs(range(0, 40))
-    from searcharray_spark.index import TombstoneReader
+    from searcharray_spark.index import SideReader
     tomb = uri._tombstones()
-    assert isinstance(tomb, TombstoneReader)
-    assert all(p.startswith("file://") for p, *_ in tomb.ranges)
+    assert isinstance(tomb, SideReader)
+    assert all(p.startswith("file://") for _seg, p, *_ in tomb.ranges)
     alive = {r["doc_id"] for r in uri.score("bar").collect()}
     assert alive & set(range(0, 40)) == set()
 

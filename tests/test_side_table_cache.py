@@ -1,7 +1,7 @@
 """Process-wide side-table file caches across a rebuild at the same path.
 
-The driver and reused Python workers keep decoded doclens and packed
-tombstone files in process-wide caches. Builds reuse file names
+The driver and reused Python workers keep decoded doclens and
+tombstone files in one process-wide cache. Builds reuse file names
 (``part-00000.parquet``), so the caches key each file by its path plus
 the (size, mtime) stamp from the listing: a handle opened after a
 rebuild at the same path must read the new files, never the decoded
@@ -25,8 +25,8 @@ def _corpus(spark, per_doc):
 
 def _distributed(spark, path):
     idx = SearchIndex(spark, path)
+    # executors read the doclens files
     idx.LOCAL_QUERY_MAX_BYTES = idx.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
-    idx.DOCLENS_BROADCAST_MAX_DOCS = 0  # executors read the doclens files
     return idx
 
 

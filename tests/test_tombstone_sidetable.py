@@ -1,19 +1,27 @@
-"""Mass-delete tombstone side table (TombstoneReader).
+"""Tombstones read per block from the tombstone files (SideReader).
 
-Above TOMBSTONE_DRIVER_MAX_ROWS the tombstone set must leave the driver:
-packed into a block-range-partitioned parquet side table that kernels
-side-input-read per block (DoclensReader pattern). Results must be
-IDENTICAL to the driver-dict mode through every path (queries, df
-corrections, positions, compaction), across handle reopens and repacks.
+Every tombstone file holds one epoch's rows; an epoch of more than
+TOMBSTONE_FILE_ROWS rows is written as several files range-partitioned
+by doc_id, and a kernel resolves a block's tombstones from only the
+files covering it. The cap is set tiny here so every epoch spans
+several files. Results must equal the compacted index (tombstones
+materialized away) through every path: both query routes, df
+corrections, positions, reopened handles, update plus compaction.
 """
-import numpy as np
 import pytest
 
 from searcharray_spark import build_index
-from searcharray_spark.index import SearchIndex, TombstoneReader
+from searcharray_spark import index as index_mod
+from searcharray_spark.index import SearchIndex, SideReader
+from searcharray_spark.merge import compact_index
 
 DOCS = ["foo bar bar baz", "data2 foo", "data3 bar baz qux",
         "bunny funny wunny", "foo baz foo bar baz", "qux qux bar"] * 50
+
+
+@pytest.fixture(autouse=True)
+def small_tombstone_files(monkeypatch):
+    monkeypatch.setattr(index_mod, "TOMBSTONE_FILE_ROWS", 8)
 
 
 @pytest.fixture()
@@ -38,59 +46,74 @@ def _snapshot(idx):
     return out
 
 
-def test_sidetable_matches_dict_mode(spark, idx_path, monkeypatch):
+def _distributed(spark, path):
+    idx = SearchIndex(spark, path)
+    idx.LOCAL_QUERY_MAX_BYTES = idx.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
+    return idx
+
+
+def _files_per_epoch(tomb):
+    out: dict = {}
+    for seg, path, *_ in tomb.ranges:
+        out.setdefault(seg, set()).add(path)
+    return {seg: len(paths) for seg, paths in out.items()}
+
+
+def _every_handle(spark, path):
+    """A reopened handle on each query route."""
+    return [SearchIndex(spark, path), _distributed(spark, path)]
+
+
+def test_sidetable_matches_compacted(spark, idx_path, tmp_path):
     dead = list(range(0, 300, 10)) + list(range(7, 200, 3))
-
-    # dict mode (default cap): ground truth
-    ref = SearchIndex(spark, idx_path)
-    ref.delete_docs(dead)
-    assert isinstance(ref._tombstones(), dict)
-    want = _snapshot(ref)
-
-    # side-table mode: same tombstone log, tiny cap forces the reader
-    monkeypatch.setattr(SearchIndex, "TOMBSTONE_DRIVER_MAX_ROWS", 10)
     idx = SearchIndex(spark, idx_path)
+    idx.delete_docs(dead)
     tomb = idx._tombstones()
-    assert isinstance(tomb, TombstoneReader) and bool(tomb)
+    assert isinstance(tomb, SideReader) and bool(tomb)
+    # one epoch, several files (the cap is 8 rows a file)
+    (n_files,) = _files_per_epoch(tomb).values()
+    assert n_files > 1
+
+    want = _snapshot(compact_index(spark, idx_path,
+                                   str(tmp_path / "compact")))
     assert _snapshot(idx) == want
-
-    # distributed path too (executor-side reader get)
-    dist = SearchIndex(spark, idx_path)
-    dist.LOCAL_QUERY_MAX_BYTES = dist.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
-    assert isinstance(dist._tombstones(), TombstoneReader)
-    assert _snapshot(dist) == want
+    for h in _every_handle(spark, idx_path):
+        assert _snapshot(h) == want
 
 
-def test_sidetable_repacks_on_new_deletes(spark, idx_path, monkeypatch):
-    monkeypatch.setattr(SearchIndex, "TOMBSTONE_DRIVER_MAX_ROWS", 5)
+def test_sidetable_sees_new_deletes(spark, idx_path, tmp_path):
     idx = SearchIndex(spark, idx_path)
     idx.delete_docs(range(0, 60))
-    assert isinstance(idx._tombstones(), TombstoneReader)
     assert idx._tombstones().get(0) is not None
     before = sorted(tuple(r) for r in idx.score("bar").collect())
-    # second wave: the packed table is stale and must rebuild
+    # second wave: a new epoch's files join the reader
     idx.delete_docs(range(60, 120))
+    assert all(n > 1 for n in _files_per_epoch(idx._tombstones()).values())
     after = sorted(tuple(r) for r in idx.score("bar").collect())
-    assert {r[0] for r in after} & set(range(60, 120)) == set()
+    assert {r[0] for r in after} & set(range(0, 120)) == set()
     assert len(after) < len(before)
-    # reopened handle sees the same state
-    re = SearchIndex(spark, idx_path)
-    assert sorted(tuple(r) for r in re.score("bar").collect()) == after
+
+    want = _snapshot(compact_index(spark, idx_path,
+                                   str(tmp_path / "compact")))
+    assert want["score"] == after
+    assert _snapshot(idx) == want
+    for h in _every_handle(spark, idx_path):
+        assert _snapshot(h) == want
 
 
-def test_sidetable_update_and_compact(spark, idx_path, tmp_path, monkeypatch):
-    from searcharray_spark.merge import compact_index
-
-    monkeypatch.setattr(SearchIndex, "TOMBSTONE_DRIVER_MAX_ROWS", 5)
+def test_sidetable_update_and_compact(spark, idx_path, tmp_path):
     idx = SearchIndex(spark, idx_path)
     idx.delete_docs(range(0, 90, 2))
     upd = spark.createDataFrame(
         [(4, "zot zot bar"), (11, "foo zot")], "doc_id long, text string")
     idx.update_docs(upd)  # resurrects 4 with new content
-    assert isinstance(idx._tombstones(), TombstoneReader)
+    assert isinstance(idx._tombstones(), SideReader)
     live = _snapshot(idx)
     zot = sorted(tuple(r) for r in idx.score("zot").collect())
     assert {r[0] for r in zot} == {4, 11}
+    for h in _every_handle(spark, idx_path):
+        assert _snapshot(h) == live
+        assert sorted(tuple(r) for r in h.score("zot").collect()) == zot
 
     compacted = compact_index(spark, idx_path, str(tmp_path / "compact"))
     assert _snapshot(compacted) == live

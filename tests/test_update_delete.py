@@ -142,26 +142,27 @@ def test_incremental_stats_delete_only(idx):
 
 
 def test_side_input_doclens_with_update_segments(idx, spark, tmp_path):
-    """The big-corpus doclens path (DoclensReader side-input, no
-    broadcast) must patch update-segment doc lengths by seg priority
-    exactly like the broadcast path: scores bit-identical on an index
-    carrying deletes + updates."""
+    """The doclens side-input reader (SideReader) patches update-segment
+    doc lengths by seg priority the same on the driver-local route and
+    inside distributed tasks: scores bit-identical on an index carrying
+    deletes + updates."""
     upd = spark.createDataFrame(
         [(1, "bar bar bar bar bar"), (5, "foo")], "doc_id long, text string")
     idx.update_docs(upd)
     idx.delete_docs([2])
 
     from searcharray_spark.index import SearchIndex
-    broadcast_scores = {r["doc_id"]: r["score"]
-                        for r in idx.score("bar").collect()}
+    local_scores = {r["doc_id"]: r["score"]
+                    for r in idx.score("bar").collect()}
     side = SearchIndex(spark, idx.path)
-    side.DOCLENS_BROADCAST_MAX_DOCS = 0  # force the reader path
+    # executors read the doclens files
+    side.LOCAL_QUERY_MAX_BYTES = side.LOCAL_QUERY_EXTENDED_MAX_BYTES = 0
     side_scores = {r["doc_id"]: r["score"]
                    for r in side.score("bar").collect()}
-    assert broadcast_scores == side_scores
-    assert broadcast_scores[1] > 0      # updated doc matches new content
-    assert 2 not in broadcast_scores    # deleted doc gone
-    # phrase query down the reader path too (grouped or zero-shuffle)
+    assert local_scores == side_scores
+    assert local_scores[1] > 0      # updated doc matches new content
+    assert 2 not in local_scores    # deleted doc gone
+    # phrase query down the distributed route too
     bp = {r["doc_id"]: r["tf"] for r in idx.termfreqs(["foo", "bar"]).collect()}
     sp = {r["doc_id"]: r["tf"] for r in side.termfreqs(["foo", "bar"]).collect()}
     assert bp == sp
