@@ -64,6 +64,16 @@ def main() -> int:
                      "rows and ranks them",
                      plan(idx._hits([["common"], ["w3"], ["rare"]],
                                     per_token_topk=5))))
+    sections.append(("PLAN 8: doc-major rows (doc_termfreqs) — the same "
+                     "postings scan, unfiltered by term, whole blocks per "
+                     "partition on scan-aligned files, NO exchange",
+                     plan(idx.doc_termfreqs())))
+    idx.delete_docs([1, 2, 70])
+    sections.append(("PLAN 9: df corrections after a delete — the same "
+                     "postings scan pruned to the queried terms and the "
+                     "tombstoned blocks, counts summed on the driver, NO "
+                     "exchange",
+                     plan(idx._killed_rows(["common", "w3"]))))
 
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "docs", "plans_raw.txt")

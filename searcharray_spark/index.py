@@ -7,10 +7,13 @@ results are (doc_id, tf|score) rows, never dense arrays, until a test
 helper densifies at small scale.
 
 Query execution model:
-- one block-scoring kernel (``query_kernel``) serves every route: the
-  driver-local route calls it on driver-loaded posting rows (small
-  indexes, zero Spark jobs), the distributed route runs it as the
-  ``mapInPandas`` body over the postings scan,
+- one postings scan (``SearchIndex._scan``) serves every consumer
+  (scoring, ``positions``, the df corrections, the doc-major rows) and
+  is the one place a route is picked: the driver-local route runs the
+  consumer's scan body on column slices of the driver-held postings
+  (small indexes, zero Spark jobs), the distributed route runs the
+  same body as one ``mapInPandas`` over the postings scan. Scoring's
+  body is the block-scoring kernel (``query_kernel``),
 - the postings scan is pruned to the query terms (pushed-down ``term IN
   (...)`` filter + row-group min/max pruning on the within-file term
   sort; storage is document-partitioned so hot terms scan in parallel),
@@ -179,6 +182,28 @@ class _LazyLocalFrame(_BaseDataFrame):
         return len(self._llf_pdf)
 
 
+def _select(df: DataFrame, *cols: str) -> DataFrame:
+    """``df.select(*cols)`` of plain column names; a _LazyLocalFrame
+    stays driver-held (its columns are picked in pandas, no JVM)."""
+    if isinstance(df, _LazyLocalFrame):
+        return _LazyLocalFrame(df._session, df._llf_pdf[list(cols)],
+                               StructType([df.schema[c] for c in cols]))
+    return df.select(*cols)
+
+
+_PANDAS_DTYPES = {LongType: np.int64, IntegerType: np.int32,
+                  FloatType: np.float32, DoubleType: np.float64,
+                  BooleanType: np.bool_}
+
+
+def _empty_pdf(schema: StructType) -> pd.DataFrame:
+    """A zero-row frame over ``schema`` with the dtypes Spark's toPandas
+    gives its columns (object for strings, arrays and structs)."""
+    return pd.DataFrame({
+        f.name: np.zeros(0, _PANDAS_DTYPES.get(type(f.dataType), object))
+        for f in schema.fields})
+
+
 def _local_df(spark: SparkSession, pdf: pd.DataFrame,
               schema: StructType) -> DataFrame:
     """DataFrame for a driver-computed result — a _LazyLocalFrame for
@@ -208,14 +233,14 @@ def _read_term_rows(root: str, terms: Sequence[str],
         filters=[[("term", "=", t)] for t in terms]).to_pylist()
 
 
-def _empty_positions_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                         "posns": pd.Series([], dtype=object)})
-
-
 POSITIONS_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("posns", ArrayType(IntegerType())),
+])
+
+KILLED_SCHEMA = StructType([
+    StructField("term", StringType()),
+    StructField("killed", LongType()),
 ])
 
 
@@ -912,45 +937,37 @@ class SearchIndex:
         """Exact per-term df adjustment for tombstoned docs: for each
         posting row of a term in a tombstoned block, count the doc keys
         killed by a LATER tombstone — the same exclusion the query
-        kernel applies, so df matches what scoring actually sees. ONE
-        tiny Spark job restricted to (queried terms) x (tombstoned
-        blocks); zero cost on clean indexes, O(deletes)-bounded after
-        deletes/updates. Negative values (counts to subtract)."""
-        tomb = self._tombstones()
-        if not tomb or not terms:
+        kernel applies, so df matches what scoring actually sees. One
+        scan (``_killed_rows``) summed per term on the driver; zero cost
+        on clean indexes, O(deletes)-bounded after deletes/updates.
+        Negative values (counts to subtract)."""
+        if not self._tombstones() or not terms:
             return {}
-        if self._local_query_ok(extended=True):
-            # small index: the same row function over the driver-loaded
-            # postings rows (no job)
-            store = self._local_postings()
-            out = {t: -sum(QK.killed_docs(tomb, b, seg, raw)
-                           for b, raw, seg in store.get(t, ()))
-                   for t in terms}
-            return {t: c for t, c in out.items() if c}
-        posts = self.postings.filter(F.col("term").isin(list(terms)))
-        blocks = tomb.blocks(8192)
-        if blocks is not None:
-            # push the tombstone files' block ranges into the scan; a
-            # mass delete covering more blocks skips the in-list (planner
-            # cost) and lets the kernel's per-block lookup do the
-            # filtering
-            posts = posts.filter(F.col("block_id").isin(blocks))
-        posts = posts.select("term", "block_id", "seg", "postings")
+        sums = self._killed_rows(terms).toPandas() \
+            .groupby("term")["killed"].sum()
+        return {t: -int(k) for t, k in sums.items()}
 
-        def count_killed(it):
-            for pdf in it:
+    def _killed_rows(self, terms: Sequence[str]) -> DataFrame:
+        """(term, killed) per posting row of ``terms`` that a later
+        tombstone takes docs from (``QK.killed_docs``). The scan is
+        pruned to the tombstone files' block ranges; a mass delete
+        covering more blocks skips the in-list (planner cost) and lets
+        the per-block lookup do the filtering."""
+        tomb = self._tombstones()
+
+        def count_killed(batches):
+            for batch in batches:
                 killed = np.asarray(
                     [QK.killed_docs(tomb, b, seg, raw)
-                     for b, seg, raw in zip(pdf["block_id"], pdf["seg"],
-                                            pdf["postings"])],
+                     for b, seg, raw in zip(batch["block_id"], batch["seg"],
+                                            batch["postings"])],
                     dtype=np.int64)
                 keep = killed > 0
-                yield pd.DataFrame({"term": pdf["term"].to_numpy()[keep],
+                yield pd.DataFrame({"term": np.asarray(batch["term"])[keep],
                                     "killed": killed[keep]})
 
-        rows = posts.mapInPandas(count_killed, "term string, killed long") \
-            .groupBy("term").agg(F.sum("killed").alias("k")).collect()
-        return {r["term"]: -int(r["k"]) for r in rows}
+        return self._scan(count_killed, KILLED_SCHEMA, terms=terms,
+                          block_ids=tomb.blocks(8192), whole_blocks=False)
 
     def _invalidate_caches(self) -> None:
         self._tomb_cache = None
@@ -983,8 +1000,8 @@ class SearchIndex:
         exactly one file), every scan partition then holds whole doc
         blocks, so phrase/slop/OR kernels see all of a block's
         query-term rows and run with ZERO shuffle. When False, those
-        plans repartition the pruned rows by block_id first
-        (``_needs_block_exchange``).
+        plans repartition the pruned rows by block_id first (``_scan``'s
+        ``whole_blocks``).
 
         Every writer pins parquet.block.size, verifies the footers and
         records the result as ``postings_single_row_group`` in meta.json;
@@ -1174,17 +1191,21 @@ class SearchIndex:
             self._dl_capacity = cap
         return self._dl_capacity
 
-    # --- driver-local small-query path ------------------------------------
-    # symmetric to the small-BUILD path (indexing._build_index_local):
-    # below these caps the whole postings table is loaded onto the driver
-    # once (pyarrow) and queries run the SAME query_kernel functions
-    # driver-side — zero Spark jobs per query, results returned
-    # as a LocalRelation. Bit-identical to the distributed path
-    # (tests/test_local_query.py). A 1-block toy index stops paying the
-    # distributed per-query floor — one Spark job, 0.10-0.18 s for a
-    # single client on local[4] (30-60 ms of driver DataFrame
-    # construction, 30-80 ms of job, the rest submit/collect); big
-    # indexes never reach the file walk (capacity gate first).
+    # --- the postings scan: driver-local or distributed route -----------
+    # Every postings consumer (scoring, positions, df corrections, the
+    # doc-major rows) reads through ``_scan``, the one place a route is
+    # picked. Below these caps (symmetric to the small-BUILD path,
+    # indexing._build_index_local) the whole postings table is loaded
+    # onto the driver once (pyarrow) and ``_scan`` runs the consumer's
+    # scan body on column slices of it — zero Spark jobs per query, the
+    # result a driver-held ``_LazyLocalFrame`` (served by collect,
+    # toPandas and count without the JVM). Bit-identical to the
+    # distributed route (tests/test_local_query.py). A 1-block toy index
+    # stops paying the distributed per-query floor — one Spark job,
+    # 0.10-0.18 s for a single client on local[4] (30-60 ms of driver
+    # DataFrame construction, 30-80 ms of job, the rest
+    # submit/collect); big indexes never reach the file walk (capacity
+    # gate first).
     #
     # The byte cap is per QUERY SHAPE: term/phrase/OR kernels stay ahead
     # of the distributed route well past 64 MB, so they use the EXTENDED
@@ -1213,26 +1234,99 @@ class SearchIndex:
             self.LOCAL_QUERY_EXTENDED_MAX_BYTES if extended
             else self.LOCAL_QUERY_MAX_BYTES)
 
-    def _local_postings(self) -> dict:
-        """term -> [(block_id, packed_bytes, seg)], loaded once
-        driver-side (pyarrow, no Spark job). Only built under
-        _local_query_ok()."""
+    def _local_postings(self) -> tuple:
+        """The driver-held postings store, loaded once per handle with
+        pyarrow (no Spark job); only built under _local_query_ok():
+        ({column: numpy array} over term, block_id, postings, seg, rows
+        sorted by term, each term's rows in segment then file order;
+        {term: (start, end) row range})."""
         if getattr(self, "_local_posts", None) is None:
             import pyarrow.parquet as pq
             sources = [(0, fsutil.join(self.path, "postings"))]
             sources += [(s, fsutil.join(self.path, "updates",
                                          f"seg={s}", "postings"))
                         for s in self._update_segs()]
-            store: dict = {}
+            parts = {"term": [], "block_id": [], "postings": [], "seg": []}
             for seg, root in sources:
                 t = pq.read_table(
                     root, columns=["term", "block_id", "postings"])
-                for term, b, data in zip(t.column("term").to_pylist(),
-                                         t.column("block_id").to_pylist(),
-                                         t.column("postings").to_pylist()):
-                    store.setdefault(term, []).append((int(b), data, seg))
-            self._local_posts = store
+                for c in ("term", "block_id", "postings"):
+                    parts[c].append(
+                        t.column(c).to_numpy(zero_copy_only=False))
+                parts["seg"].append(np.full(t.num_rows, seg, np.int64))
+            cols = {c: np.concatenate(a) for c, a in parts.items()}
+            cols["block_id"] = cols["block_id"].astype(np.int64)
+            terms, code = np.unique(cols["term"], return_inverse=True)
+            order = np.argsort(code, kind="stable")
+            cols = {c: a[order] for c, a in cols.items()}
+            ends = np.cumsum(np.bincount(code, minlength=len(terms)))
+            starts = np.concatenate(([0], ends[:-1]))
+            self._local_posts = (cols, dict(zip(
+                terms.tolist(), zip(starts.tolist(), ends.tolist()))))
         return self._local_posts
+
+    def _scan(self, fn, schema: StructType, *,
+              terms: Optional[Sequence[str]] = None,
+              block_ids: Optional[Sequence[int]] = None,
+              whole_blocks: bool, extended: bool = True,
+              candidates: Optional[DataFrame] = None,
+              as_pandas: bool = False):
+        """The one postings scan: ``fn``, a ``mapInPandas`` body (scan
+        batches of term, block_id, postings, seg[, cand] columns in,
+        pandas frames over ``schema`` out), over the posting rows of
+        ``terms`` in ``block_ids`` (None: every term, every block).
+
+        Driver-local route, taken without ``candidates`` when
+        ``_local_query_ok(extended)`` holds: ``fn`` runs on one batch of
+        numpy column slices of the driver-held store (no pandas frame is
+        built for it) and the result is driver-held. Distributed route:
+        the term and block_id filters pushed into the postings scan,
+        ``candidates`` (a doc_id frame) joined as packed per-block local
+        ids, then ONE ``mapInPandas``. It repartitions by block_id first
+        (one exchange) when a candidates join may move rows off their
+        scan partition, or when ``fn`` needs ``whole_blocks`` (each
+        block's rows in one partition) and the files are not
+        scan-aligned (``_files_aligned``). No terms or no blocks is an
+        empty driver-held result. ``as_pandas`` returns pandas: the
+        driver-held frame, or the distributed plan's rows (its one Spark
+        job runs here)."""
+        if ((terms is not None and not len(terms))
+                or (block_ids is not None and not len(block_ids))):
+            pdf = _empty_pdf(schema)
+        elif candidates is None and self._local_query_ok(extended):
+            # one batch of column slices: a single term's rows are views
+            cols, spans = self._local_postings()
+            if terms is not None:
+                rs = [spans[t] for t in terms if t in spans] or [(0, 0)]
+                cols = {c: (a[rs[0][0]:rs[0][1]] if len(rs) == 1 else
+                            np.concatenate([a[b:e] for b, e in rs]))
+                        for c, a in cols.items()}
+            if block_ids is not None:
+                keep = np.isin(cols["block_id"],
+                               np.asarray(block_ids, dtype=np.int64))
+                cols = {c: a[keep] for c, a in cols.items()}
+            outs = [o for o in fn([cols] if len(cols["block_id"]) else [])
+                    if len(o)]
+            pdf = (outs[0] if len(outs) == 1
+                   else pd.concat(outs, ignore_index=True) if outs
+                   else _empty_pdf(schema))
+        else:
+            posts = self.postings
+            if terms is not None:
+                posts = posts.filter(F.col("term").isin(list(terms)))
+            if block_ids is not None:
+                posts = posts.filter(
+                    F.col("block_id").isin([int(b) for b in block_ids]))
+            posts = posts.select("term", "block_id", "postings", "seg")
+            if candidates is not None:
+                posts = posts.join(self._candidate_blocks(candidates),
+                                   "block_id", "inner")
+            if candidates is not None or (whole_blocks
+                                          and not self._files_aligned()):
+                posts = posts.repartition("block_id")
+            out = posts.mapInPandas(fn, schema)
+            return out.toPandas() if as_pandas else out
+        return pdf if as_pandas else _local_df(self.spark, pdf, schema)
 
     # prune doc blocks via the term sketches when the rarest query term
     # is at least this much rarer than the corpus (the sketch lookup is
@@ -1270,20 +1364,6 @@ class SearchIndex:
             needed &= {int(b) for b in block_ids}
         return sorted(needed)
 
-    def _needs_block_exchange(self, spec: QK.QuerySpec,
-                              has_cand: bool) -> bool:
-        """Whether the distributed plan repartitions the pruned posting
-        rows by block_id before the kernel. Single-term rows score
-        independently (hot terms are chunked at doc boundaries), so they
-        never need it. Phrases, slop and OR-combine need every query
-        term of a block in one kernel call, which the scan gives for
-        free only on scan-aligned files (``_files_aligned``). A
-        candidates join may move rows off their scan partition, so it
-        always repartitions."""
-        independent = (not spec.or_combine
-                       and all(len(t) == 1 for t in spec.tokens))
-        return has_cand or not (independent or self._files_aligned())
-
     def _hits(self, tokens: List[List[str]], similarity=None,
               min_posn: Optional[int] = None, max_posn: Optional[int] = None,
               slop: int = 0, block_ids: Optional[Sequence[int]] = None,
@@ -1295,20 +1375,23 @@ class SearchIndex:
         """(token_idx, doc_id, tf, score) for each query token (term or
         phrase), scored block by block by ``query_kernel``.
 
-        Routes: driver-local (small indexes, zero Spark jobs), else one
-        ``mapInPandas`` over the pruned postings scan, which has no
-        exchange unless ``_needs_block_exchange`` asks for a
-        repartition by block_id. Doclens always arrive shuffle-free, read
-        per block from the doclens files covering it (SideReader).
+        One ``_scan`` with ``QK.partition_hits`` as its body: the
+        driver-local route (small indexes, zero Spark jobs; slop keeps
+        the strict byte cap) or one ``mapInPandas``
+        over the pruned postings scan, which repartitions by block_id
+        only when phrases, slop or OR-combine need whole blocks on an
+        unaligned layout, or after a candidates join. Doclens always
+        arrive shuffle-free, read per block from the doclens files
+        covering it (SideReader).
 
         ``or_combine`` sums scores per doc INSIDE the kernel, with the
         matching-token count in token_idx. ``per_token_topk`` keeps each
         token's top-k of every scored batch (a phrase or OR query's
-        partition is one batch; so is the driver-local route); ``bounds`` (per-token block bounds of an OR top-k) adds
-        the kernel's block-max pruning and MaxScore split. An empty
+        partition is one batch; so is the driver-local route);
+        ``bounds`` (per-token block bounds of an OR top-k) adds the
+        kernel's block-max pruning and MaxScore split. An empty
         ``block_ids`` is an empty driver-held result. ``_as_pandas``
-        returns pandas: the driver-held frame, or the distributed
-        plan's rows (one Spark job, run here).
+        returns pandas (``_scan``'s ``as_pandas``).
         ``candidates`` (a DataFrame with a doc_id column) restricts
         scoring to those docs inside the kernel: candidate ids are
         packed per doc block and joined onto the pruned scan, which also
@@ -1316,14 +1399,7 @@ class SearchIndex:
         """
         if slop != 0:
             from .spans import span_freqs  # noqa: F401  (fail fast on driver)
-
-        def held(pdf):  # a driver-held result
-            return pdf if _as_pandas else _local_df(self.spark, pdf,
-                                                    HITS_SCHEMA)
-
         all_terms = sorted({t for tok in tokens for t in tok})
-        if not all_terms:
-            return held(QK.hits_frame([]))
         spec = QK.QuerySpec(
             tokens=[list(t) for t in tokens], dfs=self.docfreqs(all_terms),
             num_docs=self.num_docs, avgdl=self.avg_doc_len,
@@ -1337,39 +1413,20 @@ class SearchIndex:
             pruned = self._prune_blocks(spec.tokens, block_ids)
             if pruned is not None:
                 block_ids = pruned
-        if block_ids is not None and not len(block_ids):
-            return held(QK.hits_frame([]))
         tomb = self._tombstones()  # falsy with no deletes/updates (common)
-        if candidates is None and self._local_query_ok(extended=slop == 0):
-            # driver-local route (slop keeps the strict cap, see
-            # _local_query_ok): the same kernel on driver-loaded rows
-            keep = None if block_ids is None else {int(b) for b in block_ids}
-            by_block: dict = {}
-            for t in all_terms:
-                for b, data, seg in self._local_postings().get(t, ()):
-                    if keep is None or b in keep:
-                        by_block.setdefault(b, []).append((t, data, seg))
-            outs = QK.score_blocks(
-                spec, tomb, self._doclens_lookup().get,
-                ((b, by_block[b], None) for b in sorted(by_block)))
-            return held(QK.hits_frame(outs))
-        posts = self.postings.filter(F.col("term").isin(all_terms))
-        if block_ids is not None:
-            posts = posts.filter(
-                F.col("block_id").isin([int(b) for b in block_ids]))
-        posts = posts.select("term", "block_id", "postings", "seg")
-        if candidates is not None:
-            posts = posts.join(self._candidate_blocks(candidates),
-                               "block_id", "inner")
-        if self._needs_block_exchange(spec, candidates is not None):
-            posts = posts.repartition("block_id")
         dl = self._doclens_lookup()
 
         def kernel(batches):
             return QK.partition_hits(spec, tomb, dl.get, batches)
 
-        out = posts.mapInPandas(kernel, HITS_SCHEMA)
-        return out.toPandas() if _as_pandas else out
+        # single-term rows score independently (hot terms are chunked at
+        # doc boundaries); phrases, slop and OR-combine need every query
+        # term of a block in one kernel call
+        whole = or_combine or any(len(t) > 1 for t in spec.tokens)
+        return self._scan(kernel, HITS_SCHEMA, terms=all_terms,
+                          block_ids=block_ids, whole_blocks=whole,
+                          extended=slop == 0, candidates=candidates,
+                          as_pandas=_as_pandas)
 
     def _candidate_blocks(self, candidates: DataFrame) -> DataFrame:
         """(block_id, cand) rows: each block's sorted unique candidate
@@ -1406,8 +1463,9 @@ class SearchIndex:
                   candidates: Optional[DataFrame] = None) -> DataFrame:
         """Sparse per-doc term/phrase frequencies: (doc_id, tf)."""
         toks = _normalize_token(token)
-        return self._hits([toks], min_posn=min_posn, max_posn=max_posn,
-                          slop=slop, candidates=candidates).select("doc_id", "tf")
+        return _select(self._hits([toks], min_posn=min_posn,
+                                  max_posn=max_posn, slop=slop,
+                                  candidates=candidates), "doc_id", "tf")
 
     def score(self, token: TokenArg, similarity=None, slop: int = 0,
               min_posn: Optional[int] = None,
@@ -1420,10 +1478,9 @@ class SearchIndex:
         with doc_id) restricts scoring to those docs inside the kernel.
         """
         toks = _normalize_token(token)
-        return self._hits([toks], similarity=similarity, slop=slop,
-                          min_posn=min_posn, max_posn=max_posn,
-                          candidates=candidates) \
-            .select("doc_id", "score")
+        return _select(self._hits([toks], similarity=similarity, slop=slop,
+                                  min_posn=min_posn, max_posn=max_posn,
+                                  candidates=candidates), "doc_id", "score")
 
     def score_many(self, tokens: Sequence[TokenArg], similarity=None,
                    slop: int = 0,
@@ -1600,7 +1657,7 @@ class SearchIndex:
         postings.py:682-687 ``key=``): the scan prunes to their blocks
         and the kernel semi-joins before decoding.
         """
-        docs_per_block = self.docs_per_block
+        dpb = self.docs_per_block
         want = None
         if doc_ids is not None:
             want = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
@@ -1608,55 +1665,29 @@ class SearchIndex:
         # as scoring: a LATER tombstone kills this row's doc)
         tomb = self._tombstones()
 
-        def decode_rows(it):
-            for pdf in it:
-                for row in pdf.itertuples():
-                    packed = QK.live_postings(
-                        tomb, row.block_id, getattr(row, "seg", 0),
-                        row.postings)
+        def decode_rows(batches):
+            for batch in batches:
+                for b, seg, raw in zip(batch["block_id"], batch["seg"],
+                                       batch["postings"]):
+                    base = int(b) * dpb
+                    packed = QK.live_postings(tomb, b, seg, raw)
                     if want is not None:
-                        base = row.block_id * docs_per_block
-                        local = want[(want >= base) & (want < base + docs_per_block)] - base
-                        packed = K.slice_keys(packed, local)
+                        packed = K.slice_keys(packed, want[
+                            (want >= base) & (want < base + dpb)] - base)
                     ids, posns = K.decode(packed)
                     if len(ids) == 0:
                         continue
                     starts = np.concatenate(
                         ([0], np.flatnonzero(np.diff(ids)) + 1, [len(ids)]))
                     yield pd.DataFrame({
-                        "doc_id": ids[starts[:-1]] + row.block_id * docs_per_block,
+                        "doc_id": ids[starts[:-1]] + base,
                         "posns": [posns[s:e].astype(np.int32)
                                   for s, e in zip(starts[:-1], starts[1:])],
                     })
 
-        if self._local_query_ok(extended=True):
-            # driver-local path: same decode_rows generator over the
-            # driver-loaded posting rows (zero Spark jobs)
-            rows = self._local_postings().get(term, [])
-            if want is not None:
-                blocks = {int(d) // docs_per_block for d in want}
-                rows = [r for r in rows if r[0] in blocks]
-            if not rows:
-                return _local_df(self.spark, _empty_positions_pdf(),
-                                 POSITIONS_SCHEMA)
-            pdf_in = pd.DataFrame({
-                "block_id": np.asarray([r[0] for r in rows], dtype=np.int64),
-                "postings": [r[1] for r in rows],
-                "seg": np.asarray([r[2] for r in rows], dtype=np.int64)})
-            outs = list(decode_rows([pdf_in]))
-            if not outs:
-                return _local_df(self.spark, _empty_positions_pdf(),
-                                 POSITIONS_SCHEMA)
-            pdf = pd.concat(outs, ignore_index=True)
-            pdf["posns"] = [np.asarray(p, dtype=np.int32).tolist()
-                            for p in pdf["posns"]]
-            return _local_df(self.spark, pdf, POSITIONS_SCHEMA)
-
-        posts = self.postings.filter(F.col("term") == term)
-        if want is not None:
-            blocks = sorted({int(d) // docs_per_block for d in want})
-            posts = posts.filter(F.col("block_id").isin(blocks))
-        return posts.mapInPandas(decode_rows, POSITIONS_SCHEMA)
+        blocks = None if want is None else np.unique(want // dpb).tolist()
+        return self._scan(decode_rows, POSITIONS_SCHEMA, terms=[term],
+                          block_ids=blocks, whole_blocks=False)
 
     # --- boolean combinators (reference user-level AND/OR patterns,
     #     test_search.py:146-204) -----------------------------------------

@@ -7,10 +7,10 @@ posting rows are merged under the tombstone rule (``merge_rows``),
 reduced to per-token freqs (``token_freqs``: term, phrase, slop,
 position window, candidate and MaxScore semi-joins), scored
 (``token_scores``) and optionally OR-combined per doc (``combine_or``)
-by ``score_block``. The driver-local route calls ``score_blocks`` on
-driver-loaded rows (numpy arrays end to end, one pandas frame per
-query); the distributed route runs ``partition_hits`` as its
-``mapInPandas`` body over the pruned postings scan. Both routes
+by ``score_block``. ``partition_hits`` is the scan body of both
+routes (``SearchIndex._scan``): the distributed route runs it under
+``mapInPandas`` over the pruned postings scan, the driver-local route
+calls it on one batch of driver-held column slices. Both routes
 therefore return bit-identical rows for every query shape.
 
 Top-k queries (``per_token_topk``) keep a running top-k while scoring,
@@ -27,7 +27,6 @@ import pandas as pd
 from . import kernels as K
 
 HITS_COLUMNS = ("token_idx", "doc_id", "tf", "score")
-_HITS_DTYPES = (np.int32, np.int64, np.float32, np.float32)
 _EMPTY_U64 = np.zeros(0, dtype=np.uint64)
 
 
@@ -84,16 +83,20 @@ def killed_docs(tomb, block_id: int, seg: int, raw) -> int:
     return K.docfreq(arr) - K.docfreq(K.exclude_keys(arr, excl))
 
 
-def merge_rows(rows, tomb, block_id: int) -> dict:
+def merge_rows(rows, tomb, block_id: int,
+               keep: Optional[np.ndarray] = None) -> dict:
     """(term, postings bytes, seg) rows of ONE block -> {term: packed
-    words}. Each row drops its tombstoned docs, then ONE or_merge per
+    words}. Each row drops its tombstoned docs (and, given ``keep``,
+    sorted local doc ids, every doc not in it), then ONE or_merge per
     term: hot terms arrive as many chunked rows (a pairwise merge would
     re-walk the growing array per chunk), and update-segment rows may
     share headers, which or_merge unions."""
     parts: dict = {}
     for term, raw, seg in rows:
-        parts.setdefault(term, []).append(
-            live_postings(tomb, block_id, seg, raw))
+        arr = live_postings(tomb, block_id, seg, raw)
+        if keep is not None:
+            arr = K.slice_keys(arr, keep)
+        parts.setdefault(term, []).append(arr)
     return {term: (arrs[0] if len(arrs) == 1
                    else K.or_merge(np.concatenate(arrs)))
             for term, arrs in parts.items()}
@@ -361,23 +364,24 @@ def rank_hits(cols: dict, k: int, or_combine: bool, n_tokens: int) -> dict:
 
 
 def hits_frame(outs: list) -> pd.DataFrame:
-    """One hits frame (HITS_COLUMNS) from score_block results."""
-    return pd.DataFrame({
-        c: (np.concatenate([o[i] for o in outs]) if outs
-            else np.zeros(0, dtype=dt))
-        for i, (c, dt) in enumerate(zip(HITS_COLUMNS, _HITS_DTYPES))})
+    """One hits frame (HITS_COLUMNS) from score_block results (at least
+    one)."""
+    return pd.DataFrame({c: np.concatenate([o[i] for o in outs])
+                         for i, c in enumerate(HITS_COLUMNS)})
 
 
-def _frame_blocks(pdf: pd.DataFrame):
-    """(block_id, rows, cand_raw) per block of one scan frame, blocks
+def _frame_blocks(batch):
+    """(block_id, rows, cand_raw) per block of one scan batch, blocks
     ascending and each block's rows in scan order: a stable argsort of
-    block_id split where it changes (no pandas groupby)."""
-    blocks = pdf["block_id"].to_numpy(dtype=np.int64)
+    block_id split where it changes (no pandas groupby). ``batch`` maps
+    column names to arrays: a pandas frame on the distributed route,
+    numpy column slices on the driver-local one."""
+    blocks = np.asarray(batch["block_id"], dtype=np.int64)
     order = np.argsort(blocks, kind="stable")
     blocks = blocks[order]
-    cols = [pdf[c].to_numpy()[order].tolist()
+    cols = [np.asarray(batch[c])[order].tolist()
             for c in ("term", "postings", "seg")]
-    cand = pdf["cand"].to_numpy()[order] if "cand" in pdf.columns else None
+    cand = np.asarray(batch["cand"])[order] if "cand" in batch else None
     starts = np.flatnonzero(np.diff(blocks, prepend=-1))
     for s, e in zip(starts.tolist(), np.append(starts[1:], len(blocks))
                     .tolist()):
@@ -385,11 +389,19 @@ def _frame_blocks(pdf: pd.DataFrame):
                cand[s] if cand is not None else None)
 
 
+def whole_partition(batches) -> list:
+    """A partition's non-empty scan batches as at most one batch, so
+    every block's rows are together: a block's rows may span batches."""
+    batches = [b for b in batches if len(b["block_id"])]
+    return [pd.concat(batches)] if len(batches) > 1 else batches
+
+
 def partition_hits(spec: QuerySpec, tomb, dl_get, batches):
-    """The distributed route's ``mapInPandas`` body over pruned posting
+    """The scoring body of ``SearchIndex._scan`` over pruned posting
     rows (term, block_id, postings, seg[, cand]); every block's rows
     must sit in this one partition (scan-aligned files, else the plan
-    repartitions by block_id first).
+    repartitions by block_id first; the driver-local route passes one
+    batch).
 
     Single-term rows score independently, so they stream: each batch's
     rows (with per_token_topk, each token's top-k of the batch) leave
@@ -399,10 +411,8 @@ def partition_hits(spec: QuerySpec, tomb, dl_get, batches):
     concatenated first (bounded: only the query terms' rows are in the
     scan)."""
     if spec.or_combine or any(len(t) > 1 for t in spec.tokens):
-        batches = [pdf for pdf in batches if len(pdf)]
-        if len(batches) > 1:
-            batches = [pd.concat(batches)]
-    for pdf in batches:
-        held = score_blocks(spec, tomb, dl_get, _frame_blocks(pdf))
+        batches = whole_partition(batches)
+    for batch in batches:
+        held = score_blocks(spec, tomb, dl_get, _frame_blocks(batch))
         if held:
             yield hits_frame(held)

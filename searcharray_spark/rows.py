@@ -19,16 +19,18 @@ Reference parity (semantics only; fresh implementation):
 
 Spark-first shape: nothing doc-major is stored. The doc-major view is
 DERIVED on demand from the packed term-major postings (SURVEY A5
-"derive on demand"): one per-block ``mapInPandas`` pass runs the SAME
-merge-then-kernel sequence as the scoring path (tombstone
-exclusion, chunk or_merge, K.termfreqs), then an explicit
-``groupBy(doc_id)`` canonicalizes each doc's bag as a SORTED
-array<struct<term,tf>> — map columns are not equality-comparable in
-Spark SQL, sorted entry arrays are, so every downstream op
-(value_counts grouping, unique, rowwise equality joins) stays JVM-side.
-Row materialization (``doc``/``take``) decodes only the touched blocks
-and, on tiny cached indexes, runs entirely driver-side with zero Spark
-jobs (the small-query path gate).
+"derive on demand"): one per-block scan body (``_block_scan``) groups
+each scan batch into blocks (``query_kernel._frame_blocks``) and runs
+the scoring path's merge (``query_kernel.merge_rows``: tombstone
+exclusion, chunk or_merge) before the decode kernels. It reads through
+the one postings scan, ``SearchIndex._scan``: driver-held column slices
+with zero Spark jobs on small indexes, else one ``mapInPandas``
+(zero-shuffle on scan-aligned files, else after a repartition by
+block_id). Bags are canonicalized as SORTED array<struct<term,tf>> —
+map columns are not equality-comparable in Spark SQL, sorted entry
+arrays are, so every downstream op (value_counts grouping, unique,
+rowwise equality joins) stays JVM-side. Row materialization
+(``doc``/``take``) decodes only the touched blocks.
 """
 from __future__ import annotations
 
@@ -136,23 +138,6 @@ class Terms:
 _EMPTY_TERMS = Terms({})
 
 
-def _merge_rows(rows, tomb, block_id: int,
-                want_local: Optional[np.ndarray]) -> dict:
-    """(term, raw, seg) rows of ONE block -> {term: merged packed words},
-    the scoring path's exact merge sequence (query_kernel.merge_rows):
-    drop docs tombstoned by a LATER epoch than the row's segment, then
-    one or_merge per term across chunk/update rows."""
-    parts: dict = {}
-    for term, raw, seg in rows:
-        arr = QK.live_postings(tomb, block_id, seg, raw)
-        if want_local is not None:
-            arr = K.slice_keys(arr, want_local)
-        if len(arr):
-            parts.setdefault(term, []).append(arr)
-    return {t: (a[0] if len(a) == 1 else K.or_merge(np.concatenate(a)))
-            for t, a in parts.items()}
-
-
 def _block_termfreq_frames(block_id: int, merged: dict, dpb: int):
     base = int(block_id) * dpb
     for term, arr in merged.items():
@@ -178,84 +163,32 @@ def _block_posn_frames(block_id: int, merged: dict, dpb: int):
         })
 
 
-def _local_block_rows(idx, blocks: Optional[set]) -> dict:
-    """block_id -> [(term, raw, seg)] from the driver-loaded postings
-    cache (small-query path; zero Spark jobs)."""
-    by_block: dict = {}
-    for term, rows in idx._local_postings().items():
-        for b, raw, seg in rows:
-            if blocks is not None and b not in blocks:
-                continue
-            by_block.setdefault(int(b), []).append((term, raw, seg))
-    return by_block
-
-
-def _run_block_kernel(idx, per_block, schema, want: Optional[np.ndarray],
-                      empty_pdf) -> DataFrame:
-    """Run ``per_block(block_id, merged) -> iter[pd.DataFrame]`` over
-    every (pruned) block, picking the cheapest sound execution shape:
-
-    - driver-local (zero Spark jobs) on tiny cached indexes;
-    - zero-shuffle mapInPandas when postings files are scan-aligned
-      (one parquet row group per file, verified at build): a scan task
-      holds whole blocks, so the block merge needs NO exchange — the
-      property that makes a full doc-major derivation feasible at
-      100 TB (shuffling the entire postings table is the thing to
-      avoid);
-    - the same mapInPandas after a repartition by block_id (one
-      exchange) otherwise.
-    """
+def _block_scan(idx, per_block, schema, want: Optional[np.ndarray],
+                as_pandas: bool = False):
+    """``per_block(block_id, merged) -> iter[pd.DataFrame]`` over every
+    block through the one postings scan (``SearchIndex._scan``).
+    ``merged`` is the block's ``query_kernel.merge_rows`` output: every
+    term's live postings, restricted to ``want`` (sorted unique doc
+    ids, whose blocks alone are scanned) when given. A block's rows
+    must meet in one kernel call, so the scan asks for whole blocks and
+    each partition's batches are taken together."""
     dpb = idx.docs_per_block
     tomb = idx._tombstones()
 
-    def want_local(b: int):
-        if want is None:
-            return None
-        base = b * dpb
-        return want[(want >= base) & (want < base + dpb)] - base
+    def body(batches):
+        for batch in QK.whole_partition(batches):
+            for b, rows, _ in QK._frame_blocks(batch):
+                keep = None
+                if want is not None:
+                    keep = want[(want >= b * dpb) & (want < b * dpb + dpb)] \
+                        - b * dpb
+                    if not len(keep):
+                        continue
+                yield from per_block(b, QK.merge_rows(rows, tomb, b, keep))
 
-    if idx._local_query_ok(extended=True):
-        blocks = ({int(d) // dpb for d in want} if want is not None else None)
-        outs = []
-        for b, rows in sorted(_local_block_rows(idx, blocks).items()):
-            merged = _merge_rows(rows, tomb, b, want_local(b))
-            outs.extend(per_block(b, merged))
-        pdf = pd.concat(outs, ignore_index=True) if outs else empty_pdf()
-        from .index import _local_df
-        return _local_df(idx.spark, pdf, schema)
-
-    def run_one(b: int, pdf: pd.DataFrame):
-        wl = want_local(b)
-        if wl is not None and not len(wl):
-            return
-        rows = list(zip(pdf["term"], pdf["postings"], pdf["seg"]))
-        merged = _merge_rows(rows, tomb, b, wl)
-        yield from per_block(b, merged)
-
-    posts = idx.postings
-    if want is not None:
-        blocks = sorted({int(d) // dpb for d in want})
-        posts = posts.filter(F.col("block_id").isin(blocks))
-    posts = posts.select("term", "block_id", "postings", "seg")
-
-    if not idx._files_aligned():
-        posts = posts.repartition("block_id")
-
-    def map_kernel(it):
-        batches = [pdf for pdf in it if len(pdf)]
-        if not batches:
-            return
-        pdf = pd.concat(batches) if len(batches) > 1 else batches[0]
-        for b, grp in pdf.groupby("block_id"):
-            yield from run_one(int(b), grp)
-
-    return posts.mapInPandas(map_kernel, schema)
-
-
-def _empty_tf_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                         "term": pd.Series([], dtype="object"),
-                         "tf": pd.Series([], dtype="int64")})
+    blocks = None if want is None else np.unique(want // dpb).tolist()
+    return idx._scan(body, schema, block_ids=blocks, whole_blocks=True,
+                     as_pandas=as_pandas)
 
 
 def doc_termfreqs(idx, doc_ids: Optional[Sequence[int]] = None) -> DataFrame:
@@ -268,9 +201,9 @@ def doc_termfreqs(idx, doc_ids: Optional[Sequence[int]] = None) -> DataFrame:
     if doc_ids is not None:
         want = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
     dpb = idx.docs_per_block
-    return _run_block_kernel(
+    return _block_scan(
         idx, lambda b, merged: _block_termfreq_frames(b, merged, dpb),
-        DOC_TERMFREQS_SCHEMA, want, _empty_tf_pdf)
+        DOC_TERMFREQS_SCHEMA, want)
 
 
 DOC_BAGS_SCHEMA = StructType([
@@ -322,14 +255,9 @@ def doc_terms(idx, doc_ids: Optional[Sequence[int]] = None) -> DataFrame:
     if doc_ids is not None:
         want = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
     dpb = idx.docs_per_block
-
-    def empty_bags() -> pd.DataFrame:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "tfs": pd.Series([], dtype="object")})
-
-    bags = _run_block_kernel(
+    bags = _block_scan(
         idx, lambda b, merged: _block_bag_frames(b, merged, dpb),
-        DOC_BAGS_SCHEMA, want, empty_bags)
+        DOC_BAGS_SCHEMA, want)
     stats = idx.docstats.select(
         "doc_id", F.col("doc_len").cast("long").alias("doc_len"))
     if doc_ids is not None:
@@ -346,39 +274,21 @@ def _doc_rows(idx, ids: np.ndarray) -> Dict[int, Terms]:
     if not len(ids):
         return {}
     dpb = idx.docs_per_block
-
-    def per_block(b: int, merged: dict):
-        for pdf in _block_posn_frames(b, merged, dpb):
-            pdf["posns"] = [p.tolist() for p in pdf["posns"]]
-            yield pdf
-
-    def empty_rows() -> pd.DataFrame:
-        return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                             "term": pd.Series([], dtype="object"),
-                             "posns": pd.Series([], dtype="object")})
-
-    collected = _run_block_kernel(idx, per_block, DOC_ROWS_SCHEMA,
-                                  ids, empty_rows).collect()
-    frames: List[pd.DataFrame] = []
-    if collected:
-        frames.append(pd.DataFrame(
-            {"doc_id": [r["doc_id"] for r in collected],
-             "term": [r["term"] for r in collected],
-             "posns": [np.asarray(r["posns"], dtype=np.int32)
-                       for r in collected]}))
-
+    pdf = _block_scan(
+        idx, lambda b, merged: _block_posn_frames(b, merged, dpb),
+        DOC_ROWS_SCHEMA, ids, as_pandas=True)
     live, lens = idx._live_lens(ids)
     out: Dict[int, Terms] = {}
     for i, d in enumerate(ids):
         if live[i]:
             out[int(d)] = Terms({}, doc_len=int(lens[i]), posns={})
-    for pdf in frames:
-        for did, term, posns in zip(pdf["doc_id"], pdf["term"], pdf["posns"]):
-            t = out.get(int(did))
-            if t is None:
-                continue  # dead doc: decoded row raced a tombstone view
-            t.postings[term] = int(len(posns))
-            t.posns[term] = np.asarray(posns, dtype=np.int32)
+    for did, term, posns in zip(pdf["doc_id"].tolist(), pdf["term"],
+                                pdf["posns"]):
+        t = out.get(did)
+        if t is None:
+            continue  # dead doc: decoded row raced a tombstone view
+        t.postings[term] = len(posns)
+        t.posns[term] = np.asarray(posns, dtype=np.int32)
     return out
 
 

@@ -1,4 +1,4 @@
-"""Driver-local small-query fast path (SearchIndex._hits local branch).
+"""Driver-local small-query route (SearchIndex._scan).
 
 Small indexes (<= LOCAL_QUERY_MAX_DOCS docs and <= LOCAL_QUERY_MAX_BYTES
 of postings) score driver-side with the SAME query_kernel functions
@@ -48,7 +48,18 @@ def _run_all(idx):
                             for r in idx.positions(
                                 "bar", doc_ids=[0, 2, 33]).collect())
     out["df"] = idx.docfreqs(["foo", "bar", "qux", "nope"])
+    out["doc_tfs"] = _rows(idx.doc_termfreqs())
+    out["doc_tfs_sub"] = _rows(idx.doc_termfreqs([2, 3, 41, 90]))
+    out["doc"] = [_terms(idx.doc(i)) for i in (2, 3, 41)]
+    out["take"] = [_terms(t) for t in idx.take([0, 3, -1, 41, 5, 101],
+                                                 allow_fill=True)]
     return out
+
+
+def _terms(t):
+    """A Terms row as a comparable value: tfs, doc_len and positions."""
+    return (sorted(t.postings.items()), t.doc_len,
+            sorted((k, tuple(v)) for k, v in t.positions()))
 
 
 def _spark_path_index(spark, path, monkeypatch):

@@ -188,3 +188,48 @@ def test_single_term_top_k_merges_every_batch(spark, idx_path):
     finally:
         spark.conf.set(key, old)
     assert got == want
+
+
+LOCAL_CALLS = {
+    "score_count": lambda i: i.score("bar").count(),
+    "termfreqs": lambda i: _rows(i.termfreqs(["foo", "bar"])),
+    "positions": lambda i: _rows(i.positions("bar", doc_ids=[0, 2, 33])),
+    "doc": lambda i: i.doc(2),
+}
+
+
+@pytest.mark.parametrize("call", sorted(LOCAL_CALLS))
+def test_driver_local_calls_run_no_job(spark, idx_path, call):
+    """The driver-local route stays job-free past the scan: ``score`` and
+    ``termfreqs`` pick their columns in pandas, ``positions`` and the
+    doc-major rows read the driver-held store."""
+    idx = SearchIndex(spark, idx_path)
+    assert idx._local_query_ok(extended=True)
+    idx.top_k(WARM, k=5)
+    got, jobs = _jobs(spark, lambda: LOCAL_CALLS[call](idx))
+    assert jobs == 0, call
+    assert got
+
+
+def test_distributed_df_corrections_one_job(spark, tmp_path_factory):
+    """The df correction after deletes is one scan summed on the driver:
+    one Spark job, no Exchange (no groupBy), and the driver-local
+    route's counts."""
+    corpus = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(DOCS)], "doc_id long, text string")
+    path = str(tmp_path_factory.mktemp("query_jobs_df") / "idx")
+    build_index(spark, corpus, path, doc_id_col="doc_id", docs_per_block=16)
+    SearchIndex(spark, path).delete_docs([0, 4, 5, 17, 100, 239])
+    terms = ["foo", "bar", "baz", "bunny", "nope"]
+    local = SearchIndex(spark, path)
+    want, local_jobs = _jobs(spark, lambda: local._df_corrections(terms))
+    assert local_jobs == 0
+    assert want["foo"] < 0 and want["bar"] < 0 and "nope" not in want
+    idx = _distributed(spark, path, cached=False)
+    got, jobs = _jobs(spark, lambda: idx._df_corrections(terms))
+    assert jobs == 1
+    assert got == want
+    plan = idx._killed_rows(terms)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "Exchange" not in plan
+    assert local.docfreqs(terms) == idx.docfreqs(terms)
